@@ -92,8 +92,12 @@ object Bench {
     val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // names of queries that threw in any run, in first-failure order:
+    // a failed run is still timed below, so the JSON must say which
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => failed += name; throw e }
 
     run("q1_pricing") // warm-up, untimed
 
@@ -139,8 +143,9 @@ object Bench {
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failedJson}"""
     println(json)
     // Also write to a file: the stdout line gets buried in sbt [info]
     // noise, which left the driver's BENCH parse empty in round 1.
@@ -160,7 +165,7 @@ object Bench {
     val slow = results.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"10 slowest; full map in $out","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"10 slowest; full map in $out","sf":"$sfDir","failed":$failedJson}""")
     spark.stop()
   }
 }

@@ -259,7 +259,23 @@ object ChSource {
       user: String = "",
       password: String = "",
       where: Option[String] = None
-  ): DataFrame = {
+  ): DataFrame =
+    readWithCount(spark, endpoint, db, table, batchSize, orderBy, user, password, where)._1
+
+  /** [[read]] plus the row COUNT the driver fetched to lay out the
+    * pages: a caller can tell an empty read without running a job.
+    */
+  def readWithCount(
+      spark: SparkSession,
+      endpoint: String,
+      db: String,
+      table: String,
+      batchSize: Int,
+      orderBy: Option[String] = None,
+      user: String = "",
+      password: String = "",
+      where: Option[String] = None
+  ): (DataFrame, Long) = {
     require(batchSize > 0, "batchSize must be positive")
     val driverClient = new ChHttpClient(endpoint, user, password)
     val schema = driverClient.sparkSchema(db, table)
@@ -279,7 +295,7 @@ object ChSource {
             }
         }
       }
-    spark.createDataFrame(rdd, schema)
+    (spark.createDataFrame(rdd, schema), total)
   }
 
   /** Key-range paged read: spans of an INTEGER key column instead of

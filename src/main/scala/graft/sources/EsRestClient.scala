@@ -259,16 +259,37 @@ class EsRestClient(
     * all-string row surface, or a `SyncRunner` source thunk. Buffers
     * the index on the driver by construction: use only for
     * admin-scale reads and tests; bulk movement is es-hadoop's job.
+    * The frame is [[EsRestClient.docFrame]]'s, so parsing runs in tasks.
     */
   def fetchIndex(
       spark: SparkSession,
       index: String,
       cfg: EsSourceConfig,
       query: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val body = query.getOrElse(EsSourceConfig.fullSearchBody(cfg.scrollSize))
     scrollPages(index, body, cfg.scrollTimeout)(page => buf ++= page)
-    buf.toSeq.toDF("_id", "doc")
+    EsRestClient.docFrame(spark, buf.toSeq)
+  }
+}
+
+object EsRestClient {
+
+  /** The (`_id`, `doc`) frame over documents fetched on the driver.
+    * It is backed by an RDD, not a local relation: over a local
+    * relation Catalyst folds every projection above it (`from_json`,
+    * flatten, conform) into driver-side evaluation while planning —
+    * interpreted, single-threaded and once per plan. Here that work
+    * runs in tasks. The documents are sliced the way a local
+    * relation's scan slices them (`min(n, leaf parallelism)` slices, in
+    * order), so each partition, and thus each INSERT batch built from
+    * it, holds the same documents as before.
+    */
+  def docFrame(spark: SparkSession, docs: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val parallelism = spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    spark.sparkContext.parallelize(docs, math.min(math.max(docs.size, 1), parallelism))
+      .toDF("_id", "doc")
   }
 }

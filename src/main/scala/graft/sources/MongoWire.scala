@@ -354,7 +354,20 @@ object MongoSource {
       coll: String,
       batchSize: Int,
       afterId: Option[String] = None
-  ): DataFrame = {
+  ): DataFrame = readWithCount(spark, host, port, db, coll, batchSize, afterId)._1
+
+  /** [[read]] plus the number of documents drained on the driver: a
+    * caller can tell an empty read without running a job.
+    */
+  def readWithCount(
+      spark: SparkSession,
+      host: String,
+      port: Int,
+      db: String,
+      coll: String,
+      batchSize: Int,
+      afterId: Option[String] = None
+  ): (DataFrame, Long) = {
     val client = new MongoWireClient(host, port)
     try {
       val rows = mutable.ArrayBuffer[ListMap[String, String]]()
@@ -368,8 +381,9 @@ object MongoSource {
       val fields = ("_id" +: rows.flatMap(_.keys).distinct.filterNot(_ == "_id")).toSeq
       val schema = StructType(fields.map(f => StructField(f, StringType)))
       val data = rows.toSeq.map(r => Row.fromSeq(fields.map(f => r.getOrElse(f, null))))
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(data, math.max(1, data.size / math.max(1, batchSize))), schema)
+      (spark.createDataFrame(
+        spark.sparkContext.parallelize(data, math.max(1, data.size / math.max(1, batchSize))), schema),
+        data.size.toLong)
     } finally client.close()
   }
 }

@@ -37,14 +37,22 @@ import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest}
   * Scale note: pages stream through the driver (the protocol-parity
   * read; bulk movement at warehouse scale is the es-hadoop
   * partition-per-shard reader, [[graft.sources.EsSourceConfig.reader]])
-  * but the WRITE side is the production path — the conformed frame is
-  * repartitioned and every Spark partition drives its own HTTP batch
-  * executor, so target throughput scales with executor count.
+  * but everything after the read runs in tasks. The fetched documents
+  * become an RDD-backed frame ([[EsRestClient.docFrame]]), so JSON
+  * parsing, flattening and conforming run inside the write job, and
+  * every Spark partition drives its own HTTP batch executor, so target
+  * throughput scales with executor count. Each synced object costs one
+  * Spark job, the write (plus schema inference for an ES index): the
+  * watermark maxima ride the write ([[BatchedUpsertWriter.write]]'s
+  * `maxOf`), and an empty read is known on the driver from what the
+  * reader already holds (the ES buffer, the ClickHouse COUNT, the Mongo
+  * buffer), so it runs no job at all.
   */
 object WireSync {
 
   /** One index's pass outcome. `rows` counts rows LANDED (batch +
-    * fallback survivors); `failedRows` rows lost to per-row failures.
+    * fallback survivors); `failedRows` rows lost to per-row failures,
+    * and `errors` up to three of their error messages.
     */
   case class PassResult(
       index: String,
@@ -56,7 +64,8 @@ object WireSync {
       timeField: String,
       updateTimeField: String,
       lastSyncTime: String,
-      lastUpdateTime: String)
+      lastUpdateTime: String,
+      errors: Seq[String] = Nil)
 
   /** Target bootstrap, reference order (es_to_bytehouse.py:401-427):
     * database, then the index-keyed `_sync_state` table. Idempotent
@@ -127,7 +136,10 @@ object WireSync {
   }
 
   /** One index, one pass: mapping → DDL → watermark-routed read →
-    * flatten → conform → batched wire write → state append.
+    * flatten → conform → batched wire write → state append. Two Spark
+    * jobs: schema inference over the batch, then the write, which
+    * parses, flattens and conforms in its tasks and returns the
+    * batch's time-field maxima; an empty read returns before either.
     */
   def syncIndex(
       spark: SparkSession,
@@ -210,19 +222,19 @@ object WireSync {
     // per-batch inference (explicit, uncached): driver-built frames
     // carry no file fingerprint, and an incremental batch may surface
     // fields the full pass never saw
-    val raw = buf.toSeq.toDF("_id", "doc")
+    val raw = EsRestClient.docFrame(spark, buf.toSeq)
     val docSchema = spark.read.json(raw.select("doc").as[String]).schema
     val flat = JsonIngest.parseAndFlatten(spark, raw, "doc", schemaOverride = Some(docSchema))
-    val renamed = flat.columns.foldLeft(flat) { (d, c) =>
-      if (c.startsWith("doc_")) d.withColumnRenamed(c, c.stripPrefix("doc_")) else d
-    }
+    val renamed = flat.select(flat.columns.toIndexedSeq.map(c => col(c).as(c.stripPrefix("doc_"))): _*)
     val targetSchema = StructType(
       StructField("_id", StringType) +: fieldNames.map(n => StructField(n, StringType)))
     val conformed = Incremental.conformToTarget(renamed, targetSchema)
 
     // --- partition-parallel batched INSERT over the wire -------------
+    // the write also returns the batch's time-field maxima
     val stats = BatchedUpsertWriter.write(
-      conformed, targetDb, table, insertBatchSize, chExecutorFactory)
+      conformed, targetDb, table, insertBatchSize, chExecutorFactory,
+      maxOf = (timeField.toSeq ++ updateField).map(col))
 
     // --- advance watermarks (monotone: max of old and batch max) -----
     // A batch with ANY permanently-failed row must NOT advance state:
@@ -231,16 +243,12 @@ object WireSync {
     // means the next pass re-reads the whole failed batch — re-inserts
     // are idempotent on the target (UNIQUE KEY _id), lost rows are not.
     val advanced = stats.failedRows == 0L
-    val (newSync, newUpdate) = timeField match {
-      case _ if !advanced => (lastSync, lastUpdate)
-      case None => (lastSync, lastUpdate)
-      case Some(tf) =>
-        val aggs = max(col(tf)) +: updateField.map(u => max(col(u))).toSeq
-        val r = conformed.agg(aggs.head, aggs.tail: _*).collect()(0)
-        val s = if (r.isNullAt(0)) "" else r.getString(0)
-        val u = if (updateField.isDefined && !r.isNullAt(1)) r.getString(1) else ""
-        (Seq(lastSync, s).max, Seq(lastUpdate, u).max)
-    }
+    val (newSync, newUpdate) =
+      if (!advanced || timeField.isEmpty) (lastSync, lastUpdate)
+      else {
+        val u = if (updateField.isDefined) stats.maxima(1) else ""
+        (Seq(lastSync, stats.maxima(0)).max, Seq(lastUpdate, u).max)
+      }
     if (advanced && timeField.isDefined && stats.rows > 0) {
       val values = Seq(index, table, timeField.getOrElse(""), updateField.getOrElse(""),
         newSync, newUpdate).map(graft.sinks.ChHttp.sqlLiteral) :+ stats.rows.toString
@@ -248,7 +256,7 @@ object WireSync {
         values.mkString("(", ", ", ")"))
     }
     PassResult(index, table, mode, stats.rows, stats.fallbackRows, stats.failedRows,
-      timeField.getOrElse(""), updateField.getOrElse(""), newSync, newUpdate)
+      timeField.getOrElse(""), updateField.getOrElse(""), newSync, newUpdate, stats.errors)
   }
 
   /** The ClickHouse-to-ClickHouse variant's defining job, composed
@@ -268,7 +276,9 @@ object WireSync {
     * Tables with no detectable time field re-sync fully
     * every pass (idempotent on a unique-keyed target), like the
     * reference warns-and-does. Failed-batch discipline as everywhere:
-    * any lost row vetoes the state append.
+    * any lost row vetoes the state append. One Spark job per table,
+    * the write, which reads each page once and returns the formatted
+    * time-column maximum; a zero COUNT skips it.
     */
   def runCh(
       spark: SparkSession,
@@ -362,26 +372,22 @@ object WireSync {
       // disjoint pages need a deterministic order key (see ChSource
       // class note) — callers override per table, default first column
       val orderKey = orderKeys.getOrElse(srcTable, schema.fieldNames.head)
-      val df = graft.sinks.ChSource.read(spark, srcEndpoint, srcDb, srcTable, batchSize,
-        orderBy = Some(orderKey), where = where)
-      if (df.isEmpty) {
+      val (df, total) = graft.sinks.ChSource.readWithCount(spark, srcEndpoint, srcDb, srcTable,
+        batchSize, orderBy = Some(orderKey), where = where)
+      if (total == 0L) {
         PassResult(srcTable, table, mode, 0L, 0L, 0L, timeField.getOrElse(""), "", lastSync, "")
       } else {
-        val stats = BatchedUpsertWriter.write(df, targetDb, table, insertBatchSize, chExecutorFactory)
+        val stats = BatchedUpsertWriter.write(df, targetDb, table, insertBatchSize, chExecutorFactory,
+          maxOf = timeField.map(t => date_format(col(t), wmFormat.get)).toSeq)
         val advanced = stats.failedRows == 0L
-        val newSync = timeField match {
-          case Some(t) if advanced =>
-            val s = df.agg(max(date_format(col(t), wmFormat.get)))
-              .collect()(0).getString(0)
-            if (s == null) lastSync else Seq(lastSync, s).max
-          case _ => lastSync
-        }
+        val newSync =
+          if (advanced && timeField.isDefined) Seq(lastSync, stats.maxima(0)).max else lastSync
         if (advanced && timeField.isDefined && stats.rows > 0) {
           tgt.execute(ClickHouseDdl.insertSyncStateSqlCh(targetDb) +
             s" (${graft.sinks.ChHttp.sqlLiteral(table)}, ${graft.sinks.ChHttp.sqlLiteral(newSync)}, '', ${stats.rows})")
         }
         PassResult(srcTable, table, mode, stats.rows, stats.fallbackRows, stats.failedRows,
-          timeField.getOrElse(""), "", newSync, "")
+          timeField.getOrElse(""), "", newSync, "", stats.errors)
       }
     }
   }
@@ -400,7 +406,9 @@ object WireSync {
     * row-at-a-time fallback. Same failed-batch discipline as
     * [[syncIndex]]: any permanently-failed row vetoes the state
     * append, so the next pass re-reads the batch (idempotent on the
-    * UNIQUE-KEY target) instead of orphaning rows.
+    * UNIQUE-KEY target) instead of orphaning rows. One Spark job per
+    * collection, the write, which returns the newest `_id`; a cursor
+    * that drained no document skips it.
     */
   def runMongo(
       spark: SparkSession,
@@ -476,9 +484,9 @@ object WireSync {
       val wm = ch.query(ClickHouseDdl.lastSyncTimeSql(targetDb, table))
       val lastId = wm.headOption.map(r => Option(r(0)).getOrElse("")).getOrElse("")
       val mode = if (lastId.isEmpty) "full" else "incremental"
-      val df = graft.sources.MongoSource.read(spark, mongoHost, mongoPort, mongoDb, coll,
-        batchSize, if (lastId.isEmpty) None else Some(lastId))
-      if (df.isEmpty) {
+      val (df, drained) = graft.sources.MongoSource.readWithCount(spark, mongoHost, mongoPort,
+        mongoDb, coll, batchSize, if (lastId.isEmpty) None else Some(lastId))
+      if (drained == 0L) {
         PassResult(coll, table, mode, 0L, 0L, 0L, "_id", "", lastId, "")
       } else {
         // target DDL from this batch's discovered fields; fields the
@@ -496,16 +504,16 @@ object WireSync {
           (described.filterNot(_ == "_timestamp") ++ newCols).distinct
             .map(n => StructField(n, StringType)))
         val conformed = Incremental.conformToTarget(df, targetSchema)
-        val stats = BatchedUpsertWriter.write(conformed, targetDb, table, insertBatchSize, chExecutorFactory)
+        val stats = BatchedUpsertWriter.write(conformed, targetDb, table, insertBatchSize,
+          chExecutorFactory, maxOf = Seq(col("_id")))
         val advanced = stats.failedRows == 0L
-        val maxId = df.agg(max(col("_id"))).collect()(0).getString(0)
-        val newWm = if (advanced) Seq(lastId, maxId).max else lastId
+        val newWm = if (advanced) Seq(lastId, stats.maxima(0)).max else lastId
         if (advanced && stats.rows > 0) {
           ch.execute(ClickHouseDdl.insertSyncStateSqlCh(targetDb) +
             s" (${graft.sinks.ChHttp.sqlLiteral(table)}, ${graft.sinks.ChHttp.sqlLiteral(newWm)}, '', ${stats.rows})")
         }
         PassResult(coll, table, mode, stats.rows, stats.fallbackRows, stats.failedRows,
-          "_id", "", newWm, "")
+          "_id", "", newWm, "", stats.errors)
       }
     }
   }

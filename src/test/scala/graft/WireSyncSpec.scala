@@ -375,6 +375,8 @@ class WireSyncSpec extends SparkSpec {
       // rows scatter over Spark partitions, so how many ride the failed
       // batch (and retry singly) varies — landed/lost counts do not
       assert(r.map(p => (p.mode, p.rows, p.failedRows)) == Seq(("full", 6L, 1L)), r.toString)
+      // the lost row's error is reported, not swallowed
+      assert(r.head.errors.size == 1 && r.head.errors.head.contains("marker 'm4'"), r.head.errors.toString)
       assert(ch.tables(("wh", "app_logs")).rows.size == 6)
       // a lost row means NO state row: advancing the watermark past it
       // would orphan it forever; the next pass must re-read the batch
@@ -388,6 +390,7 @@ class WireSyncSpec extends SparkSpec {
       val r2 = WireSync.run(spark, client, cfg, tgt, () => new ChHttpBatchExecutor(ep),
         targetDb = "wh", insertBatchSize = 100)
       assert(r2.map(p => (p.mode, p.rows, p.failedRows)) == Seq(("full", 7L, 0L)), r2.toString)
+      assert(r2.head.errors.isEmpty, r2.head.errors.toString)
       assert(st.rows.size == 1)
       assert(st.rows.head(st.schema.indexWhere(_._1 == "last_sync_time")) == "2024-01-07 00:00:00")
     }
