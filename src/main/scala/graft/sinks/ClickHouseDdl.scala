@@ -121,7 +121,7 @@ object ClickHouseDdl {
     */
   def lastSyncTimeSql(db: String, table: String, stateTable: String = "_sync_state"): String =
     s"SELECT max(`last_sync_time`), max(`last_update_time`) FROM `$db`.`${Flatten.sanitizeName(stateTable)}` " +
-      s"WHERE `table_name` = '${table.replace("\\", "\\\\").replace("'", "\\'")}'"
+      s"WHERE `table_name` = ${ChHttp.sqlLiteral(table)}"
 
   /** State append (clickhouse_to_bytehouse.py:197-205
     * `update_sync_state`) — INSERT-only bookkeeping, never UPDATE:
@@ -139,7 +139,7 @@ object ClickHouseDdl {
     */
   def lastSyncTimeSqlEs(db: String, index: String, stateTable: String = "_sync_state"): String =
     s"SELECT max(`last_sync_time`), max(`last_update_time`) FROM `$db`.`${Flatten.sanitizeName(stateTable)}` " +
-      s"WHERE `index_name` = '${index.replace("\\", "\\\\").replace("'", "\\'")}'"
+      s"WHERE `index_name` = ${ChHttp.sqlLiteral(index)}"
 
   /** ES-variant state append (es_to_bytehouse.py:740-760
     * `update_sync_state`): full bookkeeping row — index, target table,

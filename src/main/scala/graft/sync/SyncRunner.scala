@@ -376,7 +376,7 @@ object SyncRunner {
       preflightAttempts: Int = 3,
       preflightBackoffMs: Long = 50L
   ): Seq[Map[String, (String, Long)]] =
-    (1 to maxPasses).map { pass =>
+    poll(maxPasses, intervalMs, onPassEnd) { pass =>
       // connect-time health probe BEFORE any work is scheduled — the
       // reference refuses to sync when connect/SELECT 1 fails
       // (es_to_bytehouse.py:200-238); bounded backoff rides out a
@@ -385,16 +385,21 @@ object SyncRunner {
         s"$pattern pass $pass preflight", preflightAttempts, preflightBackoffMs, alerter)(p()))
       // a failed pass alerts (rate-limited) and aborts the loop —
       // sync state has not advanced, so the next start resumes cleanly
-      val r = alerter match {
-        case Some(a) => Alerts.guarded(a, s"$pattern pass $pass")(
-          autoSyncAll(spark, srcDir, pattern, targetRoot, stateDir,
-            nowUsForPass(pass), keyOverrides, compactTargetBytes))
-        case None =>
-          autoSyncAll(spark, srcDir, pattern, targetRoot, stateDir,
-            nowUsForPass(pass), keyOverrides, compactTargetBytes)
-      }
-      onPassEnd(pass, r)
-      if (intervalMs > 0 && pass < maxPasses) Thread.sleep(intervalMs)
+      def sweep = autoSyncAll(spark, srcDir, pattern, targetRoot, stateDir,
+        nowUsForPass(pass), keyOverrides, compactTargetBytes)
+      alerter.fold(sweep)(Alerts.guarded(_, s"$pattern pass $pass")(sweep))
+    }
+
+  /** The poll loop of every continuous mode (this one and
+    * [[WireSync.runContinuous]]'s): `maxPasses` passes, `onPassEnd`
+    * after each, `intervalMs` of sleep between two passes.
+    */
+  private[sync] def poll[R](maxPasses: Int, intervalMs: Long, onPassEnd: (Int, R) => Unit)(
+      pass: Int => R): Seq[R] =
+    (1 to maxPasses).map { p =>
+      val r = pass(p)
+      onPassEnd(p, r)
+      if (intervalMs > 0 && p < maxPasses) Thread.sleep(intervalMs)
       r
     }
 

@@ -1,12 +1,12 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.operators.{Incremental, TypeMapper}
-import graft.sinks.{BatchedUpsertWriter, ChHttpClient, ClickHouseDdl}
-import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest}
+import graft.operators.{Flatten, Incremental, TypeMapper}
+import graft.sinks.{BatchedUpsertWriter, ChHttp, ChHttpClient, ChSource, ClickHouseDdl}
+import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest, MongoSource}
 
 /** The reference's DEFINING job, composed end-to-end over live wire
   * clients: Elasticsearch in, ClickHouse out, `_sync_state` kept in
@@ -19,6 +19,14 @@ import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest}
   * already live-protocol-proven (`EsLiveParitySpec`,
   * `ChLiveParitySpec`); this object is the composition — ONE auto-mode
   * pass per call, exactly the reference's loop body.
+  *
+  * The three variants (ES, ClickHouse, MongoDB sources) share one pass
+  * skeleton, [[syncObject]]: the watermark read from `_sync_state`, the
+  * full/incremental routing, the one batched write and the commit rule
+  * are written there once, and that is the only place the rule "a lost
+  * row never advances the watermark" lives. A variant supplies its time
+  * fields, how it keys `_sync_state`, and its read. Their deployment
+  * loops likewise share one poll loop ([[runContinuous]]).
   *
   * Auto mode per index (es_to_bytehouse.py:843-868 + 429-460): no
   * `_sync_state` row → full sync (match_all); watermarks present →
@@ -87,25 +95,26 @@ object WireSync {
       targetDb: String,
       insertBatchSize: Int = 1000,
       usePit: Boolean = false
-  ): Seq[PassResult] = {
-    bootstrap(ch, targetDb)
-    es.catIndices(esCfg.indexPattern).map { index =>
-      syncIndex(spark, es, esCfg, ch, chExecutorFactory, targetDb, index,
-        insertBatchSize, usePit)
-    }
-  }
+  ): Seq[PassResult] =
+    esVariant(spark, es, esCfg, ch, chExecutorFactory, targetDb, insertBatchSize, usePit).run()
 
   /** The reference's actual DEPLOYMENT mode, over live wires:
     * `run_incremental(continuous=True)` (es_to_bytehouse.py:1053-1102)
     * — poll forever (here `maxPasses` times: tests bound it, production
     * passes Int.MaxValue), re-reading `_sync_state` each pass so every
-    * pass routes itself, with the reference's per-index fault isolation
+    * pass routes itself, with the reference's per-object fault isolation
     * (its `except Exception: logger.error; continue`, :1088-1094): one
-    * index failing mid-pass yields a `Left` for THAT index and the
+    * object failing mid-pass yields a `Left` for THAT object and the
     * sweep moves on — its state has not advanced, so the next pass
     * resumes it cleanly from the old watermark. `onPassEnd` is the
     * observation hook (logging/alerting in production, the
     * source-mutation driver in tests); `intervalMs` is the poll sleep.
+    *
+    * The ES loop re-lists the indices every pass, so an index created
+    * mid-run joins the next pass; a failed listing makes that pass one
+    * `Left` named by the index pattern, and the loop goes on.
+    * [[runContinuousCh]] and [[runContinuousMongo]] run the same loop
+    * over objects resolved once before it.
     */
   def runContinuous(
       spark: SparkSession,
@@ -119,145 +128,9 @@ object WireSync {
       usePit: Boolean = false,
       intervalMs: Long = 0L,
       onPassEnd: (Int, Seq[Either[(String, String), PassResult]]) => Unit = (_, _) => ()
-  ): Seq[Seq[Either[(String, String), PassResult]]] = {
-    bootstrap(ch, targetDb)
-    (1 to maxPasses).map { pass =>
-      val results = es.catIndices(esCfg.indexPattern).map { index =>
-        try Right(syncIndex(spark, es, esCfg, ch, chExecutorFactory, targetDb, index,
-          insertBatchSize, usePit))
-        catch {
-          case scala.util.control.NonFatal(e) => Left((index, e.toString))
-        }
-      }
-      onPassEnd(pass, results)
-      if (intervalMs > 0 && pass < maxPasses) Thread.sleep(intervalMs)
-      results
-    }
-  }
-
-  /** One index, one pass: mapping → DDL → watermark-routed read →
-    * flatten → conform → batched wire write → state append. Two Spark
-    * jobs: schema inference over the batch, then the write, which
-    * parses, flattens and conforms in its tasks and returns the
-    * batch's time-field maxima; an empty read returns before either.
-    */
-  def syncIndex(
-      spark: SparkSession,
-      es: EsRestClient,
-      esCfg: EsSourceConfig,
-      ch: ChHttpClient,
-      chExecutorFactory: () => BatchedUpsertWriter.BatchExecutor,
-      targetDb: String,
-      index: String,
-      insertBatchSize: Int = 1000,
-      usePit: Boolean = false
-  ): PassResult = {
-    import spark.implicits._
-
-    // --- mapping → flattened field names + time-field detection ------
-    // (es_to_bytehouse.py:260-294, 467-529): detection runs on the
-    // MAPPING's types, not sampled data — an empty index still routes
-    val detailed = es.mappingFieldsDetailed(index) // sanitized -> (es type, raw ES path)
-    val fields = detailed.map { case (n, (t, _)) => n -> t }
-    val fieldNames = fields.keys.toSeq.sorted
-    // ES-side queries/sorts must name RAW fields (the reference's
-    // original_time_field remap, es_to_bytehouse.py:836-839): the
-    // sanitized spelling ('@timestamp' -> 'timestamp') only exists in
-    // the TARGET — ES would match nothing, losing every incremental row
-    def rawPath(n: String): String = detailed.get(n).map(_._2).getOrElse(n)
-    val mappingSchema = StructType(fieldNames.map(n => StructField(n, TypeMapper.esType(fields(n)))))
-    val timeField = Incremental.detectTimeField(mappingSchema)
-    val updateField = Incremental.detectUpdateTimeField(mappingSchema).filterNot(timeField.contains)
-
-    // --- target DDL, all-String fidelity (es_to_bytehouse.py:300-336) —
-    // _timestamp rides its now64(3) server DEFAULT, so inserts skip it
-    ch.execute(ClickHouseDdl.createTableSqlAllString(targetDb, index, fieldNames, addTimestamp = true))
-    val table = graft.operators.Flatten.sanitizeName(index)
-    // wire-side schema evolution (the reference's add_new_columns,
-    // es_to_bytehouse.py:994-1023): mapping fields the existing target
-    // lacks become ALTERs — otherwise every INSERT after a mapping
-    // change references a missing column and the sync wedges forever
-    val described = ch.describeTable(targetDb, table).map(_._1).toSet
-    Incremental.alterStatements(targetDb, table,
-      fieldNames.filterNot(described).map(_ -> "String")).foreach(ch.execute)
-
-    // --- watermark read from the target's _sync_state ----------------
-    val wm = ch.query(ClickHouseDdl.lastSyncTimeSqlEs(targetDb, index))
-    val (lastSync, lastUpdate) = wm.headOption match {
-      case Some(r) => (Option(r(0)).getOrElse(""), Option(r(1)).getOrElse(""))
-      case None => ("", "")
-    }
-    val isFull = timeField.isEmpty || lastSync.isEmpty
-    val mode = if (isFull) "full" else "incremental"
-
-    // --- watermark-routed source read (server-side filter + sort) ----
-    val body =
-      if (isFull) EsSourceConfig.fullSearchBody(esCfg.scrollSize)
-      else EsSourceConfig.incrementalSearchBody(
-        esCfg.scrollSize, rawPath(timeField.get), lastSync,
-        updateField.map(rawPath).getOrElse(""), if (updateField.isDefined) lastUpdate else "")
-    val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    if (usePit) {
-      // ES 8 path: the query rides the PIT body (the incremental sort
-      // is supplied as the PIT sortField; full sync orders by _shard_doc)
-      val q =
-        if (isFull) """{"match_all":{}}"""
-        else EsSourceConfig.incrementalQuery(
-          rawPath(timeField.get), lastSync,
-          updateField.map(rawPath).getOrElse(""), if (updateField.isDefined) lastUpdate else "")
-      es.pitSearchAfterPages(index, q, esCfg.scrollSize,
-        sortField = timeField.map(rawPath).getOrElse(""), keepAlive = esCfg.scrollTimeout)(page => buf ++= page)
-    } else {
-      es.scrollPages(index, body, esCfg.scrollTimeout)(page => buf ++= page)
-    }
-
-    if (buf.isEmpty) {
-      // nothing moved: state does NOT advance (the reference skips the
-      // bookkeeping insert on an empty batch, es_to_bytehouse.py:1087)
-      return PassResult(index, table, mode, 0L, 0L, 0L,
-        timeField.getOrElse(""), updateField.getOrElse(""), lastSync, lastUpdate)
-    }
-
-    // --- flatten to the all-String row surface -----------------------
-    // per-batch inference (explicit, uncached): driver-built frames
-    // carry no file fingerprint, and an incremental batch may surface
-    // fields the full pass never saw
-    val raw = EsRestClient.docFrame(spark, buf.toSeq)
-    val docSchema = spark.read.json(raw.select("doc").as[String]).schema
-    val flat = JsonIngest.parseAndFlatten(spark, raw, "doc", schemaOverride = Some(docSchema))
-    val renamed = flat.select(flat.columns.toIndexedSeq.map(c => col(c).as(c.stripPrefix("doc_"))): _*)
-    val targetSchema = StructType(
-      StructField("_id", StringType) +: fieldNames.map(n => StructField(n, StringType)))
-    val conformed = Incremental.conformToTarget(renamed, targetSchema)
-
-    // --- partition-parallel batched INSERT over the wire -------------
-    // the write also returns the batch's time-field maxima
-    val stats = BatchedUpsertWriter.write(
-      conformed, targetDb, table, insertBatchSize, chExecutorFactory,
-      maxOf = (timeField.toSeq ++ updateField).map(col))
-
-    // --- advance watermarks (monotone: max of old and batch max) -----
-    // A batch with ANY permanently-failed row must NOT advance state:
-    // the failed rows' timestamps may be at or below the batch max, so
-    // advancing would orphan them forever. Leaving the watermark put
-    // means the next pass re-reads the whole failed batch — re-inserts
-    // are idempotent on the target (UNIQUE KEY _id), lost rows are not.
-    val advanced = stats.failedRows == 0L
-    val (newSync, newUpdate) =
-      if (!advanced || timeField.isEmpty) (lastSync, lastUpdate)
-      else {
-        val u = if (updateField.isDefined) stats.maxima(1) else ""
-        (Seq(lastSync, stats.maxima(0)).max, Seq(lastUpdate, u).max)
-      }
-    if (advanced && timeField.isDefined && stats.rows > 0) {
-      val values = Seq(index, table, timeField.getOrElse(""), updateField.getOrElse(""),
-        newSync, newUpdate).map(graft.sinks.ChHttp.sqlLiteral) :+ stats.rows.toString
-      ch.execute(ClickHouseDdl.insertSyncStateSqlEs(targetDb) + " " +
-        values.mkString("(", ", ", ")"))
-    }
-    PassResult(index, table, mode, stats.rows, stats.fallbackRows, stats.failedRows,
-      timeField.getOrElse(""), updateField.getOrElse(""), newSync, newUpdate, stats.errors)
-  }
+  ): Seq[Seq[Either[(String, String), PassResult]]] =
+    esVariant(spark, es, esCfg, ch, chExecutorFactory, targetDb, insertBatchSize, usePit)
+      .runContinuous(maxPasses, intervalMs, onPassEnd)
 
   /** The ClickHouse-to-ClickHouse variant's defining job, composed
     * over both live wires (clickhouse_to_bytehouse.py:226-371 `run`):
@@ -275,10 +148,9 @@ object WireSync {
     * fractional literal against a second-precision column.
     * Tables with no detectable time field re-sync fully
     * every pass (idempotent on a unique-keyed target), like the
-    * reference warns-and-does. Failed-batch discipline as everywhere:
-    * any lost row vetoes the state append. One Spark job per table,
-    * the write, which reads each page once and returns the formatted
-    * time-column maximum; a zero COUNT skips it.
+    * reference warns-and-does. One Spark job per table, the write,
+    * which reads each page once and returns the formatted time-column
+    * maximum; a zero COUNT skips it.
     */
   def runCh(
       spark: SparkSession,
@@ -290,23 +162,15 @@ object WireSync {
       batchSize: Int = 1000,
       insertBatchSize: Int = 1000,
       orderKeys: Map[String, String] = Map.empty
-  ): Seq[PassResult] = {
-    val src = new ChHttpClient(srcEndpoint)
-    ClickHouseDdl.bootstrapSqlCh(targetDb).foreach(tgt.execute)
-    src.showTables(srcDb).map { srcTable =>
-      syncChTable(spark, src, srcEndpoint, srcDb, srcTable, tgt, chExecutorFactory,
-        targetDb, batchSize, insertBatchSize, orderKeys)
-    }
-  }
+  ): Seq[PassResult] =
+    chVariant(spark, srcEndpoint, srcDb, tgt, chExecutorFactory, targetDb, batchSize,
+      insertBatchSize, orderKeys).run()
 
   /** The reference CH variant's deployment loop
     * (clickhouse_to_bytehouse.py:418-494 `run_incremental`): the table
     * list resolves ONCE before the loop (a table created mid-run waits
-    * for a restart, like the reference), then every pass re-reads the
-    * watermark from the target and syncs each table under PER-TABLE
-    * fault isolation — one table's failure is a `Left`, the rest of
-    * the pass proceeds, and the failed table resumes from its intact
-    * watermark next pass.
+    * for a restart, like the reference), then the [[runContinuous]]
+    * loop runs over it with per-table fault isolation.
     */
   def runContinuousCh(
       spark: SparkSession,
@@ -321,76 +185,9 @@ object WireSync {
       orderKeys: Map[String, String] = Map.empty,
       intervalMs: Long = 0L,
       onPassEnd: (Int, Seq[Either[(String, String), PassResult]]) => Unit = (_, _) => ()
-  ): Seq[Seq[Either[(String, String), PassResult]]] = {
-    val src = new ChHttpClient(srcEndpoint)
-    ClickHouseDdl.bootstrapSqlCh(targetDb).foreach(tgt.execute)
-    val tables = src.showTables(srcDb)
-    (1 to maxPasses).map { pass =>
-      val results = tables.map { srcTable =>
-        try Right(syncChTable(spark, src, srcEndpoint, srcDb, srcTable, tgt,
-          chExecutorFactory, targetDb, batchSize, insertBatchSize, orderKeys))
-        catch { case scala.util.control.NonFatal(e) => Left((srcTable, e.toString)) }
-      }
-      onPassEnd(pass, results)
-      if (intervalMs > 0 && pass < maxPasses) Thread.sleep(intervalMs)
-      results
-    }
-  }
-
-  private def syncChTable(
-      spark: SparkSession,
-      src: ChHttpClient,
-      srcEndpoint: String,
-      srcDb: String,
-      srcTable: String,
-      tgt: ChHttpClient,
-      chExecutorFactory: () => BatchedUpsertWriter.BatchExecutor,
-      targetDb: String,
-      batchSize: Int,
-      insertBatchSize: Int,
-      orderKeys: Map[String, String]
-  ): PassResult = {
-    {
-      val described = src.describeTable(srcDb, srcTable)
-      val schema = StructType(described.map { case (n, t) => StructField(n, TypeMapper.chType(t)) })
-      val table = graft.operators.Flatten.sanitizeName(srcTable)
-      tgt.execute(ClickHouseDdl.createTableSql(targetDb, srcTable, schema))
-      val timeField = Incremental.detectTimeField(schema)
-      // watermark literal at the time COLUMN's native precision (see
-      // ClickHouseDdl.watermarkFormat): DateTime64 keeps the micro fix,
-      // plain DateTime/Date get literals their parser compares exactly
-      val wmFormat = timeField.map(t =>
-        ClickHouseDdl.watermarkFormat(described.find(_._1 == t).map(_._2).getOrElse("")))
-      val wm = tgt.query(ClickHouseDdl.lastSyncTimeSql(targetDb, table))
-      val lastSync = wm.headOption.map(r => Option(r(0)).getOrElse("")).getOrElse("")
-      val isFull = timeField.isEmpty || lastSync.isEmpty
-      val mode = if (isFull) "full" else "incremental"
-      val where =
-        if (isFull) None
-        else timeField.map(t =>
-          s"`$t` > '${lastSync.replace("\\", "\\\\").replace("'", "\\'")}'")
-      // disjoint pages need a deterministic order key (see ChSource
-      // class note) — callers override per table, default first column
-      val orderKey = orderKeys.getOrElse(srcTable, schema.fieldNames.head)
-      val (df, total) = graft.sinks.ChSource.readWithCount(spark, srcEndpoint, srcDb, srcTable,
-        batchSize, orderBy = Some(orderKey), where = where)
-      if (total == 0L) {
-        PassResult(srcTable, table, mode, 0L, 0L, 0L, timeField.getOrElse(""), "", lastSync, "")
-      } else {
-        val stats = BatchedUpsertWriter.write(df, targetDb, table, insertBatchSize, chExecutorFactory,
-          maxOf = timeField.map(t => date_format(col(t), wmFormat.get)).toSeq)
-        val advanced = stats.failedRows == 0L
-        val newSync =
-          if (advanced && timeField.isDefined) Seq(lastSync, stats.maxima(0)).max else lastSync
-        if (advanced && timeField.isDefined && stats.rows > 0) {
-          tgt.execute(ClickHouseDdl.insertSyncStateSqlCh(targetDb) +
-            s" (${graft.sinks.ChHttp.sqlLiteral(table)}, ${graft.sinks.ChHttp.sqlLiteral(newSync)}, '', ${stats.rows})")
-        }
-        PassResult(srcTable, table, mode, stats.rows, stats.fallbackRows, stats.failedRows,
-          timeField.getOrElse(""), "", newSync, "", stats.errors)
-      }
-    }
-  }
+  ): Seq[Seq[Either[(String, String), PassResult]]] =
+    chVariant(spark, srcEndpoint, srcDb, tgt, chExecutorFactory, targetDb, batchSize,
+      insertBatchSize, orderKeys).runContinuous(maxPasses, intervalMs, onPassEnd)
 
   /** The MongoDB variant's defining job, composed over both live
     * wires (mongodb_to_bytehouse.py:579-779 `run`): per collection,
@@ -403,12 +200,9 @@ object WireSync {
     * schema on the wire (`ALTER TABLE … ADD COLUMN` for fields later
     * batches surface — document stores are ragged by design), and
     * land rows through the partition-parallel batched INSERT with
-    * row-at-a-time fallback. Same failed-batch discipline as
-    * [[syncIndex]]: any permanently-failed row vetoes the state
-    * append, so the next pass re-reads the batch (idempotent on the
-    * UNIQUE-KEY target) instead of orphaning rows. One Spark job per
-    * collection, the write, which returns the newest `_id`; a cursor
-    * that drained no document skips it.
+    * row-at-a-time fallback. One Spark job per collection, the write,
+    * which returns the newest `_id`; a cursor that drained no document
+    * skips it.
     */
   def runMongo(
       spark: SparkSession,
@@ -421,23 +215,15 @@ object WireSync {
       targetDb: String,
       batchSize: Int = 1000,
       insertBatchSize: Int = 1000
-  ): Seq[PassResult] = {
-    ClickHouseDdl.bootstrapSqlCh(targetDb).foreach(ch.execute)
-    collections.map { coll =>
-      syncMongoCollection(spark, mongoHost, mongoPort, mongoDb, coll, ch,
-        chExecutorFactory, targetDb, batchSize, insertBatchSize)
-    }
-  }
+  ): Seq[PassResult] =
+    mongoVariant(spark, mongoHost, mongoPort, mongoDb, collections, ch, chExecutorFactory,
+      targetDb, batchSize, insertBatchSize).run()
 
   /** The reference Mongo variant's deployment loop
-    * (mongodb_to_bytehouse.py:726-776 `run_incremental`): collections
-    * resolve ONCE before the loop, then every pass re-reads each
-    * collection's OID watermark from the target and syncs under
-    * PER-COLLECTION fault isolation (the reference's try/except inside
-    * `for collection_name in collections`) — a dropped cursor or
-    * target outage on one collection is a `Left`; the rest of the
-    * pass proceeds and the failed collection resumes from its intact
-    * watermark next pass.
+    * (mongodb_to_bytehouse.py:726-776 `run_incremental`): the
+    * [[runContinuous]] loop over the given collections with
+    * per-collection fault isolation (the reference's try/except inside
+    * `for collection_name in collections`).
     */
   def runContinuousMongo(
       spark: SparkSession,
@@ -453,68 +239,268 @@ object WireSync {
       insertBatchSize: Int = 1000,
       intervalMs: Long = 0L,
       onPassEnd: (Int, Seq[Either[(String, String), PassResult]]) => Unit = (_, _) => ()
-  ): Seq[Seq[Either[(String, String), PassResult]]] = {
-    ClickHouseDdl.bootstrapSqlCh(targetDb).foreach(ch.execute)
-    (1 to maxPasses).map { pass =>
-      val results = collections.map { coll =>
-        try Right(syncMongoCollection(spark, mongoHost, mongoPort, mongoDb, coll, ch,
-          chExecutorFactory, targetDb, batchSize, insertBatchSize))
-        catch { case scala.util.control.NonFatal(e) => Left((coll, e.toString)) }
+  ): Seq[Seq[Either[(String, String), PassResult]]] =
+    mongoVariant(spark, mongoHost, mongoPort, mongoDb, collections, ch, chExecutorFactory,
+      targetDb, batchSize, insertBatchSize).runContinuous(maxPasses, intervalMs, onPassEnd)
+
+  /** One variant, its target bootstrapped: the objects a sweep syncs
+    * (`listing` names them in the `Left` of a failed listing) and the
+    * pass over one object.
+    */
+  private case class Variant(listing: String, objects: () => Seq[String], sync: String => PassResult) {
+
+    /** One sweep; the first failure propagates. */
+    def run(): Seq[PassResult] = objects().map(sync)
+
+    /** The deployment loop of [[WireSync.runContinuous]]: every pass
+      * lists the objects and syncs each one in isolation.
+      */
+    def runContinuous(
+        maxPasses: Int,
+        intervalMs: Long,
+        onPassEnd: (Int, Seq[Either[(String, String), PassResult]]) => Unit
+    ): Seq[Seq[Either[(String, String), PassResult]]] =
+      SyncRunner.poll(maxPasses, intervalMs, onPassEnd) { _ =>
+        isolated(listing)(objects()).fold(e => Seq(Left(e)), _.map(o => isolated(o)(sync(o))))
       }
-      onPassEnd(pass, results)
-      if (intervalMs > 0 && pass < maxPasses) Thread.sleep(intervalMs)
-      results
-    }
+
+    private def isolated[A](name: String)(f: => A): Either[(String, String), A] =
+      try Right(f) catch { case scala.util.control.NonFatal(e) => Left((name, e.toString)) }
   }
 
-  private def syncMongoCollection(
+  /** How a variant keys `_sync_state`: the watermark query (its row
+    * holds max(last_sync_time), max(last_update_time)) and the state row
+    * for a new (sync, update) watermark pair and the rows landed.
+    */
+  private case class StateKey(query: String, row: (String, String, Long) => String)
+
+  /** The CH-variant, table-keyed state (CH and Mongo sources). */
+  private def tableState(db: String, name: String): StateKey = {
+    val table = Flatten.sanitizeName(name)
+    StateKey(ClickHouseDdl.lastSyncTimeSql(db, table), (sync, _, rows) =>
+      ClickHouseDdl.insertSyncStateSqlCh(db) +
+        s" (${ChHttp.sqlLiteral(table)}, ${ChHttp.sqlLiteral(sync)}, '', $rows)")
+  }
+
+  /** One object, one pass, for every variant: watermark read → routing
+    * → `read` → batched wire write → state append.
+    * `read(isFull, lastSync, lastUpdate)` fetches the batch, `None` when
+    * nothing moved, with the columns whose maxima are the batch's
+    * watermarks (time field, then update field).
+    *
+    * The commit rule: a batch with ANY permanently-failed row must NOT
+    * advance state — the failed rows' timestamps may be at or below the
+    * batch max, so advancing would orphan them forever. Leaving the
+    * watermark put means the next pass re-reads the whole failed batch;
+    * re-inserts are idempotent on the target (UNIQUE KEY), lost rows are
+    * not. Otherwise each watermark moves to the max of its old value and
+    * the batch max (monotone), and a state row is appended only when
+    * rows landed — an empty read writes nothing and appends nothing
+    * (the reference skips the bookkeeping insert on an empty batch,
+    * es_to_bytehouse.py:1087). An object without a time field re-syncs
+    * in full every pass and keeps no state.
+    */
+  private def syncObject(
+      name: String,
+      ch: ChHttpClient,
+      targetDb: String,
+      chExecutorFactory: () => BatchedUpsertWriter.BatchExecutor,
+      insertBatchSize: Int,
+      timeField: Option[String],
+      updateField: Option[String],
+      state: StateKey
+  )(read: (Boolean, String, String) => Option[(DataFrame, Seq[Column])]): PassResult = {
+    val table = Flatten.sanitizeName(name)
+    val (lastSync, lastUpdate) = ch.query(state.query).headOption
+      .fold(("", ""))(r => (Option(r(0)).getOrElse(""), Option(r(1)).getOrElse("")))
+    val isFull = timeField.isEmpty || lastSync.isEmpty
+    val stats = read(isFull, lastSync, lastUpdate).fold(BatchedUpsertWriter.WriteStats(0L, 0L, 0L, 0L)) {
+      case (frame, maxOf) =>
+        BatchedUpsertWriter.write(frame, targetDb, table, insertBatchSize, chExecutorFactory, maxOf)
+    }
+    val advanced = stats.failedRows == 0L && timeField.isDefined
+    def newer(old: String, i: Int) = if (advanced) Seq(old, stats.maxima.lift(i).getOrElse("")).max else old
+    val (newSync, newUpdate) = (newer(lastSync, 0), newer(lastUpdate, 1))
+    if (advanced && stats.rows > 0) ch.execute(state.row(newSync, newUpdate, stats.rows))
+    PassResult(name, table, if (isFull) "full" else "incremental", stats.rows, stats.fallbackRows,
+      stats.failedRows, timeField.getOrElse(""), updateField.getOrElse(""), newSync, newUpdate,
+      stats.errors)
+  }
+
+  /** CREATE the all-String target for `obj`, DESCRIBE it, and ALTER in
+    * the `fields` it lacks (the reference's add_new_columns,
+    * es_to_bytehouse.py:994-1023) — otherwise every INSERT after a new
+    * field references a missing column and the sync wedges forever.
+    * `_timestamp` rides its now64(3) server DEFAULT. Returns the
+    * target's columns after the ALTERs.
+    */
+  private def ensureAllStringTable(ch: ChHttpClient, db: String, obj: String,
+      fields: Seq[String]): Seq[String] = {
+    ch.execute(ClickHouseDdl.createTableSqlAllString(db, obj, fields, addTimestamp = true))
+    val table = Flatten.sanitizeName(obj)
+    val described = ch.describeTable(db, table).map(_._1)
+    val missing = fields.filterNot(described.toSet)
+    Incremental.alterStatements(db, table, missing.map(_ -> "String")).foreach(ch.execute)
+    described ++ missing
+  }
+
+  /** ES → CH: bootstraps the index-keyed state; every sweep re-lists
+    * the indices matching the pattern. One index is mapping → DDL →
+    * [[syncObject]] over the watermark-routed scroll or PIT read, two
+    * Spark jobs: schema inference over the batch, then the write, which
+    * parses, flattens and conforms in its tasks.
+    */
+  private def esVariant(
+      spark: SparkSession,
+      es: EsRestClient,
+      esCfg: EsSourceConfig,
+      ch: ChHttpClient,
+      chExecutorFactory: () => BatchedUpsertWriter.BatchExecutor,
+      targetDb: String,
+      insertBatchSize: Int,
+      usePit: Boolean
+  ): Variant = {
+    import spark.implicits._
+    def syncIndex(index: String): PassResult = {
+      // --- mapping → flattened field names + time-field detection ------
+      // (es_to_bytehouse.py:260-294, 467-529): detection runs on the
+      // MAPPING's types, not sampled data — an empty index still routes
+      val detailed = es.mappingFieldsDetailed(index) // sanitized -> (es type, raw ES path)
+      val fieldNames = detailed.keys.toSeq.sorted
+      // ES-side queries/sorts must name RAW fields (the reference's
+      // original_time_field remap, es_to_bytehouse.py:836-839): the
+      // sanitized spelling ('@timestamp' -> 'timestamp') only exists in
+      // the TARGET — ES would match nothing, losing every incremental row
+      def rawPath(n: String): String = detailed.get(n).map(_._2).getOrElse(n)
+      val mappingSchema = StructType(fieldNames.map(n => StructField(n, TypeMapper.esType(detailed(n)._1))))
+      val timeField = Incremental.detectTimeField(mappingSchema)
+      val updateField = Incremental.detectUpdateTimeField(mappingSchema).filterNot(timeField.contains)
+
+      // target DDL, all-String fidelity (es_to_bytehouse.py:300-336)
+      ensureAllStringTable(ch, targetDb, index, fieldNames)
+      val table = Flatten.sanitizeName(index)
+      val state = StateKey(ClickHouseDdl.lastSyncTimeSqlEs(targetDb, index), (sync, update, rows) =>
+        ClickHouseDdl.insertSyncStateSqlEs(targetDb) + " " +
+          (Seq(index, table, timeField.getOrElse(""), updateField.getOrElse(""), sync, update)
+            .map(ChHttp.sqlLiteral) :+ rows.toString).mkString("(", ", ", ")"))
+
+      val timePath = timeField.map(rawPath).getOrElse("")
+      val updatePath = updateField.map(rawPath).getOrElse("")
+
+      syncObject(index, ch, targetDb, chExecutorFactory, insertBatchSize, timeField, updateField, state) {
+        (isFull, lastSync, lastUpdate) =>
+          // --- watermark-routed source read (server-side filter + sort) --
+          val since = if (updateField.isDefined) lastUpdate else ""
+          val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
+          if (usePit) {
+            // ES 8 path: the query rides the PIT body (the incremental sort
+            // is supplied as the PIT sortField; full sync orders by _shard_doc)
+            val q =
+              if (isFull) """{"match_all":{}}"""
+              else EsSourceConfig.incrementalQuery(timePath, lastSync, updatePath, since)
+            es.pitSearchAfterPages(index, q, esCfg.scrollSize,
+              sortField = timePath, keepAlive = esCfg.scrollTimeout)(page => buf ++= page)
+          } else {
+            val body =
+              if (isFull) EsSourceConfig.fullSearchBody(esCfg.scrollSize)
+              else EsSourceConfig.incrementalSearchBody(esCfg.scrollSize, timePath, lastSync, updatePath, since)
+            es.scrollPages(index, body, esCfg.scrollTimeout)(page => buf ++= page)
+          }
+          if (buf.isEmpty) None
+          else {
+            // --- flatten to the all-String row surface -------------------
+            // per-batch inference (explicit, uncached): driver-built frames
+            // carry no file fingerprint, and an incremental batch may
+            // surface fields the full pass never saw
+            val raw = EsRestClient.docFrame(spark, buf.toSeq)
+            val docSchema = spark.read.json(raw.select("doc").as[String]).schema
+            val flat = JsonIngest.parseAndFlatten(spark, raw, "doc", schemaOverride = Some(docSchema))
+            val renamed = flat.select(flat.columns.toIndexedSeq.map(c => col(c).as(c.stripPrefix("doc_"))): _*)
+            val targetSchema = StructType(
+              StructField("_id", StringType) +: fieldNames.map(n => StructField(n, StringType)))
+            Some((Incremental.conformToTarget(renamed, targetSchema), (timeField.toSeq ++ updateField).map(col)))
+          }
+      }
+    }
+    bootstrap(ch, targetDb)
+    Variant(esCfg.indexPattern, () => es.catIndices(esCfg.indexPattern), syncIndex)
+  }
+
+  /** CH → CH: bootstraps the table-keyed state and lists the source
+    * tables once. One table is typed DDL → [[syncObject]] over the paged
+    * read, whose incremental WHERE rides every COUNT and page query.
+    */
+  private def chVariant(
+      spark: SparkSession,
+      srcEndpoint: String,
+      srcDb: String,
+      tgt: ChHttpClient,
+      chExecutorFactory: () => BatchedUpsertWriter.BatchExecutor,
+      targetDb: String,
+      batchSize: Int,
+      insertBatchSize: Int,
+      orderKeys: Map[String, String]
+  ): Variant = {
+    val src = new ChHttpClient(srcEndpoint)
+    def syncChTable(srcTable: String): PassResult = {
+      val described = src.describeTable(srcDb, srcTable)
+      val schema = StructType(described.map { case (n, t) => StructField(n, TypeMapper.chType(t)) })
+      tgt.execute(ClickHouseDdl.createTableSql(targetDb, srcTable, schema))
+      val timeField = Incremental.detectTimeField(schema)
+      // watermark literal at the time COLUMN's native precision (see
+      // ClickHouseDdl.watermarkFormat): DateTime64 keeps the micro fix,
+      // plain DateTime/Date get literals their parser compares exactly
+      val wmFormat = timeField.map(t =>
+        ClickHouseDdl.watermarkFormat(described.find(_._1 == t).map(_._2).getOrElse("")))
+      // disjoint pages need a deterministic order key (see ChSource
+      // class note) — callers override per table, default first column
+      val orderKey = orderKeys.getOrElse(srcTable, schema.fieldNames.head)
+      syncObject(srcTable, tgt, targetDb, chExecutorFactory, insertBatchSize, timeField, None,
+        tableState(targetDb, srcTable)) { (isFull, lastSync, _) =>
+        val where = if (isFull) None else timeField.map(t => s"`$t` > ${ChHttp.sqlLiteral(lastSync)}")
+        val (df, total) = ChSource.readWithCount(spark, srcEndpoint, srcDb, srcTable,
+          batchSize, orderBy = Some(orderKey), where = where)
+        if (total == 0L) None
+        else Some((df, timeField.map(t => date_format(col(t), wmFormat.get)).toSeq))
+      }
+    }
+    ClickHouseDdl.bootstrapSqlCh(targetDb).foreach(tgt.execute)
+    val tables = src.showTables(srcDb)
+    Variant(srcDb, () => tables, syncChTable)
+  }
+
+  /** Mongo → CH: bootstraps the table-keyed state over the given
+    * collections. One collection is [[syncObject]] over the `_id > oid`
+    * cursor drain; the target DDL follows the fields the batch surfaced
+    * (already sanitized by [[MongoSource.flattenDoc]]).
+    */
+  private def mongoVariant(
       spark: SparkSession,
       mongoHost: String,
       mongoPort: Int,
       mongoDb: String,
-      coll: String,
+      collections: Seq[String],
       ch: ChHttpClient,
       chExecutorFactory: () => BatchedUpsertWriter.BatchExecutor,
       targetDb: String,
       batchSize: Int,
       insertBatchSize: Int
-  ): PassResult = {
-    {
-      val table = graft.operators.Flatten.sanitizeName(coll)
-      val wm = ch.query(ClickHouseDdl.lastSyncTimeSql(targetDb, table))
-      val lastId = wm.headOption.map(r => Option(r(0)).getOrElse("")).getOrElse("")
-      val mode = if (lastId.isEmpty) "full" else "incremental"
-      val (df, drained) = graft.sources.MongoSource.readWithCount(spark, mongoHost, mongoPort,
-        mongoDb, coll, batchSize, if (lastId.isEmpty) None else Some(lastId))
-      if (drained == 0L) {
-        PassResult(coll, table, mode, 0L, 0L, 0L, "_id", "", lastId, "")
-      } else {
-        // target DDL from this batch's discovered fields; fields the
-        // existing target lacks become wire-side ALTERs (the
-        // reference's add_new_columns move)
-        val fields = df.columns.filterNot(_ == "_id").toIndexedSeq
-        ch.execute(ClickHouseDdl.createTableSqlAllString(targetDb, coll, fields, addTimestamp = true))
-        val described = ch.describeTable(targetDb, table).map(_._1)
-        val sanitized = fields.map(graft.operators.Flatten.sanitizeName).distinct
-        val newCols = sanitized.filterNot(described.toSet)
-        Incremental.alterStatements(targetDb, table, newCols.map(_ -> "String")).foreach(ch.execute)
-        // insert column order = target order; _timestamp keeps its
-        // server-side now64(3) DEFAULT by being absent from the insert
-        val targetSchema = StructType(
-          (described.filterNot(_ == "_timestamp") ++ newCols).distinct
-            .map(n => StructField(n, StringType)))
-        val conformed = Incremental.conformToTarget(df, targetSchema)
-        val stats = BatchedUpsertWriter.write(conformed, targetDb, table, insertBatchSize,
-          chExecutorFactory, maxOf = Seq(col("_id")))
-        val advanced = stats.failedRows == 0L
-        val newWm = if (advanced) Seq(lastId, stats.maxima(0)).max else lastId
-        if (advanced && stats.rows > 0) {
-          ch.execute(ClickHouseDdl.insertSyncStateSqlCh(targetDb) +
-            s" (${graft.sinks.ChHttp.sqlLiteral(table)}, ${graft.sinks.ChHttp.sqlLiteral(newWm)}, '', ${stats.rows})")
+  ): Variant = {
+    def syncCollection(coll: String): PassResult =
+      syncObject(coll, ch, targetDb, chExecutorFactory, insertBatchSize, Some("_id"), None,
+        tableState(targetDb, coll)) { (isFull, lastId, _) =>
+        val (df, drained) = MongoSource.readWithCount(spark, mongoHost, mongoPort,
+          mongoDb, coll, batchSize, if (isFull) None else Some(lastId))
+        if (drained == 0L) None
+        else {
+          val columns = ensureAllStringTable(ch, targetDb, coll, df.columns.filterNot(_ == "_id").toIndexedSeq)
+          // insert column order = target order; _timestamp keeps its
+          // server-side now64(3) DEFAULT by being absent from the insert
+          val targetSchema = StructType(columns.filterNot(_ == "_timestamp").map(StructField(_, StringType)))
+          Some((Incremental.conformToTarget(df, targetSchema), Seq(col("_id"))))
         }
-        PassResult(coll, table, mode, stats.rows, stats.fallbackRows, stats.failedRows,
-          "_id", "", newWm, "", stats.errors)
       }
-    }
+    ClickHouseDdl.bootstrapSqlCh(targetDb).foreach(ch.execute)
+    Variant(mongoDb, () => collections, syncCollection)
   }
 }
