@@ -992,7 +992,8 @@ object VecOps {
   }
 
   def nearest_centroid_ll(vec: Column, cents: Array[Long], d: Int): Column =
-    ColumnBridge.column(NearestCentroidLL(ColumnBridge.expression(vec), cents, d))
+    ColumnBridge.column(NearestCentroidLL(ColumnBridge.expression(vec),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(cents), d))
 
   /** `trim(regexp_replace(lower(text), "\s+", " "))` in one pass:
     * lowercase via UTF8String.toLowerCase (the same implementation
@@ -1618,10 +1619,12 @@ object VecOps {
   }
 
   def pq_encode(vec: Column, cb: Array[Float], m: Int, kCodes: Int, subDim: Int): Column =
-    ColumnBridge.column(PqEncode(ColumnBridge.expression(vec), cb, m, kCodes, subDim))
+    ColumnBridge.column(PqEncode(ColumnBridge.expression(vec),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(cb), m, kCodes, subDim))
 
   def pq_query_table(vec: Column, cb: Array[Float], m: Int, kCodes: Int, subDim: Int): Column =
-    ColumnBridge.column(PqQueryTable(ColumnBridge.expression(vec), cb, m, kCodes, subDim))
+    ColumnBridge.column(PqQueryTable(ColumnBridge.expression(vec),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(cb), m, kCodes, subDim))
 
   def pq_adc(code: Column, table: Column, m: Int, kCodes: Int): Column =
     ColumnBridge.column(PqAdcScore(ColumnBridge.expression(code), ColumnBridge.expression(table), m, kCodes))
@@ -2342,7 +2345,8 @@ case class TrigramProfileScores(child: Expression, profiles: Seq[Seq[String]]) e
   override protected def withNewChildInternal(c: Expression): TrigramProfileScores = copy(child = c)
 }
 
-// mu/v as IndexedSeq, not Array: case-class equality on Array is
+// mu/v (and the PqEncode / PqQueryTable / NearestCentroidLL tables)
+// as IndexedSeq, not Array: case-class equality on Array is
 // reference equality, which made semantically identical expressions
 // never compare equal — defeating expression canonicalization,
 // subexpression elimination, and CacheManager plan matching for any
@@ -2499,8 +2503,9 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
   * reference object (per-plan, not per-row), well under broadcast
   * territory. m ≤ 8 so codes pack one byte per subspace into a Long.
   */
-case class PqEncode(child: Expression, cb: Array[Float], m: Int, kCodes: Int, subDim: Int)
+case class PqEncode(child: Expression, cb: IndexedSeq[Float], m: Int, kCodes: Int, subDim: Int)
     extends UnaryExpression {
+  @transient private lazy val cbArr: Array[Float] = cb.toArray
   override def dataType: DataType = LongType
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _)
@@ -2512,16 +2517,17 @@ case class PqEncode(child: Expression, cb: Array[Float], m: Int, kCodes: Int, su
         s"pq_encode needs array<float>, 1<=m<=8, 1<=kCodes<=256, cb of m*kCodes*subDim floats; got $other m=$m k=$kCodes sub=$subDim cb=${cb.length}")
   }
   override def nullSafeEval(v: Any): Any =
-    VecOps.pqEncode(v.asInstanceOf[ArrayData], cb, m, kCodes, subDim)
+    VecOps.pqEncode(v.asInstanceOf[ArrayData], cbArr, m, kCodes, subDim)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCb", cb, "float[]")
+    val ref = ctx.addReferenceObj("pqCb", cbArr, "float[]")
     defineCodeGen(ctx, ev, c => s"graft.functions.VecOps.pqEncode($c, $ref, $m, $kCodes, $subDim)")
   }
   override protected def withNewChildInternal(c: Expression): PqEncode = copy(child = c)
 }
 
-case class PqQueryTable(child: Expression, cb: Array[Float], m: Int, kCodes: Int, subDim: Int)
+case class PqQueryTable(child: Expression, cb: IndexedSeq[Float], m: Int, kCodes: Int, subDim: Int)
     extends UnaryExpression {
+  @transient private lazy val cbArr: Array[Float] = cb.toArray
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _)
@@ -2533,9 +2539,9 @@ case class PqQueryTable(child: Expression, cb: Array[Float], m: Int, kCodes: Int
         s"pq_query_table needs array<float> + consistent (m, kCodes, subDim, cb); got $other")
   }
   override def nullSafeEval(v: Any): Any =
-    VecOps.pqQueryTable(v.asInstanceOf[ArrayData], cb, m, kCodes, subDim)
+    VecOps.pqQueryTable(v.asInstanceOf[ArrayData], cbArr, m, kCodes, subDim)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqCb", cb, "float[]")
+    val ref = ctx.addReferenceObj("pqCb", cbArr, "float[]")
     defineCodeGen(ctx, ev, c => s"graft.functions.VecOps.pqQueryTable($c, $ref, $m, $kCodes, $subDim)")
   }
   override protected def withNewChildInternal(c: Expression): PqQueryTable = copy(child = c)
@@ -2561,8 +2567,9 @@ case class PqAdcScore(left: Expression, right: Expression, m: Int, kCodes: Int)
   * object (k·d Longs — a few KB, nothing like the CMS-grid case that
   * needs a broadcast), so every task gets them with its binary.
   */
-case class NearestCentroidLL(child: Expression, cents: Array[Long], d: Int)
+case class NearestCentroidLL(child: Expression, cents: IndexedSeq[Long], d: Int)
     extends UnaryExpression {
+  @transient private lazy val centsArr: Array[Long] = cents.toArray
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) if d >= 1 && cents.nonEmpty && cents.length % d == 0 =>
@@ -2571,9 +2578,9 @@ case class NearestCentroidLL(child: Expression, cents: Array[Long], d: Int)
       TypeCheckResult.TypeCheckFailure(s"nearest_centroid_ll needs array<long> + cents multiple of d; got $other")
   }
   override def nullSafeEval(v: Any): Any =
-    VecOps.nearestCentroidLL(v.asInstanceOf[ArrayData], cents, d)
+    VecOps.nearestCentroidLL(v.asInstanceOf[ArrayData], centsArr, d)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("kmeansCents", cents, "long[]")
+    val ref = ctx.addReferenceObj("kmeansCents", centsArr, "long[]")
     defineCodeGen(ctx, ev, c => s"graft.functions.VecOps.nearestCentroidLL($c, $ref, $d)")
   }
   override protected def withNewChildInternal(c: Expression): NearestCentroidLL = copy(child = c)

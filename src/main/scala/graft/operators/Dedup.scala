@@ -866,6 +866,13 @@ object Dedup {
       .orderBy(col(idCol))
   }
 
+  /** The size gate of the graph operators that switch between a driver
+    * kernel and a distributed loop ([[connectedComponents]],
+    * [[GraphOps.labelPropRounds]]): symmetric raw edge rows up to which
+    * the edge list is collected and processed in driver memory.
+    */
+  private[graft] val DriverMaxEdges: Long = 1L << 20
+
   /** C14: connected components over near-dup pairs — pairs alone don't
     * dedup a corpus; the survivor set is one doc per component of the
     * near-dup graph. Returns (id, cluster_id) where cluster_id is the
@@ -886,13 +893,19 @@ object Dedup {
     * round, never a data collect. Exiting via `maxIters` with the sum
     * still falling would mean silently-wrong components, so that case
     * THROWS — a correctness tool must fail loudly, never approximate.
+    *
+    * Below `driverMaxEdges` symmetric edges (2 × the pair count) a
+    * driver union-find replaces the loop. The count is of RAW pairs,
+    * duplicates and self-loops included, not distinct ones: union-find
+    * reads the raw pair list, so raw rows are what bound driver memory,
+    * and counting them needs no distinct shuffle.
     */
   def connectedComponents(
       pairs: DataFrame,
       idACol: String = "id_a",
       idBCol: String = "id_b",
       maxIters: Int = 20,
-      driverMaxEdges: Long = 1L << 20
+      driverMaxEdges: Long = DriverMaxEdges
   ): DataFrame = {
     // Materialize the pair list ONCE before anything references it
     // twice: the union-with-swap below puts the pairs subtree in the

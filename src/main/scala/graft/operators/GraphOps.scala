@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Link-graph operators for web-corpus curation. Reference scope:
   * the reference ETL has no graph capability; this implements the
@@ -287,39 +290,79 @@ object GraphOps {
     * smallest node id within `rounds` hops — nodes sharing a label are
     * provably connected, and labels stabilize to connected components
     * once rounds ≥ diameter. The fixed budget is the point: a
-    * production pipeline runs k rounds per batch window (cost is k
-    * keyed join+agg pairs, known in advance) instead of
-    * converge-to-fixpoint whose round count the data controls —
-    * [[graft.operators.Dedup]] cluster assignment wants the exact
-    * fixpoint; THIS is the budgeted scan that feeds dashboards.
+    * production pipeline runs k rounds per batch window (cost known in
+    * advance) instead of converge-to-fixpoint whose round count the
+    * data controls — [[graft.operators.Dedup]] cluster assignment
+    * wants the exact fixpoint; THIS is the budgeted scan that feeds
+    * dashboards.
     *
-    * Per round: ONE keyed join of labels onto the symmetrized edge
-    * list + ONE map-side-combined min-agg — labels never visit the
-    * driver; deterministic min arithmetic makes an unrolled DuckDB
-    * twin bit-exact. localCheckpoint per round caps lineage (the
-    * pageRank discipline).
+    * Size-adaptive, like [[Dedup.connectedComponents]] and behind the
+    * same gate ([[Dedup.DriverMaxEdges]] symmetric edges): the
+    * symmetrized, self-loop-free edge list is materialized once and
+    * counted. The count is of RAW rows, duplicates included, because
+    * the driver kernel reads raw rows and that is what bounds driver
+    * memory.
+    *   - At or below the gate the edge list is collected and the
+    *     `rounds` synchronous rounds run in driver memory; each round
+    *     reads only the previous round's labels.
+    *   - Above it the rounds chain lazily in ONE plan over the closed
+    *     neighbourhood N[u] = {u} ∪ nbrs(u) (the distinct edges plus
+    *     one (u, u) row per node): round 1 is min(v) grouped by u, and
+    *     every later round is one join of the labels onto N on v plus
+    *     one min-agg on u. Each round references the labels once, so
+    *     the plan grows linearly in `rounds`; the edge list is the only
+    *     materialization and labels never visit the driver.
+    *
+    * Both sides return the same rows and schema, `(node_id, label)`
+    * sorted by node_id; a node whose only edge is a self-loop is
+    * absent. Deterministic min arithmetic keeps the unrolled DuckDB
+    * twin bit-exact.
     */
-  def labelPropRounds(edges: DataFrame, rounds: Int): DataFrame = {
+  def labelPropRounds(edges: DataFrame, rounds: Int): DataFrame =
+    labelPropRounds(edges, rounds, Dedup.DriverMaxEdges)
+
+  /** [[labelPropRounds]] with an explicit gate: 0 forces the distributed chain. */
+  private[graft] def labelPropRounds(edges: DataFrame, rounds: Int, driverMaxEdges: Long): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val sym = edges
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
       .unionAll(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
       .filter(col("u") =!= col("v"))
-      .distinct()
       .localCheckpoint()
-    var labels = sym.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    for (_ <- 0 until rounds) {
-      val fromNbrs = sym
-        .join(labels.select(col("id").as("v"), col("label")), Seq("v"))
-        .groupBy(col("u").as("id"))
-        .agg(min(col("label")).as("nl"))
-      labels = labels
-        .join(fromNbrs, Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .localCheckpoint()
+    if (sym.count() <= driverMaxEdges) driverLabelProp(sym, rounds)
+    else {
+      val nbhd = sym.unionAll(sym.select(col("u"), col("u").as("v"))).distinct()
+      var labels = nbhd.groupBy(col("u").as("node_id")).agg(min(col("v")).as("label"))
+      for (_ <- 1 until rounds)
+        labels = nbhd
+          .join(labels.select(col("node_id").as("v"), col("label")), Seq("v"))
+          .groupBy(col("u").as("node_id")).agg(min(col("label")).as("label"))
+      labels.orderBy(col("node_id"))
     }
-    labels.orderBy(col("id")).select(col("id").as("node_id"), col("label"))
+  }
+
+  /** The synchronous rounds over the collected edge list, on dense
+    * node indices; the schema is the distributed chain's (node_id as
+    * nullable as the edge ids, a min-aggregate label).
+    */
+  private def driverLabelProp(sym: DataFrame, rounds: Int): DataFrame = {
+    val rows = sym.collect()
+    val ids = rows.map(_.getLong(0)).distinct.sorted // symmetric: every node is some row's u
+    val u = rows.map(r => java.util.Arrays.binarySearch(ids, r.getLong(0)))
+    val v = rows.map(r => java.util.Arrays.binarySearch(ids, r.getLong(1)))
+    var label = ids
+    for (_ <- 0 until rounds) {
+      val next = label.clone()
+      var e = 0
+      while (e < u.length) {
+        if (label(v(e)) < next(u(e))) next(u(e)) = label(v(e))
+        e += 1
+      }
+      label = next
+    }
+    val schema = StructType(Seq(
+      StructField("node_id", LongType, sym.schema("u").nullable),
+      StructField("label", LongType, nullable = true)))
+    sym.sparkSession.createDataFrame(ids.indices.map(i => Row(ids(i), label(i))).asJava, schema)
   }
 }

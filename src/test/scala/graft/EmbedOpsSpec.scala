@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Bloom, VecOps}
@@ -11,6 +12,34 @@ class EmbedOpsSpec extends SparkSpec {
 
   lazy val docs = Catalog.load(spark, sf, "documents")
   lazy val embs = Catalog.load(spark, sf, "embeddings")
+
+  test("table-carrying kernels: equal tables give semantically equal expressions and matching canonical plans") {
+    val rnd = new scala.util.Random(3)
+    val cb = Array.fill(2 * 4 * 3)(rnd.nextFloat())
+    val cents = Array.fill(3 * 6)(rnd.nextLong() % 1000L)
+    val fv = Seq(Array.fill(6)(rnd.nextFloat())).toDF("v")
+    val lv = Seq(Array.fill(6)(rnd.nextLong() % 1000L)).toDF("v")
+    // each call builds its expression from a fresh copy of the table
+    val kernels: Seq[(org.apache.spark.sql.DataFrame, () => Column)] = Seq(
+      fv -> (() => VecOps.pq_encode(col("v"), cb.clone(), 2, 4, 3)),
+      fv -> (() => VecOps.pq_query_table(col("v"), cb.clone(), 2, 4, 3)),
+      lv -> (() => VecOps.nearest_centroid_ll(col("v"), cents.clone(), 6)),
+      lv -> (() => VecOps.dot_centered_div(col("v"), cents.take(6), cents.takeRight(6))))
+    for ((df, kernel) <- kernels) {
+      val (a, b) = (df.select(kernel().as("k")).queryExecution, df.select(kernel().as("k")).queryExecution)
+      val (ea, eb) = (a.analyzed.expressions.head.children.head, b.analyzed.expressions.head.children.head)
+      assert(ea.semanticEquals(eb), s"$ea vs $eb")
+      assert(a.analyzed.canonicalized == b.analyzed.canonicalized, s"${a.analyzed} vs ${b.analyzed}")
+    }
+    // the kernels still read their tables
+    val v = fv.head().getSeq[Float](0).toArray
+    assert(fv.select(VecOps.pq_encode(col("v"), cb, 2, 4, 3)).head().getLong(0) ==
+      VecOps.pqEncode(org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v), cb, 2, 4, 3))
+    val lvec = lv.head().getSeq[Long](0).toArray
+    assert(lv.select(VecOps.nearest_centroid_ll(col("v"), cents, 6)).head().getSeq[Long](0) ==
+      VecOps.nearestCentroidLL(org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(lvec), cents, 6)
+        .toLongArray().toSeq)
+  }
 
   test("roundHalfUp: bit-identical to BigDecimal HALF_UP across the hot range") {
     def ref(v: Double): Long =

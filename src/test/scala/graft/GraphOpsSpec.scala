@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.GraphOps
+import graft.operators.{Dedup, GraphOps}
 
 class GraphOpsSpec extends SparkSpec {
 
@@ -134,16 +134,69 @@ class GraphOpsSpec extends SparkSpec {
     // path 0-1-2-3-4-5 (diameter 5), separate pair 10-11, self-loop noise
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (11L, 10L), (3L, 3L)).toDF("src", "dst")
-    def labels(rounds: Int): Map[Long, Long] =
-      GraphOps.labelPropRounds(edges, rounds).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val l2 = labels(2)
-    assert(l2(5L) == 3L && l2(4L) == 2L && l2(2L) == 0L, s"2-hop minima: $l2")
-    assert(l2(10L) == 10L && l2(11L) == 10L, "the pair converges round 1")
-    // at rounds >= diameter the labels ARE connected components
-    val l5 = labels(5)
-    assert((0L to 5L).forall(l5(_) == 0L) && l5(10L) == 10L && l5(11L) == 10L)
-    assert(labels(7) == l5, "stable past convergence")
+    // both sides of the size gate: the driver rounds and the distributed chain
+    for (gate <- Seq(Dedup.DriverMaxEdges, 0L)) {
+      def labels(rounds: Int): Map[Long, Long] =
+        GraphOps.labelPropRounds(edges, rounds, gate).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val l2 = labels(2)
+      assert(l2(5L) == 3L && l2(4L) == 2L && l2(2L) == 0L, s"2-hop minima (gate $gate): $l2")
+      assert(l2(10L) == 10L && l2(11L) == 10L, "the pair converges round 1")
+      // at rounds >= diameter the labels ARE connected components
+      val l5 = labels(5)
+      assert((0L to 5L).forall(l5(_) == 0L) && l5(10L) == 10L && l5(11L) == 10L)
+      assert(labels(7) == l5, "stable past convergence")
+    }
+  }
+
+  test("labelPropRounds: driver rounds and the distributed chain return identical rows and schema on seeded random graphs") {
+    import spark.implicits._
+    /** Several components on non-contiguous ids, each a random tree plus
+      * extra edges; duplicated, reversed and self-loop edges; node 777777's
+      * only edge is a self-loop.
+      */
+    def graph(seed: Int): Seq[(Long, Long)] = {
+      val rnd = new scala.util.Random(seed)
+      val comps = (0 until 3 + rnd.nextInt(3)).map { c =>
+        val size = 2 + rnd.nextInt(14)
+        (0 until size).map(i => c * 1000L + 3L * i + rnd.nextInt(3)).reverse
+      }
+      val tree = comps.flatMap(ns => (1 until ns.length).map(i => (ns(i), ns(rnd.nextInt(i)))))
+      val extra = comps.flatMap(ns => Seq.fill(ns.length / 3)((ns(rnd.nextInt(ns.length)), ns(rnd.nextInt(ns.length)))))
+      val base = tree ++ extra
+      val noise = base.take(4) ++ base.takeRight(3).map(_.swap) ++
+        comps.map(ns => (ns.head, ns.head)) :+ ((777777L, 777777L))
+      rnd.shuffle(base ++ noise)
+    }
+    /** Synchronous min-label rounds over undirected, self-loop-free adjacency. */
+    def expected(edges: Seq[(Long, Long)], rounds: Int): Seq[(Long, Long)] = {
+      val nbrs = edges.filter { case (a, b) => a != b }
+        .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).distinct }
+      var label = nbrs.keys.map(k => k -> k).toMap
+      for (_ <- 1 to rounds)
+        label = label.map { case (k, l) => k -> (l +: nbrs(k).map(label)).min }
+      label.toSeq.sorted
+    }
+    for (seed <- Seq(7, 8)) {
+      val g = graph(seed)
+      val noNull = g.toDF("src", "dst")
+      // nullable ids, with an edge that has no dst
+      val nullable = (g.map { case (a, b) => (Option(a), Option(b)) } :+ ((Option(5L), None))).toDF("src", "dst")
+      for (edges <- Seq(noNull, nullable); rounds <- 1 to 6) {
+        val driver = GraphOps.labelPropRounds(edges, rounds)
+        val chain = GraphOps.labelPropRounds(edges, rounds, driverMaxEdges = 0L)
+        val ctx = s"seed $seed rounds $rounds"
+        assert(driver.queryExecution.optimizedPlan.toString.contains("LocalRelation"), ctx)
+        assert(driver.schema == chain.schema, s"$ctx: ${driver.schema} vs ${chain.schema}")
+        val rows = driver.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(rows == chain.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq, ctx)
+        assert(rows == expected(g, rounds), ctx)
+        assert(!rows.exists(_._1 == 777777L), s"$ctx: a self-loop-only node is not a graph node")
+      }
+      assert(GraphOps.labelPropRounds(noNull, 1).schema("node_id").nullable == false)
+      assert(GraphOps.labelPropRounds(nullable, 1).schema("node_id").nullable)
+    }
   }
 
   test("kcore: the staged query graph converges within the bounded rounds") {

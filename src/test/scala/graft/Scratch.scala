@@ -270,7 +270,7 @@ object Scratch {
           (col("doc_id") * 13 + 2) % n,
           (col("doc_id") * 31 + 3) % n)).as("dst"))
       noop(edges.limit(5)) // warm-up
-      val which = sys.env.getOrElse("GRAFT_PROBE_GRAPH", "pagerank,hits,kcore,labelprop")
+      val which = sys.env.getOrElse("GRAFT_PROBE_GRAPH", "pagerank,hits,kcore")
         .split(",").toSet
       def probe(name: String)(f: => org.apache.spark.sql.DataFrame): Unit =
         if (which(name)) for (r <- 1 to 4) {
@@ -290,7 +290,6 @@ object Scratch {
       probe("pagerank") { GraphOps.pageRank(edges, iters = 5, dampPct = 85) }
       probe("hits") { GraphOps.hits(edges, iters = 4) }
       probe("kcore") { GraphOps.kcoreRounds(kcEdges, k = 7, rounds = 10) }
-      probe("labelprop") { GraphOps.labelPropRounds(edges, rounds = 4) }
       spark.stop(); return
     }
     if (sys.env.contains("GRAFT_PROBE_HNSWBUILD")) {

@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{BatchedUpsertWriter, ChHttpBatchExecutor, ChHttpClient}
@@ -16,21 +14,6 @@ import graft.sync.WireSync
   * the `agg(max)` they replace, in Spark's string order.
   */
 class SyncJobsSpec extends SparkSpec {
-
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = f
-      ListenerDrain(spark.sparkContext)
-      (r, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private val noopExecutor: () => BatchedUpsertWriter.BatchExecutor =
     () => new BatchedUpsertWriter.BatchExecutor {
