@@ -9,7 +9,10 @@ import org.apache.spark.sql.SparkSession
   * complete execution of every operator — `count()` would let Catalyst
   * prune the projections we want measured). One untimed warm-up query
   * absorbs one-time session/codegen costs so numbers reflect
-  * steady-state throughput.
+  * steady-state throughput. The session's codegen class cache
+  * ([[GraftSession.CodegenCacheEntries]]) holds a query's classes
+  * between its runs and across neighbouring queries, so "warm" means
+  * no recompilation, not only a second run.
   */
 object Bench {
 
@@ -103,8 +106,12 @@ object Bench {
 
     // min of N runs: the first pays one-time plan/codegen compilation,
     // later runs measure steady-state throughput (what a long-running
-    // cluster job sees). Sub-second queries get a third run so one
-    // noisy-neighbor hiccup can't distort a number that small. The
+    // cluster job sees). The later runs reuse the first run's compiled
+    // classes: GraftSession sizes the codegen cache above one query's
+    // working set (Spark's 100-entry default evicted them between runs
+    // and across queries, so "warm" still recompiled). Sub-second
+    // queries get a third run so one noisy-neighbor hiccup can't
+    // distort a number that small. The
     // noise tie-break deliberately does NOT compare warm vs cold —
     // cold includes compilation and exceeds warm*1.25 almost always,
     // which would silently make this min-of-3 for every query (a

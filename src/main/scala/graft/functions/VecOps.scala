@@ -621,7 +621,7 @@ object VecOps {
     * interpreted aggregate fold, and 8 array_contains probes per row
     * (higher-order functions are CodegenFallback: every lambda
     * invocation is interpreted). Byte-exact to the declarative form
-    * ([[graft.operators.TextAnalysis.gopherGateDeclarative]], parity
+    * (`gopherGateDeclarative` in test-scope ParityFormulations, parity
     * spec in OptimizationParitySpec):
     *
     * Returns [n_words, sum_len, n_hash, n_ell, n_lines, n_bullet,

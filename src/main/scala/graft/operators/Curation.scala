@@ -363,8 +363,8 @@ object Curation {
     // shared positions in a codegen kernel
     // ([[graft.functions.VecOps.maxConsecRun]]) instead of a second
     // doc-keyed window sort + two more aggregations + a second join —
-    // row-identical (parity spec in OptimizationParitySpec; the
-    // gaps-and-islands formulation remains below as the reference).
+    // row-identical (parity spec in OptimizationParitySpec against the
+    // gaps-and-islands reference in test-scope ParityFormulations).
     val perDoc = exploded
       .withColumn("first_id", min(col("id")).over(Window.partitionBy(col("sh"))))
       .groupBy(col("id"))
@@ -376,40 +376,6 @@ object Curation {
           .as("max_dup_run"))
     df.select(col(idCol))
       .join(perDoc.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_windows"), lit(0L)).as("n_windows"),
-        coalesce(col("dup_windows"), lit(0L)).as("dup_windows"),
-        coalesce(col("max_dup_run"), lit(0L)).as("max_dup_run"))
-      .orderBy(col(idCol))
-  }
-
-  /** The gaps-and-islands reference formulation of [[dupSpanStats]]
-    * (parity spec target + the shape the DuckDB oracle runs).
-    */
-  private[graft] def dupSpanStatsDeclarative(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val exploded = df
-      .select(col(idCol).as("id"),
-        when(size(split(Dedup.normalize(col(textCol)), " ")) >= n,
-          graft.functions.VecOps.shingle_hashes(
-            split(Dedup.normalize(col(textCol)), " "), n))
-          .otherwise(array().cast("array<long>")).as("shs"))
-      .select(col("id"), posexplode(col("shs")))
-      .select(col("id"), col("pos").cast("long").as("pos"), col("col").as("sh"))
-    val shared = exploded
-      .withColumn("first_id", min(col("id")).over(Window.partitionBy(col("sh"))))
-      .select(col("id"), col("pos"), (col("first_id") < col("id")).as("shared"))
-    val counts = shared.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_windows"),
-        sum(when(col("shared"), 1L).otherwise(0L)).as("dup_windows"))
-    val runs = shared.filter(col("shared"))
-      .withColumn("grp",
-        col("pos") - row_number().over(Window.partitionBy(col("id")).orderBy(col("pos"))))
-      .groupBy(col("id"), col("grp")).agg(count(lit(1)).as("c"))
-      .groupBy(col("id")).agg(max(col("c")).as("max_dup_run"))
-    df.select(col(idCol))
-      .join(counts.withColumnRenamed("id", idCol), Seq(idCol), "left")
-      .join(runs.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(
         col(idCol),
         coalesce(col("n_windows"), lit(0L)).as("n_windows"),
@@ -455,8 +421,8 @@ object Curation {
     // replacing the n-way sequence explode + DISTINCT shuffle +
     // collect_set + the interpreted per-token array_contains filter
     // (O(words·|removed|) per doc). Row-identical (parity spec in
-    // OptimizationParitySpec; the exploded formulation remains below
-    // as the reference).
+    // OptimizationParitySpec against the exploded reference in
+    // test-scope ParityFormulations).
     val removedStarts = exploded
       .withColumn("first_id", min(col("id")).over(Window.partitionBy(col("sh"))))
       .filter(col("first_id") < col("id"))
@@ -470,39 +436,6 @@ object Curation {
       .select(col(idCol), col("n_tokens"),
         col("__c.n_removed").as("n_removed"),
         md5(col("__c.clean").cast("binary")).as("clean_hash"))
-      .orderBy(col(idCol))
-  }
-
-  /** The sequence-explode/distinct/array_contains reference
-    * formulation of [[clipDedup]] (parity spec target + the oracle's
-    * shape).
-    */
-  private[graft] def clipDedupDeclarative(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val docs = df.select(col(idCol).as("id"), split(Dedup.normalize(col(textCol)), " ").as("__ws"))
-    val exploded = docs
-      .select(col("id"),
-        when(size(col("__ws")) >= n,
-          graft.functions.VecOps.shingle_hashes(col("__ws"), n))
-          .otherwise(array().cast("array<long>")).as("shs"))
-      .select(col("id"), posexplode(col("shs")))
-      .select(col("id"), col("pos").cast("long").as("pos"), col("col").as("sh"))
-    val removedPos = exploded
-      .withColumn("first_id", min(col("id")).over(Window.partitionBy(col("sh"))))
-      .filter(col("first_id") < col("id"))
-      .select(col("id"), explode(sequence(col("pos"), col("pos") + (n - 1))).as("tpos"))
-      .distinct()
-    val removed = removedPos.groupBy(col("id"))
-      .agg(collect_set(col("tpos")).as("rm"), count(lit(1)).as("n_removed"))
-    docs
-      .join(removed, Seq("id"), "left")
-      .select(
-        col("id").as(idCol),
-        size(col("__ws")).cast("long").as("n_tokens"),
-        coalesce(col("n_removed"), lit(0L)).as("n_removed"),
-        md5(array_join(
-          filter(col("__ws"), (_, i) =>
-            !array_contains(coalesce(col("rm"), array().cast("array<long>")), i.cast("long"))),
-          " ").cast("binary")).as("clean_hash"))
       .orderBy(col(idCol))
   }
 

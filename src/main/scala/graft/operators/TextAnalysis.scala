@@ -22,7 +22,7 @@ object TextAnalysis {
     "zh" -> Seq("的", "是", "了", "在", "我", "有", "和", "不", "人", "这")
   )
 
-  private def words(c: Column): Column = split(Dedup.normalize(c), " ")
+  private[graft] def words(c: Column): Column = split(Dedup.normalize(c), " ")
 
   /** C8: heuristic language ID. Scores = stopword overlap per
     * language; argmax wins, alphabetical tiebreak, no overlap → "und".
@@ -115,8 +115,9 @@ object TextAnalysis {
   def gopherGate(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // all nine counts from ONE kernel pass over the raw bytes + one
     // over the normalized form ([[graft.functions.VecOps.gopherCounts]]);
-    // the declarative formulation below is the semantic reference the
-    // kernel must equal row-for-row (OptimizationParitySpec parity test) and
+    // the declarative formulation (test-scope ParityFormulations) is the
+    // semantic reference the kernel must equal row-for-row
+    // (OptimizationParitySpec parity test) and
     // the shape the DuckDB oracle runs — it paid 2 regex scans, 2
     // array splits, 4 interpreted higher-order filters and an
     // interpreted fold per row (HOFs are CodegenFallback)
@@ -131,37 +132,10 @@ object TextAnalysis {
           col("__g")(8).as("n_gstop")),
       idCol)
 
-  private[graft] def gopherGateDeclarative(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val c = col(textCol)
-    val w = words(c)
-    val lines = split(c, "\n")
-    val gStops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-    gopherFlags(
-      df.select(
-        col(idCol),
-        size(w).cast("long").as("n_words"),
-        aggregate(w, lit(0L), (a, x) => a + length(x)).as("sum_len"),
-        (length(c) - length(regexp_replace(c, "#", ""))).cast("long").as("n_hash"),
-        (((length(c) - length(regexp_replace(c, "\\.\\.\\.", ""))) / 3).cast("long") +
-          (length(c) - length(regexp_replace(c, "…", ""))).cast("long")).as("n_ell"),
-        size(lines).cast("long").as("n_lines"),
-        size(filter(lines, l => {
-          val t = ltrim(l)
-          t.startsWith("-") || t.startsWith("*") || t.startsWith("•")
-        })).cast("long").as("n_bullet"),
-        size(filter(lines, l => {
-          val t = rtrim(l)
-          t.endsWith("...") || t.endsWith("…")
-        })).cast("long").as("n_ell_line"),
-        size(filter(w, x => x.rlike("[a-z]"))).cast("long").as("n_alpha"),
-        gStops.map(s => when(array_contains(w, s), 1L).otherwise(0L)).reduce(_ + _).as("n_gstop")),
-      idCol)
-  }
-
   /** The rule flags over the nine counts — shared by the kernel and
-    * declarative formulations so parity is decided on the counts.
+    * the declarative reference so parity is decided on the counts.
     */
-  private def gopherFlags(counts: DataFrame, idCol: String): DataFrame = {
+  private[graft] def gopherFlags(counts: DataFrame, idCol: String): DataFrame = {
     def flag(b: Column): Column = when(b, 1L).otherwise(0L)
     counts
       .select(
@@ -802,35 +776,6 @@ object TextAnalysis {
       graft.functions.VecOps.normalize_ws(col(textCol)), key)
     df.select(col(idCol), wm.as("__wm"))
       .select(col(idCol), (col("__wm")(0) - 1L).as("n_bigrams"), col("__wm")(1).as("n_green"))
-      .filter(col("n_bigrams") > 0L)
-      .select(col(idCol), col("n_bigrams"), col("n_green"),
-        expr("10000 * n_green DIV n_bigrams").as("green_bp"),
-        expr("10000 * n_green DIV n_bigrams - 2500").as("excess_bp"),
-        expr("CAST(CASE WHEN 4 * n_green > n_bigrams AND " +
-          "(4 * n_green - n_bigrams) * (4 * n_green - n_bigrams) > 48 * n_bigrams " +
-          "THEN 1 ELSE 0 END AS BIGINT)").as("flagged"))
-      .orderBy(col(idCol))
-  }
-
-  /** The HOF/concat reference formulation of [[watermarkScore]]
-    * (parity spec target + the shape the DuckDB oracle runs).
-    */
-  private[graft] def watermarkScoreDeclarative(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      key: String = "graft"
-  ): DataFrame = {
-    import graft.functions.Fingerprint64.fingerprint64
-    val w = words(col(textCol))
-    val greens = zip_with(
-      slice(w, lit(1), size(w) - 1),
-      slice(w, lit(2), size(w) - 1),
-      (p, c) => when(
-        (fingerprint64(concat(lit(key), lit("\u0001"), p, lit("\u0001"), c))
-          .bitwiseAND(3L)) === 0L, 1L).otherwise(0L))
-    df.select(col(idCol), (size(w) - 1).cast("long").as("n_bigrams"),
-        aggregate(greens, lit(0L), (acc, x) => acc + x).as("n_green"))
       .filter(col("n_bigrams") > 0L)
       .select(col(idCol), col("n_bigrams"), col("n_green"),
         expr("10000 * n_green DIV n_bigrams").as("green_bp"),

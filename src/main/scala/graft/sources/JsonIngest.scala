@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -31,26 +32,52 @@ object JsonIngest {
     * discovers a source's shape once per round, then parses millions
     * of batches with it — re-inferring per query would add two jobs
     * each time. Deterministic (same sample → same schema), so caching
-    * cannot change results.
+    * cannot change results. One entry per (source, column, data
+    * version), LRU-bounded at [[SchemaCacheCapacity]] entries, so a
+    * long-lived session does not grow it forever.
     */
+  private[graft] val SchemaCacheCapacity = 64
+
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, StructType]): Boolean =
+        size > SchemaCacheCapacity
+    }
+
+  private[graft] def schemaCacheSize: Int = schemaCache.synchronized(schemaCache.size)
 
   /** Infer a StructType for the JSON column from a bounded sample.
     * Cache key = plan + data fingerprint (file listing/mtimes), so
     * fields appearing in later batches at the same path re-trigger
     * inference instead of being silently dropped.
     */
-  def inferSchema(spark: SparkSession, df: DataFrame, jsonCol: String, sample: Int = 5000): StructType =
-    schemaCache.computeIfAbsent(
-      df.queryExecution.logical.toString + "#" + jsonCol + "#" + sample +
-        "#" + Catalog.dataFingerprint(spark, df),
-      _ => {
-        import spark.implicits._
-        val ds = df.select(col(jsonCol)).na.drop().limit(sample).as[String]
-        spark.read.json(ds).schema
-      }
-    )
+  def inferSchema(spark: SparkSession, df: DataFrame, jsonCol: String, sample: Int = 5000): StructType = {
+    val key = planKey(df) + "#" + jsonCol + "#" + sample + "#" + Catalog.dataFingerprint(spark, df)
+    schemaCache.synchronized(Option(schemaCache.get(key))).getOrElse {
+      import spark.implicits._
+      val ds = df.select(col(jsonCol)).na.drop().limit(sample).as[String]
+      val schema = spark.read.json(ds).schema
+      schemaCache.synchronized(schemaCache.put(key, schema))
+      schema
+    }
+  }
+
+  /** The plan part of the schema cache key. Attribute exprIds
+    * (`props#123`) differ on every load of the same files, so a plan
+    * that only scans files keys on its canonical (exprId-normalized)
+    * form, and the data fingerprint pins the files. Any other leaf
+    * (local rows, an RDD, a JDBC table) has no fingerprint, so its
+    * key keeps the exprIds: one frame, one key. Printed without the
+    * field-count cap, so wide plans do not truncate to equal keys.
+    */
+  private def planKey(df: DataFrame): String = {
+    val plan = df.queryExecution.analyzed
+    val filesOnly = plan.collectLeaves().forall {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _                  => false
+    }
+    (if (filesOnly) plan.canonicalized else plan).treeString(verbose = true, maxFields = Int.MaxValue)
+  }
 
   /** Parse + flatten the JSON column into sanitized `prefix_key`
     * String columns alongside the passthrough columns — the

@@ -688,6 +688,38 @@ class SyncSpec extends SparkSpec {
     assert(s2.fieldNames.toSet == Set("a", "b"), "new field must re-trigger inference")
   }
 
+  test("schema inference cache hits across separate loads of the same files") {
+    val dir = tmp("graft_schemacache_events")
+    Catalog.load(spark, sf, "events").write.parquet(s"$dir/events.parquet")
+    // each load is a new frame with new exprIds; loading itself reads
+    // the parquet footers in a job, so only the inference is counted
+    def infer() = {
+      val events = Catalog.load(spark, dir, "events")
+      jobsDuring(sources.JsonIngest.inferSchema(spark, events, "props"))
+    }
+    val (s1, jobs1) = infer()
+    val (s2, jobs2) = infer()
+    assert(jobs1 > 0 && s1.nonEmpty)
+    assert(s2 == s1)
+    assert(jobs2 == 0, s"a second load of unchanged files re-ran inference ($jobs2 jobs)")
+    Thread.sleep(5) // ensure a distinct mtime
+    Catalog.load(spark, sf, "events").write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val (s3, jobs3) = infer()
+    assert(s3 == s1)
+    assert(jobs3 > 0, "rewritten files must re-trigger inference")
+  }
+
+  test("schema inference cache never holds more than its capacity") {
+    import spark.implicits._
+    val cap = sources.JsonIngest.SchemaCacheCapacity
+    for (i <- 1 to cap + 8) {
+      // a fresh in-memory frame per call: a new key every time
+      sources.JsonIngest.inferSchema(spark, Seq(s"""{"a":$i}""").toDF("doc"), "doc")
+      assert(sources.JsonIngest.schemaCacheSize <= cap)
+    }
+    assert(sources.JsonIngest.schemaCacheSize == cap)
+  }
+
   test("corrupt-JSON quarantine: bad rows kept with raw payload, good rows flattened") {
     import spark.implicits._
     val df = Seq(
