@@ -1,21 +1,30 @@
 package graft.sync
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Incremental
-import graft.sinks.PartitionedUpsert
+import graft.sinks.{PartitionedUpsert, Writers}
 
 /** Sync orchestration — the reference's full/incremental/auto modes
   * (es_to_bytehouse.py:1153-1207 `run_full_sync`,
   * 1053-1102 `run_incremental`, README "auto 模式") over parquet
   * targets, with the `_sync_state` table persisted as parquet.
   *
-  * auto mode: no state for the table → full sync, record state;
-  * state present → incremental batch (time > last_sync), upsert-merge
-  * into the target, advance state. Restart-safe: state is re-read from
-  * storage each run, exactly like the reference.
+  * Every lake entry point ([[autoSync]], [[autoSyncByOid]] and the
+  * time-less tables of [[autoSyncTables]]) runs one pass, `lakePass`:
+  * no state for the table → full sync of the source; state present →
+  * incremental batch (newer than the watermarks), probed for emptiness
+  * first so a quiescent pass writes nothing. The batch is written once,
+  * and its row count and watermark maxima ride that write. The new
+  * state comes from [[commit]], the rule the wire passes ([[WireSync]])
+  * share. Restart-safe: state is re-read from storage each pass,
+  * exactly like the reference.
   */
 object SyncRunner {
 
@@ -36,58 +45,46 @@ object SyncRunner {
       last_update_us: Long = Long.MinValue
   )
 
-  /** The state table as a DataFrame, or None when the dir is missing
-    * OR exists but holds no parquet yet — a sync that crashed between
-    * mkdir and first write must read as "no state", not throw
-    * UNABLE_TO_INFER_SCHEMA on every later pass.
+  /** A state table read with its schema given (no inference job), or
+    * an empty one when the dir is missing. A dir that exists but holds
+    * no parquet yet (a sync that crashed between mkdir and first write)
+    * reads as empty, i.e. "no state".
     */
-  private def readStateTable(spark: SparkSession, stateDir: String): Option[DataFrame] = {
+  private def stateTable[S <: Product: TypeTag](spark: SparkSession, stateDir: String): DataFrame = {
     val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val hasData = fs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (hasData) Some(spark.read.parquet(stateDir)) else None
-    }
+    val encoder = Encoders.product[S]
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(encoder.schema).parquet(stateDir)
+    else spark.emptyDataset(encoder).toDF()
   }
+
+  /** The [[SyncState]] table. Rows written before the dual-watermark
+    * columns existed read them as `""` and `Long.MinValue` (the
+    * reference defaults them the same way).
+    */
+  private def syncStateTable(spark: SparkSession, stateDir: String): DataFrame =
+    stateTable[SyncState](spark, stateDir).withColumns(Map(
+      "update_time_field" -> coalesce(col("update_time_field"), lit("")),
+      "last_update_us" -> coalesce(col("last_update_us"), lit(Long.MinValue))))
 
   def readState(spark: SparkSession, stateDir: String, table: String): Option[SyncState] = {
     import spark.implicits._
-    readStateTable(spark, stateDir).flatMap { raw =>
-      // tolerate state dirs written before the dual-watermark columns
-      // existed (the reference defaults them the same way)
-      val full = Seq(
-        "update_time_field" -> lit(""),
-        "last_update_us" -> lit(Long.MinValue)
-      ).foldLeft(raw) { case (df, (c, d)) =>
-        if (df.columns.contains(c)) df else df.withColumn(c, d)
-      }
-      full
-        .filter(col("table_name") === table)
-        .orderBy(col("updated_us").desc)
-        .limit(1)
-        .as[SyncState]
-        .collect()
-        .headOption
-    }
+    syncStateTable(spark, stateDir)
+      .filter(col("table_name") === table)
+      .orderBy(col("updated_us").desc)
+      .limit(1)
+      .as[SyncState]
+      .collect()
+      .headOption
   }
 
   /** Latest sync state per table — the reference's reporting sweep
     * (clickhouse_to_bytehouse.py:205-224 `query_sync_state`). One
     * window over the (tiny) state table; empty frame if none exists.
     */
-  def listSyncState(spark: SparkSession, stateDir: String): DataFrame = {
-    import spark.implicits._
-    readStateTable(spark, stateDir) match {
-      case None => spark.emptyDataset[SyncState].toDF()
-      case Some(raw) =>
-        Incremental.latestPerKey(raw, Seq("table_name"), Seq("updated_us"))
-          .orderBy("table_name")
-    }
-  }
+  def listSyncState(spark: SparkSession, stateDir: String): DataFrame =
+    Incremental.latestPerKey(syncStateTable(spark, stateDir), Seq("table_name"), Seq("updated_us"))
+      .orderBy("table_name")
 
   def appendState(spark: SparkSession, stateDir: String, state: SyncState): Unit = {
     import spark.implicits._
@@ -99,16 +96,11 @@ object SyncRunner {
     * (clickhouse_to_bytehouse.py:205-214, `ORDER BY sync_time DESC
     * LIMIT 10`). The state table is tiny; this is a metadata read.
     */
-  def stateHistory(spark: SparkSession, stateDir: String, table: String, limit: Int = 10): DataFrame = {
-    import spark.implicits._
-    readStateTable(spark, stateDir) match {
-      case None => spark.emptyDataset[SyncState].toDF()
-      case Some(raw) =>
-        raw.filter(col("table_name") === table)
-          .orderBy(col("updated_us").desc)
-          .limit(limit)
-    }
-  }
+  def stateHistory(spark: SparkSession, stateDir: String, table: String, limit: Int = 10): DataFrame =
+    syncStateTable(spark, stateDir)
+      .filter(col("table_name") === table)
+      .orderBy(col("updated_us").desc)
+      .limit(limit)
 
   /** Sync state for the mongo variant's ObjectId watermark
     * (mongodb_to_bytehouse.py:579-679): `last_id` is the monotone
@@ -120,14 +112,13 @@ object SyncRunner {
 
   def readOidState(spark: SparkSession, stateDir: String, table: String): Option[OidSyncState] = {
     import spark.implicits._
-    readStateTable(spark, stateDir).flatMap { raw =>
-      raw.filter(col("table_name") === table)
-        .orderBy(col("updated_us").desc, col("last_id").desc)
-        .limit(1)
-        .as[OidSyncState]
-        .collect()
-        .headOption
-    }
+    stateTable[OidSyncState](spark, stateDir)
+      .filter(col("table_name") === table)
+      .orderBy(col("updated_us").desc, col("last_id").desc)
+      .limit(1)
+      .as[OidSyncState]
+      .collect()
+      .headOption
   }
 
   def appendOidState(spark: SparkSession, stateDir: String, state: OidSyncState): Unit = {
@@ -152,21 +143,12 @@ object SyncRunner {
       nowUs: Long,
       addTimestamp: Boolean = false
   ): (String, Long) = {
-    val st = readOidState(spark, stateDir, table)
-    val delta = st match {
-      case Some(s) => Incremental.newerThanOid(source, oidCol, s.last_id)
-      case None => source
-    }
-    val stamped =
-      (if (addTimestamp) Incremental.addSyncTimestamp(delta, nowUs) else delta).persist()
-    val n = stamped.count()
-    if (n > 0) {
-      stamped.write.mode("append").parquet(targetDir)
-      val maxId = stamped.agg(max(col(oidCol))).collect()(0).getString(0)
-      appendOidState(spark, stateDir, OidSyncState(table, maxId, n, nowUs))
-    }
-    stamped.unpersist()
-    (if (st.isEmpty) "full" else "incremental", n)
+    val src = if (addTimestamp) Incremental.addSyncTimestamp(source, nowUs) else source
+    // an append replaces nothing, so an empty full pass writes nothing
+    lakePass[String](spark, readOidState(spark, stateDir, table).map(s => Seq(s.last_id)), src,
+      old => Incremental.newerThanOid(src, oidCol, old.head), Seq(col(oidCol)), "", fullReplaces = false)(
+      (batch, _) => batch.write.mode("append").parquet(targetDir),
+      (marks, n, _) => appendOidState(spark, stateDir, OidSyncState(table, marks.head, n, nowUs)))(Utf8Order)
   }
 
   /** Run one auto-mode sync pass for `source` into `targetDir`.
@@ -195,89 +177,46 @@ object SyncRunner {
       compactTargetBytes: Option[Long] = None,
       forceFull: Boolean = false
   ): (String, Long) = {
+    // ADD_TIMESTAMP mode: every synced row carries the sync time
+    // (mongodb_to_bytehouse.py:133; `_timestamp` in the reference DDL)
+    val src = if (addTimestamp) Incremental.addSyncTimestamp(source, nowUs) else source
+    def usCol(c: String): Column = unix_micros(col(c).cast("timestamp"))
+    // forceFull is the reference's explicit `--mode full` (run_full_sync
+    // re-migrates regardless of state); the rewritten target and fresh
+    // watermark row keep later incremental passes consistent
+    val st = if (forceFull) None else readState(spark, stateDir, table)
+    def record(marks: Seq[Long], rows: Long, mode: String): Unit = appendState(spark, stateDir,
+      SyncState(table, timeCol, marks(0), rows, mode, nowUs,
+        updateCol.getOrElse(st.fold("")(_.update_time_field)), marks(1)))
+    val (mode, n) = lakePass[Long](spark, st.map(s => Seq(s.last_sync_us, s.last_update_us)), src,
+      // OR-watermark delta: created after the create watermark OR
+      // updated after the update watermark (the reference's
+      // insert-or-update incremental, es_to_bytehouse.py:843-853)
+      old => src.filter(updateCol.foldLeft(usCol(timeCol) > old(0))((p, u) => p || usCol(u) > old(1))),
+      // without an update field the second maximum is null, which
+      // keeps last_update_us where it was
+      Seq(usCol(timeCol), updateCol.fold(lit(null).cast("long"))(usCol)), Long.MinValue)(
+      (batch, full) => (partitionCol, full) match {
+        case (Some(p), true) => PartitionedUpsert.writeFull(batch, targetDir, p)
+        case (Some(p), false) => PartitionedUpsert.merge(spark, batch, targetDir, keyCols, orderCols, p)
+        case (None, true) => writeSwap(batch, targetDir)
+        case (None, false) => writeSwap(
+          Incremental.mergeUpsert(spark.read.parquet(targetDir), batch, keyCols, orderCols), targetDir)
+      },
+      record)
+    // a forced pass that landed no rows has emptied a target that older
+    // state rows describe: reset the watermarks to the floor, or the
+    // next pass would resume past rows the target no longer holds
+    if (forceFull && n == 0) record(Seq(Long.MinValue, Long.MinValue), 0L, mode)
     // opt-in post-sync maintenance: every merge leaves batch-sized
     // (or shuffle-partition-count) files behind; the sweep rewrites
     // ONLY drifted dirs, so steady-state cost is metadata-only
     // (Writers.compact no-ops when already compact)
-    def maybeCompact(): Unit = compactTargetBytes.foreach { b =>
-      partitionCol match {
-        case Some(_) => graft.sinks.Writers.compactPartitioned(spark, targetDir, b)
-        case None => graft.sinks.Writers.compact(spark, targetDir, b)
-      }
+    if (n > 0) compactTargetBytes.foreach { b =>
+      if (partitionCol.isDefined) Writers.compactPartitioned(spark, targetDir, b)
+      else Writers.compact(spark, targetDir, b)
     }
-    val fs = new Path(targetDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ADD_TIMESTAMP mode: every synced row carries the sync time
-    // (mongodb_to_bytehouse.py:133; `_timestamp` in the reference DDL)
-    val src = if (addTimestamp) Incremental.addSyncTimestamp(source, nowUs) else source
-
-    def usCol(c: String): Column = unix_micros(col(c).cast("timestamp"))
-
-    /** (max create-time, max update-time) in one pass over df. */
-    def maxes(df: DataFrame): (Long, Long) = {
-      val aggs = max(usCol(timeCol)) +: updateCol.map(u => max(usCol(u))).toSeq
-      val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val t = if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-      val u =
-        if (updateCol.isDefined && !r.isNullAt(1)) r.getLong(1) else Long.MinValue
-      (t, u)
-    }
-
-    // forceFull is the reference's explicit `--mode full` (run_full_sync
-    // re-migrates regardless of state); the rewritten target and fresh
-    // watermark row keep later incremental passes consistent
-    (if (forceFull) None else readState(spark, stateDir, table)) match {
-      case None =>
-        // one persisted pass serves count, write AND watermark maxes —
-        // a full sync must scan the (100 TB) source exactly once
-        val cached = src.persist()
-        val n = cached.count()
-        partitionCol match {
-          case Some(p) => PartitionedUpsert.writeFull(cached, targetDir, p)
-          case None =>
-            val tmp = targetDir + "__tmp"
-            cached.write.mode("overwrite").parquet(tmp)
-            PartitionedUpsert.promote(fs, tmp, targetDir)
-        }
-        val (syncUs, updUs) = maxes(cached)
-        cached.unpersist()
-        appendState(spark, stateDir, SyncState(table, timeCol, syncUs, n, "full", nowUs,
-          updateCol.getOrElse(""), updUs))
-        maybeCompact()
-        ("full", n)
-      case Some(st) =>
-        // OR-watermark delta: created after the create watermark OR
-        // updated after the update watermark (the reference's
-        // insert-or-update incremental, es_to_bytehouse.py:843-853)
-        val delta = (updateCol match {
-          case Some(u) =>
-            src.filter(usCol(timeCol) > st.last_sync_us || usCol(u) > st.last_update_us)
-          case None => src.filter(usCol(timeCol) > st.last_sync_us)
-        }).persist()
-        val n = partitionCol match {
-          case Some(p) =>
-            PartitionedUpsert.merge(spark, delta, targetDir, keyCols, orderCols, p)
-          case None =>
-            val c = delta.count()
-            if (c > 0) {
-              val base = spark.read.parquet(targetDir)
-              val merged = Incremental.mergeUpsert(base, delta, keyCols, orderCols)
-              writeSwap(spark, merged, targetDir, fs)
-            }
-            c
-        }
-        if (n > 0) {
-          // watermarks only ever advance: an update-only batch must
-          // not regress last_sync_us below rows already synced
-          val (dSync, dUpd) = maxes(delta)
-          appendState(spark, stateDir, SyncState(
-            table, timeCol, math.max(st.last_sync_us, dSync), n, "incremental", nowUs,
-            updateCol.getOrElse(st.update_time_field),
-            math.max(st.last_update_us, dUpd)))
-        }
-        delta.unpersist()
-        if (n > 0) maybeCompact()
-        ("incremental", n)
-    }
+    (mode, n)
   }
 
   /** Sync every table under `srcDir` matching the wildcard pattern —
@@ -308,9 +247,11 @@ object SyncRunner {
   /** The same sweep over ANY source: `loadTable` is a thunk producing
     * the DataFrame for a table name, so parquet catalogs
     * ([[autoSyncAll]]), JDBC sources (`JdbcSource.load` partial
-    * application) and an ES reader (`EsSourceConfig.reader(...).load`)
-    * are interchangeable — the orchestration (time-field detection,
-    * OR-watermark routing, state) never changes.
+    * application) and in-memory frames are interchangeable — the
+    * orchestration (time-field detection, OR-watermark routing, state)
+    * never changes. The wire sources have their own passes
+    * ([[WireSync]]); there, ES documents are buffered on the driver
+    * before Spark sees a row, which bounds an index by driver memory.
     */
   def autoSyncTables(
       spark: SparkSession,
@@ -339,11 +280,12 @@ object SyncRunner {
               updateCol = updateCol, compactTargetBytes = compactTargetBytes,
               forceFull = forceFull)
           case None =>
-            val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val n = writeSwap(spark, df, target, fs)
-            appendState(spark, stateDir, SyncState(table, "", Long.MinValue, n, "full", nowUs))
-            compactTargetBytes.foreach(b => graft.sinks.Writers.compact(spark, target, b))
-            ("full", n)
+            // no watermark to route on: a full refresh every pass
+            val r = lakePass[Long](spark, None, df, _ => df, Nil, Long.MinValue)(
+              (batch, _) => writeSwap(batch, target),
+              (_, n, m) => appendState(spark, stateDir, SyncState(table, "", Long.MinValue, n, m, nowUs)))
+            if (r._2 > 0) compactTargetBytes.foreach(b => Writers.compact(spark, target, b))
+            r
         }
         table -> result
       }
@@ -403,23 +345,83 @@ object SyncRunner {
       r
     }
 
+  /** The commit rule of every sync pass, lake and wire. A batch with
+    * ANY failed row does not advance: the failed rows' watermarks may
+    * sit at or below the batch max, so advancing would orphan them
+    * forever, while the next pass re-reads the whole batch and
+    * re-inserts idempotently. Otherwise each watermark moves to
+    * max(old, batch max) in `ord`, so it never moves back; `batchMax`
+    * holds one value per watermark, and a column that held no value
+    * reports the order's floor (`Long.MinValue`, `""`), which keeps the
+    * old watermark. A state row is due exactly when rows landed — the
+    * reference skips the bookkeeping insert on an empty batch
+    * (es_to_bytehouse.py:1087). Returns the new watermarks and whether
+    * to append a state row.
+    */
+  private[sync] def commit[W](old: Seq[W], batchMax: Seq[W], rows: Long, failedRows: Long)(
+      implicit ord: Ordering[W]): (Seq[W], Boolean) = {
+    require(batchMax.size == old.size, s"${batchMax.size} batch maxima for ${old.size} watermarks")
+    if (failedRows > 0) (old, false)
+    else (old.lazyZip(batchMax).map(ord.max), rows > 0)
+  }
+
+  /** Spark's string order (UTF-8 bytes), in which Spark's `max` and
+    * [[graft.sinks.BatchedUpsertWriter]] reduce string maxima.
+    */
+  private[sync] val Utf8Order: Ordering[String] =
+    Ordering.by[String, UTF8String](UTF8String.fromString)
+
+  /** One lake pass. `old` holds the state's watermarks; `None` routes
+    * a full pass over `source`, otherwise the batch is `delta(old)`.
+    * The batch is probed for emptiness first by one job whose tasks
+    * stop at their first row, so a quiescent pass writes nothing; only
+    * a full pass whose write replaces the target (`fullReplaces`) skips
+    * the probe, as it must run over an empty source too. `write(batch,
+    * full)` lands the batch once; its row count and the maxima of
+    * `marks` (`floor` for null) ride that write through an
+    * [[Observation]]. [[commit]] turns them into the new watermarks,
+    * which `append(watermarks, rows, mode)` records. Returns (mode,
+    * rows).
+    */
+  private def lakePass[W](
+      spark: SparkSession,
+      old: Option[Seq[W]],
+      source: DataFrame,
+      delta: Seq[W] => DataFrame,
+      marks: Seq[Column],
+      floor: W,
+      fullReplaces: Boolean = true
+  )(write: (DataFrame, Boolean) => Unit, append: (Seq[W], Long, String) => Unit)(
+      implicit ord: Ordering[W]): (String, Long) = {
+    val mode = if (old.isEmpty) "full" else "incremental"
+    val batch = old.fold(source)(delta)
+    def landsRows = spark.sparkContext
+      .runJob(batch.select().queryExecution.toRdd, (rows: Iterator[InternalRow]) => rows.hasNext)
+      .contains(true)
+    if ((old.nonEmpty || !fullReplaces) && !landsRows) (mode, 0L)
+    else {
+      val seen = Observation()
+      write(batch.observe(seen, count(lit(1)).as("n"),
+        marks.zipWithIndex.map { case (m, i) => max(m).as(s"m$i") }: _*), old.isEmpty)
+      val got = seen.get
+      val n = got("n").asInstanceOf[Long]
+      // a parquet write lands every row or throws: no failed rows
+      val (next, due) = commit(old.getOrElse(marks.map(_ => floor)),
+        marks.indices.map(i => Option(got(s"m$i")).fold(floor)(_.asInstanceOf[W])), n, 0L)
+      if (due) append(next, n, mode)
+      (mode, n)
+    }
+  }
+
   /** Atomic-ish replace of a parquet target: write temp, then a
     * checked swap (PartitionedUpsert.promote) that restores the old
     * target and throws on rename failure — so a failed swap never
     * advances sync state.
     */
-  private def writeSwap(
-      spark: SparkSession,
-      df: DataFrame,
-      targetDir: String,
-      fs: org.apache.hadoop.fs.FileSystem
-  ): Long = {
+  private def writeSwap(df: DataFrame, targetDir: String): Unit = {
     val tmp = targetDir + "__tmp"
-    val cached = df.persist()
-    val n = cached.count()
-    cached.write.mode("overwrite").parquet(tmp)
-    cached.unpersist()
-    PartitionedUpsert.promote(fs, tmp, targetDir)
-    n
+    df.write.mode("overwrite").parquet(tmp)
+    PartitionedUpsert.promote(
+      new Path(targetDir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration), tmp, targetDir)
   }
 }

@@ -22,11 +22,12 @@ import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest, MongoSource}
   *
   * The three variants (ES, ClickHouse, MongoDB sources) share one pass
   * skeleton, [[syncObject]]: the watermark read from `_sync_state`, the
-  * full/incremental routing, the one batched write and the commit rule
-  * are written there once, and that is the only place the rule "a lost
-  * row never advances the watermark" lives. A variant supplies its time
-  * fields, how it keys `_sync_state`, and its read. Their deployment
-  * loops likewise share one poll loop ([[runContinuous]]).
+  * full/incremental routing and the one batched write are written there
+  * once, and it applies the commit rule ("a lost row never advances the
+  * watermark") it shares with the parquet-lake passes,
+  * [[SyncRunner.commit]]. A variant supplies its time fields, how it
+  * keys `_sync_state`, and its read. Their deployment loops likewise
+  * share one poll loop ([[runContinuous]]).
   *
   * Auto mode per index (es_to_bytehouse.py:843-868 + 429-460): no
   * `_sync_state` row → full sync (match_all); watermarks present →
@@ -42,14 +43,15 @@ import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest, MongoSource}
   * `now64(3)` DEFAULT. Watermarks are ISO strings compared
   * lexicographically — max() in the state read IS the newest row.
   *
-  * Scale note: pages stream through the driver (the protocol-parity
-  * read; bulk movement at warehouse scale is the es-hadoop
-  * partition-per-shard reader, [[graft.sources.EsSourceConfig.reader]])
-  * but everything after the read runs in tasks. The fetched documents
-  * become an RDD-backed frame ([[EsRestClient.docFrame]]), so JSON
-  * parsing, flattening and conforming run inside the write job, and
-  * every Spark partition drives its own HTTP batch executor, so target
-  * throughput scales with executor count. Each synced object costs one
+  * Scale note: the ES and Mongo reads buffer every fetched document on
+  * the driver before Spark sees a row, so driver memory bounds the
+  * batch one index or collection brings to a pass (the ClickHouse read
+  * is paged in tasks). Everything after the read runs in tasks: the
+  * fetched documents become an RDD-backed frame
+  * ([[EsRestClient.docFrame]]), so JSON parsing, flattening and
+  * conforming run inside the write job, and every Spark partition
+  * drives its own HTTP batch executor, so target throughput scales
+  * with executor count. Each synced object costs one
   * Spark job, the write (plus schema inference for an ES index): the
   * watermark maxima ride the write ([[BatchedUpsertWriter.write]]'s
   * `maxOf`), and an empty read is known on the driver from what the
@@ -288,17 +290,13 @@ object WireSync {
     * nothing moved, with the columns whose maxima are the batch's
     * watermarks (time field, then update field).
     *
-    * The commit rule: a batch with ANY permanently-failed row must NOT
-    * advance state — the failed rows' timestamps may be at or below the
-    * batch max, so advancing would orphan them forever. Leaving the
-    * watermark put means the next pass re-reads the whole failed batch;
-    * re-inserts are idempotent on the target (UNIQUE KEY), lost rows are
-    * not. Otherwise each watermark moves to the max of its old value and
-    * the batch max (monotone), and a state row is appended only when
-    * rows landed — an empty read writes nothing and appends nothing
-    * (the reference skips the bookkeeping insert on an empty batch,
-    * es_to_bytehouse.py:1087). An object without a time field re-syncs
-    * in full every pass and keeps no state.
+    * The new watermarks and whether a state row is due come from
+    * [[SyncRunner.commit]], the rule the lake passes share, comparing
+    * in Spark's string order as the writer's maxima do: a batch with
+    * ANY permanently-failed row does not advance (re-inserts are
+    * idempotent on the target's UNIQUE KEY, lost rows are not), and an
+    * empty read writes nothing and appends nothing. An object without
+    * a time field re-syncs in full every pass and keeps no state.
     */
   private def syncObject(
       name: String,
@@ -318,12 +316,13 @@ object WireSync {
       case (frame, maxOf) =>
         BatchedUpsertWriter.write(frame, targetDb, table, insertBatchSize, chExecutorFactory, maxOf)
     }
-    val advanced = stats.failedRows == 0L && timeField.isDefined
-    def newer(old: String, i: Int) = if (advanced) Seq(old, stats.maxima.lift(i).getOrElse("")).max else old
-    val (newSync, newUpdate) = (newer(lastSync, 0), newer(lastUpdate, 1))
-    if (advanced && stats.rows > 0) ch.execute(state.row(newSync, newUpdate, stats.rows))
+    // a watermark without a maximum (no update field, an empty read)
+    // gets the floor "", which keeps the old value
+    val (marks, due) = SyncRunner.commit(Seq(lastSync, lastUpdate), stats.maxima.padTo(2, ""),
+      stats.rows, stats.failedRows)(SyncRunner.Utf8Order)
+    if (due && timeField.isDefined) ch.execute(state.row(marks(0), marks(1), stats.rows))
     PassResult(name, table, if (isFull) "full" else "incremental", stats.rows, stats.fallbackRows,
-      stats.failedRows, timeField.getOrElse(""), updateField.getOrElse(""), newSync, newUpdate,
+      stats.failedRows, timeField.getOrElse(""), updateField.getOrElse(""), marks(0), marks(1),
       stats.errors)
   }
 
@@ -418,7 +417,9 @@ object WireSync {
             val renamed = flat.select(flat.columns.toIndexedSeq.map(c => col(c).as(c.stripPrefix("doc_"))): _*)
             val targetSchema = StructType(
               StructField("_id", StringType) +: fieldNames.map(n => StructField(n, StringType)))
-            Some((Incremental.conformToTarget(renamed, targetSchema), (timeField.toSeq ++ updateField).map(col)))
+            // an update field without a time field is no watermark
+            val marks = timeField.toSeq.flatMap(_ +: updateField.toSeq)
+            Some((Incremental.conformToTarget(renamed, targetSchema), marks.map(col)))
           }
       }
     }

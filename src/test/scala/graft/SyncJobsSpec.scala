@@ -2,16 +2,23 @@ package graft
 
 import scala.collection.immutable.ListMap
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{BatchedUpsertWriter, ChHttpBatchExecutor, ChHttpClient}
-import graft.sources.{Bson, EsRestClient, EsSourceConfig}
-import graft.sync.WireSync
+import graft.sources.{Bson, Catalog, EsRestClient, EsSourceConfig}
+import graft.sync.{SyncRunner, WireSync}
 
-/** The sync pass is one Spark job per synced object: the write, which
-  * also returns the watermark maxima, plus schema inference for an ES
-  * index. An empty read runs no job. The maxima the write returns are
-  * the `agg(max)` they replace, in Spark's string order.
+/** The wire sync pass is one Spark job per synced object: the write,
+  * which also returns the watermark maxima, plus schema inference for
+  * an ES index. An empty read runs no job. The maxima the write returns
+  * are the `agg(max)` they replace, in Spark's string order.
+  *
+  * A parquet-lake pass reads state (one job), writes the batch once
+  * with its row count and maxima observed on that write, and appends
+  * one state row; a pass whose write does not replace the target (an
+  * incremental pass, the ObjectId append) first probes for emptiness
+  * (one job), so a quiescent pass writes nothing.
   */
 class SyncJobsSpec extends SparkSpec {
 
@@ -132,5 +139,133 @@ class SyncJobsSpec extends SparkSpec {
     assert(stats.rows == 4L && stats.failedRows == 4L, stats.toString)
     assert(stats.errors.size == BatchedUpsertWriter.MaxErrorSamples, stats.toString)
     assert(stats.errors.forall(_.matches("java.lang.IllegalStateException: row [2468] rejected")), stats.toString)
+  }
+
+  // ---- the parquet-lake passes -----------------------------------------
+
+  private def tmp(prefix: String): String = java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every file under `dir`, with its length and modification time. */
+  private def listing(dir: String): Map[String, (Long, Long)] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(dir)
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+      root.relativize(f).toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis)
+    }.toMap
+  }
+
+  private val cutoffUs = 1705276800000000L // 2024-01-15
+
+  test("lake autoSync: full <= 3 jobs, quiescent <= 2 and leaves target and state untouched") {
+    val events = Catalog.load(spark, sf, "events")
+    val firstHalf = events.filter(unix_micros(col("ts")) <= cutoffUs)
+    val (nFirst, nAll) = (firstHalf.count(), events.count())
+    val stateDir = tmp("graft_lakejobs_state") + "/state"
+    val targetDir = tmp("graft_lakejobs_target") + "/events"
+    def pass(src: DataFrame, now: Long) = SyncRunner.autoSync(spark, src, "events", Seq("event_id"), "ts",
+      Seq("ts", "event_id"), targetDir, stateDir, nowUs = now)
+    val (r1, full) = jobsDuring(pass(firstHalf, 1L))
+    assert(r1 == ("full", nFirst))
+    assert(full <= 3, s"full pass: $full jobs")
+    val (r2, incremental) = jobsDuring(pass(events, 2L))
+    assert(r2 == ("incremental", nAll - nFirst))
+    val (target, state) = (listing(targetDir), listing(stateDir))
+    val (r3, quiescent) = jobsDuring(pass(events, 3L))
+    assert(r3 == ("incremental", 0L))
+    assert(quiescent <= 2, s"quiescent pass: $quiescent jobs")
+    assert(listing(targetDir) == target)
+    assert(listing(stateDir) == state, "a quiescent pass appends no state row")
+    assert(spark.read.parquet(targetDir).count() == nAll)
+    info(s"jobs: full $full, incremental with rows $incremental, quiescent $quiescent")
+  }
+
+  test("lake autoSyncByOid: full <= 3 jobs, quiescent <= 2") {
+    val docs = Catalog.load(spark, sf, "events")
+      .select(lpad(lower(hex(col("event_id"))), 24, "0").as("_id"), col("user_id"))
+    val (n, maxId) = (docs.count(), docs.agg(max(col("_id"))).collect()(0).getString(0))
+    val stateDir = tmp("graft_oidjobs_state") + "/state"
+    val targetDir = tmp("graft_oidjobs_target") + "/docs"
+    def pass() = SyncRunner.autoSyncByOid(spark, docs, "docs", "_id", targetDir, stateDir, nowUs = 1L)
+    val (r1, full) = jobsDuring(pass())
+    assert(r1 == ("full", n))
+    assert(full <= 3, s"full pass: $full jobs")
+    assert(SyncRunner.readOidState(spark, stateDir, "docs").map(_.last_id).contains(maxId))
+    val target = listing(targetDir)
+    val (r2, quiescent) = jobsDuring(pass())
+    assert(r2 == ("incremental", 0L))
+    assert(quiescent <= 2, s"quiescent pass: $quiescent jobs")
+    assert(listing(targetDir) == target)
+    info(s"jobs: full $full, quiescent $quiescent")
+  }
+
+  test("a pass that lands no rows appends no state row: an empty full pass stays full") {
+    val events = Catalog.load(spark, sf, "events")
+    val none = events.filter(col("event_id") < 0)
+    val stateDir = tmp("graft_emptyfull_state") + "/state"
+    val targetDir = tmp("graft_emptyfull_target") + "/events"
+    def pass(src: DataFrame) = SyncRunner.autoSync(spark, src, "events", Seq("event_id"), "ts",
+      Seq("ts", "event_id"), targetDir, stateDir, nowUs = 1L)
+    assert(pass(none) == ("full", 0L))
+    assert(SyncRunner.readState(spark, stateDir, "events").isEmpty)
+    assert(pass(events) == ("full", events.count()))
+    assert(SyncRunner.readState(spark, stateDir, "events").map(_.mode).contains("full"))
+    // an empty time-less refresh records nothing either
+    val region = Catalog.load(spark, sf, "region")
+    val r = SyncRunner.autoSyncTables(spark, Seq("dim"), _ => region.filter(lit(false)),
+      tmp("graft_emptydim_target"), stateDir, nowUs = 2L)
+    assert(r == Map("dim" -> ("full", 0L)))
+    assert(SyncRunner.readState(spark, stateDir, "dim").isEmpty)
+    // nor does an empty ObjectId pass, and its append writes no file
+    val oidTarget = tmp("graft_emptyoid_target") + "/docs"
+    val noDocs = none.select(col("event_id").cast("string").as("_id"))
+    for (now <- 1L to 2L) {
+      assert(SyncRunner.autoSyncByOid(spark, noDocs, "docs", "_id", oidTarget, stateDir, now) == ("full", 0L))
+      assert(listing(oidTarget.stripSuffix("/docs")).isEmpty)
+    }
+    assert(SyncRunner.readOidState(spark, stateDir, "docs").isEmpty)
+  }
+
+  test("a forced full pass over an empty source resets the watermarks, so refilled rows sync again") {
+    val events = Catalog.load(spark, sf, "events").withColumn("day", to_date(col("ts")))
+    val firstHalf = events.filter(unix_micros(col("ts")) <= cutoffUs)
+    val nFirst = firstHalf.count()
+    for (part <- Seq(None, Some("day"))) {
+      val stateDir = tmp("graft_forced_state") + "/state"
+      val targetDir = tmp("graft_forced_target") + "/events"
+      def pass(src: DataFrame, now: Long, forceFull: Boolean = false) = SyncRunner.autoSync(spark, src,
+        "events", Seq("event_id"), "ts", Seq("ts", "event_id"), targetDir, stateDir, now,
+        partitionCol = part, forceFull = forceFull)
+      assert(pass(firstHalf, 1L) == ("full", nFirst))
+      assert(pass(firstHalf.filter(lit(false)), 2L, forceFull = true) == ("full", 0L))
+      // the source comes back with rows at or below the old watermark
+      assert(pass(firstHalf, 3L) == ("incremental", nFirst), part)
+      assert(spark.read.parquet(targetDir).count() == nFirst, part)
+    }
+  }
+
+  test("a pre-dual-watermark state row reads with defaults, and the next autoSync pass is incremental") {
+    import spark.implicits._
+    val events = Catalog.load(spark, sf, "events")
+    val firstHalf = events.filter(unix_micros(col("ts")) <= cutoffUs)
+    val (nFirst, nAll) = (firstHalf.count(), events.count())
+    val stateDir = tmp("graft_compat_state") + "/state"
+    val targetDir = tmp("graft_compat_target") + "/events"
+    firstHalf.write.parquet(targetDir)
+    // the six-column SyncState layout, before update_time_field and
+    // last_update_us existed
+    Seq(("events", "ts", cutoffUs, nFirst, "full", 1L))
+      .toDF("table_name", "time_field", "last_sync_us", "n_rows", "mode", "updated_us")
+      .write.parquet(stateDir)
+    assert(SyncRunner.readState(spark, stateDir, "events") ==
+      Some(SyncRunner.SyncState("events", "ts", cutoffUs, nFirst, "full", 1L, "", Long.MinValue)))
+    val r = SyncRunner.autoSync(spark, events, "events", Seq("event_id"), "ts", Seq("ts", "event_id"),
+      targetDir, stateDir, nowUs = 2L)
+    assert(r == ("incremental", nAll - nFirst))
+    assert(spark.read.parquet(targetDir).count() == nAll)
+    // old and new rows read side by side
+    val history = SyncRunner.stateHistory(spark, stateDir, "events")
+      .select("mode", "update_time_field", "last_update_us").as[(String, String, Long)].collect()
+    assert(history.toSeq == Seq(("incremental", "", Long.MinValue), ("full", "", Long.MinValue)))
   }
 }
