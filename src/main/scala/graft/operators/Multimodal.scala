@@ -455,60 +455,6 @@ object Multimodal {
           lpad(lower(hex(max(when(col("by") === by, col("rb"))))), 2, "0")): _*).as("phash"))
   }
 
-  /** Per-row aHash — the SAME integer math as [[imageAHash]] (block
-    * gray-sums over the exact 8×8 box resize, bit = v·64 > total, row
-    * bytes little-endian in bx, 16 lowercase hex chars) computed
-    * inside one JVM pass instead of the window+agg chain.
-    * Windows and chained aggregations are illegal on streaming
-    * DataFrames, so the streaming phash probe (C21d) hashes through
-    * THIS; equality with the declarative batch form is spec-pinned by
-    * comparing probe outputs on the same staged corpus. Returns None
-    * for undecodable bytes (the quarantine contract — same rows
-    * [[decodePixelResize]] drops).
-    */
-  private[graft] def aHashOf(bytes: Array[Byte]): Option[String] =
-    readImage(bytes).map { img =>
-      val w = img.getWidth; val h = img.getHeight
-      require(w % 8 == 0 && h % 8 == 0, s"aHash needs exact 8x8 blocks: ${w}x$h")
-      val bw = w / 8; val bh = h / 8
-      val v = new Array[Long](64)
-      var tv = 0L
-      var by = 0
-      while (by < 8) {
-        var bx = 0
-        while (bx < 8) {
-          var s = 0L
-          var y = by * bh
-          while (y < (by + 1) * bh) {
-            var x = bx * bw
-            while (x < (bx + 1) * bw) {
-              val rgb = img.getRGB(x, y)
-              s += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-              x += 1
-            }
-            y += 1
-          }
-          v(by * 8 + bx) = s
-          tv += s
-          bx += 1
-        }
-        by += 1
-      }
-      val sb = new StringBuilder(16)
-      var r = 0
-      while (r < 8) {
-        var rb = 0L
-        var c = 0
-        while (c < 8) {
-          if (v(r * 8 + c) * 64 > tv) rb |= 1L << c
-          c += 1
-        }
-        sb.append(f"$rb%02x")
-        r += 1
-      }
-      sb.toString
-    }
-
   /** C85 index build: one row per distinct perceptual hash in the
     * image corpus with its canonical (minimum) id — [[imageAHash]]
     * over decoded pixels, then the [[graft.operators.Dedup

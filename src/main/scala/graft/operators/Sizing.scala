@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Byte-derived partition sizing for frames that are persisted (or
   * localCheckpointed) and then re-read by many downstream passes —
@@ -19,7 +19,8 @@ import org.apache.spark.sql.DataFrame
   * The rule is the scale-adaptive one the engine already applies to
   * iteration inputs (EmbedOps): ~2 MB of SOURCE bytes per partition,
   * clamped to [1, defaultParallelism]. Source bytes come from the
-  * frame's input files (driver metadata, one status call per file);
+  * frame's input files (driver metadata, one status call per file,
+  * stopping once the clamp is reached);
   * frames with no file lineage (pure in-memory test fixtures) keep
   * the default width. At cluster scale bytes/2MB ≫ parallelism, the
   * clamp wins, and [[coalesceForCache]] leaves the frame untouched —
@@ -28,24 +29,36 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Sizing {
 
-  def inputBytes(df: DataFrame): Long = {
-    val spark = df.sparkSession
+  /** Summed length of `files`, one status call per file on the
+    * driver. The walk stops as soon as the sum reaches `cap`, so the
+    * result is exact below the cap and a lower bound, at least `cap`,
+    * of the full sum above it.
+    */
+  def inputBytes(spark: SparkSession, files: Seq[String], cap: Long): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    df.inputFiles.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      try p.getFileSystem(conf).getFileStatus(p).getLen
-      catch { case _: java.io.IOException => 0L }
-    }.sum
+    val it = files.iterator
+    var sum = 0L
+    while (sum < cap && it.hasNext) {
+      val p = new org.apache.hadoop.fs.Path(it.next())
+      sum += (try p.getFileSystem(conf).getFileStatus(p).getLen catch { case _: java.io.IOException => 0L })
+    }
+    sum
   }
 
   /** Target partition count for a frame derived from `df`'s inputs:
     * bytes/2MB clamped to [1, defaultParallelism]; defaultParallelism
-    * when the frame has no file lineage.
+    * when the frame has no file lineage. From defaultParallelism ×
+    * `bytesPerPartition` bytes on the clamp returns defaultParallelism,
+    * so the file walk stops there.
     */
   def inputPartitions(df: DataFrame, bytesPerPartition: Long = 2L << 20): Int = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.inputFiles.isEmpty) par
-    else math.max(1L, math.min(par.toLong, inputBytes(df) / bytesPerPartition + 1L)).toInt
+    val files = df.inputFiles
+    if (files.isEmpty) par
+    else {
+      val bytes = inputBytes(df.sparkSession, files.toIndexedSeq, par.toLong * bytesPerPartition)
+      math.max(1L, math.min(par.toLong, bytes / bytesPerPartition + 1L)).toInt
+    }
   }
 
   /** Shrink-only sizing for a frame about to be cached: coalesce —

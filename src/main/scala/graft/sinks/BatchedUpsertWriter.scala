@@ -10,10 +10,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the whole batch; if the batch fails, fall back to row-at-a-time and
   * keep the rows that succeed.
   *
-  * The statement executor is injected (a thin wrapper over a JDBC
-  * `PreparedStatement` in production; a recording fake in tests) so the
-  * partition-parallel batching, ordering and fallback logic — the part
-  * that matters at scale — is testable without a live database.
+  * The statement executor is injected (`ChHttpBatchExecutor`, over
+  * ClickHouse's HTTP interface, in production; a recording fake in
+  * tests) so the partition-parallel batching, ordering and fallback
+  * logic — the part that matters at scale — is testable without a
+  * live database.
   * Executors run one per partition: writer parallelism == partition
   * count, exactly how a ClickHouse bulk load should be driven.
   *

@@ -35,7 +35,9 @@ object PartitionedUpsert {
 
   /** Merge `delta` into the partitioned parquet target with upsert
     * semantics (latest version per key wins), touching only the
-    * partitions the delta lands in. Returns delta row count.
+    * partitions the delta lands in. The caller counts the delta (the
+    * lake pass observes it on this write); `delta` is cached here
+    * because the partition listing and the merge both read it.
     */
   def merge(
       spark: SparkSession,
@@ -44,17 +46,12 @@ object PartitionedUpsert {
       keyCols: Seq[String],
       orderCols: Seq[String],
       partCol: String
-  ): Long = {
+  ): Unit = {
     val tgtP = new Path(targetDir)
     val fs = tgtP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val d = delta.persist()
     try {
-      val n = d.count()
-      if (n == 0) return 0L
-      if (!fs.exists(tgtP)) {
-        writeFull(d, targetDir, partCol)
-        return n
-      }
+      if (!fs.exists(tgtP)) return writeFull(d, targetDir, partCol)
       val deltaT = d.schema(partCol).dataType
       val parts = d.select(col(partCol)).distinct().collect().map(_.get(0))
       require(!parts.contains(null), s"partition column $partCol must be non-null")
@@ -78,7 +75,6 @@ object PartitionedUpsert {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCol)
         .parquet(targetDir)
-      n
     } finally d.unpersist()
   }
 
@@ -96,9 +92,7 @@ object PartitionedUpsert {
     * CONSTRAINT: rename-based, so correct only where directory rename
     * is atomic — HDFS and local filesystems. On S3-style object
     * stores a directory rename is per-object copy + delete (a crash
-    * mid-promote strands a half-moved table); deploy those targets on
-    * [[VersionedPublish]], whose commit primitive is a single
-    * small-object write.
+    * mid-promote strands a half-moved table).
     */
   def promote(fs: FileSystem, tmpDir: String, targetDir: String): Unit = {
     val tmpP = new Path(tmpDir)

@@ -17,14 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[EsSourceConfig]] (full / incremental search DSL), so the bytes
   * on the wire are the unit-tested contract strings.
   *
-  * Role split: THIS client is the single-cursor path — it proves the
-  * protocol end-to-end (EsLiveParitySpec runs it against an
-  * ES-speaking HTTP stub) and serves driver-sized administrative
-  * reads (discovery, mapping, sampling). Bulk data movement at scale
-  * goes through `EsSourceConfig.reader` (the es-hadoop connector's
-  * partition-per-shard parallel scan); pages here stream through
-  * `onPage` so the driver holds ONE scroll page at a time, exactly
-  * like the reference's cursor.
+  * Role split: THIS client is the single-cursor path, like the
+  * reference's. Pages stream through `onPage`, one scroll page at a
+  * time; `WireSync` buffers an object's pages on the driver and hands
+  * them to Spark as one [[EsRestClient.docFrame]], so a synced index
+  * must fit in driver memory. `EsLiveParitySpec` runs the protocol
+  * end-to-end against an ES-speaking HTTP stub.
   *
   * Jackson (bundled with Spark) parses responses; no extra
   * dependency.
@@ -257,8 +255,8 @@ class EsRestClient(
     * DataFrame of (`_id`, `doc`) rows — compose with
     * `JsonIngest.parseAndFlatten` for the reference's flattened
     * all-string row surface, or a `SyncRunner` source thunk. Buffers
-    * the index on the driver by construction: use only for
-    * admin-scale reads and tests; bulk movement is es-hadoop's job.
+    * the index on the driver by construction, as `WireSync` does per
+    * object: use only for driver-sized indices.
     * The frame is [[EsRestClient.docFrame]]'s, so parsing runs in tasks.
     */
   def fetchIndex(

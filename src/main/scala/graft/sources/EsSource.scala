@@ -1,22 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrameReader, SparkSession}
-
-/** Elasticsearch source configuration — the reference's primary
-  * deployment surface (es_to_bytehouse.py:136-162 env config,
-  * 577-673 scroll full sync, 825-868 incremental query DSL) mapped
-  * onto the PUBLIC `elasticsearch-hadoop` Spark connector options
-  * (`spark.read.format("es")`). No live cluster exists in this
-  * environment, so the contract is the generated configuration:
-  * option map + query DSL are unit-tested byte-for-byte; `reader`
-  * assembles a real DataFrameReader ready for `.load(index)`.
-  *
-  * Scale mapping: the reference's single scroll cursor becomes
-  * es-hadoop's partition-per-shard parallel read — `SCROLL_SIZE`
-  * is per-slice `es.scroll.size`, and the incremental range filter
-  * rides in `es.query`, evaluated inside ES exactly like the
-  * reference's search body (the 100 TB property: the cluster, not
-  * the engine, skips old rows).
+/** Elasticsearch source configuration: the reference's environment
+  * config (es_to_bytehouse.py:136-162) plus the search bodies of its
+  * full (577-673) and incremental (825-868) syncs. `WireSync` reads
+  * through [[EsRestClient]] with this config (scroll size and
+  * keep-alive per request), and the bodies below are what goes on the
+  * wire, unit-tested byte-for-byte against the reference's.
   */
 case class EsSourceConfig(
     host: String, // ES_HOST, scheme://host:port
@@ -24,43 +13,8 @@ case class EsSourceConfig(
     password: String = "", // ES_PASSWORD
     indexPattern: String = "*", // INDEX_PATTERN
     scrollSize: Int = 1000, // SCROLL_SIZE
-    scrollTimeout: String = "5m", // SCROLL_TIMEOUT
-    fieldsInclude: Seq[String] = Nil // optional projection pushdown
-) {
-
-  /** Public elasticsearch-hadoop reader options. Deterministic order
-    * (sorted keys) so tests and config dumps are stable.
-    */
-  def readerOptions: Map[String, String] = {
-    val (nodes, ssl) =
-      if (host.startsWith("https://")) (host.stripPrefix("https://"), true)
-      else (host.stripPrefix("http://"), false)
-    val base = Map(
-      "es.nodes" -> nodes,
-      "es.scroll.size" -> scrollSize.toString,
-      "es.scroll.keepalive" -> scrollTimeout,
-      // index patterns resolve server-side, like the reference's
-      // wildcard GET _cat/indices sweep
-      "es.resource" -> indexPattern
-    )
-    val auth =
-      if (user.nonEmpty) Map("es.net.http.auth.user" -> user, "es.net.http.auth.pass" -> password)
-      else Map.empty[String, String]
-    val sslOpt = if (ssl) Map("es.net.ssl" -> "true") else Map.empty[String, String]
-    val include =
-      if (fieldsInclude.nonEmpty) Map("es.read.field.include" -> fieldsInclude.mkString(","))
-      else Map.empty[String, String]
-    base ++ auth ++ sslOpt ++ include
-  }
-
-  /** A ready-to-`.load(index)` reader; `query` (if any) is the search
-    * body ES applies server-side (`es.query`).
-    */
-  def reader(spark: SparkSession, query: Option[String] = None): DataFrameReader = {
-    val r = readerOptions.foldLeft(spark.read.format("es")) { case (rd, (k, v)) => rd.option(k, v) }
-    query.fold(r)(q => r.option("es.query", q))
-  }
-}
+    scrollTimeout: String = "5m" // SCROLL_TIMEOUT
+)
 
 object EsSourceConfig {
 

@@ -1,17 +1,15 @@
 package graft.sync
 
-import org.apache.spark.sql.streaming.StreamingQueryListener
-
 /** Sync alerting — the reference ships WARNING+ log records to a chat
   * webhook with per-message rate limiting (es_to_bytehouse.py:85-140,
   * `FeishuHandler`: severity filter, 60s min interval per distinct
   * message, card payload). Re-expressed for Spark: the transport is a
   * pluggable `String => Unit` (an HTTP POST in production — no egress
-  * in this sandbox, so tests inject a recorder), severity and rate
-  * limiting are the alerter's job, and long-running streaming queries
-  * attach via a [[StreamingQueryListener]] so a query dying mid-night
-  * pages instead of silently stopping — the failure mode the
-  * reference's handler exists for.
+  * in tests, which inject a recorder), severity and rate limiting are
+  * the alerter's job, and `SyncRunner.runContinuous` alerts through
+  * [[guarded]] on every failed pass, so a sync dying mid-night pages
+  * instead of silently stopping — the failure mode the reference's
+  * handler exists for.
   */
 object Alerts {
 
@@ -26,7 +24,7 @@ object Alerts {
     * (level, first-100-chars) key per interval; INFO never sent).
     *
     * `send` MUST be thread-safe: different-key alerts from different
-    * threads (the streaming listener bus, a sync loop) invoke it
+    * threads (e.g. several sync loops sharing one alerter) invoke it
     * CONCURRENTLY — deliberately, so one hung delivery can't stall the
     * others. An HTTP client per call (or a concurrent queue) is fine;
     * a shared unsynchronized buffer or connection is not.
@@ -45,9 +43,8 @@ object Alerts {
       * rate-limited) — callers log the suppression either way.
       *
       * The transport runs OUTSIDE the lock: in production `send` is a
-      * blocking HTTP POST, and one of the callers is Spark's shared
-      * streaming listener-bus thread — a hung webhook must not stall
-      * other threads' warn/error (or the bus) behind the monitor.
+      * blocking HTTP POST — a hung webhook must not stall other
+      * threads' warn/error behind the monitor.
       */
     def emit(level: Level, msg: String): Boolean = {
       if (level.rank < Warning.rank) return false
@@ -85,18 +82,6 @@ object Alerts {
       }
     s"""{"level":"${level.label}","message":"${esc(msg)}","time_ms":$timeMs}"""
   }
-
-  /** Attach-and-forget listener: a streaming query that terminates
-    * WITH an exception alerts at ERROR; clean stops stay silent.
-    * Register with `spark.streams.addListener(...)`.
-    */
-  def queryListener(alerter: Alerter): StreamingQueryListener =
-    new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        e.exception.foreach(ex => alerter.error(s"streaming query ${e.id} died: $ex"))
-    }
 
   /** Batch-pass guard: run one sync step, alert at ERROR on throw and
     * rethrow (state must never advance past a failed step — same rule

@@ -42,18 +42,6 @@ object Health {
     throw new IllegalStateException("unreachable")
   }
 
-  /** JDBC connect probe — the reference's connect + SELECT 1 test,
-    * expressed portably (`Connection.isValid` runs the driver's own
-    * liveness query, so the same probe serves ClickHouse and Derby).
-    */
-  def probeJdbc(url: String, timeoutSec: Int = 5): Unit = {
-    val c = java.sql.DriverManager.getConnection(url)
-    try {
-      if (!c.isValid(timeoutSec))
-        throw new java.sql.SQLException(s"connection reports not valid: $url")
-    } finally c.close()
-  }
-
   /** Filesystem probe for parquet-lake targets: the Hadoop FS must be
     * reachable and the path's parent listable.
     */

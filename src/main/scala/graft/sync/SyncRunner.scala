@@ -246,8 +246,8 @@ object SyncRunner {
 
   /** The same sweep over ANY source: `loadTable` is a thunk producing
     * the DataFrame for a table name, so parquet catalogs
-    * ([[autoSyncAll]]), JDBC sources (`JdbcSource.load` partial
-    * application) and in-memory frames are interchangeable — the
+    * ([[autoSyncAll]]), JDBC tables (`spark.read.jdbc`) and in-memory
+    * frames are interchangeable — the
     * orchestration (time-field detection, OR-watermark routing, state)
     * never changes. The wire sources have their own passes
     * ([[WireSync]]); there, ES documents are buffered on the driver

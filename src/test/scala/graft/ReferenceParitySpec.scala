@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Incremental
 import graft.sinks.ClickHouseDdl
-import graft.sources.{Catalog, JdbcSource, JdbcSourceConfig}
+import graft.sources.Catalog
 import graft.sync.SyncRunner
 
 /** The reference's whole main() flow, end to end, on live components —
@@ -51,8 +51,7 @@ class ReferenceParitySpec extends SparkSpec {
     assert(matched == Seq("logs_app", "logs_web"), "system tables must not match the pattern")
 
     def loadTable(name: String) =
-      JdbcSource.load(spark, JdbcSourceConfig(url, s"APP.${name.toUpperCase}",
-        partitionColumn = Some("ID"), numPartitions = 2))
+      spark.read.jdbc(url, s"APP.${name.toUpperCase}", new java.util.Properties)
 
     // --- 2. target DDL from the discovered schema (typed + all-String fidelity) ---
     val ddl = ClickHouseDdl.createTableSql("wh", "logs_app", loadTable("logs_app").schema)

@@ -5,71 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.operators.Incremental
 import graft.sinks.Writers
 import graft.sources.Catalog
-import graft.streaming.IncrementalSync
 
 class StreamingSpec extends SparkSpec {
-  import spark.implicits._
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
-
-  /** Normalized events written as N files so the file stream sees
-    * multiple micro-batches.
-    */
-  private def stageEvents(n: Int): String = {
-    val dir = tmpDir("graft_stream_src")
-    Catalog.load(spark, sf, "events").repartition(n).write.mode("overwrite").parquet(dir)
-    dir
-  }
-
-  test("streaming hourly counts equal the batch rollup once drained") {
-    val src = stageEvents(3)
-    val stream = IncrementalSync.hourlyCounts(IncrementalSync.readEventStream(spark, src))
-    val q = stream.writeStream
-      .outputMode(OutputMode.Complete) // complete mode: final state comparable to batch
-      .format("memory")
-      .queryName("hourly_out")
-      .start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("hourly_out")
-        .select(unix_micros(col("window.start")).as("hour_us"), col("event_type"), col("n"), col("sum_value_c"))
-        .orderBy("hour_us", "event_type")
-        .collect()
-      val batch = operators.Analytics.eventsHourly(Catalog.load(spark, sf, "events"))
-        .select(col("hour_us"), col("event_type"), col("n"), col("sum_value_c"))
-        .orderBy("hour_us", "event_type")
-        .collect()
-      assert(streamed.toSeq == batch.toSeq)
-    } finally q.stop()
-  }
-
-  test("sliding-window counts over a stream equal the same expression in batch") {
-    val src = stageEvents(3)
-    val stream = IncrementalSync.slidingCounts(IncrementalSync.readEventStream(spark, src))
-    val q = stream.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName("sliding_out")
-      .start()
-    try {
-      q.processAllAvailable()
-      def shape(df: org.apache.spark.sql.DataFrame) = df
-        .select(unix_micros(col("window.start")).as("w_us"), col("event_type"), col("n"))
-        .orderBy("w_us", "event_type")
-        .collect().toSeq
-      val streamed = shape(spark.table("sliding_out"))
-      val batch = shape(IncrementalSync.slidingCounts(Catalog.load(spark, sf, "events")))
-      assert(streamed == batch && streamed.nonEmpty)
-      // overlap sanity: four 15-min slides cover each hour -> total
-      // weighted count is 4x the event count (edge windows included)
-      val total = spark.table("sliding_out").agg(sum(col("n"))).head().getLong(0)
-      assert(total == 4L * Catalog.load(spark, sf, "events").count())
-    } finally q.stop()
-  }
 
   test("stateless curation operators run unchanged on a stream (quality + PII scrub)") {
     // the curation layer is pure projections, so the SAME code serves
@@ -112,309 +54,6 @@ class StreamingSpec extends SparkSpec {
       val expected = operators.Curation.chunkOverlap(batch, "doc_id", "text", 64, 48).collect()
       assert(streamed.toSeq == expected.toSeq && streamed.nonEmpty)
     } finally q.stop()
-  }
-
-  test("streaming exact dedup drops cross-batch duplicates inside the watermark") {
-    // stage a doc stream with known duplicates: each text appears 3x
-    // under different ids/timestamps, spread across files/micro-batches
-    val dir = tmpDir("graft_stream_docs")
-    val rows = (0L until 30L).map { i =>
-      (i, s"document body number ${i % 10}", new java.sql.Timestamp(1700000000000L + i * 1000))
-    }
-    rows.toDF("doc_id", "text", "ts").repartition(3).write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-    val q = IncrementalSync.dedupExactStream(stream, "text", "ts")
-      .writeStream.outputMode(OutputMode.Append).format("memory").queryName("dedup_out").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("dedup_out").select("text").as[String].collect()
-      // exactly one survivor per distinct content, regardless of batch boundaries
-      assert(out.length == 10 && out.toSet.size == 10)
-    } finally q.stop()
-  }
-
-  test("stateful latest-per-key stream converges to the batch upsert result") {
-    val src = stageEvents(4)
-    val latest = IncrementalSync.latestPerKeyStream(spark, IncrementalSync.readEventStream(spark, src, 1))
-    val q = latest.writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory")
-      .queryName("latest_out")
-      .start()
-    try {
-      q.processAllAvailable()
-      // last emitted row per key == batch latestPerKey
-      val streamed = spark.table("latest_out")
-        .groupBy("user_id")
-        .agg(max(struct(col("ts"), col("event_id"))).as("m"))
-        .select(col("user_id"), col("m.event_id").as("event_id"))
-        .orderBy("user_id")
-        .collect()
-      val batch = Incremental
-        .latestPerKey(Catalog.load(spark, sf, "events"), Seq("user_id"), Seq("ts", "event_id"))
-        .select(col("user_id"), col("event_id"))
-        .orderBy("user_id")
-        .collect()
-      assert(streamed.toSeq == batch.toSeq)
-    } finally q.stop()
-  }
-
-  test("streaming windowed funnel: drained stream equals the batch level histogram across a batch boundary") {
-    val stages = Seq("view", "click", "purchase")
-    val ev = Catalog.load(spark, sf, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    // two time-ordered slices: every chain straddling the midpoint must
-    // advance from state restored out of the store
-    val mid = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5, 10000)")).collect()(0).getLong(0)
-    val srcDir = tmpDir("graft_funnel_src")
-    ev.filter(unix_micros(col("ts")) <= mid).coalesce(1).write.mode("append").parquet(srcDir)
-    val levels = IncrementalSync.funnelLevelsStateful(
-      spark, IncrementalSync.readEventStream(spark, srcDir), stages, windowSec = 21600L)
-    val q = levels.writeStream.outputMode(OutputMode.Update)
-      .format("memory").queryName("funnel_out").start()
-    try {
-      q.processAllAvailable()
-      ev.filter(unix_micros(col("ts")) > mid).coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-      // latest emission per user = final level (levels only grow)
-      val streamed = spark.table("funnel_out")
-        .groupBy("user_id").agg(max(col("level")).as("level"))
-        .groupBy("level").count()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val batch = graft.operators.Analytics
-        .funnelWindowLevels(ev, "user_id", "event_type", "ts", stages, windowSec = 21600L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-      assert(batch.keySet.size > 1, "test data should spread users across levels")
-    } finally q.stop()
-  }
-
-  test("stateful sessionization: session state carries across micro-batches, closes exactly once") {
-    // stage the event log as TWO time-ordered slices written one at a
-    // time, so every session straddling the midpoint must survive a
-    // batch boundary in the state store
-    val ev = Catalog.load(spark, sf, "events")
-      .filter(col("user_id") < 5)
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    val mid = ev.agg(expr("percentile_approx(unix_micros(ts), 0.5, 10000)")).collect()(0).getLong(0)
-    val srcDir = tmpDir("graft_sess_src")
-    ev.filter(unix_micros(col("ts")) <= mid).coalesce(1).write.mode("append").parquet(srcDir)
-    val sessions = IncrementalSync.sessionizeStateful(
-      spark, IncrementalSync.readEventStream(spark, srcDir), gapMinutes = 30)
-    val q = sessions.writeStream.outputMode(OutputMode.Update)
-      .format("memory").queryName("sess_out").start()
-    try {
-      q.processAllAvailable()
-      ev.filter(unix_micros(col("ts")) > mid).coalesce(1).write.mode("append").parquet(srcDir)
-      q.processAllAvailable()
-      // final fact per (user, session) = the last (largest) emission
-      val streamed = spark.table("sess_out")
-        .groupBy("user_id", "session_id")
-        .agg(max(struct(col("end_us"), col("n_events"), col("start_us"))).as("m"))
-        .select(col("user_id"), col("session_id"),
-          col("m.n_events").as("n_events"), col("m.start_us").as("start_us"), col("m.end_us").as("end_us"))
-        .orderBy("user_id", "session_id")
-        .collect().toSeq
-      val batch = graft.operators.Analytics.sessionize(ev, gapMinutes = 30)
-        .select("user_id", "session_id", "n_events", "start_us", "end_us")
-        .orderBy("user_id", "session_id")
-        .collect().toSeq
-      assert(streamed == batch, "stateful stream sessions must equal the batch sessionization")
-      // each session closed at most once, and closed+open partitions the set
-      val closed = spark.table("sess_out").filter(col("closed"))
-        .groupBy("user_id", "session_id").count().filter(col("count") > 1).count()
-      assert(closed == 0, "a session must close exactly once")
-      val nOpen = spark.table("sess_out").select("user_id").distinct().count()
-      val nClosed = spark.table("sess_out").filter(col("closed"))
-        .select("user_id", "session_id").distinct().count()
-      assert(nClosed == batch.size - nOpen, "every non-final session emits one closed event")
-      assert(batch.size > nOpen, "test data should have multiple sessions per user")
-    } finally q.stop()
-  }
-
-  test("foreachBatch upsert sink: target converges to batch merge across micro-batches") {
-    val src = stageEvents(3)
-    val target = tmpDir("graft_stream_target") + "/latest"
-    val q = IncrementalSync
-      .readEventStream(spark, src, 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch(IncrementalSync.upsertBatch(spark, target, Seq("user_id"), Seq("ts", "event_id")) _)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val got = spark.read.parquet(target)
-      .select(col("user_id"), col("event_id")).orderBy("user_id").collect()
-    val want = Incremental
-      .latestPerKey(Catalog.load(spark, sf, "events"), Seq("user_id"), Seq("ts", "event_id"))
-      .select(col("user_id"), col("event_id")).orderBy("user_id").collect()
-    assert(got.toSeq == want.toSeq)
-  }
-
-  test("foreachBatch CDC apply converges to the batch cdcApply across micro-batches") {
-    // each key lives in exactly ONE source file, so file-discovery
-    // order can't violate the per-key seq contract; multiple ops per
-    // key within a file exercise the intra-batch max-seq pick
-    val base = (1L to 90L).map(k => (k, k * 10)).toDF("k", "v")
-    val changes = (1L to 300L).flatMap { i =>
-      val k = i % 120 // keys 0..119: 1..90 exist in base, 91..119 are inserts
-      val op = if (k % 7 == 0) "D" else if (k > 90) "I" else "U"
-      Seq((k, i, op, i * 100))
-    }.toDF("k", "seq", "op", "v")
-    val src = tmpDir("graft_cdc_src")
-    // one file per key-range third => per-key changes never split
-    (0 until 3).foreach { f =>
-      changes.filter(col("k") % 3 === f).coalesce(1)
-        .write.mode("append").parquet(src)
-    }
-    val target = tmpDir("graft_cdc_target") + "/snap"
-    // prime the target with the base snapshot (src column included,
-    // as cdcBatch's own output would have it)
-    base.select(col("k"), lit("base").as("src"), col("v"))
-      .write.parquet(target)
-    val q = spark.readStream
-      .schema(changes.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch(IncrementalSync.cdcBatch(spark, target, "k", "seq", "op", Seq("v")) _)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val got = spark.read.parquet(target)
-      .select(col("k"), col("v")).orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val want = Incremental.cdcApply(base, changes, "k", "seq", "op", Seq("v"))
-      .select(col("k"), col("v")).orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.toSeq == want.toSeq, s"stream=${got.length} batch=${want.length}")
-    // deletes actually removed something, inserts actually appeared
-    assert(got.map(_._1).toSet.intersect((1L to 90L).filter(_ % 7 == 0).toSet).isEmpty)
-    assert(got.exists(_._1 > 90L))
-  }
-
-  test("foreachBatch rollup maintenance converges to the full batch aggregate") {
-    val src = stageEvents(3)
-    val target = tmpDir("graft_stream_rollup") + "/hourly"
-    def partials(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy(
-        unix_micros(date_trunc("hour", col("ts"))).as("hour_us"),
-        col("event_type"))
-      .agg(sum((round(col("value") * 100)).cast("long")).as("sum_value_c"),
-        count(lit(1)).as("n"))
-    val q = IncrementalSync
-      .readEventStream(spark, src, 1)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch(IncrementalSync.rollupBatch(
-        spark, target, Seq("hour_us", "event_type"), Seq("sum_value_c", "n"), partials) _)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // maintained partials across micro-batches == one-shot aggregate
-    val got = spark.read.parquet(target)
-      .orderBy("hour_us", "event_type")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val want = partials(Catalog.load(spark, sf, "events"))
-      .orderBy("hour_us", "event_type")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    assert(got.toSeq == want.toSeq)
-  }
-
-  test("rollupBatch is idempotent under micro-batch replay (at-least-once foreachBatch)") {
-    val target = tmpDir("graft_rollup_replay") + "/hourly"
-    val batch = Catalog.load(spark, sf, "events").limit(200)
-    def partials(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val apply = IncrementalSync.rollupBatch(spark, target, Seq("event_type"), Seq("n"), partials) _
-    apply(batch, 0L)
-    val once = spark.read.parquet(target).orderBy("event_type")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    // replay of the SAME batchId (what the engine does after a failure)
-    // must not fold the partials in a second time
-    apply(batch, 0L)
-    val replayed = spark.read.parquet(target).orderBy("event_type")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(replayed == once)
-    // a genuinely new batch still folds in
-    apply(batch, 1L)
-    val next = spark.read.parquet(target).orderBy("event_type")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(next == once.map { case (k, n) => (k, n * 2) })
-  }
-
-  test("foreachBatch partitioned upsert converges (day-partitioned target)") {
-    val src = stageEvents(3)
-    val target = tmpDir("graft_stream_targetp") + "/events"
-    // key = event_id, partition = day(ts): immutable per key, so every
-    // version of a key lands in the same partition (the merge contract)
-    val q = IncrementalSync
-      .readEventStream(spark, src, 1)
-      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch(IncrementalSync.upsertBatchPartitioned(
-        spark, target, Seq("event_id"), Seq("ts", "event_id"), "day") _)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val ev = Catalog.load(spark, sf, "events")
-    assert(spark.read.parquet(target).count() == ev.count())
-    val gotIds = spark.read.parquet(target).agg(sum("event_id")).collect()(0).getLong(0)
-    val wantIds = ev.agg(sum("event_id")).collect()(0).getLong(0)
-    assert(gotIds == wantIds)
-  }
-
-  test("native session_window matches lag-based sessionize (batch)") {
-    val ev = Catalog.load(spark, sf, "events")
-    val native = IncrementalSync.sessionCounts(ev)
-      .select(col("user_id"), col("n_events"))
-      .groupBy("user_id").agg(count(lit(1)).as("sessions"), sum(col("n_events")).as("events"))
-      .orderBy("user_id").collect()
-    val lagBased = operators.Analytics.sessionize(ev)
-      .groupBy("user_id").agg(count(lit(1)).as("sessions"), sum(col("n_events")).as("events"))
-      .orderBy("user_id").collect()
-    assert(native.toSeq == lagBased.toSeq)
-  }
-
-  test("session_window works over a stream with watermark") {
-    val src = stageEvents(2)
-    val stream = IncrementalSync
-      .sessionCounts(IncrementalSync.readEventStream(spark, src).withWatermark("ts", "1 hour"))
-    val q = stream.writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName("sessions_out").start()
-    try {
-      q.processAllAvailable()
-      val total = spark.table("sessions_out").agg(sum(col("n_events"))).collect()(0).getLong(0)
-      assert(total == Catalog.load(spark, sf, "events").count())
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches the batch interval join") {
-    val src = stageEvents(2)
-    def purchases(df: org.apache.spark.sql.DataFrame) = df
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-    def clicks(df: org.apache.spark.sql.DataFrame) = df
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"), col("event_id").as("c_id"))
-    val cond = col("p_user") === col("c_user") &&
-      col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") && col("c_ts") <= col("p_ts")
-
-    val sp = purchases(IncrementalSync.readEventStream(spark, src)).withWatermark("p_ts", "1 hour")
-    val sc = clicks(IncrementalSync.readEventStream(spark, src)).withWatermark("c_ts", "1 hour")
-    val q = sp.join(sc, cond).writeStream
-      .outputMode(OutputMode.Append).format("memory").queryName("ssjoin_out").start()
-    val streamed =
-      try { q.processAllAvailable(); spark.table("ssjoin_out").count() }
-      finally q.stop()
-
-    val ev = Catalog.load(spark, sf, "events")
-    val batch = purchases(ev).join(clicks(ev), cond).count()
-    assert(streamed == batch && batch > 0)
   }
 
   test("bucketed tables join without a shuffle on either side") {
@@ -482,186 +121,5 @@ class StreamingSpec extends SparkSpec {
     val pruned = back.filter(col("event_type") === "click")
     val scan = pruned.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") || pruned.count() > 0)
-  }
-
-  test("stream-static index probe flags corpus duplicates as docs arrive") {
-    val docs = Catalog.load(spark, sf, "documents").select(col("doc_id"), col("text"))
-    val corpus = docs.filter(col("doc_id") < 30)
-    val idxDir = tmpDir("graft_stream_idx")
-    graft.operators.Dedup.buildHashIndex(corpus, "doc_id", "text")
-      .write.mode("overwrite").parquet(idxDir)
-    val idx = spark.read.parquet(idxDir)
-    // arriving docs: two exact copies of corpus docs (re-idded) + two fresh
-    val srcDir = tmpDir("graft_stream_probe_src")
-    corpus.filter(col("doc_id").isin(3L, 7L))
-      .select((col("doc_id") + 1000L).as("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id").isin(45L, 46L)))
-      .repartition(2).write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = IncrementalSync.dedupAgainstIndexStream(stream, "text", idx)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("idx_probe_out").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("idx_probe_out")
-        .select("doc_id", "is_dup", "dup_of").orderBy("doc_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
-        .toSeq
-      assert(got == Seq((45L, 0L, -1L), (46L, 0L, -1L), (1003L, 1L, 3L), (1007L, 1L, 7L)))
-    } finally q.stop()
-  }
-
-  test("stream-static phash probe flags visual dups as images arrive; rows match the batch probe") {
-    import graft.operators.Multimodal
-    // ten distinct stripe visuals; corpus indexes patterns 0-4, the
-    // arriving batch carries all ten -> half dup, half new
-    val pats = Multimodal.encodeStagedPngStripes(spark,
-      (0 until 10).map(pk => (pk.toLong, 8 + (pk % 2) * 8, 8)).toDF("pk", "w", "h"),
-      "pk", "w", "h").select(col("pk"), col("png"))
-    val corpus = (1L to 5L).map(id => (id, id - 1)).toDF("doc_id", "pk").join(pats, "pk")
-    val idx = Multimodal.buildPhashIndex(spark, corpus, "doc_id", "png")
-    val batch = (101L to 110L).map(id => (id, id - 101)).toDF("doc_id", "pk").join(pats, "pk")
-      .withColumn("ts", lit(new java.sql.Timestamp(1700000000000L)))
-      .select("doc_id", "ts", "png")
-    val srcDir = tmpDir("graft_stream_ph_src")
-    batch.repartition(3).write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema("doc_id BIGINT, ts TIMESTAMP, png BINARY")
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = IncrementalSync.phashAgainstIndexStream(stream, "doc_id", "png", "ts", idx)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("ph_probe_out").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("ph_probe_out")
-        .select("doc_id", "is_dup", "dup_of").collect()
-        .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
-      val batched = Multimodal.phashAgainstIndex(spark, batch.drop("ts"), "doc_id", "png", idx)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
-      // the per-row JVM hasher and the declarative window+agg chain
-      // must agree hash for hash, or dup verdicts would differ here
-      assert(streamed == batched,
-        s"stream-only ${(streamed -- batched)}, batch-only ${(batched -- streamed)}")
-      // patterns 0-4 are in the index: those five MUST flag with the
-      // right canonical id; higher patterns may or may not alias at
-      // 8px stripe geometry (the batch probe is the arbiter above)
-      (101L to 105L).foreach(id =>
-        assert(streamed.contains((id, 1L, id - 100L)), s"$id should dup onto ${id - 100}: $streamed"))
-      assert(streamed.exists(_._2 == 0L), s"some pattern should be new: $streamed")
-    } finally q.stop()
-  }
-
-  test("stream-static containment probe: posting-join counts reproduce the batch pairs exactly") {
-    val docs = Catalog.load(spark, sf, "documents").select(col("doc_id"), col("text"))
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    val idxDir = tmpDir("graft_stream_ct_idx")
-    graft.operators.Dedup.buildContainmentIndex(corpus, "doc_id", "text")
-      .write.mode("overwrite").parquet(idxDir)
-    val idx = spark.read.parquet(idxDir)
-    val t0 = 1700000000000L
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .withColumn("ts", lit(new java.sql.Timestamp(t0)))
-    val srcDir = tmpDir("graft_stream_ct_src")
-    batch.repartition(3).write.mode("overwrite").parquet(srcDir)
-    // a later flush sentinel (unique gibberish, no shared shingles)
-    // advances the watermark past t0 so the pair counters close —
-    // group-by aggregation on a stream only EMITS at watermark expiry
-    Seq((999999L, "qqqxyzzy wubbalub frobnic glorpty snarfle blintzer",
-        new java.sql.Timestamp(t0 + 3L * 3600 * 1000)))
-      .toDF("doc_id", "text", "ts").write.mode("append").parquet(srcDir)
-    val stream = spark.readStream.schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = IncrementalSync.containmentAgainstIndexStream(stream, "doc_id", "text", "ts", idx)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("ct_probe_out").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("ct_probe_out")
-        .select("id_a", "id_b", "cont_pct").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batched = graft.operators.Dedup
-        .containmentAgainstIndex(batch.drop("ts"), "doc_id", "text", idx)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(batched.nonEmpty, "fixture should contain cross containment pairs")
-      assert(streamed == batched,
-        s"stream-only ${(streamed -- batched).size}, batch-only ${(batched -- streamed).size}")
-      // one counter per pair: the aggregation can never emit duplicates
-      assert(spark.table("ct_probe_out").count() == streamed.size)
-    } finally q.stop()
-  }
-
-  test("stream-static winnow probe: posting-join fingerprint counts reproduce the batch pairs exactly") {
-    import graft.operators.TextAnalysis
-    val docs = Catalog.load(spark, sf, "documents").select(col("doc_id"), col("text"))
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    val idxDir = tmpDir("graft_stream_wn_idx")
-    TextAnalysis.buildWinnowIndex(corpus, "doc_id", "text")
-      .write.mode("overwrite").parquet(idxDir)
-    val idx = spark.read.parquet(idxDir)
-    val t0 = 1700000000000L
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .withColumn("ts", lit(new java.sql.Timestamp(t0)))
-    val srcDir = tmpDir("graft_stream_wn_src")
-    batch.repartition(3).write.mode("overwrite").parquet(srcDir)
-    // flush sentinel advances the watermark so pair counters emit
-    Seq((999999L, "qqqxyzzy wubbalub frobnic glorpty snarfle blintzer",
-        new java.sql.Timestamp(t0 + 3L * 3600 * 1000)))
-      .toDF("doc_id", "text", "ts").write.mode("append").parquet(srcDir)
-    val stream = spark.readStream.schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = IncrementalSync.winnowAgainstIndexStream(stream, "doc_id", "text", "ts", idx, minShared = 3L)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("wn_probe_out").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("wn_probe_out")
-        .select("id_a", "id_b", "n_shared").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batched = TextAnalysis
-        .winnowAgainstIndex(batch.drop("ts"), "doc_id", "text", idx, minShared = 3L)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(batched.nonEmpty, "fixture should contain cross winnow pairs")
-      assert(streamed == batched,
-        s"stream-only ${(streamed -- batched).size}, batch-only ${(batched -- streamed).size}")
-      // one counter per pair: the aggregation can never emit duplicates
-      assert(spark.table("wn_probe_out").count() == streamed.size)
-    } finally q.stop()
-  }
-
-  test("stream-static MinHash probe finds near-dups as docs arrive; pairs match the batch probe") {
-    val docs = Catalog.load(spark, sf, "documents").select(col("doc_id"), col("text"))
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    val idxDir = tmpDir("graft_stream_mh_idx")
-    graft.operators.Dedup.buildMinhashIndex(corpus, "doc_id", "text")
-      .write.mode("overwrite").parquet(idxDir)
-    val idx = spark.read.parquet(idxDir)
-    // arriving batch: the decile-0 docs (real near-dup structure),
-    // spread across micro-batches, each stamped with an event time
-    val srcDir = tmpDir("graft_stream_mh_src")
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .withColumn("ts", lit(new java.sql.Timestamp(1700000000000L)))
-    batch.repartition(3).write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = IncrementalSync.nearDupAgainstIndexStream(stream, "doc_id", "text", "ts", idx)
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("mh_probe_out").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("mh_probe_out")
-        .select("id_a", "id_b", "jacc_pct").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batched = graft.operators.Dedup
-        .nearDupsAgainstIndex(batch.drop("ts"), "doc_id", "text", idx)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(batched.nonEmpty, "fixture should contain cross near-dups")
-      assert(streamed == batched,
-        s"stream-only ${(streamed -- batched).size}, batch-only ${(batched -- streamed).size}")
-      // multi-band collisions must not duplicate pairs in the output
-      val n = spark.table("mh_probe_out").count()
-      assert(n == streamed.size, s"duplicate pairs in stream output: $n vs ${streamed.size}")
-    } finally q.stop()
   }
 }

@@ -180,6 +180,25 @@ class SyncJobsSpec extends SparkSpec {
     info(s"jobs: full $full, incremental with rows $incremental, quiescent $quiescent")
   }
 
+  test("lake autoSync, partitioned by day: an incremental pass with rows takes <= 8 jobs") {
+    // the merge takes its row count from the pass's observed write
+    // and runs no count() of its own
+    val events = Catalog.load(spark, sf, "events").withColumn("day", to_date(col("ts")))
+    val firstHalf = events.filter(unix_micros(col("ts")) <= cutoffUs)
+    val (nFirst, nAll) = (firstHalf.count(), events.count())
+    val stateDir = tmp("graft_partjobs_state") + "/state"
+    val targetDir = tmp("graft_partjobs_target") + "/events"
+    def pass(src: DataFrame, now: Long) = SyncRunner.autoSync(spark, src, "events", Seq("event_id"), "ts",
+      Seq("ts", "event_id"), targetDir, stateDir, nowUs = now, partitionCol = Some("day"))
+    assert(pass(firstHalf, 1L) == ("full", nFirst))
+    val (r2, incremental) = jobsDuring(pass(events, 2L))
+    assert(r2 == ("incremental", nAll - nFirst))
+    assert(incremental <= 8, s"incremental pass: $incremental jobs")
+    assert(spark.read.parquet(targetDir).count() == nAll)
+    assert(SyncRunner.readState(spark, stateDir, "events").map(_.n_rows).contains(nAll - nFirst))
+    info(s"jobs: incremental with rows $incremental")
+  }
+
   test("lake autoSyncByOid: full <= 3 jobs, quiescent <= 2") {
     val docs = Catalog.load(spark, sf, "events")
       .select(lpad(lower(hex(col("event_id"))), 24, "0").as("_id"), col("user_id"))

@@ -253,79 +253,6 @@ class SyncSpec extends SparkSpec {
     assert(stats2.rows == 100 && stats2.fallbackRows == 100 && stats2.failedRows == 0)
   }
 
-  test("JDBC executor on embedded Derby: batch insert, then row fallback on duplicate keys") {
-    import spark.implicits._
-    import graft.sinks.JdbcBatchExecutor
-    val url = s"jdbc:derby:memory:graft${System.nanoTime()};create=true"
-    val setup = java.sql.DriverManager.getConnection(url)
-    setup.createStatement().execute("CREATE SCHEMA \"db\"")
-    setup.createStatement().execute(
-      "CREATE TABLE \"db\".\"t\" (\"id\" BIGINT PRIMARY KEY, \"v\" VARCHAR(50))")
-    setup.close()
-
-    val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(2)
-    val stats = BatchedUpsertWriter.write(df, "db", "t", batchSize = 30,
-      () => new JdbcBatchExecutor(url))
-    assert(stats.rows == 100 && stats.failedRows == 0 && stats.fallbackRows == 0)
-
-    // second write overlaps keys 91..100: batches hit the PK constraint,
-    // the per-row fallback keeps the 10 genuinely-new rows
-    val df2 = (91 to 110).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(1)
-    val stats2 = BatchedUpsertWriter.write(df2, "db", "t", batchSize = 30,
-      () => new JdbcBatchExecutor(url))
-    assert(stats2.fallbackRows == 10 && stats2.failedRows == 10)
-
-    val check = java.sql.DriverManager.getConnection(url)
-    val rs = check.createStatement().executeQuery("SELECT COUNT(*), SUM(\"id\") FROM \"db\".\"t\"")
-    rs.next()
-    assert(rs.getLong(1) == 110 && rs.getLong(2) == (1 to 110).map(_.toLong).sum)
-    check.close()
-  }
-
-  test("JDBC source: partitioned parallel read, watermark pushdown, full sync loop on Derby") {
-    import graft.sources.{JdbcSource, JdbcSourceConfig}
-    val url = s"jdbc:derby:memory:graftsrc${System.nanoTime()};create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    conn.createStatement().execute(
-      "CREATE TABLE APP.SRC (ID BIGINT PRIMARY KEY, TS TIMESTAMP, V VARCHAR(20))")
-    val ins = conn.prepareStatement("INSERT INTO APP.SRC VALUES (?, ?, ?)")
-    def insert(from: Int, to: Int): Unit = {
-      (from to to).foreach { i =>
-        val month = if (i > 100) "02" else "01" // later inserts are strictly newer
-        ins.setLong(1, i.toLong)
-        ins.setTimestamp(2, java.sql.Timestamp.valueOf(f"2024-$month-${i % 28 + 1}%02d 00:00:00"))
-        ins.setString(3, s"v$i")
-        ins.addBatch()
-      }
-      ins.executeBatch()
-    }
-    insert(1, 100)
-
-    val cfg = JdbcSourceConfig(url, "APP.SRC", partitionColumn = Some("ID"), numPartitions = 4)
-    val df = JdbcSource.load(spark, cfg)
-    assert(df.count() == 100)
-    assert(df.rdd.getNumPartitions == 4) // range-partitioned parallel read
-
-    // watermark predicate must reach the database, not Spark
-    val delta = JdbcSource.loadSince(spark, cfg, "TS", "2024-01-20 00:00:00")
-    val scan = delta.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters") && scan.contains("GreaterThan"),
-      s"watermark not pushed down:\n$scan")
-
-    // the reference's core loop end-to-end: Derby -> autoSync -> parquet
-    val stateDir = tmp("graft_jdbcstate") + "/state"
-    val targetDir = tmp("graft_jdbctarget") + "/src"
-    val (m1, n1) = SyncRunner.autoSync(spark, JdbcSource.load(spark, cfg), "src",
-      Seq("ID"), "TS", Seq("TS", "ID"), targetDir, stateDir, 1L)
-    assert(m1 == "full" && n1 == 100)
-    insert(101, 120) // February rows — strictly past the watermark
-    val (m2, n2) = SyncRunner.autoSync(spark, JdbcSource.load(spark, cfg), "src",
-      Seq("ID"), "TS", Seq("TS", "ID"), targetDir, stateDir, 2L)
-    assert(m2 == "incremental" && n2 == 20)
-    assert(spark.read.parquet(targetDir).count() == 120)
-    conn.close()
-  }
-
   test("autoSyncAll: pattern sweep, time-field detection, full fallback for dimensions") {
     val stateDir = tmp("graft_state3") + "/state"
     val targetRoot = tmp("graft_target3")
@@ -565,29 +492,6 @@ class SyncSpec extends SparkSpec {
     assert(e.getMessage == "boom" && sentSeq.last.contains("sync t failed: boom"))
   }
 
-  test("alerts: a dying streaming query pages through the listener") {
-    import graft.sync.Alerts
-    import org.apache.spark.sql.streaming.StreamingQueryException
-    val sent = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = Alerts.queryListener(new Alerts.Alerter(sent.add(_)))
-    spark.streams.addListener(listener)
-    try {
-      val dir = tmp("graft_alert_src")
-      Catalog.load(spark, sf, "events").limit(10).write.mode("overwrite").parquet(dir)
-      val q = spark.readStream.schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .parquet(dir)
-        .writeStream
-        .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => sys.error("sink exploded"))
-        .start()
-      intercept[StreamingQueryException](q.processAllAvailable())
-      // listener fires asynchronously after termination
-      val deadline = System.currentTimeMillis() + 30000
-      while (sent.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      import scala.jdk.CollectionConverters._
-      assert(sent.asScala.exists(s => s.contains("\"ERROR\"") && s.contains("died")), sent.asScala.mkString("; "))
-    } finally spark.streams.removeListener(listener)
-  }
-
   test("promote: failed rename restores target and throws (state never advanced)") {
     import graft.sinks.PartitionedUpsert
     val root = tmp("graft_promote")
@@ -601,52 +505,6 @@ class SyncSpec extends SparkSpec {
       PartitionedUpsert.promote(fs, s"$root/missing__tmp", target)
     }
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$target/data.txt")))
-  }
-
-  test("VersionedPublish: write-audit-publish, crash matrix, vacuum") {
-    import spark.implicits._
-    import graft.sinks.VersionedPublish
-    import org.apache.hadoop.fs.Path
-    val root = tmp("graft_wap") + "/tbl"
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // v1 publish + read-through-pointer
-    val v1 = VersionedPublish.publish(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "s"), root)
-    assert(v1 == 1)
-    assert(VersionedPublish.read(spark, root).count() == 2)
-
-    // audit failure: pointer untouched, version never committed
-    intercept[RuntimeException] {
-      VersionedPublish.publish(spark, Seq((9L, "x")).toDF("id", "s"), root,
-        validate = d => if (d.count() == 1) sys.error("audit: suspicious row count"))
-    }
-    assert(VersionedPublish.currentVersion(fs, root).contains(1))
-    assert(VersionedPublish.read(spark, root).count() == 2) // still v1
-
-    // crash after stage, before _COMMITTED: orphan dir is invisible
-    Seq((7L, "z")).toDF("id", "s").write.parquet(s"$root/.v00003")
-    assert(VersionedPublish.currentVersion(fs, root).contains(1))
-    assert(VersionedPublish.read(spark, root).count() == 2)
-
-    // a clean publish skips past the orphan's number
-    val v4 = VersionedPublish.publish(spark, Seq((1L, "a2"), (2L, "b2"), (3L, "c")).toDF("id", "s"), root)
-    assert(v4 == 4)
-    assert(VersionedPublish.read(spark, root).count() == 3)
-
-    // crash mid-flip: truncated pointer → newest COMMITTED version wins
-    val out = fs.create(new Path(root, "_CURRENT"), true)
-    out.write("v000".getBytes("UTF-8")); out.close()
-    assert(VersionedPublish.currentVersion(fs, root).contains(4))
-    assert(VersionedPublish.read(spark, root).count() == 3)
-
-    // naive full-dir read fails loudly (hidden version dirs), never unions versions
-    intercept[Exception](spark.read.parquet(root).count())
-
-    // vacuum(keep=0) drops v1 and the never-committed orphan, keeps current
-    VersionedPublish.publish(spark, Seq((5L, "e")).toDF("id", "s"), root) // v5, repairs pointer
-    VersionedPublish.vacuum(spark, root, keep = 0)
-    assert(!fs.exists(new Path(root, ".v00001")) && !fs.exists(new Path(root, ".v00003")))
-    assert(VersionedPublish.read(spark, root).count() == 1)
   }
 
   test("flattenShallow: mongo-variant semantics (nested -> JSON at depth 1)") {
