@@ -723,7 +723,7 @@ object Multimodal {
       try out.write(fp.getBytes("UTF-8"))
       finally out.close()
     }
-    spark.read.parquet(s"$dir/payloads")
+    graft.sources.Catalog.readParquet(spark, s"$dir/payloads")
   }
 
   /** Stage REAL TIFF files through the JDK encoder (big-endian

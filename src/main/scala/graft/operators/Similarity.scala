@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.sources.Catalog
+
 /** A (score, id) candidate for top-k selection. */
 case class ScoredId(score: Double, id: Long)
 
@@ -424,7 +426,7 @@ object Similarity {
     // the cache and re-fit every time (measured: the 8 PQ subspace
     // fits dominated sim_topk_pq's bench time)
     val cacheKey = (candidates.queryExecution.logical.canonicalized.toString + "#" + vecCol +
-      "#" + graft.sources.Catalog.dataFingerprint(candidates.sparkSession, candidates), nClusters)
+      "#" + Catalog.dataFingerprint(candidates.sparkSession, candidates), nClusters)
     centroidCache.computeIfAbsent(
       cacheKey,
       _ => {
@@ -668,7 +670,7 @@ object Similarity {
     * append and probe paths.
     */
   private def loadCentroids(spark: org.apache.spark.sql.SparkSession, indexDir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$indexDir/centroids")
+    Catalog.readParquet(spark, s"$indexDir/centroids")
       .orderBy("cell").collect()
       .map(_.getAs[Seq[Double]]("center").toArray)
 
@@ -715,7 +717,7 @@ object Similarity {
   ): Unit = {
     import spark.implicits._
     // the indexed vectors ARE the corpus — no external source needed
-    val corpus = spark.read.parquet(s"$indexDir/cells").select(col("cid"), col("cvec"))
+    val corpus = Catalog.readParquet(spark, s"$indexDir/cells").select(col("cid"), col("cvec"))
     val train =
       if (sampleFraction >= 1.0) corpus
       else corpus.sample(withReplacement = false, sampleFraction, seed)
@@ -747,7 +749,7 @@ object Similarity {
       nProbes: Int = 4
   ): DataFrame = {
     val centers = loadCentroids(spark, indexDir)
-    val cands = spark.read.parquet(s"$indexDir/cells")
+    val cands = Catalog.readParquet(spark, s"$indexDir/cells")
     val qs =
       if (centers.length > literalCentroidMax) probeCellsJoin(queries, centers, idCol, vecCol, nProbes)
       else probeCellsLiteral(queries, centers, idCol, vecCol, nProbes)
@@ -799,7 +801,7 @@ object Similarity {
       nProbes: Int = 4
   ): DataFrame = {
     val centers = loadCentroids(spark, indexDir)
-    val cands = spark.read.parquet(s"$indexDir/cells")
+    val cands = Catalog.readParquet(spark, s"$indexDir/cells")
     val qs =
       if (centers.length > literalCentroidMax) probeCellsJoin(queries, centers, idCol, vecCol, nProbes)
       else probeCellsLiteral(queries, centers, idCol, vecCol, nProbes)
@@ -940,7 +942,7 @@ object Similarity {
       m: Int = 8,
       kCodes: Int = 256
   ): Boolean = {
-    val fp = graft.sources.Catalog.dataFingerprint(spark, candidates) +
+    val fp = Catalog.dataFingerprint(spark, candidates) +
       s"#dim=$dim#m=$m#k=$kCodes"
     val fpPath = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
     val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -992,7 +994,7 @@ object Similarity {
   }
 
   private def loadPqBooks(spark: org.apache.spark.sql.SparkSession, indexDir: String): (Array[Float], Int, Int, Int) = {
-    val rows = spark.read.parquet(s"$indexDir/codebooks")
+    val rows = Catalog.readParquet(spark, s"$indexDir/codebooks")
       .orderBy("sub", "code").collect()
     val m = rows.map(_.getInt(0)).max + 1
     val kCodes = rows.map(_.getInt(1)).max + 1
@@ -1017,7 +1019,7 @@ object Similarity {
       k: Int
   ): DataFrame = {
     val (flat, m, kCodes, subDim) = loadPqBooks(spark, indexDir)
-    val codes = spark.read.parquet(s"$indexDir/codes")
+    val codes = Catalog.readParquet(spark, s"$indexDir/codes")
     val qs = broadcast(normalized(queries, idCol, vecCol).select(
       col(idCol).as("qid"),
       graft.functions.VecOps.pq_query_table(col("__unit"), flat, m, kCodes, subDim).as("qtab")))
@@ -1179,7 +1181,7 @@ object Similarity {
       m: Int = 8,
       kCodes: Int = 256
   ): Boolean = {
-    val fp = graft.sources.Catalog.dataFingerprint(spark, candidates) +
+    val fp = Catalog.dataFingerprint(spark, candidates) +
       s"#dim=$dim#nc=$nClusters#m=$m#k=$kCodes"
     val fpPath = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
     val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1216,7 +1218,7 @@ object Similarity {
   ): DataFrame = {
     val centers = loadCentroids(spark, indexDir)
     val (flat, m, kCodes, subDim) = loadPqBooks(spark, indexDir)
-    val cells = spark.read.parquet(s"$indexDir/cells")
+    val cells = Catalog.readParquet(spark, s"$indexDir/cells")
     val unitQ = normalized(queries, idCol, vecCol)
     val probed =
       if (centers.length > literalCentroidMax) {
@@ -1429,7 +1431,7 @@ object Similarity {
     candidates
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
       .write.mode("overwrite").parquet(s"$indexDir/vectors")
-    val vecs = spark.read.parquet(s"$indexDir/vectors")
+    val vecs = Catalog.readParquet(spark, s"$indexDir/vectors")
     val c =
       if (nClusters > 0) nClusters
       else math.max(16, (vecs.count() / 256L).toInt)
@@ -1478,8 +1480,8 @@ object Similarity {
       nClusters: Int = 0
   ): Unit = {
     val ok =
-      try spark.read.parquet(s"$indexDir/edges").limit(1).count() >= 0 &&
-        spark.read.parquet(s"$indexDir/entries").limit(1).count() >= 0
+      try Catalog.readParquet(spark, s"$indexDir/edges").limit(1).count() >= 0 &&
+        Catalog.readParquet(spark, s"$indexDir/entries").limit(1).count() >= 0
       catch { case _: Exception => false }
     if (!ok) buildGraphIndex(spark, candidates, idCol, vecCol, indexDir, m, nClusters)
   }
@@ -1535,15 +1537,15 @@ object Similarity {
     // jobs, a full-scan count() where parquet's count is
     // metadata-only, and a CacheManager lookup in every round's
     // compile (+25-40% on the whole probe).
-    val vecs = spark.read.parquet(s"$indexDir/vectors")
+    val vecs = Catalog.readParquet(spark, s"$indexDir/vectors")
     val (autoBeam, autoRounds) =
       if (beam > 0 && rounds > 0) (beam, rounds)
       else {
         val (b, r) = graphProbeSizing(vecs.count())
         (if (beam > 0) beam else b, if (rounds > 0) rounds else r)
       }
-    val edges = spark.read.parquet(s"$indexDir/edges")
-    val entries = broadcast(spark.read.parquet(s"$indexDir/entries"))
+    val edges = Catalog.readParquet(spark, s"$indexDir/edges")
+    val entries = broadcast(Catalog.readParquet(spark, s"$indexDir/entries"))
     val qs = broadcast(queries.select(
       col(idCol).as("qid"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qnrm")))
     def score(cands: DataFrame): DataFrame = cands
@@ -1612,7 +1614,7 @@ object Similarity {
       beam: Int = 0,
       rounds: Int = 0
   ): Unit = {
-    val existing = spark.read.parquet(s"$indexDir/vectors").select(col("cid"))
+    val existing = Catalog.readParquet(spark, s"$indexDir/vectors").select(col("cid"))
     val fresh = batch
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
       .join(existing, Seq("cid"), "left_anti")

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Source-catalog discovery: list the tables available under a data
   * directory and select them with comma-separated wildcard patterns.
@@ -60,10 +61,65 @@ object Catalog {
     * Nanos use exact integer division (never double math — ns epochs
     * exceed 2^53); the NTZ cast is value-identity under the session's
     * UTC zone.
+    *
+    * Reads go through [[readParquet]]: a load pays one footer job per
+    * table, per data version, per session; later loads of unchanged
+    * files run no job until the query does.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else readParquet(spark, s"$dir/$name.parquet")
+
+  /** Parquet schemas inferred by [[readParquet]]. */
+  private val parquetSchemas = new SchemaCache
+
+  private[graft] def schemaCacheSize: Int = parquetSchemas.size
+
+  /** `spark.read.parquet(path)`, minus the footer job on a warm load.
+    * A read without a schema runs a one-task Spark job to read a
+    * footer. This lists the path's files on the driver instead (one
+    * recursive `listFiles`, no job) and keys the inferred schema on
+    * the path, the sorted (file, length, mtime) listing and the
+    * session's explicitly set parquet confs: `nanosAsLong` changes a
+    * nanos column's type. A hit reads with the cached schema and runs
+    * no job; a miss reads as before and stores the frame's schema.
+    * Rewritten files change the listing, so a rewrite re-infers. Glob
+    * paths and listing failures (a missing path) take the plain read,
+    * so errors stay Spark's own.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    listingKey(spark, path).fold(spark.read.parquet(path)) { key =>
+      parquetSchemas.get(key) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          parquetSchemas.put(key, df.schema)
+          df
+      }
+    }
+
+  private def listingKey(spark: SparkSession, path: String): Option[String] =
+    if (path.exists("*?[{\\".contains(_))) None
+    else
+      try {
+        val p = new Path(path)
+        val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+        val files = scala.collection.mutable.ArrayBuffer[String]()
+        while (it.hasNext) {
+          val st = it.next()
+          files += s"${st.getPath}@${st.getModificationTime}:${st.getLen}"
+        }
+        val confs = spark.conf.getAll.collect {
+          case (k, v) if k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") =>
+            s"$k=$v"
+        }
+        if (files.isEmpty) None
+        else Some(path + "#" + md5Hex((confs.toSeq.sorted ++ files.sorted).mkString("|")))
+      } catch { case NonFatal(_) => None }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Source-format matrix: one loader for the lake formats a sync
     * source can arrive in — parquet / ORC / CSV / JSONL — returning
@@ -110,11 +166,12 @@ object Catalog {
   /** Events with `ts` as the raw nanosecond Long — the form incremental
     * readers filter on, because a predicate on the *raw* column reaches
     * the parquet scan (min/max skipping + partition pruning), while one
-    * on the converted timestamp would not.
+    * on the converted timestamp would not. Like [[load]], it pays one
+    * footer job per table, per data version, per session.
     */
   def loadEventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    readParquet(spark, s"$dir/events.parquet")
   }
 
   /** Fingerprint of a frame's underlying data files (path, mtime,
@@ -139,8 +196,7 @@ object Catalog {
           } catch { case _: java.io.IOException => "?" }
         f + "@" + st
       }.mkString("|")
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      md5Hex(listing)
     }
   }
 

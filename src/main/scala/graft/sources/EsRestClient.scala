@@ -250,25 +250,6 @@ class EsRestClient(
     }
     total
   }
-
-  /** Convenience full fetch of one (driver-sized) index into a
-    * DataFrame of (`_id`, `doc`) rows — compose with
-    * `JsonIngest.parseAndFlatten` for the reference's flattened
-    * all-string row surface, or a `SyncRunner` source thunk. Buffers
-    * the index on the driver by construction, as `WireSync` does per
-    * object: use only for driver-sized indices.
-    * The frame is [[EsRestClient.docFrame]]'s, so parsing runs in tasks.
-    */
-  def fetchIndex(
-      spark: SparkSession,
-      index: String,
-      cfg: EsSourceConfig,
-      query: Option[String] = None): DataFrame = {
-    val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val body = query.getOrElse(EsSourceConfig.fullSearchBody(cfg.scrollSize))
-    scrollPages(index, body, cfg.scrollTimeout)(page => buf ++= page)
-    EsRestClient.docFrame(spark, buf.toSeq)
-  }
 }
 
 object EsRestClient {

@@ -33,18 +33,14 @@ object JsonIngest {
     * of batches with it — re-inferring per query would add two jobs
     * each time. Deterministic (same sample → same schema), so caching
     * cannot change results. One entry per (source, column, data
-    * version), LRU-bounded at [[SchemaCacheCapacity]] entries, so a
-    * long-lived session does not grow it forever.
+    * version), LRU-bounded at [[SchemaCacheCapacity]] entries by the
+    * shared [[SchemaCache]] policy.
     */
-  private[graft] val SchemaCacheCapacity = 64
+  private[graft] val SchemaCacheCapacity = SchemaCache.Capacity
 
-  private val schemaCache =
-    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, StructType]): Boolean =
-        size > SchemaCacheCapacity
-    }
+  private val schemaCache = new SchemaCache
 
-  private[graft] def schemaCacheSize: Int = schemaCache.synchronized(schemaCache.size)
+  private[graft] def schemaCacheSize: Int = schemaCache.size
 
   /** Infer a StructType for the JSON column from a bounded sample.
     * Cache key = plan + data fingerprint (file listing/mtimes), so
@@ -53,11 +49,11 @@ object JsonIngest {
     */
   def inferSchema(spark: SparkSession, df: DataFrame, jsonCol: String, sample: Int = 5000): StructType = {
     val key = planKey(df) + "#" + jsonCol + "#" + sample + "#" + Catalog.dataFingerprint(spark, df)
-    schemaCache.synchronized(Option(schemaCache.get(key))).getOrElse {
+    schemaCache.get(key).getOrElse {
       import spark.implicits._
       val ds = df.select(col(jsonCol)).na.drop().limit(sample).as[String]
       val schema = spark.read.json(ds).schema
-      schemaCache.synchronized(schemaCache.put(key, schema))
+      schemaCache.put(key, schema)
       schema
     }
   }

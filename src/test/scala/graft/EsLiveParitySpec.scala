@@ -75,7 +75,9 @@ class EsLiveParitySpec extends SparkSpec {
 
   test("full sync: scroll pages stream, flattened rows land, scroll is cleaned up") {
     withStub { (stub, client, cfg) =>
-      val raw = client.fetchIndex(spark, "logs_a", cfg)
+      val docs = scala.collection.mutable.ArrayBuffer[(String, String)]()
+      client.scrollPages("logs_a", EsSourceConfig.fullSearchBody(cfg.scrollSize), cfg.scrollTimeout)(docs ++= _)
+      val raw = EsRestClient.docFrame(spark, docs.toSeq)
       assert(raw.count() == 7L)
       val flat = JsonIngest.parseAndFlatten(spark, raw, "doc")
       val row = flat.filter(col("doc_id") === "6").collect()(0)
