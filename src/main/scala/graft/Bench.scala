@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Driver-run benchmark: times the headline queries at
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+/** Benchmark main: times every [[SparkEntry.registry]] query,
+  * in registry order, at SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
   * Each query is fully materialized through the noop sink (forces
   * complete execution of every operator — `count()` would let Catalyst
@@ -16,82 +16,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private val headline: Seq[String] = Seq(
-    "dedup_ngram_jaccard",
-    "q1_pricing", "q3_topk_join", "q5_join5", "events_hourly", "events_hourly_skewed",
-    "window_rank", "sessionize", "event_transitions",
-    "rollup_pricing", "cube_pricing", "decile_spend", "brand_revenue", "supplier_balance", "distinct_users",
-    "q6_filter_agg", "cust_no_orders", "q4_semi_join", "q18_large_orders",
-    "q13_cust_dist", "q17_small_qty", "q22_idle_rich", "funnel_counts",
-    "q2_min_cost", "q7_nation_volume", "q8_market_share", "q9_product_profit", "q10_returned",
-    "q11_stock_value", "q12_late_lines", "q14_promo_share", "q15_top_supplier", "q16_supplier_cnt",
-    "q19_disjunctive", "q20_part_promo", "q21_waiting",
-    "median_price", "quartiles_price", "winsorize_stats", "anomaly_days", "anomaly_mad", "changepoint_cusum", "events_twap", "events_ewma", "events_holt", "recon_counts", "retention_cohorts", "resample_gapfill", "moving_7d", "cumulative_revenue", "pivot_daily_events",
-    "grouping_sets_mix", "window_suite", "trend_slope", "corr_pairs", "cdc_apply",
-    "events_hourly_incr", "profile_table", "equidepth_hist", "rfm_segments", "basket_lift", "dq_violations", "drift_report", "skew_report",
-    "asof_last_click", "asof_within", "asof_nearest", "interval_join", "range_join_binned", "range_count_sweep",
-    "flatten_json", "stringify_all", "incremental_read", "incremental_by_id", "incremental_by_oid",
-    "incremental_or", "sync_state", "snapshot_diff", "scd2_intervals",
-    "upsert_latest", "scan_fields", "multi_table_union",
-    "dedup_exact", "dedup_containment", "dedup_minhash_lsh", "dedup_incr_exact", "dedup_incr_minhash", "dedup_incr_winnow",
-    "dedup_simhash", "dedup_embedding", "dedup_embedding_blocked", "dedup_incr_embedding",
-    "dedup_clusters",
-    "dedup_passages", "dedup_semantic", "fuzzy_match_join",
-    "sim_topk_brute", "sim_topk_lsh", "sim_topk_ivf", "sim_topk_ivf_sq8", "sim_topk_pq", "sim_topk_ivfpq", "sim_topk_hnsw", "sim_topk_quant", "embed_nearest_centroid",
-    "embed_quantize", "embed_project", "embed_pca_top", "embed_kmeans", "embed_outliers", "graph_pagerank", "graph_triangles", "graph_hits", "graph_kcore", "dedup_incr_bloom", "domain_cap", "dedup_url",
-    "text_langid", "text_langid_ngram", "text_quality", "text_stats", "text_tokens", "text_fingerprint", "text_topterms",
-    "text_rep_stats", "text_tfidf_top", "text_unigram_score", "text_model_score", "corpus_stats",
-    "text_scrub_pii", "text_strip_html", "sample_split", "sample_stratified", "decontam_overlap", "decontam_fuzzy", "heavy_hitters", "mix_allocate", "sample_weighted", "shuffle_shards", "dup_span_stats", "text_bigram_pmi",
-    "pack_sequences", "curate_corpus", "curate_corpus_v2", "dup_ngram_mass", "text_clip_dedup", "text_novelty",
-    "text_winnow_fp", "sparse_cosine_join", "chunk_overlap", "moving_distinct_7d", "cumulative_distinct",
-    "mm_binary_meta", "mm_frame_sample", "mm_frame_bytes", "mm_pixel_resize",
-    "mm_byte_resize", "mm_png_meta", "mm_wav_meta", "mm_jpeg_meta", "mm_gif_meta", "mm_tiff_meta",
-    "events_props_agg", "length_histogram", "quality_gate_pctl", "text_bigrams_top",
-    "src_discovery", "src_format_orc", "json_path_census", "ddl_generate", "ddl_allstring", "schema_evolution", "type_mapping",
-    // round-7 late additions
-    "acf_lags", "dow_seasonality", "state_durations", "seasonal_decompose", "funnel_latency", "session_stats",
-    "text_bigram_lm", "domain_quality", "mm_mp4_meta", "mm_exif_meta", "mm_wav_rms", "mm_phash_dedup",
-    "sim_range_search", "sim_dim_truncate",
-    // round-8 additions
-    "funnel_attrib", "dedup_embedding_simhash", "mm_phash_incr", "sim_range_ivf",
-    "dedup_soft", "attribution_linear", "cohort_ltv", "sim_rrf_fusion", "mm_webp_meta",
-    "graph_label_prop", "text_ccnet_bucket", "decontam_embedding", "forecast_snaive",
-    "new_vs_returning", "funnel_window",
-    // round-9 additions
-    "dedup_incr_containment", "funnel_window_strict", "funnel_window_dedup",
-    "text_gopher_gate", "dedup_keep_best",
-    "sequence_match", "sequence_count", "text_kn_bigram", "holt_winters",
-    "segment_overlap", "mm_color_hist", "text_lm_incr",
-    "token_drift", "text_watermark", "sequence_next_node",
-    // round-10 additions
-    "text_bpe_tokens", "pack_sequences_bpe",
-    // round-12 additions
-    "corpus_diff", "sample_weighted_strat"
-  )
-
-  /** Coverage guard: every SparkEntry query must have a timing record —
-    * an entry missing from the manual ordering above is appended (and
-    * flagged) rather than silently unbenched.
-    */
-  private def fullHeadline: Seq[String] = {
-    val missing = (SparkEntry.queries.keySet -- headline).toSeq.sorted
-    if (missing.nonEmpty)
-      System.err.println(s"[bench] WARNING: queries missing from headline, appending: ${missing.mkString(",")}")
-    val gone = headline.filterNot(SparkEntry.queries.contains)
-    if (gone.nonEmpty)
-      System.err.println(s"[bench] WARNING: headline names without a query entry, skipping: ${gone.mkString(",")}")
-    headline.filter(SparkEntry.queries.contains) ++ missing
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // Optional comma-separated subset for iterating on one query's
     // plan without paying for the whole suite.
     val selected = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .map(sel => fullHeadline.filter(sel))
-      .getOrElse(fullHeadline)
+      .fold(SparkEntry.registry)(SparkEntry.select).map(_.name)
     val spark: SparkSession = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

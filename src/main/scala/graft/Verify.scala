@@ -1,33 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each [[SparkEntry.registry]] query's result →
+  * parquet, plus oracle_sql.json (every oracled entry's SQL), for the
+  * DuckDB compare (`tools/check.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-loop subset: VERIFY_ONLY=q1,q2 dumps just those queries
+    // (unset, the gate runs everything)
+    val selected = sys.env.get("VERIFY_ONLY").fold(SparkEntry.registry)(SparkEntry.select)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // dev-loop subset: VERIFY_ONLY=q1,q2 dumps just those queries
-    // (the driver never sets it, so the gate always runs everything)
-    val only = sys.env.get("VERIFY_ONLY").map(_.split(",").toSet)
     // big-SF sweeps set VERIFY_COALESCE=0: a 60M-row dump through
     // coalesce(1) is a single-threaded write; the checker globs
     // multi-file dirs and ORDER-BY-ALLs, so file count is cosmetic.
     // Default stays 1 (the driver's layout).
     val coalesceN = sys.env.getOrElse("VERIFY_COALESCE", "1").toInt
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { q =>
       try {
-        val res = fn(spark, sfDir)
+        val res = q.build(spark, sfDir)
         (if (coalesceN > 0) res.coalesce(coalesceN) else res)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
+          .write.mode("overwrite").parquet(s"$outDir/${q.name}")
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // per-query cache hygiene — see Bench
       spark.catalog.clearCache()
@@ -44,8 +43,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.registry
+      .flatMap(e => e.oracle.map(sql => s"${q(e.name)}: ${q(sql)}")).mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -513,8 +513,8 @@ object Dedup {
     * loop and the 64-lane vote loop are native codegen'd kernels
     * ([[graft.functions.FnvHashes]], [[graft.functions.SimHash64Expr]]).
     * FNV-1a (not XXH64) as the word hash keeps the entire pipeline
-    * reproducible in the DuckDB oracle — see SparkEntry.oracleSql
-    * ("dedup_simhash").
+    * reproducible in the DuckDB oracle — see the "dedup_simhash"
+    * entry of [[graft.SparkEntry.registry]].
     */
   def simhash64(c: Column): Column =
     graft.functions.VecOps.simhash64(

@@ -707,21 +707,8 @@ object Multimodal {
       dir: String,
       version: String
   )(build: => DataFrame): DataFrame = {
-    val fp = graft.sources.Catalog.dataFingerprint(spark, source) + "#" + version
-    val fpPath = new org.apache.hadoop.fs.Path(s"$dir/_FINGERPRINT")
-    val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current =
-      if (fs.exists(fpPath)) {
-        val buf = new Array[Byte](fs.getFileStatus(fpPath).getLen.toInt)
-        val in = fs.open(fpPath)
-        try { in.readFully(buf); Some(new String(buf, "UTF-8")) }
-        finally in.close()
-      } else None
-    if (!current.contains(fp)) {
+    graft.sources.Catalog.buildOnce(spark, source, dir, "#" + version) {
       build.write.mode("overwrite").parquet(s"$dir/payloads")
-      val out = fs.create(fpPath, true)
-      try out.write(fp.getBytes("UTF-8"))
-      finally out.close()
     }
     graft.sources.Catalog.readParquet(spark, s"$dir/payloads")
   }

@@ -785,6 +785,23 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
   }
 
+  /** [[buildIvfIndexSq8]] behind the build-once gate
+    * ([[Catalog.buildOnce]]), keyed on the candidates' files plus
+    * `nClusters`: a warm probe skips the fit and the index rewrite.
+    * Returns whether it built.
+    */
+  def buildIvfIndexSq8IfAbsent(
+      spark: org.apache.spark.sql.SparkSession,
+      candidates: DataFrame,
+      idCol: String,
+      vecCol: String,
+      nClusters: Int,
+      indexDir: String
+  ): Boolean =
+    Catalog.buildOnce(spark, candidates, indexDir, s"#nc=$nClusters") {
+      buildIvfIndexSq8(spark, candidates, idCol, vecCol, nClusters, indexDir)
+    }
+
   /** C42 probe: query a persisted SQ8 index — cell selection uses the
     * float centroids exactly like [[ivfTopKIndexed]] (the coarse
     * quantizer stays full-precision; only the residual scoring is
@@ -929,8 +946,7 @@ object Similarity {
     * unguarded entry spent ~90% of its time re-fitting). The
     * fingerprint file pins (files, mtimes, lengths) of the candidate
     * frame; a rewritten corpus re-trains, an unchanged one skips
-    * straight to the probe. Same build-once discipline as the IVF
-    * persisted index.
+    * straight to the probe ([[Catalog.buildOnce]]).
     */
   def buildPqIndexIfAbsent(
       spark: org.apache.spark.sql.SparkSession,
@@ -942,24 +958,8 @@ object Similarity {
       m: Int = 8,
       kCodes: Int = 256
   ): Boolean = {
-    val fp = Catalog.dataFingerprint(spark, candidates) +
-      s"#dim=$dim#m=$m#k=$kCodes"
-    val fpPath = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
-    val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current =
-      if (fs.exists(fpPath)) {
-        val buf = new Array[Byte](fs.getFileStatus(fpPath).getLen.toInt)
-        val in = fs.open(fpPath)
-        try { in.readFully(buf); Some(new String(buf, "UTF-8")) }
-        finally in.close()
-      } else None
-    if (current.contains(fp)) false
-    else {
+    Catalog.buildOnce(spark, candidates, indexDir, s"#dim=$dim#m=$m#k=$kCodes") {
       buildPqIndex(spark, candidates, idCol, vecCol, dim, indexDir, m, kCodes)
-      val out = fs.create(fpPath, true)
-      try out.write(fp.getBytes("UTF-8"))
-      finally out.close()
-      true
     }
   }
 
@@ -1181,24 +1181,8 @@ object Similarity {
       m: Int = 8,
       kCodes: Int = 256
   ): Boolean = {
-    val fp = Catalog.dataFingerprint(spark, candidates) +
-      s"#dim=$dim#nc=$nClusters#m=$m#k=$kCodes"
-    val fpPath = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
-    val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current =
-      if (fs.exists(fpPath)) {
-        val buf = new Array[Byte](fs.getFileStatus(fpPath).getLen.toInt)
-        val in = fs.open(fpPath)
-        try { in.readFully(buf); Some(new String(buf, "UTF-8")) }
-        finally in.close()
-      } else None
-    if (current.contains(fp)) false
-    else {
+    Catalog.buildOnce(spark, candidates, indexDir, s"#dim=$dim#nc=$nClusters#m=$m#k=$kCodes") {
       buildIvfPqIndex(spark, candidates, idCol, vecCol, dim, nClusters, indexDir, m, kCodes)
-      val out = fs.create(fpPath, true)
-      try out.write(fp.getBytes("UTF-8"))
-      finally out.close()
-      true
     }
   }
 
@@ -1470,6 +1454,11 @@ object Similarity {
     assigned.unpersist(blocking = false)
   }
 
+  /** [[buildGraphIndex]] behind the build-once gate
+    * ([[Catalog.buildOnce]]), keyed on the candidates' files plus `m`
+    * and `nClusters`: a rewritten corpus at the same path rebuilds the
+    * graph instead of probing the old one. Returns whether it built.
+    */
   def buildGraphIndexIfAbsent(
       spark: org.apache.spark.sql.SparkSession,
       candidates: DataFrame,
@@ -1478,13 +1467,10 @@ object Similarity {
       indexDir: String,
       m: Int = 16,
       nClusters: Int = 0
-  ): Unit = {
-    val ok =
-      try Catalog.readParquet(spark, s"$indexDir/edges").limit(1).count() >= 0 &&
-        Catalog.readParquet(spark, s"$indexDir/entries").limit(1).count() >= 0
-      catch { case _: Exception => false }
-    if (!ok) buildGraphIndex(spark, candidates, idCol, vecCol, indexDir, m, nClusters)
-  }
+  ): Boolean =
+    Catalog.buildOnce(spark, candidates, indexDir, s"#m=$m#nc=$nClusters") {
+      buildGraphIndex(spark, candidates, idCol, vecCol, indexDir, m, nClusters)
+    }
 
   /** Probe-dial auto-sizing (the graph pendant of `lshSizing`):
     * a FIXED beam loses recall as the corpus grows — distractor

@@ -200,6 +200,36 @@ object Catalog {
     }
   }
 
+  /** Build-once gate for an artifact persisted under `dir` (an index, a
+    * staged payload): runs `build` only when the fingerprint file in
+    * `dir` does not hold [[dataFingerprint]] of `source` followed by
+    * `params`, then writes that fingerprint — after the build
+    * succeeded, so a failed build is retried. A rewritten source or
+    * changed parameters rebuild; an unchanged one skips. Returns
+    * whether it built.
+    */
+  private[graft] def buildOnce(spark: SparkSession, source: DataFrame, dir: String, params: String)(
+      build: => Unit): Boolean = {
+    val fp = dataFingerprint(spark, source) + params
+    val fpPath = new Path(s"$dir/_FINGERPRINT")
+    val fs = fpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val current =
+      if (fs.exists(fpPath)) {
+        val buf = new Array[Byte](fs.getFileStatus(fpPath).getLen.toInt)
+        val in = fs.open(fpPath)
+        try { in.readFully(buf); Some(new String(buf, "UTF-8")) }
+        finally in.close()
+      } else None
+    if (current.contains(fp)) false
+    else {
+      build
+      val out = fs.create(fpPath, true)
+      try out.write(fp.getBytes("UTF-8"))
+      finally out.close()
+      true
+    }
+  }
+
   /** Incremental batch of events strictly newer than `watermark`
     * (micro precision), with the time predicate pushed down to the
     * parquet scan in the scan's NATIVE type — raw-nanos space for

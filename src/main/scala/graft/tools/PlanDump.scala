@@ -6,12 +6,13 @@ import java.nio.file.{Files, Paths}
 import graft.{GraftSession, SparkEntry}
 
 /** Optimization-round observability: write `.explain("formatted")` for
-  * selected SparkEntry queries to files (plans/<tag>/<query>_<suffix>.txt)
-  * so plan-shape claims in OPTIMIZATION_*.md are checkable without a
-  * Spark install.
+  * selected [[graft.SparkEntry.registry]] queries to files
+  * (plans/<tag>/<query>_<suffix>.txt) so plan-shape claims in
+  * OPTIMIZATION_*.md are checkable without a Spark install.
   *
   * Env:
-  *   GRAFT_PLAN_QUERIES  comma-separated names (required)
+  *   GRAFT_PLAN_QUERIES  comma-separated names (required; an unknown
+  *                       name fails before the session starts)
   *   GRAFT_PLAN_DIR      output dir (default plans/r12)
   *   GRAFT_PLAN_SUFFIX   file suffix (default "before")
   *   SPARK_GRAFT_SF_DIR  data dir (default /root/testdata/sf0.1)
@@ -25,14 +26,14 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("GRAFT_PLAN_DIR", "plans/r12")
     val suffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "before")
-    val names = sys.env.getOrElse("GRAFT_PLAN_QUERIES", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    require(names.nonEmpty, "set GRAFT_PLAN_QUERIES")
+    val selected = SparkEntry.select(sys.env.getOrElse("GRAFT_PLAN_QUERIES", ""))
+    require(selected.nonEmpty, "set GRAFT_PLAN_QUERIES")
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
+    selected.foreach { q =>
+      val n = q.name
+      val df = q.build(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.write(

@@ -13,12 +13,6 @@ class AnalyticsSpec extends SparkSpec {
     }
   }
 
-  test("every query with an oracle is declared, and vice-versa keys line up") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(o.subsetOf(q), s"oracle without query: ${o.diff(q)}")
-  }
-
   test("as-of join: a matched right row with NULL value wins over an older non-null") {
     import spark.implicits._
     import graft.operators.AsOfJoin

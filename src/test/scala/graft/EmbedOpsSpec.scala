@@ -413,6 +413,35 @@ class EmbedOpsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/vectors").count() == vecsBefore)
   }
 
+  test("graph ANN index: a rewritten corpus rebuilds the graph, an unchanged one keeps it") {
+    import graft.operators.Similarity
+    val srcDir = "target/hnsw_gate_src"
+    val dir = "target/hnsw_gate"
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    def build(): Unit = Similarity.buildGraphIndexIfAbsent(spark, spark.read.parquet(srcDir),
+      "vec_id", "embedding", indexDir = dir, m = 16, nClusters = 16)
+    // every Spark write names its part files with a fresh UUID, so the
+    // listing of edges/ changes exactly when the graph is rewritten
+    def edgeFiles: Set[String] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/edges")).map(_.getPath.getName).toSet
+    def graphIds: Set[Long] = {
+      val e = spark.read.parquet(s"$dir/edges")
+      (e.select("src").union(e.select("dst")).union(spark.read.parquet(s"$dir/entries").select("cid")))
+        .collect().map(_.getLong(0)).toSet
+    }
+    embs.write.mode("overwrite").parquet(srcDir)
+    build()
+    val first = edgeFiles
+    build()
+    assert(edgeFiles == first, "unchanged corpus must keep the graph")
+    embs.filter(col("vec_id") % 2 === 0).repartition(3).write.mode("overwrite").parquet(srcDir)
+    build()
+    assert(edgeFiles != first, "rewritten corpus must rebuild the graph")
+    val kept = spark.read.parquet(srcDir).select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(graphIds.nonEmpty && graphIds.subsetOf(kept), "the graph must hold only the rewritten corpus's vectors")
+  }
+
   test("graphProbeSizing: beam/rounds grow with log2(n), floor at the small-corpus dials") {
     import graft.operators.Similarity
     // floors: tiny corpora keep the hand-tuned small dials

@@ -41,7 +41,7 @@ object RecallMain {
       operators.Similarity.ivfTopK(e, qN(e), "vec_id", "embedding", k = 5,
         nClusters = 16, nProbes = probes)
     def sq8(probes: Int, short: Int) = (s: SparkSession, e: DataFrame) => {
-      operators.Similarity.buildIvfIndexSq8(s, e, "vec_id", "embedding", nClusters = 16, indexDir = sq8Dir)
+      operators.Similarity.buildIvfIndexSq8IfAbsent(s, e, "vec_id", "embedding", nClusters = 16, indexDir = sq8Dir)
       operators.Similarity.ivfTopKIndexedSq8Refined(s, sq8Dir, qN(e), e,
         "vec_id", "embedding", k = 5, nProbes = probes, shortlist = short)
     }
