@@ -232,6 +232,7 @@ object SparkEntry {
           col("c_custkey") === col("o_custkey"), "left")
         .groupBy(col("c_custkey"))
         .agg(coalesce(sum(col("p_c")), lit(0L)).as("spend_c"))
+        .localCheckpoint() // the rank below reads it three times
       // distributed global rank, NOT ntile().over(Window.orderBy(...)):
       // the unpartitioned window sorts every customer in ONE task.
       // globalRowNumber bins by spend so each bin ranks in parallel,
@@ -642,25 +643,19 @@ object SparkEntry {
       // full sort), broadcast back, outliers clamped in ONE re-scan's
       // conditional sum. The robust-mean inputs (n, cuts, clamped sum)
       // stay integer cents so the report is engine-exact.
-      // The (brand, v_c) frame PERSISTS: selection is multi-pass
-      // (per-group stats, per-rank targets, bin histogram, in-bin
-      // rank) plus the final clamped re-scan, and without the persist
+      // The (brand, v_c) frame is CHECKPOINTED: selection is
+      // multi-pass (per-group stats, per-rank targets, bin histogram,
+      // in-bin rank) plus the final clamped re-scan, and without it
       // each pass re-executed the lineitem×part join — 28 FileScans
       // in the r12 before-plan, the whole join 4+ times per run
-      // (plans/r12/winsorize_stats_{before,after}.txt). Narrow 16-byte
-      // rows; cache released by the caller's clearCache between
-      // queries (the GraphOps cache-lifetime convention).
-      // NOT width-coalesced (unlike the funnel/pagerank caches): the
-      // downstream selection passes do real aggregation work over
-      // lineitem-cardinality rows — shrinking the cache serialized
-      // that compute and measured WORSE at sf0.1 (2.7 → 2.9-3.1 s).
+      // (plans/r12/winsorize_stats_{before,after}.txt).
       val v = t(s, d, "lineitem")
         .select(col("l_partkey"), Analytics.cents(col("l_extendedprice")).as("v_c"))
         .join(
           t(s, d, "part").select(col("p_partkey"), col("p_brand")),
           col("l_partkey") === col("p_partkey"))
         .select(col("p_brand").as("brand"), col("v_c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
       val cuts = Analytics
         .groupedExactRanks(
           v, "brand", col("v_c"),
@@ -1536,11 +1531,11 @@ object SparkEntry {
       val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val batch = docs.filter(col("doc_id") % 10 === 0)
-      // index persisted: the probe reads it twice (banded-signature
-      // join + verify fetch) — one corpus shingling instead of two
+      // index checkpointed: the probe reads it twice (banded-signature
+      // join + verify fetch) — one corpus shingling instead of two;
+      // the pairs feed both the best match and the count
       val pairs = Dedup.nearDupsAgainstIndex(batch, "doc_id", "text",
-        Dedup.buildMinhashIndex(corpus, "doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)).persist()
+        Dedup.buildMinhashIndex(corpus, "doc_id", "text").localCheckpoint()).localCheckpoint()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("id_a")).orderBy(col("jacc_pct").desc, col("id_b").asc)
       val best = pairs.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
@@ -3734,15 +3729,14 @@ object SparkEntry {
       val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val batch = docs.filter(col("doc_id") % 10 === 0)
-      // the index frame PERSISTS: the probe reads it FOUR times (both
-      // candidate arms + the KMV screen + the exact verify fetch) and
-      // without the persist the corpus re-shingled per read (the
+      // the index frame is CHECKPOINTED: the probe reads it FOUR times
+      // (both candidate arms + the KMV screen + the exact verify fetch)
+      // and without it the corpus re-shingled per read (the
       // winsorize_stats r12 lesson; in production this frame IS the
       // persisted on-disk index, so one materialization is the honest
       // cost model too)
       Dedup.containmentAgainstIndex(batch, "doc_id", "text",
-        Dedup.buildContainmentIndex(corpus, "doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        Dedup.buildContainmentIndex(corpus, "doc_id", "text").localCheckpoint(),
         n = 3, tauPct = 70)
     })(
       // cross-restricted twin of the dedup_containment oracle: batch =
@@ -3977,14 +3971,10 @@ object SparkEntry {
       // against the persisted bigram-count index of the rest; the
       // corpus text is never re-read at probe time
       val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      // index persisted: the scorer reads it twice (head-count rollup
-      // + the per-doc join) — one corpus bigram pass instead of two
+      // index checkpointed: the scorer reads it twice (head-count
+      // rollup + the per-doc join) — one corpus bigram pass instead of two
       TextAnalysis.scoreAgainstLmIndex(
-        // byte-derived cache width (no-op at scale): the scorer's two
-        // passes over the index otherwise pay the full-width task floor
-        operators.Sizing.coalesceForCache(
-          TextAnalysis.buildLmIndex(docs.filter(col("doc_id") % 10 =!= 7), "text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        TextAnalysis.buildLmIndex(docs.filter(col("doc_id") % 10 =!= 7), "text").localCheckpoint(),
         docs.filter(col("doc_id") % 10 === 7), "doc_id", "text")
     })(
       // the index probe must answer exactly like a text-level left join:

@@ -235,19 +235,11 @@ object Analytics {
       stages: Seq[String]
   ): DataFrame = {
     require(stages.length >= 2, "funnel latency needs at least two stages")
-    // PERSISTED: `durs` unions one arm per hop and each arm references
-    // this frame — without the persist the whole per-stage
+    // CHECKPOINTED: `durs` unions one arm per hop and each arm
+    // references this frame — without it the whole per-stage
     // groupBy+join chain over the fact table re-executed once per hop
-    // INSIDE the single durs materialization (Catalyst does not dedupe
-    // common subtrees; the winsorize_stats r12 lesson). User-cardinality
-    // rows; released by the caller's clearCache.
-    // Byte-derived cache width (no-op at scale): the hop arms + the
-    // rank selection re-read this cache ~(stages+3) times, so the
-    // default full-width materialization paid the task floor on every
-    // pass (measured −45% on the whole query at sf0.1).
-    val reached = Sizing.coalesceForCache(
-      funnelReached(events, userCol, typeCol, tsCol, stages))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (Catalyst does not dedupe common subtrees).
+    val reached = funnelReached(events, userCol, typeCol, tsCol, stages).localCheckpoint()
     val durs = (1 until stages.length)
       .map { i =>
         reached
@@ -257,15 +249,12 @@ object Analytics {
             expr(s"(t$i - t${i - 1}) DIV 1000000L").as("dur_s"))
       }
       .reduce(_ unionByName _)
-    // persistBase: the durs upstream is one groupBy+join per stage over
-    // the events fact table — without it the rank selection's multi-pass
-    // (stats, histogram, in-bin) would re-execute that chain ~3x.
+      .localCheckpoint() // the rank selection reads it three times
     groupedExactRanks(
       durs, "step", col("dur_s"),
       Seq(
         "p50" -> (n => floor((n + lit(1)) / lit(2.0))),
-        "p90" -> (n => ceil(n * lit(9) / lit(10.0)))),
-      persistBase = true)
+        "p90" -> (n => ceil(n * lit(9) / lit(10.0)))))
       .select(col("step"), col("rank_name"), col("value").as("dur_s"), col("n").as("n_users"))
       .orderBy(col("step"), col("rank_name"))
   }
@@ -826,25 +815,22 @@ object Analytics {
     *
     * `ranks` maps a label to the 1-based target rank as a function of
     * the group size n, e.g. lower median = floor((n+1)/2).
+    *
+    * The selection reads `df` three times (stats, histogram, in-bin
+    * rank): a caller whose input is an expensive subplan (a join or an
+    * aggregate) checkpoints it first; a bare columnar scan is cheaper
+    * to re-read (measured both ways at sf10).
     */
   def groupedExactRanks(
       df: DataFrame,
       groupCol: String,
       valueCol: Column,
       ranks: Seq[(String, Column => Column)],
-      bins: Int = 4096,
-      persistBase: Boolean = false
+      bins: Int = 4096
   ): DataFrame = {
     require(ranks.nonEmpty, "at least one rank spec required")
     require(bins >= 2, s"bins must be >= 2, got $bins")
-    // selection is multi-pass (stats, histogram, in-bin rank). When the
-    // upstream is an expensive subplan (join+agg), pass persistBase so
-    // it executes once; when it is a bare columnar scan, re-scanning is
-    // cheaper than materializing the cache (measured both ways at sf10)
-    val base0 = df.select(col(groupCol).as("g"), valueCol.cast("long").as("v"))
-    val base =
-      if (persistBase) base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
+    val base = df.select(col(groupCol).as("g"), valueCol.cast("long").as("v"))
     val stats = base.groupBy(col("g")).agg(
       min(col("v")).as("vmin"), max(col("v")).as("vmax"), count(lit(1)).as("n"))
     // ceil'd width so (vmax-vmin) div w < bins always holds; width >= 1.
@@ -902,27 +888,20 @@ object Analytics {
     *
     * Output: input columns + `rn` (1-based global rank by
     * (value asc|desc, tieCols)) + `n_total`.
+    *
+    * Like [[groupedExactRanks]] the rank reads `df` three times
+    * (stats, histogram, rank): a caller whose input is a join or an
+    * aggregate checkpoints it first.
     */
   def globalRowNumber(
       df: DataFrame,
       valueCol: Column,
       descending: Boolean,
       tieCols: Seq[Column],
-      bins: Int = 4096,
-      persistBase: Boolean = true
+      bins: Int = 4096
   ): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
-    // selection is multi-pass by construction (stats, histogram, rank):
-    // persist the narrow ranked frame or the upstream plan (often a
-    // join+agg, as in decile_spend) re-executes once per pass — the
-    // same defect class as the LSH self-join's bucketed frame. Default
-    // on: global-rank inputs are usually already-aggregated frames;
-    // disable for bare scans where re-reading beats materializing
-    // (measured both ways at sf10).
-    val base0 = df.withColumn("__v", valueCol.cast("long"))
-    val base =
-      if (persistBase) base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
+    val base = df.withColumn("__v", valueCol.cast("long"))
     val stats = base.agg(
       min(col("__v")).as("vmin"), max(col("__v")).as("vmax"), count(lit(1)).as("n_total"))
     val statsW = stats.withColumn(
@@ -1044,8 +1023,7 @@ object Analytics {
     * B33/B63 discipline — a million customers never serialize into
     * one window task). The customer-level aggregate is
     * localCheckpointed once: three rank passes read materialized
-    * blocks with nothing entering CacheManager (the GraphOps.hits
-    * lesson), and the fact table is scanned exactly once.
+    * blocks, and the fact table is scanned exactly once.
     */
   def rfmSegments(customer: DataFrame, orders: DataFrame): DataFrame = {
     val base = customer.select(col("c_custkey"))
@@ -1057,15 +1035,13 @@ object Analytics {
       .agg(max(col("day")).as("last_day"), count(lit(1)).as("n_orders"), sum(col("p_c")).as("spend_c"))
       .localCheckpoint()
     def coded(df: DataFrame, valueCol: String, out: String): DataFrame =
-      globalRowNumber(df, col(valueCol), descending = false, Seq(col("c_custkey")), persistBase = false)
+      globalRowNumber(df, col(valueCol), descending = false, Seq(col("c_custkey")))
         .withColumn(out, ntileFromRank(col("rn"), col("n_total"), 5))
         .drop("rn", "n_total")
     // Each rank pass reads its input THREE times (stats, bin counts,
     // in-bin rank), so the nested codes must materialize between
     // levels: unchecked, level 1's whole plan re-executed ~9× inside
-    // level 3 (persistBase=false is right only for the checkpointed
-    // base). localCheckpoint per level = the hits() discipline
-    // (materialized blocks, nothing enters CacheManager).
+    // level 3.
     val c1 = coded(base, "last_day", "r_code").localCheckpoint()
     val c2 = coded(c1, "n_orders", "f_code").localCheckpoint()
     coded(c2, "spend_c", "m_code")
@@ -1095,12 +1071,10 @@ object Analytics {
     * TakeOrderedAndProject.
     */
   def basketLift(lineitem: DataFrame, minCount: Long = 5, topK: Int = 20): DataFrame = {
-    val baskets = lineitem
+    val (baskets, nOrders) = Materialize.counted(lineitem
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("parts"))
-      .select(col("parts"))
-      .localCheckpoint()
-    val nOrders = baskets.count()
+      .select(col("parts")))
     val itemCounts = baskets
       .select(explode(col("parts")).as("pk"))
       .groupBy(col("pk")).agg(count(lit(1)).as("c"))

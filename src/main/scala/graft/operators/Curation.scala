@@ -629,10 +629,12 @@ object Curation {
       .agg(count(lit(1)).as("docs"))
       .withColumn("wgt", floor(sqrt(col("docs").cast("double"))).cast("long"))
     val tot = counts.agg(sum(col("wgt")).as("tw"))
+    // checkpointed: the remainder sum and the rank's three passes read it
     val based = counts
       .crossJoin(broadcast(tot))
       .withColumn("base", expr(s"(${budget}L * wgt) DIV tw"))
       .withColumn("rem", expr(s"(${budget}L * wgt) % tw"))
+      .localCheckpoint()
     val left = based.agg((lit(budget) - sum(col("base"))).as("r"))
     Analytics
       .globalRowNumber(based, col("rem"), descending = true, Seq(col("stratum")))

@@ -283,12 +283,11 @@ object Dedup {
       forceSketch: Option[Boolean],
       screen: Boolean = true
   ): DataFrame = {
-    val sh = df
+    // both join sides and the verify read the shingle sets
+    val (sh, nDocs) = Materialize.counted(df
       .select(col(idCol).as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
       .withColumn("nsh", size(col("hs")).cast("long"))
-      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK))
-      .persist()
-    val nDocs = sh.count() // fill the cache once; both join sides and the verify read it
+      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK)))
     val cands = containmentCandidates(sh, nDocs, tauPct, forceSketch)
     val screened = if (screen) {
       val sks = sh.select(col("id"), col("sk"), col("nsh"))
@@ -359,12 +358,10 @@ object Dedup {
     */
   private[graft] def containmentScreenStats(
       df: DataFrame, idCol: String, textCol: String, n: Int, tauPct: Int): (Long, Long) = {
-    val sh = df
+    val (sh, nDocs) = Materialize.counted(df
       .select(col(idCol).as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
       .withColumn("nsh", size(col("hs")).cast("long"))
-      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK))
-      .persist()
-    val nDocs = sh.count()
+      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK)))
     val cands = containmentCandidates(sh, nDocs, tauPct, forceSketch = None)
     val sks = sh.select(col("id"), col("sk"), col("nsh"))
     val row = cands
@@ -374,16 +371,14 @@ object Dedup {
         col("sk_a"), col("na0"), col("sk_b"), col("nb0"), tauPct), 1L).otherwise(0L).as("keep"))
       .agg(count(lit(1)).as("total"), sum(col("keep")).as("kept"))
       .collect()(0)
-    sh.unpersist()
     (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
   }
 
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int = 3, tauPct: Int = 80): DataFrame = {
-    val sh = df
+    // every later stage reads the shingle sets
+    val (sh, nDocs) = Materialize.counted(df
       .select(col(idCol).as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
-      .withColumn("nsh", size(col("hs")).cast("long"))
-      .persist()
-    val nDocs = sh.count() // fills the persisted cache every later stage reads
+      .withColumn("nsh", size(col("hs")).cast("long")))
     // Prefix ordering needs each doc's shingles ranked by a
     // CONSISTENT global (df, h) order — the theorem holds under any
     // consistent order, df-ascending is what makes prefixes
@@ -489,7 +484,7 @@ object Dedup {
   ): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    val sigs = withSignature(df, idCol, textCol, k, shingleN).persist()
+    val sigs = withSignature(df, idCol, textCol, k, shingleN).localCheckpoint()
     val banded = bandedSignatures(sigs, bands, r)
     val cands = banded
       .alias("a")
@@ -654,10 +649,8 @@ object Dedup {
     // sketch prefilter would only add a second pass over it. The
     // prefilterMargin parameter is retained for API stability.
     val _ = prefilterMargin
-    val base = df
-      .select(col(idCol).as("id"), col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm"))
-      .persist()
-    val n = base.count() // reuses the persisted cache the joins read
+    val (base, n) = Materialize.counted(df
+      .select(col(idCol).as("id"), col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm")))
     val (planesEff, tablesEff) = lshSizing(n, tau, planes, tables)
     val bucketed = base.select(
       col("id"),
@@ -708,11 +701,9 @@ object Dedup {
       slackBits: Int = 6
   ): DataFrame = {
     val hmax = math.ceil(56.0 * math.acos(tau) / math.Pi).toLong + slackBits
-    val base = df
+    val (base, n) = Materialize.counted(df
       .select(col(idCol).as("id"), col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm"),
-        element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk"))
-      .persist()
-    val n = base.count()
+        element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk")))
     val (planesEff, tablesEff) = lshSizing(n, tau, planes, tables)
     val bucketed = base.select(
       col("id"),
@@ -755,11 +746,9 @@ object Dedup {
       slackBits: Int = 6
   ): (Long, Long) = {
     val hmax = math.ceil(56.0 * math.acos(tau) / math.Pi).toLong + slackBits
-    val base = df
+    val (base, n) = Materialize.counted(df
       .select(col(idCol).as("id"), col(vecCol).as("v"),
-        element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk"))
-      .persist()
-    val n = base.count()
+        element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk")))
     val (planesEff, tablesEff) = lshSizing(n, tau, planes, tables)
     val bucketed = base.select(
       col("id"), explode(Similarity.tableBuckets(col("v"), dim, planesEff, tablesEff)).as("tb"))
@@ -774,7 +763,6 @@ object Dedup {
       .select(when(expr("bit_count(sk_a ^ sk_b)") <= lit(hmax), 1L).otherwise(0L).as("keep"))
       .agg(count(lit(1)).as("total"), sum(col("keep")).as("kept"))
       .collect()(0)
-    base.unpersist()
     (withSk.getLong(0), withSk.getLong(1))
   }
 
@@ -822,7 +810,7 @@ object Dedup {
         s => s.getField("cx")).as("centroid"))
     // min_by over (d2, clab) makes ties deterministic; first(v) is safe
     // because v is constant per id across the broadcast fan-out
-    val assigned = base
+    val (assigned, nAssigned) = Materialize.counted(base
       .crossJoin(broadcast(cent))
       .select(col("id"), col("v"), col("nrm"), col("clab"),
         // native sqdist kernel — see Similarity.nearestCentroid
@@ -830,15 +818,14 @@ object Dedup {
       .groupBy(col("id"))
       .agg(
         min_by(col("clab"), struct(col("d2"), col("clab"))).cast("long").as("cluster"),
-        first(col("v")).as("v"), first(col("nrm")).as("nrm"))
-      .persist()
+        first(col("v")).as("v"), first(col("nrm")).as("nrm")))
     // planes/tables are floors here exactly as in embeddingPairsLsh:
     // fixed-length codes make within-(cluster, bucket) candidate
     // volume quadratic in corpus size (measured: a 76 GB spill at 400k
     // vectors with planes=8). Sizing by TOTAL n overshoots per-cluster
     // occupancy, which only prunes harder; the tables formula keeps
     // the tau-pair miss bound regardless.
-    val (planesEff, tablesEff) = lshSizing(assigned.count(), tau, planes, tables)
+    val (planesEff, tablesEff) = lshSizing(nAssigned, tau, planes, tables)
     // slim candidate self-join, exactly as in embeddingPairsLsh: the
     // bucketed frame carries only (id, cluster, code) so the
     // collision-enumerating shuffle moves keys, never vectors; codes
@@ -913,12 +900,9 @@ object Dedup {
     // an expensive candidate pipeline upstream (ngram/minhash joins)
     // the whole pipeline executed twice per cluster query. Pair lists
     // are near-dup-sized (tiny relative to the corpus at any scale),
-    // so the checkpoint is cheap; count() then reads materialized
-    // blocks.
-    val und = pairs
-      .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
-      .localCheckpoint()
-    val nPairs = und.count()
+    // so the checkpoint is cheap, and it counts them in the same job.
+    val (und, nPairs) = Materialize.counted(pairs
+      .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst")))
     // size-adaptive strategy (same spirit as AQE's join re-planning):
     // the near-dup graph holds ONLY docs that have a near-dup — tiny
     // relative to the corpus even at 100 TB — so below the threshold a
@@ -928,15 +912,9 @@ object Dedup {
     // direction/duplicate-insensitive, so it reads the raw pair list;
     // only the distributed loop needs the symmetrized distinct edges.
     if (2L * nPairs <= driverMaxEdges) driverUnionFind(pairs.sparkSession, und)
-    else {
-      val edges = und
-        .union(und.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist()
-      val result = distributedComponents(edges, maxIters)
-      edges.unpersist()
-      result
-    }
+    else distributedComponents(
+      und.union(und.select(col("dst").as("src"), col("src").as("dst"))).distinct().localCheckpoint(),
+      maxIters)
   }
 
   private def driverUnionFind(spark: org.apache.spark.sql.SparkSession, edges: DataFrame): DataFrame = {
@@ -1166,12 +1144,10 @@ object Dedup {
   ): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    // NOT persisted: this is the per-arriving-batch API of a
-    // continuous loop — a persist per call would pin one cached copy
-    // per batch for the session lifetime. Recomputing the (small)
-    // batch signatures for the verify join is the cheaper side of
-    // that trade; callers probing one batch many times can persist
-    // the batch themselves.
+    // NOT checkpointed: recomputing the (small) batch signatures for
+    // the verify join is cheaper than an eager materialization per
+    // arriving batch; callers probing one batch many times can
+    // checkpoint the batch themselves.
     val bSigs = withSignature(batch, idCol, textCol, k, shingleN)
     val cands = bandedSignatures(bSigs, bands, r).alias("a")
       .join(bandedSignatures(index, bands, r).alias("b"),
@@ -1235,8 +1211,8 @@ object Dedup {
       n: Int = 3,
       tauPct: Int = 80
   ): DataFrame = {
-    val bsh = buildContainmentIndex(batch, idCol, textCol, n).persist()
-    bsh.count() // fill once: both candidate arms + screen + verify read it
+    // both candidate arms, the screen and the verify read it
+    val bsh = buildContainmentIndex(batch, idCol, textCol, n).localCheckpoint()
     def prefix(f: DataFrame): DataFrame = f.select(col("id"), col("nsh"),
       posexplode(expr(s"slice(hs, 1, cast(nsh - ((nsh * $tauPct) + 99) div 100 + 1 as int))"))
         .as(Seq("p", "h")))
@@ -1331,7 +1307,7 @@ object Dedup {
       planes: Int = 8,
       tables: Int = 8
   ): DataFrame = {
-    // not persisted — per-batch API, see nearDupsAgainstIndex
+    // not checkpointed — per-batch API, see nearDupsAgainstIndex
     val b = buildEmbeddingIndex(batch, idCol, vecCol, dim, planes, tables)
     val cands = b.select(col("id"), explode(col("tbs")).as("tb")).alias("a")
       .join(index.select(col("id"), explode(col("tbs")).as("tb")).alias("b"),

@@ -21,7 +21,7 @@ import graft.functions.VecOps
   */
 object EmbedOps {
 
-  /** Scale-adaptive partition width for the cached iteration frames:
+  /** Scale-adaptive partition width for the checkpointed iteration frames:
     * ~2 MB of input per partition, clamped to [1, defaultParallelism].
     * The old rule was the constant `defaultParallelism` — right for a
     * compactly-written big corpus (one 49 MB file = one input split
@@ -124,7 +124,7 @@ object EmbedOps {
     *   v'  = wr * 1e6 DIV max(1, max|wr|)       (L-inf renormalize)
     *
     * Plan shape per iteration: ONE whole-stage-codegen scan of the
-    * cached quantized frame into `dims` map-side partial sums — no
+    * checkpointed quantized frame into `dims` map-side partial sums — no
     * join, no shuffle wider than the d-column partial merge. The
     * driver holds only mu and v (2×d Longs — metadata-scale, like the
     * k-means centroid loads). Output is each vector's centered
@@ -143,7 +143,7 @@ object EmbedOps {
       dims: Int,
       iters: Int = 8
   ): DataFrame = {
-    // spread the cached frame across the cluster BEFORE iterating: a
+    // spread the checkpointed frame across the cluster BEFORE iterating: a
     // compactly-written corpus can arrive as one input split (one
     // 49 MB parquet file = one partition), which would serialize
     // every iteration's scan onto a single core — measured 3x the
@@ -163,7 +163,7 @@ object EmbedOps {
         col(idCol),
         transform(col(vecCol), x => floor(x.cast("double") * lit(1000d)).cast("long")).as("xq")
       )
-      .cache()
+      .localCheckpoint()
     val muRow = xq
       .agg(array((0 until dims).map(d => expr(s"sum(xq[$d]) DIV count(*)")): _*).as("mu"))
       .head().getSeq[Long](0).toArray
@@ -201,7 +201,7 @@ object EmbedOps {
     * tiebreak) and recomputes integer means, empty clusters keeping
     * their previous centroid.
     *
-    * Plan shape per round: ONE codegen scan of the cached quantized
+    * Plan shape per round: ONE codegen scan of the checkpointed quantized
     * frame through the [[graft.functions.VecOps.nearestCentroidLL]]
     * kernel (k·d multiply-adds per row, no join, no k-way expand) +
     * one k-group agg whose map-side combine reduces every partition
@@ -235,7 +235,7 @@ object EmbedOps {
         col(idCol).as("id"),
         transform(col(vecCol), x => floor(x.cast("double") * lit(1000d)).cast("long")).as("xq")
       )
-      .cache()
+      .localCheckpoint()
     val meanCols = array((0 until dims).map(d => expr(s"sum(xq[$d]) DIV count(*)")): _*).as("c")
     def toCents(rows: Array[org.apache.spark.sql.Row]): Map[Int, Array[Long]] =
       rows.map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap

@@ -29,21 +29,13 @@ object GraphOps {
     *
     * Plan shape per round — the distributed-PageRank shape, nothing
     * driver-side: the (src, dst, deg) frame is built ONCE (one deg
-    * agg + one keyed join, cached); each round is one keyed join of
+    * agg + one keyed join, checkpointed); each round is one keyed join of
     * ranks into that frame on src and one map-side-combined agg on
     * dst, then a LEFT join back to the node set. Ranks never visit
     * the driver; n (one Long) is the only collected value. At
     * cluster scale the edge frame partitions by src once and every
     * round's join reuses that partitioning; the dst agg is the one
     * unavoidable shuffle per round.
-    *
-    * Cache lifetime: the returned frame is LAZY and every round of
-    * its plan references the cached edge/node frames — they must stay
-    * cached until the caller's action, so release is caller-owned
-    * (`spark.catalog.clearCache()` between queries, as Bench/Verify
-    * do). Unpersisting them here would make CacheManager
-    * re-compile-and-EMPTY each dependent cached entry (see [[hits]],
-    * which restructures onto localCheckpoint to avoid exactly that).
     */
   def pageRank(
       edges: DataFrame,
@@ -53,21 +45,12 @@ object GraphOps {
     require(dampPct >= 0 && dampPct <= 100, s"dampPct must be 0..100, got $dampPct")
     val SCALE = 1000000000000L
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    // Cached frames compile without AQE, so without explicit sizing
-    // both loop inputs materialize at the full shuffle width and all
-    // 2×iters downstream passes schedule that many tasks over
-    // node-cardinality rows — byte-derived shrink (no-op at scale,
-    // see Sizing) measured −50% on the whole query at sf0.1.
-    val nodes = Sizing.coalesceForCache(
-      e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id")))
-        .distinct())
-      .cache()
-    val n = nodes.count()
+    val (nodes, n) = Materialize.counted(
+      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     val r0 = SCALE / n // exact: both engines compute SCALE DIV n
     val base = ((100L - dampPct) * r0) / 100L
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ecd = Sizing.coalesceForCache(e.join(deg, "src")).cache()
+    val ecd = e.join(deg, "src").localCheckpoint()
     var ranks = nodes.select(col("id"), lit(r0).as("r"))
     for (_ <- 0 until iters) {
       val sums = ecd
@@ -100,13 +83,10 @@ object GraphOps {
     * never visit the driver.
     */
   def hits(edges: DataFrame, iters: Int = 4): DataFrame = {
-    // Byte-derived cache width (no-op at scale; the pageRank
-    // rationale): per probe run the full-width caches put 178 tasks
-    // on the wire vs ~50 sized — every half-step's join re-reads e.
-    val e = Sizing.coalesceForCache(
-      edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))).cache()
-    val nodes = Sizing.coalesceForCache(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()).cache()
+    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .localCheckpoint()
+    val nodes = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
+      .localCheckpoint()
     var hubs = nodes.select(col("id"), lit(1000000L).as("h"))
     // zero-initialized so iters = 0 degrades to all-zero authorities
     // instead of an NPE at the final join
@@ -117,14 +97,8 @@ object GraphOps {
     // the (non-negative) max, so the per-round LEFT join back onto
     // the full node set is dropped entirely; zeros materialize once
     // in the final projection. Each half-step localCheckpoints: the
-    // max collection reads materialized blocks, every round's plan
-    // stays constant-size (no lineage growth), and NOTHING enters
-    // CacheManager — unpersisting a cached subtree would re-compile
-    // (and empty) every dependent cached entry, which recomputed the
-    // whole loop inside the caller's first action in the cache()-based
-    // form (measured +2-4s at sf0.1). Checkpoint blocks are owned by
-    // their RDDs and GC-reclaimed; not fault-tolerant, which a
-    // recomputable derived score table tolerates.
+    // max collection reads materialized blocks and every round's plan
+    // stays constant-size (no lineage growth).
     for (_ <- 0 until iters) {
       val asum = e.join(hubs, e("src") === hubs("id"))
         .groupBy(col("dst")).agg(sum(col("h")).as("ar"))
@@ -139,17 +113,13 @@ object GraphOps {
       val hm = if (hmRow.isNullAt(0)) 1L else math.max(hmRow.getLong(0), 1L)
       hubs = hsum.select(col("src").as("id"), expr(s"(hr * 1000000L) DIV ${hm}L").as("h"))
     }
-    val out = nodes
+    nodes
       .join(auths, Seq("id"), "left")
       .join(hubs, Seq("id"), "left")
       .select(col("id").as("node_id"),
         coalesce(col("a"), lit(0L)).as("auth_fp"),
         coalesce(col("h"), lit(0L)).as("hub_fp"))
       .orderBy("node_id")
-      .localCheckpoint()
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
   }
 
   /** C59: per-node triangle participation — the clustering-structure
@@ -200,7 +170,7 @@ object GraphOps {
       .select(
         when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")), col("u")).otherwise(col("v")).as("a"),
         when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")), col("v")).otherwise(col("u")).as("b"))
-      .cache()
+      .localCheckpoint()
     // rank of b vs c inside a wedge: compare (deg, id) again — join
     // degrees once onto the directed frame so the wedge filter is local
     val fwd = ranked
@@ -214,17 +184,10 @@ object GraphOps {
       .join(ranked.select(col("a").as("b"), col("b").as("c")), Seq("b", "c"))
     val credit = tris.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
-    // node-scale result localCheckpointed (lineage cut) so the
-    // edge-scale `ranked` cache can drop out of executor storage —
-    // unpersisting it under a cache()d result would re-compile and
-    // EMPTY that cache entry instead (the hits() lesson)
-    val out = nodes
+    nodes
       .join(credit, Seq("id"), "left")
       .select(col("id").as("node_id"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
       .orderBy("node_id")
-      .localCheckpoint()
-    ranked.unpersist(blocking = false)
-    out
   }
 
   /** C73 (graph_kcore): k-core decomposition by BOUNDED-ROUND peeling —
@@ -246,9 +209,8 @@ object GraphOps {
     * Plan shape per round: one degree aggregation (explode both
     * endpoints + keyed count) and two LEFT SEMI joins back onto the
     * edge set — all keyed, never node×node. Each round
-    * localCheckpoints: constant-size plans, materialized blocks, no
-    * CacheManager entries (the hits() lesson). Returns the surviving
-    * nodes with their in-core degree.
+    * localCheckpoints (constant-size plans, see [[Materialize]]).
+    * Returns the surviving nodes with their in-core degree.
     */
   def kcoreRounds(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -324,12 +286,11 @@ object GraphOps {
   /** [[labelPropRounds]] with an explicit gate: 0 forces the distributed chain. */
   private[graft] def labelPropRounds(edges: DataFrame, rounds: Int, driverMaxEdges: Long): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val sym = edges
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .unionAll(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
-      .filter(col("u") =!= col("v"))
-      .localCheckpoint()
-    if (sym.count() <= driverMaxEdges) driverLabelProp(sym, rounds)
+    val (sym, n) = Materialize.counted(
+      edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
+        .unionAll(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
+        .filter(col("u") =!= col("v")))
+    if (n <= driverMaxEdges) driverLabelProp(sym, rounds)
     else {
       val nbhd = sym.unionAll(sym.select(col("u"), col("u").as("v"))).distinct()
       var labels = nbhd.groupBy(col("u").as("node_id")).agg(min(col("v")).as("label"))

@@ -138,11 +138,6 @@ object Similarity {
     // this (doc, term, tf) aggregate — without it the corpus term
     // explode + keyed agg executed twice (Catalyst does not dedupe
     // common subtrees; the winsorize_stats r12 lesson).
-    // localCheckpoint, not persist: the operator never unpersisted,
-    // so in library (non-harness) use the persist pinned a
-    // corpus-scale cache block for the whole session — checkpoint
-    // blocks are RDD-owned and ContextCleaner-released (the
-    // bigramLmScore discipline).
     val cTf = corpusText
       .select(col(textId).as("cid"), explode(terms(col(textCol))).as("term"))
       .groupBy(col("cid"), col("term"))
@@ -1136,13 +1131,11 @@ object Similarity {
         unit.select(col(idCol).as("cid"), col("__unit"), cellOf(centers, col("__unit")).as("cell"))
     // residual under the vector's own centroid — keyed broadcast join,
     // never an nClusters-branch literal expression
-    val withRes = assigned
+    val (withRes, total) = Materialize.counted(assigned
       .join(centersDf(spark, centers).select(col("__cell").as("cell"), col("__center")), "cell")
       .select(col("cid"), col("cell"),
-        zip_with(col("__unit"), col("__center"), (a, b) => (a - b).cast("float")).as("__res"))
-      .cache()
+        zip_with(col("__unit"), col("__center"), (a, b) => (a - b).cast("float")).as("__res")))
     val trainTarget = kCodes.toLong * 256L
-    val total = withRes.count()
     val trainBase =
       if (total <= trainTarget) withRes
       else withRes.filter(pmod(xxhash64(col("cid")), lit(10000L)) <
@@ -1163,7 +1156,6 @@ object Similarity {
       .select(col("cid"), col("cell"),
         graft.functions.VecOps.pq_encode(col("__res"), flat, m, kCodes, subDim).as("code"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
-    withRes.unpersist(blocking = false)
   }
 
   /** [[buildIvfPqIndex]] guarded by the same persisted data
@@ -1420,8 +1412,7 @@ object Similarity {
       if (nClusters > 0) nClusters
       else math.max(16, (vecs.count() / 256L).toInt)
     val centers = fitCentroids(candidates, vecCol, c)
-    val assigned = assignTopCells(vecs, centers, nAssign = 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = assignTopCells(vecs, centers, nAssign = 2).localCheckpoint()
     // entry points: the vector nearest its PRIMARY cell's centroid
     val we = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cell")).orderBy(col("cdist"), col("cid"))
@@ -1451,7 +1442,6 @@ object Similarity {
       .filter(col("__rn") <= m)
       .select(col("src"), col("dst"))
       .write.mode("overwrite").parquet(s"$indexDir/edges")
-    assigned.unpersist(blocking = false)
   }
 
   /** [[buildGraphIndex]] behind the build-once gate
@@ -1549,19 +1539,16 @@ object Similarity {
     var converged = false
     while (round < autoRounds && !converged) {
       round += 1
-      val fresh = best.select(col("qid"), col("cid").as("src"))
+      val (fresh, nFresh) = Materialize.counted(best.select(col("qid"), col("cid").as("src"))
         .join(edges, Seq("src"))
         .select(col("qid"), col("dst").as("cid"))
         .distinct()
-        .join(visited, Seq("qid", "cid"), "left_anti")
-        .localCheckpoint()
+        .join(visited, Seq("qid", "cid"), "left_anti"))
       // early exit: every beam's full neighborhood is already visited
-      // — remaining rounds would re-schedule empty joins (the frame is
-      // checkpointed, so this emptiness probe is a metadata-cheap job).
-      // Skipped on the LAST round: there is no remaining round to
-      // save, and prune(best ∪ score(∅)) ≡ best, so the final beam is
-      // identical either way.
-      if (round < autoRounds && fresh.take(1).isEmpty) converged = true
+      // — remaining rounds would re-schedule empty joins. The count
+      // rides the checkpoint's own job; prune(best ∪ score(∅)) ≡ best,
+      // so exiting on the last round leaves the final beam unchanged.
+      if (nFresh == 0L) converged = true
       else {
         best = prune(best.unionByName(score(fresh))).localCheckpoint()
         // NOT checkpointed: both inputs are already materialized

@@ -500,9 +500,9 @@ object TextAnalysis {
     * discipline), so the ppm frame carries the same decisions.
     *
     * Plan: ONE explode feeds everything — per-doc bigram tf is the
-    * base aggregate, PERSISTED because three consumers read it (the
+    * base aggregate, CHECKPOINTED because three consumers read it (the
     * final join, corpus bigram counts, and head counts via those):
-    * without the persist Catalyst re-executes the corpus explode once
+    * without it Catalyst re-executes the corpus explode once
     * per branch (11.3s pre-fix at sf1; the committed BENCH_sf1
     * measures 9.3s post-fix — the explode+two-agg chain itself is the
     * remaining floor; hashing the join keys below cut it further —
@@ -527,12 +527,8 @@ object TextAnalysis {
     * sf1, 50k docs).
     */
   def bigramLmScore(df: DataFrame, idCol: String, textCol: String, rareMaxC: Long = 2L): DataFrame = {
-    // localCheckpoint rather than persist: the tf frame feeds three
-    // consumers (cb, ch, the final join) so it must materialize once,
-    // but a bare persist would pin a corpus-bigram-cardinality cache
-    // block for the life of the session (no hook to unpersist after a
-    // lazily-returned result). Checkpointed blocks are released by the
-    // ContextCleaner once the frame is unreferenced.
+    // checkpointed: the tf frame feeds three consumers (cb, ch, the
+    // final join), so it materializes once.
     // The (hh, bh) pairs come from the zero-copy kernel
     // ([[graft.functions.VecOps.bigramHashPairs]]): both hashes are
     // XXH64 over contiguous byte ranges of the normalized text — no
@@ -601,8 +597,7 @@ object TextAnalysis {
       .groupBy(col(idCol), col("p.hh").as("hh"), col("p.th").as("th"))
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint()
-    val cb = tf.groupBy(col("hh"), col("th")).agg(sum(col("tf")).as("cb")).localCheckpoint()
-    val nBigrams = cb.count()
+    val (cb, nBigrams) = Materialize.counted(tf.groupBy(col("hh"), col("th")).agg(sum(col("tf")).as("cb")))
     // degenerate corpus (no doc has two words): nothing to score.
     // Short-circuit rather than embed `DIV 0` into the P_cont
     // expression — the joins below would produce zero rows anyway,

@@ -158,46 +158,53 @@ object JsonIngest {
     // real depth still paid a full re-walk to find nothing (r12;
     // plans/r12/json_path_census_{before,after}.txt). The standard
     // BFS-materialization trade: each level is node-cardinality and
-    // the final union reads ALL levels, so the worst-case CACHED
-    // footprint is maxDepth × level size — the levels stay pinned in
-    // CacheManager until the caller's clearCache (the GraphOps cache-
-    // lifetime convention; library callers must release the session
-    // cache themselves). persist, NOT localCheckpoint, deliberately:
-    // the levels carry VARIANT payloads, and the columnar
-    // InMemoryRelation both compresses them and feeds the union arms
-    // through vectorized in-memory scans — the checkpoint's row-block
-    // form measured 1.6× slower on the whole query at sf1
-    // (2.5 → 4.0 s, controls flat). One count per level is the
-    // emptiness probe and doubles as the cache fill.
-    var frontier = typed(
-      df.select(col(idCol).as("id"), lit("$").as("path"), parse_json(col(jsonCol)).as("v"))
-        .filter(col(jsonCol).isNotNull))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var out = frontier.select(col("id"), col("path"), col("jtype"))
-    var depth = 1
-    var drained = frontier.count() == 0L
-    while (depth < maxDepth && !drained) {
-      val kids = frontier
-        .filter(col("jtype").isin("object", "array"))
-        .select(col("id"), col("path"), col("jtype").as("ptype"), col("v"))
-        // variant_explode is a table-valued generator: lateral-join it
-        // against each container node (Spark 4's tvf + outer-reference
-        // API), yielding (pos, key, value) per child
-        .lateralJoin(spark.tvf.variant_explode(col("v").outer()))
-        .select(
-          col("id"),
-          when(col("ptype") === "object", concat(col("path"), lit("."), col("key")))
-            .otherwise(concat(col("path"), lit("[]"))).as("path"),
-          col("value").as("v"))
-      frontier = typed(kids).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      drained = frontier.count() == 0L
-      if (!drained) out = out.unionByName(frontier.select(col("id"), col("path"), col("jtype")))
-      depth += 1
+    // the final union reads ALL levels, so the worst-case cached
+    // footprint is maxDepth × level size. persist, NOT
+    // localCheckpoint, deliberately: the levels carry VARIANT
+    // payloads, and the columnar InMemoryRelation both compresses
+    // them and feeds the union arms through vectorized in-memory
+    // scans — the checkpoint's row-block form measured 1.6× slower on
+    // the whole query at sf1 (2.5 → 4.0 s, controls flat). One count
+    // per level is the emptiness probe and doubles as the cache fill.
+    // The small (path, type) result is collected (a checkpoint of it
+    // measured slower at sf0.1), and the levels are released before
+    // returning (see [[graft.operators.Materialize]]).
+    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def level(frame: DataFrame): DataFrame = {
+      val l = typed(frame).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      levels += l
+      l
     }
-    out
-      .groupBy(col("path"), col("jtype"))
-      .agg(count(lit(1)).as("n_values"), countDistinct(col("id")).as("n_docs"))
-      .orderBy(col("path"), col("jtype"))
+    try {
+      var frontier = level(
+        df.select(col(idCol).as("id"), lit("$").as("path"), parse_json(col(jsonCol)).as("v"))
+          .filter(col(jsonCol).isNotNull))
+      var out = frontier.select(col("id"), col("path"), col("jtype"))
+      var depth = 1
+      var drained = frontier.count() == 0L
+      while (depth < maxDepth && !drained) {
+        frontier = level(frontier
+          .filter(col("jtype").isin("object", "array"))
+          .select(col("id"), col("path"), col("jtype").as("ptype"), col("v"))
+          // variant_explode is a table-valued generator: lateral-join it
+          // against each container node (Spark 4's tvf + outer-reference
+          // API), yielding (pos, key, value) per child
+          .lateralJoin(spark.tvf.variant_explode(col("v").outer()))
+          .select(
+            col("id"),
+            when(col("ptype") === "object", concat(col("path"), lit("."), col("key")))
+              .otherwise(concat(col("path"), lit("[]"))).as("path"),
+            col("value").as("v")))
+        drained = frontier.count() == 0L
+        if (!drained) out = out.unionByName(frontier.select(col("id"), col("path"), col("jtype")))
+        depth += 1
+      }
+      val census = out
+        .groupBy(col("path"), col("jtype"))
+        .agg(count(lit(1)).as("n_values"), countDistinct(col("id")).as("n_docs"))
+        .orderBy(col("path"), col("jtype"))
+      spark.createDataFrame(java.util.Arrays.asList(census.collect(): _*), census.schema)
+    } finally levels.reverseIterator.foreach(_.unpersist()) // deepest first: each level reads its parent
   }
 
   /** Corrupt-row quarantine — the parse-side pendant of the sink's

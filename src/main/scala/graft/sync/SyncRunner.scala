@@ -181,6 +181,12 @@ object SyncRunner {
     // (mongodb_to_bytehouse.py:133; `_timestamp` in the reference DDL)
     val src = if (addTimestamp) Incremental.addSyncTimestamp(source, nowUs) else source
     def usCol(c: String): Column = unix_micros(col(c).cast("timestamp"))
+    // `c` strictly after watermark `w`, in the form parquet can push
+    // down; at the floor that form overflows inside Spark's parquet
+    // filter conversion, so the floor compares in micros (nothing to prune)
+    def after(c: String, w: Long): Column =
+      if (w == Long.MinValue) usCol(c) > w
+      else col(c).cast("timestamp") > timestamp_micros(lit(w))
     // forceFull is the reference's explicit `--mode full` (run_full_sync
     // re-migrates regardless of state); the rewritten target and fresh
     // watermark row keep later incremental passes consistent
@@ -192,7 +198,7 @@ object SyncRunner {
       // OR-watermark delta: created after the create watermark OR
       // updated after the update watermark (the reference's
       // insert-or-update incremental, es_to_bytehouse.py:843-853)
-      old => src.filter(updateCol.foldLeft(usCol(timeCol) > old(0))((p, u) => p || usCol(u) > old(1))),
+      old => src.filter(updateCol.foldLeft(after(timeCol, old(0)))((p, u) => p || after(u, old(1)))),
       // without an update field the second maximum is null, which
       // keeps last_update_us where it was
       Seq(usCol(timeCol), updateCol.fold(lit(null).cast("long"))(usCol)), Long.MinValue)(

@@ -7,9 +7,12 @@ import graft.sources.Catalog
 class AnalyticsSpec extends SparkSpec {
 
   test("every declared query runs at sf0.001 and returns rows") {
+    // no query may leave a cache entry behind (graft.operators.Materialize)
+    spark.catalog.clearCache()
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
       assert(n > 0, s"query $name returned no rows")
+      assert(spark.sharedState.cacheManager.isEmpty, s"query $name left the session's CacheManager non-empty")
     }
   }
 

@@ -61,8 +61,8 @@ class CodegenCacheSpec extends SparkSpec {
     assert(jobs <= 8, s"$jobs jobs")
   }
 
-  test("dedup_keep_best at sf0.01, warm: at most 23 Spark jobs to build and execute") {
+  test("dedup_keep_best at sf0.01, warm: at most 16 Spark jobs to build and execute") {
     val jobs = warmJobs("dedup_keep_best")
-    assert(jobs <= 23, s"$jobs jobs")
+    assert(jobs <= 16, s"$jobs jobs")
   }
 }

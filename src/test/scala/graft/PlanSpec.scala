@@ -9,6 +9,27 @@ class PlanSpec extends SparkSpec {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** The executed plans of the checkpoints a query's build runs, then
+    * the query's own plan: a lock whose subject sits behind a
+    * checkpoint reads it here.
+    */
+  private def plansWithBuild(name: String): String = {
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = built.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      val p = planOf(name)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (built.toArray.toSeq :+ p).mkString("\n")
+    } finally spark.listenerManager.unregister(l)
+  }
+
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
 
@@ -320,9 +341,10 @@ class PlanSpec extends SparkSpec {
     assert(pe.contains("hashpartitioning(h") || pe.contains("BroadcastHashJoin"), pe.take(2000))
     // minhash probe: candidate generation joins on (band, bh) — no
     // cartesian anywhere in the plan
-    val pm = planOf("dedup_incr_minhash")
+    val pm = plansWithBuild("dedup_incr_minhash")
     assert(!pm.contains("CartesianProduct"), pm.take(2000))
     assert(!pm.contains("BroadcastNestedLoopJoin"), pm.take(2000))
+    assert("""Join \[band#\d+, bh#""".r.findFirstIn(pm).isDefined, pm.take(3000))
   }
 
   test("skew_report: top-k is TakeOrdered (map-side), never a full key-census sort") {
@@ -359,17 +381,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dedup_semantic: centroid frame broadcasts; candidates never cartesian") {
-    val p = planOf("dedup_semantic")
+    // the centroid assignment is checkpointed in the build
+    val p = plansWithBuild("dedup_semantic")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       "centroid fan-out must be a broadcast, not a shuffle")
     assert(!p.contains("CartesianProduct"), p.take(2000))
     // the candidate self-join is keyed on (cluster, table-bucket)
-    assert(p.contains("hashpartitioning"), p.take(2000))
+    assert(p.contains("hashpartitioning(cluster"), p.take(2000))
   }
 
   test("embed_kmeans: final assignment is a joinless kernel scan") {
     // the per-round loops collect() internally; the returned frame is
-    // the final assignment — one kernel projection over the cached
+    // the final assignment — one kernel projection over the checkpointed
     // quantized frame, no join, no k-way expand
     val p = planOf("embed_kmeans")
     assert(!p.contains("Join"), p.take(2000))
@@ -381,6 +404,7 @@ class PlanSpec extends SparkSpec {
     val p = planOf("graph_pagerank")
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
+    assert(p.contains("hashpartitioning(dst"), p.take(2000))
   }
 
   test("mix_allocate: remainder rank never collapses into one global window task") {
@@ -422,15 +446,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graph_hits: every round's joins are keyed — no cartesian, no nested loop") {
-    val p = planOf("graph_hits")
+    // every half-step is checkpointed in the build
+    val p = plansWithBuild("graph_hits")
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
+    assert(p.contains("hashpartitioning(dst") && p.contains("hashpartitioning(src"), p.take(2000))
   }
 
   test("graph_triangles: wedge + closing joins are keyed — no cartesian, no nested loop") {
     val p = planOf("graph_triangles")
     assert(!p.contains("CartesianProduct"), p.take(2000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(2000))
+    // the wedge self-join keys on the source, the closing join on (b, c)
+    assert("""Join \[a#\d+L\], \[a#""".r.findFirstIn(p).isDefined, p.take(3000))
+    assert("""Join \[b#\d+L, c#""".r.findFirstIn(p).isDefined, p.take(3000))
   }
 
   test("cdc_apply: latest-change window and merge join share the key — no extra exchange between them") {
@@ -693,20 +722,9 @@ class PlanSpec extends SparkSpec {
 
   test("funnel_latency: rank windows partition by bin; stage joins keyed — no cartesian") {
     val p = planOf("funnel_latency")
-    // r13: the reached-cache is byte-width-coalesced (Sizing), and at
-    // test scale that single partition satisfies every downstream
-    // clustered distribution — the keyed exchange only materializes
-    // when the input is wide enough to need one. Lock: either the
-    // keyed bin/group exchange is present, or the sized coalesce is
-    // what feeds the reached-cache: the InMemoryRelation's child, past
-    // the AdaptiveSparkPlan wrapper lines (and, once the cache is
-    // filled, its final-plan stage). A Coalesce 1 anywhere else in the
-    // plan does not count.
-    val coalescedCache = ("""InMemoryRelation [^\n]*\n""" +
-      """([ :]*(\+- )?(AdaptiveSparkPlan|== Final Plan ==|ResultQueryStage)[^\n]*\n)*""" +
-      """[ :]*\+- Coalesce 1\b""").r
-    assert(p.contains("hashpartitioning(__b") || p.contains("hashpartitioning(g")
-      || coalescedCache.findFirstIn(p).isDefined, p.take(3000))
+    // the stage chain is checkpointed; the rank selection over the
+    // hop durations stays in the plan, keyed on the group
+    assert(p.contains("hashpartitioning(__b") || p.contains("hashpartitioning(g"), p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
   }
 
@@ -717,10 +735,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_kn_bigram: model joins keyed on the (head, tail) hashes; no word strings across exchanges") {
-    val p = planOf("text_kn_bigram")
+    val p = plansWithBuild("text_kn_bigram")
     assert(!p.contains("CartesianProduct"), p.take(3000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     val exchanges = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).mkString("\n")
+    assert(exchanges.contains("hashpartitioning(hh"), exchanges)
     assert(!exchanges.contains("text"), exchanges)
   }
 
@@ -748,10 +767,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_lm_incr: probe joins keyed on the bigram hashes; no word strings across exchanges") {
-    val p = planOf("text_lm_incr")
+    // the index is checkpointed in the build
+    val p = plansWithBuild("text_lm_incr")
     assert(!p.contains("CartesianProduct"), p.take(3000))
     assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
     val exchanges = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).mkString("\n")
+    assert(exchanges.contains("hashpartitioning(hh"), exchanges)
     assert(!exchanges.contains("text"), exchanges)
   }
 
