@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication family for training-data prep at 100 TB.
   *
@@ -172,25 +177,6 @@ object Dedup {
       .orderBy(col(idCol))
   }
 
-  /** C2: exact n-gram Jaccard pairs at >= tauPct/100 similarity.
-    * Thresholding uses pure integer math (100*|I| >= tau*|U|) so the
-    * result is reproducible bit-for-bit on any engine.
-    *
-    * PPJoin-style prefix-filtered set-similarity join (exact, never
-    * probabilistic): two sets with Jaccard >= τ MUST share at least
-    * one element among each set's first (|s| - ⌈τ|s|⌉ + 1) elements
-    * under any global total order — candidates therefore join only on
-    * PREFIX postings (the rarest ~(1-τ) of each doc's shingles, in
-    * global document-frequency order), then every candidate pair is
-    * verified exactly with a sorted-merge intersection on the full
-    * hash sets. Ordering rare-first makes the hottest shingles drop
-    * out of the join entirely: the classic quadratic blowup on a
-    * corpus-wide common trigram cannot happen. Every stage is a keyed
-    * shuffle (df agg on hash, prefix rank on id, candidate join on
-    * hash, verify joins on id) — no stage quadratic in corpus size.
-    * Jaccard over 64-bit hashed shingles equals string-shingle
-    * Jaccard w.h.p.
-    */
   /** Docs above which [[ngramJaccardPairs]] switches its prefix
     * ordering from exact-df window sorts to the Count-Min sketch
     * path: the sketch build is one extra (fixed-cost) job, a loss on
@@ -374,11 +360,135 @@ object Dedup {
     (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
   }
 
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int = 3, tauPct: Int = 80): DataFrame = {
+  /** C2: exact n-gram Jaccard pairs at >= tauPct/100 similarity.
+    * Thresholding uses pure integer math (100*|I| >= tau*|U|) so the
+    * result is reproducible bit-for-bit on any engine.
+    *
+    * PPJoin-style prefix-filtered set-similarity join (exact, never
+    * probabilistic): two sets with Jaccard >= τ MUST share at least
+    * one element among each set's first (|s| - ⌈τ|s|⌉ + 1) elements
+    * under any global total order — candidates therefore join only on
+    * PREFIX postings (the rarest ~(1-τ) of each doc's shingles, in
+    * global document-frequency order), then every candidate pair is
+    * verified exactly with a sorted-merge intersection on the full
+    * hash sets. Ordering rare-first makes the hottest shingles drop
+    * out of the join entirely: the classic quadratic blowup on a
+    * corpus-wide common trigram cannot happen. Every stage is a keyed
+    * shuffle (df agg on hash, prefix rank on id, candidate join on
+    * hash, verify joins on id) — no stage quadratic in corpus size.
+    * Jaccard over 64-bit hashed shingles equals string-shingle
+    * Jaccard w.h.p.
+    *
+    * Three tiers, all exact, all returning the same rows in the same
+    * order with the same schema — (id_a, id_b, jacc_pct) sorted by
+    * (id_a, id_b) — picked after the one checkpoint of the shingle
+    * sets, whose job also counts the docs and their posting entries
+    * (Σ|s|):
+    *   1. driver — at most [[DriverMaxEdges]] posting entries, an
+    *      integral id type, and no id repeated: the sets are collected
+    *      once and the same filters (exact-df prefix, size, positional)
+    *      and the same sorted-merge verify run in driver memory; the
+    *      result is a local frame.
+    *   2. exact-df window — above the gate (or for ids the driver
+    *      cannot take) and below [[sketchDfMinDocs]] docs: df and
+    *      prefix ranks come from two window passes over the postings.
+    *   3. Count-Min — from [[sketchDfMinDocs]] docs: a df sketch and a
+    *      per-row prefix kernel, no posting row through a window.
+    */
+  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, n: Int = 3, tauPct: Int = 80): DataFrame =
+    ngramJaccardPairs(df, idCol, textCol, n, tauPct, DriverMaxEdges, forceSketch = None)
+
+  /** [[ngramJaccardPairs]] with explicit tiers: `driverMaxEdges = 0`
+    * skips the driver tier for any corpus with a shingle, and
+    * `forceSketch` pins the distributed tier (None = by doc count, the
+    * production rule).
+    */
+  private[graft] def ngramJaccardPairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      tauPct: Int,
+      driverMaxEdges: Long,
+      forceSketch: Option[Boolean]
+  ): DataFrame = {
     // every later stage reads the shingle sets
-    val (sh, nDocs) = Materialize.counted(df
+    val (sh, stats) = Materialize.observed(df
       .select(col(idCol).as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
-      .withColumn("nsh", size(col("hs")).cast("long")))
+      .withColumn("nsh", size(col("hs")).cast("long")),
+      count(lit(1)).as("docs"), sum(col("nsh")).as("posts"))
+    val posts = Option(stats("posts")).fold(0L)(_.asInstanceOf[Long])
+    (if (posts <= driverMaxEdges) driverJaccardPairs(sh, tauPct) else None)
+      .getOrElse(distributedJaccardPairs(sh, stats("docs").asInstanceOf[Long], tauPct, forceSketch))
+  }
+
+  /** The driver tier of [[ngramJaccardPairs]] over the checkpointed
+    * (id, hs) sets: one collect, then the distributed tiers' filters
+    * and verify kernel in driver memory. None, before the collect, for
+    * a non-integral id (Spark's order on it is not a Long order), and
+    * after it for a repeated id: the distributed verify pairs every
+    * copy of an id with every copy of its partner, so its rows for
+    * that id are not a function of one set per id.
+    */
+  private def driverJaccardPairs(sh: DataFrame, tauPct: Int): Option[DataFrame] = {
+    val idField = sh.schema("id")
+    if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(idField.dataType)) return None
+    // a null id never pairs (id_a < id_b is null); a null text has no set
+    val docs = sh.select(col("id"), col("hs")).collect().filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val ids = docs.map(_.getAs[Number](0).longValue)
+    if (ids.distinct.length < ids.length) return None
+    val hs = docs.map(_.getSeq[Long](1).toArray)
+    // the shared order: every distinct shingle ranked by (df, h)
+    val dfOf = mutable.LongMap.empty[Int]
+    hs.foreach(_.foreach(h => dfOf(h) = dfOf.getOrElse(h, 0) + 1))
+    val byDf = dfOf.toArray.sortBy { case (h, c) => (c, h) }
+    val rankOf = mutable.LongMap.empty[Int]
+    byDf.indices.foreach(r => rankOf(byDf(r)._1) = r)
+    // prefix postings per shingle rank: (doc << 32) | 1-based position
+    val postings = Array.fill(byDf.length)(mutable.ArrayBuilder.make[Long])
+    for (d <- hs.indices) {
+      val s = hs(d).length
+      val prefLen = math.min(s.toLong, s - (s.toLong * tauPct + 99L) / 100L + 1L).toInt
+      val ranks = hs(d).map(rankOf)
+      java.util.Arrays.sort(ranks)
+      for (k <- 0 until prefLen) postings(ranks(k)) += (d.toLong << 32 | (k + 1))
+    }
+    // size and positional filters on every pair of one posting list
+    val cands = mutable.LongMap.empty[Unit]
+    postings.foreach { post =>
+      val list = post.result()
+      for (i <- list.indices; j <- i + 1 until list.length) {
+        val (x, y) = if (ids((list(i) >>> 32).toInt) < ids((list(j) >>> 32).toInt)) (list(i), list(j))
+          else (list(j), list(i))
+        val (a, b) = ((x >>> 32).toInt, (y >>> 32).toInt)
+        val (na, nb) = (hs(a).length.toLong, hs(b).length.toLong)
+        val alpha = (tauPct * (na + nb) + 100 + tauPct - 1) / (100 + tauPct)
+        if (math.min(na, nb) * 100 >= math.max(na, nb) * tauPct &&
+            math.min(na - x.toInt, nb - y.toInt) + 1L >= alpha)
+          cands(a.toLong << 32 | b) = ()
+      }
+    }
+    // exact verify with the distributed tiers' kernel
+    val sets = hs.map(UnsafeArrayData.fromPrimitiveArray(_))
+    val rows = cands.keysIterator.flatMap { p =>
+      val (a, b) = ((p >>> 32).toInt, p.toInt)
+      val i = graft.functions.VecOps.sortedIntersectCount(sets(a), sets(b))
+      val u = hs(a).length + hs(b).length - i
+      if (i * 100 >= u * tauPct) Iterator((a, b, math.floor(i * 100.0 / u).toLong)) else Iterator.empty
+    }.toArray.sortBy { case (a, b, _) => (ids(a), ids(b)) }
+      .map { case (a, b, j) => Row(docs(a).get(0), docs(b).get(0), j) }
+    val schema = StructType(Seq(
+      StructField("id_a", idField.dataType, idField.nullable),
+      StructField("id_b", idField.dataType, idField.nullable),
+      StructField("jacc_pct", LongType, nullable = true)))
+    Some(sh.sparkSession.createDataFrame(rows.toSeq.asJava, schema))
+  }
+
+  /** The window and Count-Min tiers of [[ngramJaccardPairs]] over the
+    * checkpointed (id, hs, nsh) sets.
+    */
+  private def distributedJaccardPairs(
+      sh: DataFrame, nDocs: Long, tauPct: Int, forceSketch: Option[Boolean]): DataFrame = {
     // Prefix ordering needs each doc's shingles ranked by a
     // CONSISTENT global (df, h) order — the theorem holds under any
     // consistent order, df-ascending is what makes prefixes
@@ -390,7 +500,7 @@ object Dedup {
     // single posting row. Sketch overestimates only shift candidate
     // volume, never lose a pair; rare-vs-common separation survives
     // ~N/width estimate noise.
-    val prefix = if (nDocs < sketchDfMinDocs) {
+    val prefix = if (forceSketch.map(!_).getOrElse(nDocs < sketchDfMinDocs)) {
       val posts = sh.select(col("id"), col("nsh"), explode(col("hs")).as("h"))
       val prefLen = col("nsh") - floor((col("nsh") * tauPct + 99L) / 100L) + 1L
       val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
@@ -404,7 +514,7 @@ object Dedup {
     } else {
       // the 32 MB grid ships as a BROADCAST (once per executor via the
       // block manager), never as a plan literal in every task binary
-      val cms = df.sparkSession.sparkContext.broadcast(
+      val cms = sh.sparkSession.sparkContext.broadcast(
         graft.functions.CountMin.build(
           sh.select(explode(col("hs")).as("h")), "h", depth = 4, width = 1 << 20))
       sh.select(col("id"), col("nsh"),
@@ -853,10 +963,12 @@ object Dedup {
       .orderBy(col(idCol))
   }
 
-  /** The size gate of the graph operators that switch between a driver
-    * kernel and a distributed loop ([[connectedComponents]],
-    * [[GraphOps.labelPropRounds]]): symmetric raw edge rows up to which
-    * the edge list is collected and processed in driver memory.
+  /** The size gate of the operators that switch between a driver
+    * kernel and a distributed plan: the longs the driver kernel holds
+    * after its one collect. For [[connectedComponents]] and
+    * [[GraphOps.labelPropRounds]] that is symmetric raw edge rows; for
+    * [[ngramJaccardPairs]] it is posting entries, the shingles summed
+    * over all documents.
     */
   private[graft] val DriverMaxEdges: Long = 1L << 20
 
@@ -1392,32 +1504,27 @@ object Dedup {
     * column for any quality score and nothing else changes.
     *
     * Plan: components as in [[clusterAssign]], then the per-cluster
-    * argmax is ONE keyed min-aggregate over (−n_words, id) structs —
-    * no window function, so no per-cluster sort at scale.
+    * argmax is ONE min-aggregate over (−n_words, id) structs as an
+    * unordered window over `partitionBy(cluster_id)`: the input is
+    * scanned once and shuffled once on cluster_id, and the window
+    * sorts only by that key. A row with a null id belongs to no
+    * cluster and is dropped.
     * Output: (idCol, cluster_id, n_words, is_kept).
     */
   def clusterKeepBest(df: DataFrame, idCol: String, textCol: String, pairs: DataFrame): DataFrame = {
     require(idCol != "cluster_id" && idCol != "is_kept" && idCol != "n_words",
       s"idCol '$idCol' collides with a clusterKeepBest output column")
     val comps = connectedComponents(pairs)
-    // NOT checkpointed/persisted although base feeds two consumers:
-    // measured at sf1 (r12), materializing it read level-or-slower —
-    // the duplicated work is one cheap kernel-split scan (comps is
-    // already driver-materialized below the union-find threshold), and
-    // the eager materialization barrier cost more than it saved.
-    val base = df
+    val byCluster = org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))
+    df
       .select(col(idCol).cast("long").as(idCol),
         size(split(normalize(col(textCol)), " ")).cast("long").as("n_words"))
+      .filter(col(idCol).isNotNull)
       .join(comps.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
-    val best = base
-      .groupBy(col("cluster_id"))
-      .agg(min(struct((-col("n_words")).as("neg"), col(idCol).as("bid"))).as("b"))
-      .select(col("cluster_id"), col("b.bid").as("__best_id"))
-    base
-      .join(best, Seq("cluster_id"))
+      .withColumn("__best", min(struct((-col("n_words")).as("neg"), col(idCol).as("bid"))).over(byCluster))
       .select(col(idCol), col("cluster_id"), col("n_words"),
-        when(col(idCol) === col("__best_id"), 1L).otherwise(0L).as("is_kept"))
+        when(col(idCol) === col("__best.bid"), 1L).otherwise(0L).as("is_kept"))
       .orderBy(col(idCol))
   }
 

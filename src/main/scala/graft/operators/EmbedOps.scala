@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecOps
@@ -29,24 +30,23 @@ object EmbedOps {
     * every per-iteration job pay `par` near-empty tasks: measured at
     * sf0.1 (2k vectors, 0.5 MB), a bare count() on the cached frame
     * cost 0.23-0.40 s — the task-scheduling floor itself — so the
-    * 10-job k-means/PCA loops were floor-bound. Bytes come from driver
-    * file metadata (one status call per input file, the
-    * dataFingerprint discipline); non-file frames (tests) keep the old
-    * rule. At cluster scale bytes/2MB ≫ par, so this clamps to par —
+    * 10-job k-means/PCA loops were floor-bound. Bytes are the lengths
+    * in the file indexes of the frame's scans, the listing Spark
+    * already holds, so sizing costs no filesystem call; a file read by
+    * two scans counts once. Non-file frames (tests) keep the old rule.
+    * At cluster scale bytes/2MB ≫ par, so this clamps to par —
     * behavior unchanged where it mattered.
     */
-  private def iterPartitions(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val files = df.inputFiles
+  private[graft] def iterPartitions(df: DataFrame): Int = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val files = df.queryExecution.optimizedPlan.collect {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) => r.location
+    }.flatMap {
+      case idx: PartitioningAwareFileIndex => idx.allFiles().map(f => f.getPath.toUri.toString -> f.getLen)
+      case idx => Seq(idx.rootPaths.mkString(",") -> idx.sizeInBytes)
+    }.toMap
     if (files.isEmpty) return par
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bytes = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      try p.getFileSystem(conf).getFileStatus(p).getLen
-      catch { case _: java.io.IOException => 0L }
-    }.sum
-    math.max(1L, math.min(par.toLong, bytes / (2L << 20) + 1L)).toInt
+    math.max(1L, math.min(par.toLong, files.values.sum / (2L << 20) + 1L)).toInt
   }
 
   /** C36: per-vector symmetric int8 quantization, long format:

@@ -79,8 +79,9 @@ object GraphOps {
     * rounds and matches bit-for-bit.
     *
     * Plan per round: two keyed join+agg pairs (src then dst), each
-    * with map-side combine; maxima ride as 1-row broadcasts; scores
-    * never visit the driver.
+    * with map-side combine and each checkpointed; each maximum is
+    * observed on its checkpoint's job and enters the next projection
+    * as a literal; scores never visit the driver.
     */
   def hits(edges: DataFrame, iters: Int = 4): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -96,21 +97,15 @@ object GraphOps {
     // score 0, contribute nothing to the next sum, and can never be
     // the (non-negative) max, so the per-round LEFT join back onto
     // the full node set is dropped entirely; zeros materialize once
-    // in the final projection. Each half-step localCheckpoints: the
-    // max collection reads materialized blocks and every round's plan
-    // stays constant-size (no lineage growth).
+    // in the final projection. Each half-step localCheckpoints, so
+    // every round's plan stays constant-size (no lineage growth), and
+    // its maximum is observed on that same job.
     for (_ <- 0 until iters) {
-      val asum = e.join(hubs, e("src") === hubs("id"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("ar"))
-        .localCheckpoint()
-      val amRow = asum.agg(max(col("ar"))).head()
-      val am = if (amRow.isNullAt(0)) 1L else math.max(amRow.getLong(0), 1L)
+      val (asum, am) = checkpointWithMax(
+        e.join(hubs, e("src") === hubs("id")).groupBy(col("dst")).agg(sum(col("h")).as("ar")), "ar")
       auths = asum.select(col("dst").as("id"), expr(s"(ar * 1000000L) DIV ${am}L").as("a"))
-      val hsum = e.join(auths, e("dst") === auths("id"))
-        .groupBy(col("src")).agg(sum(col("a")).as("hr"))
-        .localCheckpoint()
-      val hmRow = hsum.agg(max(col("hr"))).head()
-      val hm = if (hmRow.isNullAt(0)) 1L else math.max(hmRow.getLong(0), 1L)
+      val (hsum, hm) = checkpointWithMax(
+        e.join(auths, e("dst") === auths("id")).groupBy(col("src")).agg(sum(col("a")).as("hr")), "hr")
       hubs = hsum.select(col("src").as("id"), expr(s"(hr * 1000000L) DIV ${hm}L").as("h"))
     }
     nodes
@@ -120,6 +115,14 @@ object GraphOps {
         coalesce(col("a"), lit(0L)).as("auth_fp"),
         coalesce(col("h"), lit(0L)).as("hub_fp"))
       .orderBy("node_id")
+  }
+
+  /** `df` checkpointed with the maximum of its column `c`, floored at
+    * 1 so it can divide; an empty frame (null maximum) reads 1.
+    */
+  private def checkpointWithMax(df: DataFrame, c: String): (DataFrame, Long) = {
+    val (cp, m) = Materialize.observed(df, max(col(c)).as("m"))
+    (cp, Option(m("m")).fold(1L)(v => math.max(v.asInstanceOf[Long], 1L)))
   }
 
   /** C59: per-node triangle participation — the clustering-structure

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The engine's one materialization rule: an operator returns with the
@@ -28,8 +28,18 @@ object Materialize {
     * own job through an `Observation` instead of a second `count()`.
     */
   def counted(df: DataFrame): (DataFrame, Long) = {
-    val rows = Observation()
-    val cp = df.observe(rows, count(lit(1)).as("n")).localCheckpoint()
-    (cp, rows.get("n").asInstanceOf[Long])
+    val (cp, m) = observed(df, count(lit(1)).as("n"))
+    (cp, m("n").asInstanceOf[Long])
+  }
+
+  /** `df` checkpointed, with named aggregates over its rows read from
+    * the checkpoint's own job through an `Observation`, keyed by name.
+    * An aggregate that sees no rows reads as its SQL value over an
+    * empty input: `count` 0, `max` or `sum` null.
+    */
+  def observed(df: DataFrame, agg: Column, aggs: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val cp = df.observe(obs, agg, aggs: _*).localCheckpoint()
+    (cp, obs.get)
   }
 }

@@ -16,8 +16,6 @@ import org.apache.spark.metrics.source.CodegenMetrics
   */
 class CodegenCacheSpec extends SparkSpec {
 
-  private val sf001 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
-
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Janino compilations while building and executing the sweep. */
@@ -44,25 +42,13 @@ class CodegenCacheSpec extends SparkSpec {
     assert(warm.last == 0, s"every warm sweep recompiled: ${warm.mkString(", ")} classes")
   }
 
-  /** Spark jobs of a warm (second) build + execute of one query. */
-  private def warmJobs(name: String): Int = {
-    def run(): Unit =
-      SparkEntry.queries(name)(spark, sf001).write.format("noop").mode("overwrite").save()
-    run()
-    spark.catalog.clearCache()
-    val (_, jobs) = jobsDuring(run())
-    spark.catalog.clearCache()
-    info(s"$jobs jobs")
-    jobs
-  }
-
   test("q5_join5 at sf0.01, warm: at most 8 Spark jobs to build and execute") {
     val jobs = warmJobs("q5_join5")
     assert(jobs <= 8, s"$jobs jobs")
   }
 
-  test("dedup_keep_best at sf0.01, warm: at most 16 Spark jobs to build and execute") {
+  test("dedup_keep_best at sf0.01, warm: at most 9 Spark jobs to build and execute") {
     val jobs = warmJobs("dedup_keep_best")
-    assert(jobs <= 16, s"$jobs jobs")
+    assert(jobs <= 9, s"$jobs jobs")
   }
 }

@@ -647,4 +647,31 @@ class CurationSpec extends SparkSpec {
       (10L, 10L, 3L, 0L), (20L, 10L, 5L, 1L),
       (30L, 30L, 2L, 1L), (31L, 30L, 2L, 0L)), got.mkString(","))
   }
+
+  test("clusterKeepBest: the windowed pick equals a plain-Scala argmax on seeded clusters with n_words ties") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    for (seed <- Seq(21, 22)) {
+      val rnd = new scala.util.Random(seed)
+      // clusters of 1..6 members on shuffled, non-contiguous ids, each
+      // joined by a random spanning tree; 1..3 words per doc, so most
+      // clusters tie on n_words
+      val ids = rnd.shuffle((1 to 80).map(i => 5L * i + rnd.nextInt(5)))
+      val clusters = Iterator.unfold(ids) { rest =>
+        if (rest.isEmpty) None else { val k = 1 + rnd.nextInt(6); Some(rest.splitAt(k)) }
+      }.toSeq
+      val pairs = clusters.flatMap(c => (1 until c.length).map(i => (c(rnd.nextInt(i)), c(i))))
+      val nWords = ids.map(id => id -> (1 + rnd.nextInt(3)).toLong).toMap
+      val docs = ids.map(id => (Option(id), Seq.fill(nWords(id).toInt)("w").mkString(" "))) :+
+        ((None, "a row with no id"))
+      val expected = clusters.flatMap { c =>
+        val best = c.minBy(id => (-nWords(id), id))
+        c.map(id => (id, c.min, nWords(id), if (id == best) 1L else 0L))
+      }.sortBy(_._1)
+      val got = Dedup.clusterKeepBest(docs.toDF("doc_id", "text"), "doc_id", "text",
+          rnd.shuffle(pairs).toDF("id_a", "id_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(got == expected, s"seed $seed")
+    }
+  }
 }

@@ -13,6 +13,32 @@ class EmbedOpsSpec extends SparkSpec {
   lazy val docs = Catalog.load(spark, sf, "documents")
   lazy val embs = Catalog.load(spark, sf, "embeddings")
 
+  test("iterPartitions: the scan's file index gives the width the per-file status sum gave") {
+    val par = spark.sparkContext.defaultParallelism
+    assume(par >= 3, s"a middle width needs defaultParallelism >= 3, got $par")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def statusWidth(df: org.apache.spark.sql.DataFrame): Int = {
+      val bytes = df.inputFiles.map { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(conf).getFileStatus(p).getLen
+      }.sum
+      math.max(1L, math.min(par.toLong, bytes / (2L << 20) + 1L)).toInt
+    }
+    val dir = java.nio.file.Files.createTempDirectory("iter_partitions").toFile
+    val rnd = new scala.util.Random(9)
+    // incompressible payloads in 3 files: ~24 KB, ~3.5 MB, and 2 MB·par + 1 MB
+    for ((rows, rowBytes, width) <- Seq((6, 4 << 10, 1), (14, 256 << 10, 2), (8 * par + 4, 256 << 10, par))) {
+      val path = s"$dir/w$width"
+      Seq.fill(rows)(Array.fill(rowBytes)(rnd.nextInt().toByte)).toDF("payload")
+        .repartition(3).write.parquet(path)
+      val df = spark.read.parquet(path).filter(length(col("payload")) > 0)
+      assert(df.inputFiles.length == 3)
+      assert(EmbedOps.iterPartitions(df) == statusWidth(df), s"$rows rows of $rowBytes bytes")
+      assert(EmbedOps.iterPartitions(df) == width, s"$rows rows of $rowBytes bytes")
+    }
+    assert(EmbedOps.iterPartitions(spark.range(10).toDF()) == par, "a non-file frame keeps defaultParallelism")
+  }
+
   test("table-carrying kernels: equal tables give semantically equal expressions and matching canonical plans") {
     val rnd = new scala.util.Random(3)
     val cb = Array.fill(2 * 4 * 3)(rnd.nextFloat())

@@ -3,11 +3,11 @@ package graft
 /** Spark jobs per graph query, build and execution together: the
   * label-propagation rounds of `graph_label_prop` run on the driver
   * below the size gate, so the query costs a fixed handful of jobs
-  * instead of a join + aggregate + checkpoint per round.
+  * instead of a join + aggregate + checkpoint per round. The warm
+  * ceilings (a second run, schemas cached) lock the job counts of
+  * `graph_hits` and of the near-dup pair queries.
   */
 class GraphJobsSpec extends SparkSpec {
-
-  private val sf001 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
 
   test("graph_label_prop at sf0.01: at most 6 Spark jobs to build and execute") {
     val (_, jobs) = jobsDuring {
@@ -17,4 +17,13 @@ class GraphJobsSpec extends SparkSpec {
     info(s"$jobs jobs")
     assert(jobs <= 6, s"$jobs jobs")
   }
+
+  // Warm ceilings at the measured counts. HITS observes each half-step's
+  // maximum on its checkpoint's job; the near-dup pairs run on the
+  // driver below the posting-entry gate.
+  for ((name, ceiling) <- Seq("graph_hits" -> 37, "dedup_ngram_jaccard" -> 3, "dedup_clusters" -> 8))
+    test(s"$name at sf0.01, warm: at most $ceiling Spark jobs to build and execute") {
+      val jobs = warmJobs(name)
+      assert(jobs <= ceiling, s"$jobs jobs")
+    }
 }

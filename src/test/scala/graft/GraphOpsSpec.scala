@@ -75,6 +75,12 @@ class GraphOpsSpec extends SparkSpec {
     assert(r(10L)._2 == 1000000L && r(0L)._1 == 1000000L, "maxima renormalize to exactly 1e6")
   }
 
+  test("HITS: an empty edge list gives no rows; its null maxima read as 1") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(GraphOps.hits(empty, iters = 2).collect().isEmpty)
+  }
+
   test("triangles: K4 gives every node 3 triangles; ring of 5 gives none") {
     import spark.implicits._
     val k4 = (for (i <- 0 to 3; j <- 0 to 3 if i < j) yield (i.toLong, j.toLong)).toDF("src", "dst")

@@ -15,6 +15,8 @@ trait SparkSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
+  val sf001 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+
   /** Spark jobs started while `f` runs. */
   def jobsDuring[T](f: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -28,5 +30,17 @@ trait SparkSpec extends AnyFunSuite {
       ListenerDrain(spark.sparkContext)
       (r, jobs.get)
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Spark jobs of a warm (second) build + execute of one registry query at sf0.01. */
+  def warmJobs(name: String): Int = {
+    def run(): Unit =
+      SparkEntry.queries(name)(spark, sf001).write.format("noop").mode("overwrite").save()
+    run()
+    spark.catalog.clearCache()
+    val (_, jobs) = jobsDuring(run())
+    spark.catalog.clearCache()
+    info(s"$jobs jobs")
+    jobs
   }
 }
