@@ -385,11 +385,12 @@ object Dedup {
     * sets, whose job also counts the docs and their posting entries
     * (Σ|s|):
     *   1. driver — at most [[DriverMaxEdges]] posting entries, an
-    *      integral id type, and no id repeated: the sets are collected
-    *      once and the same filters (exact-df prefix, size, positional)
-    *      and the same sorted-merge verify run in driver memory; the
-    *      result is a local frame.
-    *   2. exact-df window — above the gate (or for ids the driver
+    *      integral id type, no id repeated, and at most
+    *      [[DriverMaxEdges]] pairs within the prefix posting lists: the
+    *      sets are collected once and the same filters (exact-df
+    *      prefix, size, positional) and the same sorted-merge verify
+    *      run in driver memory; the result is a local frame.
+    *   2. exact-df window — above either gate (or for ids the driver
     *      cannot take) and below [[sketchDfMinDocs]] docs: df and
     *      prefix ranks come from two window passes over the postings.
     *   3. Count-Min — from [[sketchDfMinDocs]] docs: a df sketch and a
@@ -418,19 +419,23 @@ object Dedup {
       .withColumn("nsh", size(col("hs")).cast("long")),
       count(lit(1)).as("docs"), sum(col("nsh")).as("posts"))
     val posts = Option(stats("posts")).fold(0L)(_.asInstanceOf[Long])
-    (if (posts <= driverMaxEdges) driverJaccardPairs(sh, tauPct) else None)
+    (if (posts <= driverMaxEdges) driverJaccardPairs(sh, tauPct, driverMaxEdges) else None)
       .getOrElse(distributedJaccardPairs(sh, stats("docs").asInstanceOf[Long], tauPct, forceSketch))
   }
 
   /** The driver tier of [[ngramJaccardPairs]] over the checkpointed
     * (id, hs) sets: one collect, then the distributed tiers' filters
     * and verify kernel in driver memory. None, before the collect, for
-    * a non-integral id (Spark's order on it is not a Long order), and
-    * after it for a repeated id: the distributed verify pairs every
-    * copy of an id with every copy of its partner, so its rows for
-    * that id are not a function of one set per id.
+    * a non-integral id (Spark's order on it is not a Long order); after
+    * it for a repeated id (the distributed verify pairs every copy of
+    * an id with every copy of its partner, so its rows for that id are
+    * not a function of one set per id); and, before any pair is
+    * enumerated, when the prefix posting lists hold more than
+    * `driverMaxEdges` pairs (Σ C(len, 2)): the posting gate bounds the
+    * collect, not the pair work, which grows with the square of a
+    * list — n copies of one template share every prefix shingle.
     */
-  private def driverJaccardPairs(sh: DataFrame, tauPct: Int): Option[DataFrame] = {
+  private def driverJaccardPairs(sh: DataFrame, tauPct: Int, driverMaxEdges: Long): Option[DataFrame] = {
     val idField = sh.schema("id")
     if (!Seq(ByteType, ShortType, IntegerType, LongType).contains(idField.dataType)) return None
     // a null id never pairs (id_a < id_b is null); a null text has no set
@@ -453,10 +458,13 @@ object Dedup {
       java.util.Arrays.sort(ranks)
       for (k <- 0 until prefLen) postings(ranks(k)) += (d.toLong << 32 | (k + 1))
     }
+    // the pairs enumerated below bound the loop, the candidates and the
+    // result rows held on the driver
+    val lists = postings.map(_.result())
+    if (lists.iterator.map(l => l.length.toLong * (l.length - 1) / 2).sum > driverMaxEdges) return None
     // size and positional filters on every pair of one posting list
     val cands = mutable.LongMap.empty[Unit]
-    postings.foreach { post =>
-      val list = post.result()
+    lists.foreach { list =>
       for (i <- list.indices; j <- i + 1 until list.length) {
         val (x, y) = if (ids((list(i) >>> 32).toInt) < ids((list(j) >>> 32).toInt)) (list(i), list(j))
           else (list(j), list(i))
@@ -967,8 +975,12 @@ object Dedup {
     * kernel and a distributed plan: the longs the driver kernel holds
     * after its one collect. For [[connectedComponents]] and
     * [[GraphOps.labelPropRounds]] that is symmetric raw edge rows; for
-    * [[ngramJaccardPairs]] it is posting entries, the shingles summed
-    * over all documents.
+    * [[ngramJaccardPairs]] it gates twice, once on posting entries
+    * (the shingles summed over all documents, what the collect holds)
+    * and once on the pairs within the prefix posting lists (what the
+    * candidate loop visits and keeps). The value was set for edge
+    * rows; where the near-dup driver tier stops beating the
+    * distributed tiers has not been measured.
     */
   private[graft] val DriverMaxEdges: Long = 1L << 20
 

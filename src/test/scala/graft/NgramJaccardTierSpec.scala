@@ -97,4 +97,23 @@ class NgramJaccardTierSpec extends SparkSpec {
     assert(byString.collect().toSeq ==
       Dedup.ngramJaccardPairs(strIds, "doc_id", "text", 3, 70, 0L, forceSketch = Some(false)).collect().toSeq)
   }
+
+  test("copies of one template under the posting gate route to the distributed tiers by their pair count") {
+    // 60 copies of a 25-word template share their whole prefix: each
+    // of the ~5 prefix posting lists at τ 80 holds all 60, about 8.9k
+    // pairs against ~1.4k posting entries
+    val template = (0 until 25).map(i => s"t$i").mkString(" ")
+    val docs = ((0 until 60).map(i => (1000L + i, template)) ++
+      corpus(14).collect { case (Some(id), Some(t)) => (id, t) }).toDF("doc_id", "text")
+    val posts = docs.select(sum(size(array_distinct(Dedup.shingleHashSet(col("text"), 3))))).head().getLong(0)
+    val routed = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 80, posts, forceSketch = None)
+    val driver = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, tauPct = 80)
+    assert(!isLocal(routed), s"$posts posting entries pass the gate; the pairs must not")
+    assert(isLocal(driver))
+    assert(routed.schema == driver.schema)
+    val got = routed.collect().toSeq
+    assert(got.count(r => r.getLong(0) >= 1000L && r.getLong(1) < 1060L) == 60 * 59 / 2)
+    assert(got == driver.collect().toSeq)
+    assert(got == bruteForce(docs, 80))
+  }
 }
