@@ -467,9 +467,8 @@ object VecOps {
 
   /** Deterministic pseudo-random hyperplane component (j, d) —
     * splitmix64-style integer mix, no RNG state, identical on every
-    * executor and every run. The single source of the plane family:
-    * Similarity's declarative `lshBucket` and the [[tableCodes]]
-    * kernel must hash identically.
+    * executor and every run. The single source of the plane family
+    * the [[tableCodes]] kernel hashes with.
     */
   def planeComponent(j: Int, d: Int): Double = {
     var z = j.toLong * 0x9e3779b97f4a7c15L + d.toLong * 0xbf58476d1ce4e5b9L + 0x94d049bb133111ebL

@@ -28,9 +28,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
 object Dedup {
 
   /** Content normalization shared by all tiers: lowercase, collapse
-    * whitespace, trim.
-    */
-  /** lower + collapse whitespace runs + trim, as one byte-scan kernel
+    * whitespace runs, trim, as one byte-scan kernel
     * (byte-exact with `trim(regexp_replace(lower(c), "\\s+", " "))` —
     * see [[graft.functions.VecOps.normalizeWs]]). Every text operator
     * normalizes through HERE; two drifting copies would silently
@@ -177,13 +175,159 @@ object Dedup {
       .orderBy(col(idCol))
   }
 
-  /** Docs above which [[ngramJaccardPairs]] switches its prefix
-    * ordering from exact-df window sorts to the Count-Min sketch
-    * path: the sketch build is one extra (fixed-cost) job, a loss on
-    * small corpora and a large win once the posting list dwarfs it
-    * (measured break-even ~30–50k docs; 2× at 500k).
+  /** Docs above which [[ngramJaccardPairs]] and [[containmentPairs]]
+    * switch their prefix ordering from exact-df window sorts to the
+    * Count-Min sketch path ([[dfRanked]]): the sketch build is one
+    * extra (fixed-cost) job, a loss on small corpora and a large win
+    * once the posting list dwarfs it (measured break-even ~30–50k
+    * docs; 2× at 500k).
     */
   private[graft] val sketchDfMinDocs: Long = 32768L
+
+  // -------------------------------------------------------------------
+  // The candidate → verify stages the set and vector pair operators
+  // share: the set projections, the df-ranked postings their prefix
+  // joins read, and the exact verify of a candidate (id_a, id_b) list
+  // against the two sides' rows, fetched by id.
+
+  /** (id, hs, nsh): the sorted distinct shingle-hash set of each doc
+    * and its size.
+    */
+  private def shingleSets(df: DataFrame, id: Column, textCol: String, n: Int): DataFrame =
+    df.select(id.as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
+      .withColumn("nsh", size(col("hs")).cast("long"))
+
+  /** [[shingleSets]] plus `sk`, the [[containSketchK]]-entry KMV sketch
+    * the containment screen reads.
+    */
+  private def sketchedSets(df: DataFrame, id: Column, textCol: String, n: Int): DataFrame =
+    shingleSets(df, id, textCol, n)
+      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK))
+
+  /** A set's own-size prefix length under threshold τ, |s| − ⌈τ|s|⌉ + 1,
+    * in Long integer math over the `nsh` column.
+    */
+  private def prefixLen(tauPct: Int): Column =
+    col("nsh") - expr(s"((nsh * $tauPct) + 99) div 100") + 1L
+
+  /** Postings (h, id, nsh, rk) of the (id, hs, nsh) sets `sh`, with rk
+    * the shingle's 1-based rank in its doc under one CONSISTENT global
+    * (df, h) order — the prefix theorem holds under any consistent
+    * order; df-ascending is what makes prefixes selective. Two ways to
+    * get it, picked by corpus size (`forceSketch` pins one):
+    *   - small — exact df via two window passes over the posting
+    *     list; every posting is ranked;
+    *   - large — a Count-Min df sketch from one mergeable map-side
+    *     aggregation, broadcast to the caller's per-row `kernel`,
+    *     whose output array is in the shared order, so its positions
+    *     ARE the ranks and not one posting row crosses a window. Sketch
+    *     overestimates only shift candidate volume, never lose a pair;
+    *     rare-vs-common separation survives ~N/width estimate noise.
+    */
+  private def dfRanked(sh: DataFrame, nDocs: Long, forceSketch: Option[Boolean])(
+      kernel: org.apache.spark.broadcast.Broadcast[Array[Byte]] => Column): DataFrame =
+    if (forceSketch.map(!_).getOrElse(nDocs < sketchDfMinDocs)) {
+      val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
+      val wId = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("id")).orderBy(col("df"), col("h"))
+      sh.select(col("id"), col("nsh"), explode(col("hs")).as("h"))
+        .withColumn("df", count(lit(1)).over(wDf))
+        .withColumn("rk", row_number().over(wId))
+        .select(col("h"), col("id"), col("nsh"), col("rk"))
+    } else {
+      // the 32 MB grid ships as a BROADCAST (once per executor via the
+      // block manager), never as a plan literal in every task binary
+      val cms = sh.sparkSession.sparkContext.broadcast(
+        graft.functions.CountMin.build(
+          sh.select(explode(col("hs")).as("h")), "h", depth = 4, width = 1 << 20))
+      sh.select(col("id"), col("nsh"), posexplode(kernel(cms)).as(Seq("pos", "h")))
+        .select(col("h"), col("id"), col("nsh"), (col("pos") + 1L).as("rk"))
+    }
+
+  /** The (id_a, id_b) rows of `cands` with each column in `cols`
+    * fetched by id from both sides — `c_a` from `a`, `c_b` from `b` —
+    * in two id-keyed joins. `a` and `b` carry an `id` column.
+    */
+  private def bothSides(cands: DataFrame, a: DataFrame, b: DataFrame, cols: String*): DataFrame = {
+    def side(f: DataFrame, s: String): DataFrame =
+      f.select(col("id").as(s"id_$s") +: cols.map(c => col(c).as(s"${c}_$s")): _*)
+    cands.join(side(a, "a"), "id_a").join(side(b, "b"), "id_b")
+  }
+
+  /** Distinct (id_a, id_b) pairs of an `a` row and a `b` row equal on
+    * every `keys` column, with `ids` holding between their ids (`<` for
+    * a self-join, `=!=` for a batch against an index): a keyed join,
+    * never a cross join.
+    */
+  private def sharedKeyPairs(
+      a: DataFrame, b: DataFrame, keys: Seq[String], ids: (Column, Column) => Column): DataFrame =
+    a.alias("a")
+      .join(b.alias("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) && ids(col("a.id"), col("b.id")))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+
+  /** Exact Jaccard verify of candidate pairs over the sorted `hs` sets
+    * of `a` and `b`: (id_a, id_b, jacc_pct) for 100·|∩| ≥ τ·|∪|, pure
+    * integer threshold math (bit-for-bit reproducible on any engine),
+    * sorted by (id_a, id_b).
+    */
+  private[graft] def exactJaccard(cands: DataFrame, a: DataFrame, b: DataFrame, tauPct: Int): DataFrame =
+    bothSides(cands, a, b, "hs")
+      .withColumn("i", graft.functions.VecOps.sorted_intersect_count(col("hs_a"), col("hs_b")))
+      .withColumn("u", (size(col("hs_a")) + size(col("hs_b"))).cast("long") - col("i"))
+      .filter(col("i") * 100 >= col("u") * tauPct)
+      .select(col("id_a"), col("id_b"), floor(col("i") * lit(100.0) / col("u")).as("jacc_pct"))
+      .orderBy(col("id_a"), col("id_b"))
+
+  /** Candidate pairs flagged `keep` by the KMV containment screen
+    * ([[graft.functions.VecOps.kmvContainScreen]]) over the `sk` and
+    * `nsh` of `a` and `b`: (id_a, id_b, keep).
+    */
+  private def kmvScreen(cands: DataFrame, a: DataFrame, b: DataFrame, tauPct: Int): DataFrame =
+    bothSides(cands, a, b, "sk", "nsh")
+      .select(col("id_a"), col("id_b"), graft.functions.VecOps.kmv_contain_screen(
+        col("sk_a"), col("nsh_a"), col("sk_b"), col("nsh_b"), tauPct).as("keep"))
+
+  /** Exact containment verify of candidate pairs over the (hs, nsh) of
+    * `a` and `b`, after the KMV screen unless `screen` is off:
+    * (id_a, id_b, cont_pct) for 100·|∩| ≥ τ·|smaller|, sorted by
+    * (id_a, id_b). The screen moves candidate volume, not rows.
+    */
+  private[graft] def exactContainment(
+      cands: DataFrame, a: DataFrame, b: DataFrame, tauPct: Int, screen: Boolean): DataFrame = {
+    val kept =
+      if (screen) kmvScreen(cands, a, b, tauPct).filter(col("keep")).select(col("id_a"), col("id_b"))
+      else cands
+    bothSides(kept, a, b, "hs", "nsh")
+      .withColumn("i", graft.functions.VecOps.sorted_intersect_count(col("hs_a"), col("hs_b")))
+      .filter(col("i") * 100 >= least(col("nsh_a"), col("nsh_b")) * tauPct)
+      .select(col("id_a"), col("id_b"),
+        floor(col("i") * lit(100.0) / least(col("nsh_a"), col("nsh_b"))).as("cont_pct"))
+      .orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** (candidates, kept) of a flagged (id_a, id_b, keep) pair list, in
+    * one job: the instrumentation of a screen.
+    */
+  private def keptCounts(flagged: DataFrame): (Long, Long) = {
+    val row = flagged.agg(count(lit(1)), sum(when(col("keep"), 1L).otherwise(0L))).collect()(0)
+    (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+  }
+
+  /** (id, v, nrm) plus `extra`: the vectors and norms every cosine
+    * operator verifies from.
+    */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as("id"), col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm")) ++ extra: _*)
+
+  /** Exact double-precision cosine verify of candidate pairs over the
+    * (v, nrm) of `a` and `b`: (id_a, id_b) with cos ≥ τ, unordered.
+    */
+  private[graft] def exactCosine(cands: DataFrame, a: DataFrame, b: DataFrame, tau: Double): DataFrame =
+    bothSides(cands, a, b, "v", "nrm")
+      .filter(Similarity.dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")) >= tau)
+      .select(col("id_a"), col("id_b"))
 
   /** C49: CONTAINMENT near-dup pairs — overlap / |smaller set| ≥ τ.
     * Catches what Jaccard structurally cannot: a document CONTAINING
@@ -269,63 +413,32 @@ object Dedup {
       forceSketch: Option[Boolean],
       screen: Boolean = true
   ): DataFrame = {
-    // both join sides and the verify read the shingle sets
-    val (sh, nDocs) = Materialize.counted(df
-      .select(col(idCol).as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
-      .withColumn("nsh", size(col("hs")).cast("long"))
-      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK)))
-    val cands = containmentCandidates(sh, nDocs, tauPct, forceSketch)
-    val screened = if (screen) {
-      val sks = sh.select(col("id"), col("sk"), col("nsh"))
-      cands
-        .join(sks.select(col("id").as("id_a"), col("sk").as("sk_a"), col("nsh").as("na0")), "id_a")
-        .join(sks.select(col("id").as("id_b"), col("sk").as("sk_b"), col("nsh").as("nb0")), "id_b")
-        .filter(graft.functions.VecOps.kmv_contain_screen(
-          col("sk_a"), col("na0"), col("sk_b"), col("nb0"), tauPct))
-        .select(col("id_a"), col("id_b"))
-    } else cands
-    val full = sh.select(col("id"), col("hs"), col("nsh"))
-    screened
-      .join(full.select(col("id").as("id_a"), col("hs").as("hs_a"), col("nsh").as("na")), "id_a")
-      .join(full.select(col("id").as("id_b"), col("hs").as("hs_b"), col("nsh").as("nb")), "id_b")
-      .withColumn("i", graft.functions.VecOps.sorted_intersect_count(col("hs_a"), col("hs_b")))
-      .filter(col("i") * 100 >= least(col("na"), col("nb")) * tauPct)
-      .select(col("id_a"), col("id_b"),
-        floor(col("i") * lit(100.0) / least(col("na"), col("nb"))).as("cont_pct"))
-      .orderBy(col("id_a"), col("id_b"))
+    val (sh, cands) = containmentCandidates(df, idCol, textCol, n, tauPct, forceSketch)
+    exactContainment(cands, sh, sh, tauPct, screen)
   }
 
-  /** Distinct (id_a, id_b) candidate pairs from the prefix × full
+  /** The checkpointed (id, hs, nsh, sk) sets of [[containmentPairs]]
+    * and their distinct (id_a, id_b) candidate pairs: the prefix × full
     * posting join with the positional filter AND the lossless
     * smaller-side constraint (prefix side must be the smaller doc —
-    * see [[containmentPairs]] note 1). `sh` must carry (id, hs, nsh).
+    * see [[containmentPairs]] note 1).
     */
   private def containmentCandidates(
-      sh: DataFrame, nDocs: Long, tauPct: Int, forceSketch: Option[Boolean]): DataFrame = {
-    val useWindow = forceSketch.map(!_).getOrElse(nDocs < sketchDfMinDocs)
-    val ranked = if (useWindow) {
-      val posts = sh.select(col("id"), col("nsh"), explode(col("hs")).as("h"))
-      val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-      val wId = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("df"), col("h"))
-      posts
-        .withColumn("df", count(lit(1)).over(wDf))
-        .withColumn("rk", row_number().over(wId))
-        .select(col("h"), col("id"), col("nsh"), col("rk"))
-    } else {
-      val cms = sh.sparkSession.sparkContext.broadcast(
-        graft.functions.CountMin.build(
-          sh.select(explode(col("hs")).as("h")), "h", depth = 4, width = 1 << 20))
-      sh.select(col("id"), col("nsh"),
-          posexplode(graft.functions.VecOps.df_order_sort(col("hs"), cms)).as(Seq("pos", "h")))
-        .select(col("h"), col("id"), col("nsh"), (col("pos") + 1L).as("rk"))
-    }
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      tauPct: Int,
+      forceSketch: Option[Boolean]
+  ): (DataFrame, DataFrame) = {
+    // both join sides, the screen and the verify read the sets
+    val (sh, nDocs) = Materialize.counted(sketchedSets(df, col(idCol), textCol, n))
+    val ranked = dfRanked(sh, nDocs, forceSketch)(graft.functions.VecOps.df_order_sort(col("hs"), _))
     // own-size prefix: valid whenever this doc is the smaller side
-    val prefix = ranked.filter(
-      col("rk") <= col("nsh") - expr(s"((nsh * $tauPct) + 99) div 100") + 1L)
+    val prefix = ranked.filter(col("rk") <= prefixLen(tauPct))
     // a is the smaller side by construction, so α = ceil(τ·|a|)
     val alpha = expr(s"((`a`.nsh * $tauPct) + 99) div 100")
-    prefix.alias("a")
+    val cands = prefix.alias("a")
       .join(ranked.alias("b"),
         col("a.h") === col("b.h") &&
           (col("a.nsh") < col("b.nsh") ||
@@ -334,30 +447,20 @@ object Dedup {
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
+    (sh, cands)
   }
 
   /** Candidate-volume instrumentation for [[containmentPairs]]:
     * (n_candidates, n_after_screen) — measures how many positional-
     * filter survivors the KMV screen rejects before any full-array
     * fetch, the number that decides whether the screen pays at a
-    * given corpus shape.
+    * given corpus shape. Runs the operator's own candidate and screen
+    * stages.
     */
   private[graft] def containmentScreenStats(
       df: DataFrame, idCol: String, textCol: String, n: Int, tauPct: Int): (Long, Long) = {
-    val (sh, nDocs) = Materialize.counted(df
-      .select(col(idCol).as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
-      .withColumn("nsh", size(col("hs")).cast("long"))
-      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK)))
-    val cands = containmentCandidates(sh, nDocs, tauPct, forceSketch = None)
-    val sks = sh.select(col("id"), col("sk"), col("nsh"))
-    val row = cands
-      .join(sks.select(col("id").as("id_a"), col("sk").as("sk_a"), col("nsh").as("na0")), "id_a")
-      .join(sks.select(col("id").as("id_b"), col("sk").as("sk_b"), col("nsh").as("nb0")), "id_b")
-      .select(when(graft.functions.VecOps.kmv_contain_screen(
-        col("sk_a"), col("na0"), col("sk_b"), col("nb0"), tauPct), 1L).otherwise(0L).as("keep"))
-      .agg(count(lit(1)).as("total"), sum(col("keep")).as("kept"))
-      .collect()(0)
-    (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+    val (sh, cands) = containmentCandidates(df, idCol, textCol, n, tauPct, forceSketch = None)
+    keptCounts(kmvScreen(cands, sh, sh, tauPct))
   }
 
   /** C2: exact n-gram Jaccard pairs at >= tauPct/100 similarity.
@@ -414,9 +517,7 @@ object Dedup {
       forceSketch: Option[Boolean]
   ): DataFrame = {
     // every later stage reads the shingle sets
-    val (sh, stats) = Materialize.observed(df
-      .select(col(idCol).as("id"), array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
-      .withColumn("nsh", size(col("hs")).cast("long")),
+    val (sh, stats) = Materialize.observed(shingleSets(df, col(idCol), textCol, n),
       count(lit(1)).as("docs"), sum(col("nsh")).as("posts"))
     val posts = Option(stats("posts")).fold(0L)(_.asInstanceOf[Long])
     (if (posts <= driverMaxEdges) driverJaccardPairs(sh, tauPct, driverMaxEdges) else None)
@@ -497,38 +598,10 @@ object Dedup {
     */
   private def distributedJaccardPairs(
       sh: DataFrame, nDocs: Long, tauPct: Int, forceSketch: Option[Boolean]): DataFrame = {
-    // Prefix ordering needs each doc's shingles ranked by a
-    // CONSISTENT global (df, h) order — the theorem holds under any
-    // consistent order, df-ascending is what makes prefixes
-    // selective. Two ways to get it, picked by corpus size:
-    // small — exact df via two window passes over the posting list;
-    // large — a Count-Min df sketch from one mergeable map-side
-    // aggregation, then a per-row kernel that selects the prefix
-    // (element index = positional-filter rank) WITHOUT shuffling a
-    // single posting row. Sketch overestimates only shift candidate
-    // volume, never lose a pair; rare-vs-common separation survives
-    // ~N/width estimate noise.
-    val prefix = if (forceSketch.map(!_).getOrElse(nDocs < sketchDfMinDocs)) {
-      val posts = sh.select(col("id"), col("nsh"), explode(col("hs")).as("h"))
-      val prefLen = col("nsh") - floor((col("nsh") * tauPct + 99L) / 100L) + 1L
-      val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-      val wId = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("df"), col("h"))
-      posts
-        .withColumn("df", count(lit(1)).over(wDf))
-        .withColumn("rk", row_number().over(wId))
-        .filter(col("rk") <= prefLen)
-        .select(col("h"), col("id"), col("nsh"), col("rk"))
-    } else {
-      // the 32 MB grid ships as a BROADCAST (once per executor via the
-      // block manager), never as a plan literal in every task binary
-      val cms = sh.sparkSession.sparkContext.broadcast(
-        graft.functions.CountMin.build(
-          sh.select(explode(col("hs")).as("h")), "h", depth = 4, width = 1 << 20))
-      sh.select(col("id"), col("nsh"),
-          posexplode(graft.functions.VecOps.prefix_select(col("hs"), cms, tauPct)).as(Seq("pos", "h")))
-        .select(col("h"), col("id"), col("nsh"), (col("pos") + 1L).as("rk"))
-    }
+    // the Count-Min kernel returns only the prefix; the filter trims
+    // the window path's full ranks
+    val prefix = dfRanked(sh, nDocs, forceSketch)(graft.functions.VecOps.prefix_select(col("hs"), _, tauPct))
+      .filter(col("rk") <= prefixLen(tauPct))
     // PPJoin positional filter (Xiao et al. 2008): a pair needs
     // overlap α = ceil(τ(|A|+|B|)/(1+τ)); a collision at (sorted)
     // positions rka/rkb caps the achievable overlap at
@@ -549,15 +622,7 @@ object Dedup {
           least(col("a.nsh") - col("a.rk"), col("b.nsh") - col("b.rk")) + 1L >= alpha)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val full = sh.select(col("id"), col("hs"), col("nsh"))
-    cands
-      .join(full.select(col("id").as("id_a"), col("hs").as("hs_a"), col("nsh").as("na")), "id_a")
-      .join(full.select(col("id").as("id_b"), col("hs").as("hs_b"), col("nsh").as("nb")), "id_b")
-      .withColumn("i", graft.functions.VecOps.sorted_intersect_count(col("hs_a"), col("hs_b")))
-      .withColumn("u", col("na") + col("nb") - col("i"))
-      .filter(col("i") * 100 >= col("u") * tauPct)
-      .select(col("id_a"), col("id_b"), floor(col("i") * lit(100.0) / col("u")).as("jacc_pct"))
-      .orderBy(col("id_a"), col("id_b"))
+    exactJaccard(cands, sh, sh, tauPct)
   }
 
   /** MinHash signature: k lane-minimums over per-shingle hashes,
@@ -565,10 +630,8 @@ object Dedup {
     * HOF formulation interprets k×|shingles| lambda calls per row).
     */
   private[graft] def withSignature(df: DataFrame, idCol: String, textCol: String, k: Int, shingleN: Int): DataFrame =
-    df.select(col(idCol).as("id"), shingleHashSet(col(textCol), shingleN).as("sh0"))
-      .withColumn("hs", array_sort(array_distinct(col("sh0"))))
-      .drop("sh0")
-      .withColumn("sig", graft.functions.VecOps.minhash_sig(col("hs"), k))
+    shingleSets(df, col(idCol), textCol, shingleN)
+      .select(col("id"), col("hs"), graft.functions.VecOps.minhash_sig(col("hs"), k).as("sig"))
 
   /** Banded signature rows (id, band, bh): `bands` band-hashes per
     * signature. ONE implementation on purpose — band hashing is the
@@ -604,20 +667,7 @@ object Dedup {
     val r = k / bands
     val sigs = withSignature(df, idCol, textCol, k, shingleN).localCheckpoint()
     val banded = bandedSignatures(sigs, bands, r)
-    val cands = banded
-      .alias("a")
-      .join(banded.alias("b"), col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val hashes = sigs.select(col("id"), col("hs"))
-    cands
-      .join(hashes.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(hashes.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn("i", graft.functions.VecOps.sorted_intersect_count(col("hs_a"), col("hs_b")))
-      .withColumn("u", (size(col("hs_a")) + size(col("hs_b"))).cast("long") - col("i"))
-      .filter(col("i") * 100 >= col("u") * tauPct)
-      .select(col("id_a"), col("id_b"), floor(col("i") * lit(100.0) / col("u")).as("jacc_pct"))
-      .orderBy(col("id_a"), col("id_b"))
+    exactJaccard(sharedKeyPairs(banded, banded, Seq("band", "bh"), _ < _), sigs, sigs, tauPct)
   }
 
   /** 64-bit SimHash of the (weighted) word multiset: bit j of the
@@ -669,8 +719,8 @@ object Dedup {
 
   /** C5: embedding-cosine near-dup pairs above a threshold. Pairing is
     * blocked by `blockCol` when given (at scale: an LSH bucket or
-    * cluster id — see Similarity.lshBuckets); cosine math is done in
-    * double precision from float vectors.
+    * cluster id — see [[Similarity.tableBuckets]]); cosine math is done
+    * in double precision from float vectors.
     */
   def embeddingPairs(
       df: DataFrame,
@@ -679,9 +729,7 @@ object Dedup {
       tau: Double,
       blockCol: Option[String] = None
   ): DataFrame = {
-    val baseCols = Seq(col(idCol).as("id"), col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm")) ++
-      blockCol.map(col)
-    val base = df.select(baseCols: _*)
+    val base = vectors(df, idCol, vecCol, blockCol.map(col).toSeq: _*)
     val a = base.columns.foldLeft(base)((d, c) => d.withColumnRenamed(c, s"${c}_a")).alias("a")
     val b = base.columns.foldLeft(base)((d, c) => d.withColumnRenamed(c, s"${c}_b")).alias("b")
     val joinCond = blockCol
@@ -725,6 +773,23 @@ object Dedup {
     * past that (huge n at low tau) the right tool is multi-probe or
     * the IVF index, not more hash tables.
     */
+  def embeddingPairsLsh(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      tau: Double,
+      dim: Int,
+      planes: Int = 8,
+      tables: Int = 4
+  ): DataFrame = {
+    // the sized codes leave a candidate stream small enough that the
+    // exact cosine verifies every candidate directly — a sketch
+    // prefilter would only add a second pass over it
+    val (base, n) = Materialize.counted(vectors(df, idCol, vecCol))
+    exactCosine(lshCandidates(base, n, tau, dim, planes, tables), base, base, tau)
+      .orderBy(col("id_a"), col("id_b"))
+  }
+
   /** The (planes, tables) actually used for a corpus of `n` vectors:
     * caller values are floors. Planes grow to log2(n)+8 — expected
     * RANDOM bucket occupancy n/2^planes ≤ 1/256, so background
@@ -745,47 +810,26 @@ object Dedup {
     (planesEff, tablesEff)
   }
 
-  def embeddingPairsLsh(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
+  /** Distinct (id_a, id_b) pairs of the checkpointed vectors `base`
+    * (`n` rows carrying id and v) that share a hyperplane-LSH bucket in
+    * any table — and, given `within`, the same value of that column —
+    * under codes sized by [[lshSizing]]. A SLIM self-join: the bucketed
+    * frame carries only (id, [within,] code), so the shuffle that
+    * enumerates bucket collisions moves keys, never vectors.
+    */
+  private def lshCandidates(
+      base: DataFrame,
+      n: Long,
       tau: Double,
       dim: Int,
-      planes: Int = 8,
-      tables: Int = 4,
-      prefilterMargin: Double = 0.05
+      planes: Int,
+      tables: Int,
+      within: Option[String] = None
   ): DataFrame = {
-    // Candidate generation is a SLIM self-join: the bucketed frame
-    // carries only (id, code) — 16-byte rows — so the shuffle that
-    // enumerates bucket collisions moves keys, never vectors. Codes
-    // are sized ~log2(n)+8 bits (lshSizing), which keeps expected
-    // RANDOM bucket occupancy below one: surviving collisions are
-    // mostly genuinely-close pairs, measured 33x fewer candidates
-    // than occupancy-16 codes on a label-clustered 400k corpus. At
-    // that volume the exact double-precision cosine verifies every
-    // candidate directly — the pair stream is small enough that a
-    // sketch prefilter would only add a second pass over it. The
-    // prefilterMargin parameter is retained for API stability.
-    val _ = prefilterMargin
-    val (base, n) = Materialize.counted(df
-      .select(col(idCol).as("id"), col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm")))
     val (planesEff, tablesEff) = lshSizing(n, tau, planes, tables)
-    val bucketed = base.select(
-      col("id"),
-      explode(Similarity.tableBuckets(col("v"), dim, planesEff, tablesEff)).as("tb")
-    )
-    val cands = bucketed
-      .alias("a")
-      .join(bucketed.alias("b"), col("a.tb") === col("b.tb") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cands
-      .join(base.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("nrm_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("nrm_b")), "id_b")
-      .withColumn("cos", Similarity.dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") >= tau)
-      .select(col("id_a"), col("id_b"))
-      .orderBy(col("id_a"), col("id_b"))
+    val bucketed = base.select((col("id") +: within.toSeq.map(col)) :+
+      explode(Similarity.tableBuckets(col("v"), dim, planesEff, tablesEff)).as("tb"): _*)
+    sharedKeyPairs(bucketed, bucketed, within.toSeq :+ "tb", _ < _)
   }
 
   /** C86: [[embeddingPairsLsh]] with a SimHash-over-embeddings
@@ -818,33 +862,32 @@ object Dedup {
       tables: Int = 4,
       slackBits: Int = 6
   ): DataFrame = {
-    val hmax = math.ceil(56.0 * math.acos(tau) / math.Pi).toLong + slackBits
-    val (base, n) = Materialize.counted(df
-      .select(col(idCol).as("id"), col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm"),
-        element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk")))
-    val (planesEff, tablesEff) = lshSizing(n, tau, planes, tables)
-    val bucketed = base.select(
-      col("id"),
-      explode(Similarity.tableBuckets(col("v"), dim, planesEff, tablesEff)).as("tb")
-    )
-    val cands = bucketed
-      .alias("a")
-      .join(bucketed.alias("b"), col("a.tb") === col("b.tb") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val sketches = base.select(col("id"), col("sk"))
-    val prefiltered = cands
-      .join(sketches.select(col("id").as("id_a"), col("sk").as("sk_a")), "id_a")
-      .join(sketches.select(col("id").as("id_b"), col("sk").as("sk_b")), "id_b")
-      .filter(expr("bit_count(sk_a ^ sk_b)") <= lit(hmax))
-      .select(col("id_a"), col("id_b"))
-    prefiltered
-      .join(base.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("nrm_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("nrm_b")), "id_b")
-      .withColumn("cos", Similarity.dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") >= tau)
-      .select(col("id_a"), col("id_b"))
+    val (base, flagged) = sketchScreened(df, idCol, vecCol, tau, dim, planes, tables, slackBits)
+    exactCosine(flagged.filter(col("keep")).select(col("id_a"), col("id_b")), base, base, tau)
       .orderBy(col("id_a"), col("id_b"))
+  }
+
+  /** The checkpointed (id, v, nrm, sk) vectors of
+    * [[embeddingPairsLshSketch]] and its LSH candidates, each flagged
+    * `keep` when the two sign sketches differ in at most
+    * ⌈56·arccos(τ)/π⌉ + `slackBits` bits: (id_a, id_b, keep).
+    */
+  private def sketchScreened(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      tau: Double,
+      dim: Int,
+      planes: Int,
+      tables: Int,
+      slackBits: Int
+  ): (DataFrame, DataFrame) = {
+    val hmax = math.ceil(56.0 * math.acos(tau) / math.Pi).toLong + slackBits
+    val (base, n) = Materialize.counted(vectors(df, idCol, vecCol,
+      element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk")))
+    val flagged = bothSides(lshCandidates(base, n, tau, dim, planes, tables), base, base, "sk")
+      .select(col("id_a"), col("id_b"), (expr("bit_count(sk_a ^ sk_b)") <= lit(hmax)).as("keep"))
+    (base, flagged)
   }
 
   /** Candidate-volume instrumentation for
@@ -852,6 +895,7 @@ object Dedup {
     * the measurement that decides whether the sketch pass pays at a
     * given corpus shape (it pays when the second number is much
     * smaller: every rejected candidate saves a 2×dim-float fetch).
+    * Runs the operator's own candidate and sketch stages.
     */
   private[graft] def sketchPrefilterStats(
       df: DataFrame,
@@ -862,27 +906,8 @@ object Dedup {
       planes: Int = 8,
       tables: Int = 4,
       slackBits: Int = 6
-  ): (Long, Long) = {
-    val hmax = math.ceil(56.0 * math.acos(tau) / math.Pi).toLong + slackBits
-    val (base, n) = Materialize.counted(df
-      .select(col(idCol).as("id"), col(vecCol).as("v"),
-        element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk")))
-    val (planesEff, tablesEff) = lshSizing(n, tau, planes, tables)
-    val bucketed = base.select(
-      col("id"), explode(Similarity.tableBuckets(col("v"), dim, planesEff, tablesEff)).as("tb"))
-    val cands = bucketed.alias("a")
-      .join(bucketed.alias("b"), col("a.tb") === col("b.tb") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val sketches = base.select(col("id"), col("sk"))
-    val withSk = cands
-      .join(sketches.select(col("id").as("id_a"), col("sk").as("sk_a")), "id_a")
-      .join(sketches.select(col("id").as("id_b"), col("sk").as("sk_b")), "id_b")
-      .select(when(expr("bit_count(sk_a ^ sk_b)") <= lit(hmax), 1L).otherwise(0L).as("keep"))
-      .agg(count(lit(1)).as("total"), sum(col("keep")).as("kept"))
-      .collect()(0)
-    (withSk.getLong(0), withSk.getLong(1))
-  }
+  ): (Long, Long) =
+    keptCounts(sketchScreened(df, idCol, vecCol, tau, dim, planes, tables, slackBits)._2)
 
   /** C44: semantic dedup — the SemDeDup shape (Abbas et al. 2023,
     * arXiv:2303.09540): partition the embedding space into clusters,
@@ -915,9 +940,7 @@ object Dedup {
       planes: Int = 8,
       tables: Int = 8
   ): DataFrame = {
-    val base = df.select(
-      col(idCol).as("id"), col(vecCol).as("v"),
-      Similarity.norm(col(vecCol)).as("nrm"), col(labelCol).as("lab"))
+    val base = vectors(df, idCol, vecCol, col(labelCol).as("lab"))
     val cent = base
       .select(col("lab").as("clab"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("clab"), col("pos"))
@@ -943,25 +966,8 @@ object Dedup {
     // vectors with planes=8). Sizing by TOTAL n overshoots per-cluster
     // occupancy, which only prunes harder; the tables formula keeps
     // the tau-pair miss bound regardless.
-    val (planesEff, tablesEff) = lshSizing(nAssigned, tau, planes, tables)
-    // slim candidate self-join, exactly as in embeddingPairsLsh: the
-    // bucketed frame carries only (id, cluster, code) so the
-    // collision-enumerating shuffle moves keys, never vectors; codes
-    // long enough that background collisions vanish and the exact
-    // cosine verifies the (small) candidate stream directly.
-    val bucketed = assigned.select(
-      col("id"), col("cluster"),
-      explode(Similarity.tableBuckets(col("v"), dim, planesEff, tablesEff)).as("tb"))
-    val cands = bucketed.alias("a")
-      .join(bucketed.alias("b"),
-        col("a.cluster") === col("b.cluster") && col("a.tb") === col("b.tb") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val dropped = cands
-      .join(assigned.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("nrm_a")), "id_a")
-      .join(assigned.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("nrm_b")), "id_b")
-      .filter(Similarity.dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")) >= tau)
+    val cands = lshCandidates(assigned, nAssigned, tau, dim, planes, tables, within = Some("cluster"))
+    val dropped = exactCosine(cands, assigned, assigned, tau)
       .select(col("id_b").as("id"))
       .distinct()
     assigned
@@ -1009,7 +1015,9 @@ object Dedup {
     * driver union-find replaces the loop. The count is of RAW pairs,
     * duplicates and self-loops included, not distinct ones: union-find
     * reads the raw pair list, so raw rows are what bound driver memory,
-    * and counting them needs no distinct shuffle.
+    * and counting them needs no distinct shuffle. A local pair list
+    * (the driver tier of [[ngramJaccardPairs]]) is already in driver
+    * memory: it is read without a job and never checkpointed.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -1018,15 +1026,16 @@ object Dedup {
       maxIters: Int = 20,
       driverMaxEdges: Long = DriverMaxEdges
   ): DataFrame = {
-    // Materialize the pair list ONCE before anything references it
-    // twice: the union-with-swap below puts the pairs subtree in the
+    val edges = pairs.select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
+    val local = if (pairs.isLocal) Some(edges.collect()) else None
+    // Materialize a distributed pair list ONCE before anything references
+    // it twice: the union-with-swap below puts the pairs subtree in the
     // plan twice, and Catalyst does not dedupe common subtrees — with
     // an expensive candidate pipeline upstream (ngram/minhash joins)
     // the whole pipeline executed twice per cluster query. Pair lists
     // are near-dup-sized (tiny relative to the corpus at any scale),
     // so the checkpoint is cheap, and it counts them in the same job.
-    val (und, nPairs) = Materialize.counted(pairs
-      .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst")))
+    val (und, nPairs) = local.fold(Materialize.counted(edges))(rows => (edges, rows.length.toLong))
     // size-adaptive strategy (same spirit as AQE's join re-planning):
     // the near-dup graph holds ONLY docs that have a near-dup — tiny
     // relative to the corpus even at 100 TB — so below the threshold a
@@ -1035,13 +1044,14 @@ object Dedup {
     // distributed label-propagation loop takes over. Union-find is
     // direction/duplicate-insensitive, so it reads the raw pair list;
     // only the distributed loop needs the symmetrized distinct edges.
-    if (2L * nPairs <= driverMaxEdges) driverUnionFind(pairs.sparkSession, und)
+    if (2L * nPairs <= driverMaxEdges) driverUnionFind(pairs.sparkSession, local.getOrElse(und.collect()))
     else distributedComponents(
       und.union(und.select(col("dst").as("src"), col("src").as("dst"))).distinct().localCheckpoint(),
       maxIters)
   }
 
-  private def driverUnionFind(spark: org.apache.spark.sql.SparkSession, edges: DataFrame): DataFrame = {
+  /** Components of the (src, dst) edge rows by union-find. */
+  private def driverUnionFind(spark: org.apache.spark.sql.SparkSession, edges: Array[Row]): DataFrame = {
     import spark.implicits._
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
@@ -1051,7 +1061,7 @@ object Dedup {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    edges.select(col("src"), col("dst")).collect().foreach { row =>
+    edges.foreach { row =>
       val (a, b) = (row.getLong(0), row.getLong(1))
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
@@ -1273,19 +1283,9 @@ object Dedup {
     // arriving batch; callers probing one batch many times can
     // checkpoint the batch themselves.
     val bSigs = withSignature(batch, idCol, textCol, k, shingleN)
-    val cands = bandedSignatures(bSigs, bands, r).alias("a")
-      .join(bandedSignatures(index, bands, r).alias("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cands
-      .join(bSigs.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(index.select(col("id").as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn("i", graft.functions.VecOps.sorted_intersect_count(col("hs_a"), col("hs_b")))
-      .withColumn("u", (size(col("hs_a")) + size(col("hs_b"))).cast("long") - col("i"))
-      .filter(col("i") * 100 >= col("u") * tauPct)
-      .select(col("id_a"), col("id_b"), floor(col("i") * lit(100.0) / col("u")).as("jacc_pct"))
-      .orderBy(col("id_a"), col("id_b"))
+    val cands = sharedKeyPairs(
+      bandedSignatures(bSigs, bands, r), bandedSignatures(index, bands, r), Seq("band", "bh"), _ =!= _)
+    exactJaccard(cands, bSigs, index, tauPct)
   }
 
   /** C94 index build: (id, hs, nsh, sk) per corpus doc — the sorted
@@ -1302,11 +1302,7 @@ object Dedup {
     * [[updateContainmentIndex]]'s one anti-join, no merge step.
     */
   def buildContainmentIndex(corpus: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
-    corpus
-      .select(col(idCol).cast("long").as("id"),
-        array_sort(array_distinct(shingleHashSet(col(textCol), n))).as("hs"))
-      .withColumn("nsh", size(col("hs")).cast("long"))
-      .withColumn("sk", graft.functions.VecOps.kmv_sketch16(col("hs"), containSketchK))
+    sketchedSets(corpus, col(idCol).cast("long"), textCol, n)
 
   /** C94 probe: containment pairs (id_a = batch doc, id_b = corpus
     * doc, cont_pct) of a new batch against a persisted
@@ -1338,8 +1334,7 @@ object Dedup {
     // both candidate arms, the screen and the verify read it
     val bsh = buildContainmentIndex(batch, idCol, textCol, n).localCheckpoint()
     def prefix(f: DataFrame): DataFrame = f.select(col("id"), col("nsh"),
-      posexplode(expr(s"slice(hs, 1, cast(nsh - ((nsh * $tauPct) + 99) div 100 + 1 as int))"))
-        .as(Seq("p", "h")))
+      posexplode(slice(col("hs"), lit(1), prefixLen(tauPct).cast("int"))).as(Seq("p", "h")))
     def full(f: DataFrame): DataFrame =
       f.select(col("id"), col("nsh"), explode(col("hs")).as("h"))
     // positional bound from the smaller side alone: a qualifying pair
@@ -1359,20 +1354,7 @@ object Dedup {
     val cands = arm(bsh, index, smallIsBatch = true)
       .unionByName(arm(index, bsh, smallIsBatch = false))
       .distinct()
-    val screened = cands
-      .join(bsh.select(col("id").as("id_a"), col("sk").as("sk_a"), col("nsh").as("na0")), "id_a")
-      .join(index.select(col("id").as("id_b"), col("sk").as("sk_b"), col("nsh").as("nb0")), "id_b")
-      .filter(graft.functions.VecOps.kmv_contain_screen(
-        col("sk_a"), col("na0"), col("sk_b"), col("nb0"), tauPct))
-      .select(col("id_a"), col("id_b"))
-    screened
-      .join(bsh.select(col("id").as("id_a"), col("hs").as("hs_a"), col("nsh").as("na")), "id_a")
-      .join(index.select(col("id").as("id_b"), col("hs").as("hs_b"), col("nsh").as("nb")), "id_b")
-      .withColumn("i", graft.functions.VecOps.sorted_intersect_count(col("hs_a"), col("hs_b")))
-      .filter(col("i") * 100 >= least(col("na"), col("nb")) * tauPct)
-      .select(col("id_a"), col("id_b"),
-        floor(col("i") * lit(100.0) / least(col("na"), col("nb"))).as("cont_pct"))
-      .orderBy(col("id_a"), col("id_b"))
+    exactContainment(cands, bsh, index, tauPct, screen = true)
   }
 
   /** C94 state advance: fold a processed batch into the containment
@@ -1408,11 +1390,7 @@ object Dedup {
       planes: Int = 8,
       tables: Int = 8
   ): DataFrame =
-    corpus.select(
-      col(idCol).as("id"),
-      col(vecCol).as("v"),
-      Similarity.norm(col(vecCol)).as("nrm"),
-      Similarity.tableBuckets(col(vecCol), dim, planes, tables).as("tbs"))
+    vectors(corpus, idCol, vecCol, Similarity.tableBuckets(col(vecCol), dim, planes, tables).as("tbs"))
 
   /** C32 probe: near-dup pairs (batch_id, corpus_id) of a new batch
     * against a persisted [[buildEmbeddingIndex]] frame —
@@ -1433,18 +1411,9 @@ object Dedup {
   ): DataFrame = {
     // not checkpointed — per-batch API, see nearDupsAgainstIndex
     val b = buildEmbeddingIndex(batch, idCol, vecCol, dim, planes, tables)
-    val cands = b.select(col("id"), explode(col("tbs")).as("tb")).alias("a")
-      .join(index.select(col("id"), explode(col("tbs")).as("tb")).alias("b"),
-        col("a.tb") === col("b.tb") && col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cands
-      .join(b.select(col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("nrm_a")), "id_a")
-      .join(index.select(col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("nrm_b")), "id_b")
-      .withColumn("cos", Similarity.dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") >= tau)
-      .select(col("id_a"), col("id_b"))
-      .orderBy(col("id_a"), col("id_b"))
+    def buckets(f: DataFrame): DataFrame = f.select(col("id"), explode(col("tbs")).as("tb"))
+    val cands = sharedKeyPairs(buckets(b), buckets(index), Seq("tb"), _ =!= _)
+    exactCosine(cands, b, index, tau).orderBy(col("id_a"), col("id_b"))
   }
 
   /** C45: blocked fuzzy-match join — entity resolution of dirty
@@ -1589,13 +1558,11 @@ object Dedup {
       .join(weighted.alias("b"), col("a.term") === col("b.term") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(sum(col("a.w") * col("b.w")).as("dot"))
-    pairs
-      .join(norms.select(col("id").as("id_a"), col("n2").as("na2")), "id_a")
-      .join(norms.select(col("id").as("id_b"), col("n2").as("nb2")), "id_b")
+    bothSides(pairs, norms, norms, "n2")
       .filter(col("dot") > 0 &&
-        expr(s"CAST(dot AS DECIMAL(38,0)) * dot * 100000000 >= CAST($tauBp AS DECIMAL(38,0)) * $tauBp * na2 * nb2"))
+        expr(s"CAST(dot AS DECIMAL(38,0)) * dot * 100000000 >= CAST($tauBp AS DECIMAL(38,0)) * $tauBp * n2_a * n2_b"))
       .select(col("id_a"), col("id_b"), col("dot"),
-        expr("CAST((CAST(dot AS DECIMAL(38,0)) * dot * 100000000) DIV (CAST(na2 AS DECIMAL(38,0)) * nb2) AS BIGINT)")
+        expr("CAST((CAST(dot AS DECIMAL(38,0)) * dot * 100000000) DIV (CAST(n2_a AS DECIMAL(38,0)) * n2_b) AS BIGINT)")
           .as("cos2_x1e8"))
       .orderBy(col("id_a"), col("id_b"))
   }

@@ -377,24 +377,6 @@ object Similarity {
       .orderBy(col(idCol))
   }
 
-  /** Deterministic pseudo-random hyperplanes — delegated to
-    * [[graft.functions.VecOps.planeComponent]], the single source of
-    * the family (the `tableCodes` kernel hashes with the same values).
-    */
-  private def planeComponent(j: Int, d: Int): Double =
-    graft.functions.VecOps.planeComponent(j, d)
-
-  /** Sign-bucket id from `planes` random hyperplanes (random-hyperplane
-    * LSH: collision prob = 1 - angle/pi per plane).
-    */
-  def lshBucket(vecCol: Column, dim: Int, planes: Int): Column = {
-    val bits = (0 until planes).map { j =>
-      val plane = array((0 until dim).map(d => lit(planeComponent(j, d))): _*)
-      when(dot(vecCol, plane) >= 0, lit(1L << j)).otherwise(0L)
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** C7b: IVF (inverted-file) ANN — the FAISS-style scale path. A
     * coarse k-means quantizer (trained once) partitions the corpus
     * into `nClusters` cells; each query exhaustively scores only its

@@ -47,8 +47,8 @@ class CodegenCacheSpec extends SparkSpec {
     assert(jobs <= 8, s"$jobs jobs")
   }
 
-  test("dedup_keep_best at sf0.01, warm: at most 9 Spark jobs to build and execute") {
+  test("dedup_keep_best at sf0.01, warm: at most 7 Spark jobs to build and execute") {
     val jobs = warmJobs("dedup_keep_best")
-    assert(jobs <= 9, s"$jobs jobs")
+    assert(jobs <= 7, s"$jobs jobs")
   }
 }

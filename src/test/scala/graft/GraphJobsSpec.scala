@@ -20,8 +20,10 @@ class GraphJobsSpec extends SparkSpec {
 
   // Warm ceilings at the measured counts. HITS observes each half-step's
   // maximum on its checkpoint's job; the near-dup pairs run on the
-  // driver below the posting-entry gate.
-  for ((name, ceiling) <- Seq("graph_hits" -> 37, "dedup_ngram_jaccard" -> 3, "dedup_clusters" -> 8))
+  // driver below the posting-entry gate, and their components are found
+  // from that local list with no further job.
+  for ((name, ceiling) <- Seq(
+      "graph_hits" -> 37, "dedup_ngram_jaccard" -> 3, "dedup_clusters" -> 6, "curate_corpus" -> 8))
     test(s"$name at sf0.01, warm: at most $ceiling Spark jobs to build and execute") {
       val jobs = warmJobs(name)
       assert(jobs <= ceiling, s"$jobs jobs")

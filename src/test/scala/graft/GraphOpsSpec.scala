@@ -205,6 +205,37 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: a local pair list runs no job and equals a distributed copy of it") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(StructField("id_a", LongType), StructField("id_b", LongType)))
+    /** Random pairs over a few components, with duplicated, reversed and self-loop pairs. */
+    def pairs(seed: Int): Seq[Row] = {
+      val rnd = new scala.util.Random(seed)
+      val base = Seq.fill(40)((rnd.nextInt(8) * 100L + rnd.nextInt(6), rnd.nextInt(8) * 100L + rnd.nextInt(6)))
+        .filter { case (a, b) => a / 100 == b / 100 }
+      val noise = base.take(5) ++ base.takeRight(4).map(_.swap) ++ Seq((901L, 901L), (3L, 3L))
+      rnd.shuffle(base ++ noise).map { case (a, b) => Row(a, b) }
+    }
+    for (rows <- Seq(pairs(3), pairs(4), Seq.empty[Row])) {
+      val local = spark.createDataFrame(rows.asJava, schema)
+      val distributed = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      assert(local.isLocal && !distributed.isLocal)
+      val (fromLocal, jobs) = jobsDuring {
+        val cc = Dedup.connectedComponents(local)
+        (cc.schema, cc.collect().toSeq)
+      }
+      assert(jobs == 0, s"$jobs jobs on a local pair list")
+      val cc = Dedup.connectedComponents(distributed)
+      assert(fromLocal == ((cc.schema, cc.collect().toSeq)), s"${rows.size} pairs")
+      // above the gate a local list takes the distributed loop: the same components
+      val loop = Dedup.connectedComponents(local, driverMaxEdges = 0L).collect().sortBy(_.getLong(0)).toSeq
+      assert(loop == fromLocal._2, s"${rows.size} pairs, distributed loop")
+      assert(rows.isEmpty == fromLocal._2.isEmpty)
+    }
+  }
+
   test("kcore: the staged query graph converges within the bounded rounds") {
     // bounded-round semantics equal THE k-core only past the peel
     // depth — prove rounds-1 ≡ rounds on the gate's staged graph
