@@ -1654,7 +1654,7 @@ object SparkEntry {
       )
       Dedup.embeddingPairsLsh(
         e.unionByName(pert), "vec_id", "embedding",
-        tau = 0.99, dim = 64, planes = 8, tables = 8)
+        tau = 0.99, planes = 8, tables = 8)
     })(
       """WITH u AS (
         |  SELECT vec_id AS id, embedding AS v FROM embeddings
@@ -1682,8 +1682,8 @@ object SparkEntry {
             when(i === 0, x + lit(d0)).otherwise(x)).as("embedding"))
       val batch = shifted(0, 200000L, 0.05f).unionByName(shifted(5, 300000L, 10.0f))
       Dedup.embeddingNearDupsAgainstIndex(batch, "vec_id", "embedding",
-        Dedup.buildEmbeddingIndex(e, "vec_id", "embedding", dim = 64),
-        tau = 0.99, dim = 64)
+        Dedup.buildEmbeddingIndex(e, "vec_id", "embedding"),
+        tau = 0.99)
     })(
       // oracle = exact all-pairs over the same staged corpus; the LSH
       // blocking must lose nothing at this tau (misses ~1e-8/pair with
@@ -1751,7 +1751,7 @@ object SparkEntry {
           when(i === 0, x + lit(0.05f)).otherwise(x)).as("embedding"),
         col("label"))
       Dedup.semanticDedup(e.unionByName(pert), "vec_id", "embedding", "label",
-        tau = 0.99, dim = 64, planes = 8, tables = 8)
+        tau = 0.99, planes = 8, tables = 8)
     })(
       // exact within-cluster all-pairs oracle; the engine's LSH candidate
       // stage must lose nothing at tau 0.99 (staged twins sit at ~0.999,
@@ -1811,7 +1811,7 @@ object SparkEntry {
         |WHERE rn <= 5 ORDER BY qid, rank""".stripMargin),
     rowsOnly("sim_topk_lsh")((s, d) => {
       val e = t(s, d, "embeddings")
-      Similarity.lshTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, dim = 64, planes = 8)
+      Similarity.lshTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, planes = 8)
     }),
     rowsOnly("sim_topk_ivf")((s, d) => {
       val e = t(s, d, "embeddings")
@@ -3454,7 +3454,7 @@ object SparkEntry {
       )
       Dedup.embeddingPairsLshSketch(
         e.unionByName(pert), "vec_id", "embedding",
-        tau = 0.99, dim = 64, planes = 8, tables = 8)
+        tau = 0.99, planes = 8, tables = 8)
     })(
       // IDENTICAL oracle to dedup_embedding_blocked: the sketch pass
       // only prunes candidates; exact cosine decides membership

@@ -778,7 +778,6 @@ object Dedup {
       idCol: String,
       vecCol: String,
       tau: Double,
-      dim: Int,
       planes: Int = 8,
       tables: Int = 4
   ): DataFrame = {
@@ -786,7 +785,7 @@ object Dedup {
     // exact cosine verifies every candidate directly — a sketch
     // prefilter would only add a second pass over it
     val (base, n) = Materialize.counted(vectors(df, idCol, vecCol))
-    exactCosine(lshCandidates(base, n, tau, dim, planes, tables), base, base, tau)
+    exactCosine(lshCandidates(base, n, tau, planes, tables), base, base, tau)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -821,14 +820,13 @@ object Dedup {
       base: DataFrame,
       n: Long,
       tau: Double,
-      dim: Int,
       planes: Int,
       tables: Int,
       within: Option[String] = None
   ): DataFrame = {
     val (planesEff, tablesEff) = lshSizing(n, tau, planes, tables)
     val bucketed = base.select((col("id") +: within.toSeq.map(col)) :+
-      explode(Similarity.tableBuckets(col("v"), dim, planesEff, tablesEff)).as("tb"): _*)
+      explode(Similarity.tableBuckets(col("v"), planesEff, tablesEff)).as("tb"): _*)
     sharedKeyPairs(bucketed, bucketed, within.toSeq :+ "tb", _ < _)
   }
 
@@ -840,7 +838,7 @@ object Dedup {
     * mid-similarity pairs (dense label clusters, billions of
     * candidates), an 8-byte sign sketch rejects most of them by
     * popcount(xor) BEFORE the candidate pair joins back to its two
-    * `dim`-float vectors — the prefilter joins move 8-byte codes,
+    * float vectors — the prefilter joins move 8-byte codes,
     * the expensive vector fetch only sees sketch survivors.
     *
     * Sketch: 56 sign bits from [[graft.functions.VecOps.tableCodes]]'
@@ -857,12 +855,11 @@ object Dedup {
       idCol: String,
       vecCol: String,
       tau: Double,
-      dim: Int,
       planes: Int = 8,
       tables: Int = 4,
       slackBits: Int = 6
   ): DataFrame = {
-    val (base, flagged) = sketchScreened(df, idCol, vecCol, tau, dim, planes, tables, slackBits)
+    val (base, flagged) = sketchScreened(df, idCol, vecCol, tau, planes, tables, slackBits)
     exactCosine(flagged.filter(col("keep")).select(col("id_a"), col("id_b")), base, base, tau)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -877,15 +874,14 @@ object Dedup {
       idCol: String,
       vecCol: String,
       tau: Double,
-      dim: Int,
       planes: Int,
       tables: Int,
       slackBits: Int
   ): (DataFrame, DataFrame) = {
     val hmax = math.ceil(56.0 * math.acos(tau) / math.Pi).toLong + slackBits
     val (base, n) = Materialize.counted(vectors(df, idCol, vecCol,
-      element_at(Similarity.tableBuckets(col(vecCol), dim, 56, 2), 2).as("sk")))
-    val flagged = bothSides(lshCandidates(base, n, tau, dim, planes, tables), base, base, "sk")
+      element_at(Similarity.tableBuckets(col(vecCol), 56, 2), 2).as("sk")))
+    val flagged = bothSides(lshCandidates(base, n, tau, planes, tables), base, base, "sk")
       .select(col("id_a"), col("id_b"), (expr("bit_count(sk_a ^ sk_b)") <= lit(hmax)).as("keep"))
     (base, flagged)
   }
@@ -902,12 +898,11 @@ object Dedup {
       idCol: String,
       vecCol: String,
       tau: Double,
-      dim: Int,
       planes: Int = 8,
       tables: Int = 4,
       slackBits: Int = 6
   ): (Long, Long) =
-    keptCounts(sketchScreened(df, idCol, vecCol, tau, dim, planes, tables, slackBits)._2)
+    keptCounts(sketchScreened(df, idCol, vecCol, tau, planes, tables, slackBits)._2)
 
   /** C44: semantic dedup — the SemDeDup shape (Abbas et al. 2023,
     * arXiv:2303.09540): partition the embedding space into clusters,
@@ -936,23 +931,14 @@ object Dedup {
       vecCol: String,
       labelCol: String,
       tau: Double,
-      dim: Int,
       planes: Int = 8,
       tables: Int = 8
   ): DataFrame = {
     val base = vectors(df, idCol, vecCol, col(labelCol).as("lab"))
-    val cent = base
-      .select(col("lab").as("clab"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("clab"), col("pos"))
-      .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("n"))
-      .groupBy(col("clab"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), (col("sx") / col("n")).as("cx")))),
-        s => s.getField("cx")).as("centroid"))
     // min_by over (d2, clab) makes ties deterministic; first(v) is safe
     // because v is constant per id across the broadcast fan-out
     val (assigned, nAssigned) = Materialize.counted(base
-      .crossJoin(broadcast(cent))
+      .crossJoin(broadcast(Similarity.labelCentroids(base, "lab", "v")))
       .select(col("id"), col("v"), col("nrm"), col("clab"),
         // native sqdist kernel — see Similarity.nearestCentroid
         graft.functions.VecOps.vec_sqdist(col("v"), col("centroid")).as("d2"))
@@ -966,7 +952,7 @@ object Dedup {
     // vectors with planes=8). Sizing by TOTAL n overshoots per-cluster
     // occupancy, which only prunes harder; the tables formula keeps
     // the tau-pair miss bound regardless.
-    val cands = lshCandidates(assigned, nAssigned, tau, dim, planes, tables, within = Some("cluster"))
+    val cands = lshCandidates(assigned, nAssigned, tau, planes, tables, within = Some("cluster"))
     val dropped = exactCosine(cands, assigned, assigned, tau)
       .select(col("id_b").as("id"))
       .distinct()
@@ -1386,11 +1372,10 @@ object Dedup {
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      dim: Int,
       planes: Int = 8,
       tables: Int = 8
   ): DataFrame =
-    vectors(corpus, idCol, vecCol, Similarity.tableBuckets(col(vecCol), dim, planes, tables).as("tbs"))
+    vectors(corpus, idCol, vecCol, Similarity.tableBuckets(col(vecCol), planes, tables).as("tbs"))
 
   /** C32 probe: near-dup pairs (batch_id, corpus_id) of a new batch
     * against a persisted [[buildEmbeddingIndex]] frame —
@@ -1405,12 +1390,11 @@ object Dedup {
       vecCol: String,
       index: DataFrame,
       tau: Double,
-      dim: Int,
       planes: Int = 8,
       tables: Int = 8
   ): DataFrame = {
     // not checkpointed — per-batch API, see nearDupsAgainstIndex
-    val b = buildEmbeddingIndex(batch, idCol, vecCol, dim, planes, tables)
+    val b = buildEmbeddingIndex(batch, idCol, vecCol, planes, tables)
     def buckets(f: DataFrame): DataFrame = f.select(col("id"), explode(col("tbs")).as("tb"))
     val cands = sharedKeyPairs(buckets(b), buckets(index), Seq("tb"), _ =!= _)
     exactCosine(cands, b, index, tau).orderBy(col("id_a"), col("id_b"))

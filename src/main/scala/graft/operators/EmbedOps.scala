@@ -96,14 +96,8 @@ object EmbedOps {
       k: Int
   ): DataFrame = {
     val cands = candidates.select(col(idCol).as("cid"), VecOps.quantize_i8(col(vecCol)).as("cq"))
-    val qs = broadcast(queries.select(col(idCol).as("qid"), VecOps.quantize_i8(col(vecCol)).as("qq")))
-    Similarity.topKReduce(
-      cands
-        .join(qs, col("cid") =!= col("qid"))
-        .select(col("qid"), VecOps.vec_dot_int(col("cq"), col("qq")).cast("double").as("score"), col("cid").as("id")),
-      k,
-      scoreOut = Some("dot_q")
-    )
+    val qs = queries.select(col(idCol).as("qid"), VecOps.quantize_i8(col(vecCol)).as("qq"))
+    Similarity.scanTopK(cands, qs, VecOps.vec_dot_int(col("cq"), col("qq")).cast("double"), k, scoreOut = Some("dot_q"))
   }
 
   /** C52: top-principal-component projection by INTEGER power

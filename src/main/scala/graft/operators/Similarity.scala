@@ -41,9 +41,19 @@ class TopKAggregator(k: Int) extends Aggregator[ScoredId, Seq[ScoredId], Seq[Sco
   *
   * [[bruteForceTopK]] is the exact baseline: broadcast the query set,
   * score every (candidate, query) pair with codegen'd double-precision
-  * expressions, reduce with [[TopKAggregator]] (map-side combine).
-  * [[lshTopK]] is the scale path: random-hyperplane buckets cut the
-  * candidate set per query by ~2^planes before exact scoring.
+  * expressions, reduce with [[TopKAggregator]] (map-side combine). The
+  * ANN family cuts the candidate set before scoring: [[lshTopK]]
+  * (random-hyperplane buckets), [[ivfTopK]] and the persisted IVF
+  * indexes ([[buildIvfIndex]], [[buildIvfIndexSq8]] with int8
+  * vectors), product quantization ([[buildPqIndex]], ADC scoring),
+  * IVF-PQ ([[buildIvfPqIndex]], residual codes per cell) and the
+  * graph index ([[buildGraphIndex]], beam search).
+  *
+  * Every index is one pipeline over the private stages below: assign
+  * vectors to cells ([[assignCells]]), pick each query's cells
+  * ([[probeCells]]), score exactly ([[exactCosine]]) or by ADC, then
+  * take the top k ([[cellTopK]], [[scanTopK]], both over
+  * [[topKReduce]]).
   */
 object Similarity {
 
@@ -68,6 +78,19 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The (`p`id, `p`vec, `p`nrm) side of a scoring join: id, vector and
+    * its norm under one prefix — `c` for candidates, `q` for queries.
+    */
+  private def vecSide(df: DataFrame, idCol: String, vecCol: String, p: String): DataFrame =
+    df.select(col(idCol).as(s"${p}id"), col(vecCol).as(s"${p}vec"), norm(col(vecCol)).as(s"${p}nrm"))
+
+  /** Exact cosine of two [[vecSide]] frames joined side by side, from
+    * their stored norms: the one scoring expression of every exact
+    * path here.
+    */
+  private def exactCosine(a: String = "c", b: String = "q"): Column =
+    dot(col(s"${a}vec"), col(s"${b}vec")) / (col(s"${a}nrm") * col(s"${b}nrm"))
+
   /** C6: exact top-k neighbors (cosine) for each query vector.
     * Returns (qid, rank, neighbor_id), rank 1-based, ties broken by
     * neighbor id.
@@ -78,20 +101,8 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int
-  ): DataFrame = {
-    val cands = candidates.select(col(idCol).as("cid"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
-    val qs = broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qnrm")))
-    topKReduce(
-      cands
-        .join(qs, col("cid") =!= col("qid"))
-        .select(
-          col("qid"),
-          (dot(col("cvec"), col("qvec")) / (col("cnrm") * col("qnrm"))).as("score"),
-          col("cid").as("id")
-        ),
-      k
-    )
-  }
+  ): DataFrame =
+    scanTopK(vecSide(candidates, idCol, vecCol, "c"), vecSide(queries, idCol, vecCol, "q"), exactCosine(), k)
 
   /** C89: hybrid retrieval by RECIPROCAL-RANK FUSION (Cormack,
     * Clarke & Buettcher 2009) — the standard way production search
@@ -152,8 +163,7 @@ object Similarity {
       .filter(col("cid") =!= col("qid"))
       .groupBy(col("qid"), col("cid"))
       .agg(sum(col("tf") * expr("1000000 DIV df")).as("ls"))
-      .select(col("qid"), col("ls").cast("double").as("score"), col("cid").as("id"))
-    val lex = topKReduce(lexScored, kEach)
+    val lex = topKReduce(lexScored, col("ls").cast("double"), kEach)
     val vec = bruteForceTopK(corpusVec, queryVec, vecId, vecCol, kEach)
     def contrib(r: DataFrame) =
       r.select(col("qid"), col("neighbor_id").as("id"),
@@ -197,15 +207,20 @@ object Similarity {
       vecCol: String,
       tau: Double,
       selfExclude: Boolean = true
-  ): DataFrame = {
-    val cands = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
-    val qs = broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qnrm")))
-    cands
-      .join(qs, if (selfExclude) col("vec_id") =!= col("qid") else lit(true))
-      .filter(dot(col("cvec"), col("qvec")) / (col("cnrm") * col("qnrm")) >= tau)
-      .select(col("qid"), col("vec_id"))
+  ): DataFrame =
+    withinTau(
+      vecSide(corpus, idCol, vecCol, "c")
+        .join(broadcast(vecSide(queries, idCol, vecCol, "q")), if (selfExclude) col("cid") =!= col("qid") else lit(true)),
+      tau)
+
+  /** The (qid, vec_id) pairs of joined [[vecSide]] frames whose exact
+    * cosine is at least `tau`, in (qid, vec_id) order.
+    */
+  private def withinTau(pairs: DataFrame, tau: Double): DataFrame =
+    pairs
+      .filter(exactCosine() >= tau)
+      .select(col("qid"), col("cid").as("vec_id"))
       .orderBy(col("qid"), col("vec_id"))
-  }
 
   /** C80b: IVF-BOUNDED range search — [[rangeSearch]]'s scale path
     * for large query sets, and still EXACT: cells are pruned by the
@@ -237,47 +252,45 @@ object Similarity {
       selfExclude: Boolean = true
   ): DataFrame = {
     require(tau > -1.0 && tau <= 1.0, s"tau must be in (-1, 1], got $tau")
-    val centers = fitCentroids(corpus, vecCol, nClusters)
-    val cands = candidateCellsJoin(corpus, centers, idCol, vecCol)
-    val qs = rangeProbeFrame(cands, queries, centers, idCol, vecCol, tau)
-    cands
-      .join(broadcast(qs), Seq("cell"))
-      .filter(if (selfExclude) col("cid") =!= col("qid") else lit(true))
-      .filter(dot(col("cvec"), col("qvec")) / (col("cnrm") * col("qnrm")) >= tau)
-      .select(col("qid"), col("cid").as("vec_id"))
-      .orderBy(col("qid"), col("vec_id"))
+    val (cands, qs) = rangeProbeFrame(corpus, queries, idCol, vecCol, tau, nClusters)
+    withinTau(
+      cands
+        .join(broadcast(qs), Seq("cell"))
+        .filter(if (selfExclude) col("cid") =!= col("qid") else lit(true)),
+      tau)
   }
 
-  /** The pruned (qid, qvec, qnrm, cell) probe frame for
-    * [[rangeSearchIvf]] — package-visible so specs can assert the
-    * prune is doing work (probe pairs ≪ |Q|·nClusters) independently
-    * of result correctness. `cands` must be a cell-assigned corpus
-    * frame (cid, cvec, cnrm, cell).
+  /** [[rangeSearchIvf]]'s two sides: the cell-assigned corpus
+    * (cid, cvec, cnrm, cell) and the pruned (qid, qvec, qnrm, cell)
+    * probe frame.
     */
-  private[graft] def rangeProbeFrame(
-      cands: DataFrame,
+  private def rangeProbeFrame(
+      corpus: DataFrame,
       queries: DataFrame,
-      centers: Array[Array[Double]],
       idCol: String,
       vecCol: String,
-      tau: Double
-  ): DataFrame = {
+      tau: Double,
+      nClusters: Int
+  ): (DataFrame, DataFrame) = {
+    val centers = fitCentroids(corpus, vecCol, nClusters)
+    val cands = assignCells(corpus, Quantizer(centers, joinAssign = true), idCol, vecCol)
     val cd = centersDf(queries.sparkSession, centers)
-    def clampCos(c: Column): Column = least(lit(1.0), greatest(lit(-1.0), c))
+    // angle between a [[vecSide]] vector (prefix p) and the joined centroid
+    def centerAngle(p: String): Column =
+      acos(least(lit(1.0), greatest(lit(-1.0),
+        dot(col(s"${p}vec"), col("__center")) / (col(s"${p}nrm") * sqrt(col("__cnorm2"))))))
     val radii = cands
       .join(cd, col("cell") === col("__cell"))
-      .select(col("cell"),
-        acos(clampCos(dot(col("cvec"), col("__center")) / (col("cnrm") * sqrt(col("__cnorm2"))))).as("ang"))
+      .select(col("cell"), centerAngle("c").as("ang"))
       .groupBy(col("cell"))
       .agg(max(col("ang")).as("rad"))
-    queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qnrm"))
+    val qs = vecSide(queries, idCol, vecCol, "q")
       .crossJoin(cd)
-      .select(col("qid"), col("qvec"), col("qnrm"), col("__cell").as("cell"),
-        acos(clampCos(dot(col("qvec"), col("__center")) / (col("qnrm") * sqrt(col("__cnorm2"))))).as("qang"))
+      .select(col("qid"), col("qvec"), col("qnrm"), col("__cell").as("cell"), centerAngle("q").as("qang"))
       .join(broadcast(radii), Seq("cell"))
       .filter(col("qang") <= lit(math.acos(tau) + 1e-9) + col("rad"))
       .select(col("qid"), col("qvec"), col("qnrm"), col("cell"))
+    (cands, qs)
   }
 
   /** (qid, cell) pairs [[rangeSearchIvf]] would score, for specs that
@@ -291,12 +304,8 @@ object Similarity {
       vecCol: String,
       tau: Double,
       nClusters: Int
-  ): DataFrame = {
-    val centers = fitCentroids(corpus, vecCol, nClusters)
-    val cands = candidateCellsJoin(corpus, centers, idCol, vecCol)
-    rangeProbeFrame(cands, queries, centers, idCol, vecCol, tau)
-      .select(col("qid"), col("cell"))
-  }
+  ): DataFrame =
+    rangeProbeFrame(corpus, queries, idCol, vecCol, tau, nClusters)._2.select(col("qid"), col("cell"))
 
   /** C84: truncated-dimension retrieval recall — the Matryoshka /
     * dimension-reduction evaluation an embedding pipeline runs before
@@ -350,20 +359,9 @@ object Similarity {
     * with zero shuffle of the embedding column itself beyond its scan.
     * `min_by` over a (distance, label) struct makes ties deterministic.
     */
-  def nearestCentroid(emb: DataFrame, idCol: String, vecCol: String, labelCol: String): DataFrame = {
-    val cent = emb
-      .select(col(labelCol).as("clab"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy(col("clab"), col("pos"))
-      .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("n"))
-      .groupBy(col("clab"))
-      .agg(
-        transform(
-          array_sort(collect_list(struct(col("pos"), (col("sx") / col("n")).as("cx")))),
-          s => s.getField("cx")
-        ).as("centroid")
-      )
+  def nearestCentroid(emb: DataFrame, idCol: String, vecCol: String, labelCol: String): DataFrame =
     emb
-      .crossJoin(broadcast(cent))
+      .crossJoin(broadcast(labelCentroids(emb, labelCol, vecCol)))
       .select(
         col(idCol),
         col(labelCol).cast("long").as("label"),
@@ -375,25 +373,33 @@ object Similarity {
       .groupBy(col(idCol), col("label"))
       .agg(min_by(col("clab"), struct(col("d2"), col("clab"))).cast("long").as("pred_label"))
       .orderBy(col(idCol))
-  }
 
-  /** C7b: IVF (inverted-file) ANN — the FAISS-style scale path. A
-    * coarse k-means quantizer (trained once) partitions the corpus
-    * into `nClusters` cells; each query exhaustively scores only its
-    * `nProbes` nearest cells, i.e. ~nProbes/nClusters of the corpus.
-    * Cell assignment inlines the centroids as literals up to
-    * [[literalCentroidMax]] clusters (pure codegen projection) and
-    * switches to a broadcast centroid join above it (large-nClusters
-    * corpora). Search is a hash join on cell id + the same map-side
-    * TopKAggregator as brute force.
+  /** (clab, centroid): the per-label mean vector in double precision,
+    * from a posexplode → (label, dim) sum/count → re-assembled array —
+    * two keyed aggregations over |labels|×dim groups. Shared by
+    * [[nearestCentroid]] and [[Dedup.semanticDedup]].
     */
-  /** Trained coarse quantizers, keyed by (candidate plan, k). An IVF
-    * index is built once and queried many times; re-fitting per query
-    * would dominate. Deterministic (fixed seed), so caching cannot
-    * change results.
+  private[operators] def labelCentroids(df: DataFrame, labelCol: String, vecCol: String): DataFrame =
+    df
+      .select(col(labelCol).as("clab"), posexplode(col(vecCol)).as(Seq("pos", "x")))
+      .groupBy(col("clab"), col("pos"))
+      .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("n"))
+      .groupBy(col("clab"))
+      .agg(
+        transform(
+          array_sort(collect_list(struct(col("pos"), (col("sx") / col("n")).as("cx")))),
+          s => s.getField("cx")
+        ).as("centroid")
+      )
+
+  /** Trained coarse quantizers, keyed by (candidate plan, data
+    * fingerprint, k). An IVF index is built once and queried many
+    * times; re-fitting per query would dominate. Deterministic (fixed
+    * seed), so caching cannot change results; LRU-bounded like the
+    * schema caches, so rewritten corpora and refits do not grow it
+    * forever.
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[Array[Double]]]()
+  private val centroidCache = new graft.sources.SchemaCache[Array[Array[Double]]]
 
   private[graft] def fitCentroids(candidates: DataFrame, vecCol: String, nClusters: Int): Array[Array[Double]] = {
     // key includes a file-level fingerprint: same-path data that has
@@ -402,18 +408,17 @@ object Similarity {
     // exprIds per invocation, so a re-run of the same query never hit
     // the cache and re-fit every time (measured: the 8 PQ subspace
     // fits dominated sim_topk_pq's bench time)
-    val cacheKey = (candidates.queryExecution.logical.canonicalized.toString + "#" + vecCol +
-      "#" + Catalog.dataFingerprint(candidates.sparkSession, candidates), nClusters)
-    centroidCache.computeIfAbsent(
-      cacheKey,
-      _ => {
-        val train = candidates.select(array_to_vector(col(vecCol)).as("features"))
-        // centroids ride into the plan as literals → assignment is a
-        // pure projection, no model object on the executors
-        new KMeans().setK(nClusters).setSeed(42L).setMaxIter(10).fit(train)
-          .clusterCenters.map(_.toArray)
-      }
-    )
+    val cacheKey = candidates.queryExecution.logical.canonicalized.toString + "#" + vecCol +
+      "#" + Catalog.dataFingerprint(candidates.sparkSession, candidates) + "#k=" + nClusters
+    centroidCache.get(cacheKey).getOrElse {
+      val train = candidates.select(array_to_vector(col(vecCol)).as("features"))
+      // centroids ride into the plan as literals → assignment is a
+      // pure projection, no model object on the executors
+      val centers = new KMeans().setK(nClusters).setSeed(42L).setMaxIter(10).fit(train)
+        .clusterCenters.map(_.toArray)
+      centroidCache.put(cacheKey, centers)
+      centers
+    }
   }
 
   private def centerCol(c: Array[Double]): Column = array(c.map(lit).toIndexedSeq: _*)
@@ -434,9 +439,6 @@ object Similarity {
     transform(array_sort(scored), s => s.getField("cell"))
   }
 
-  private def cellOf(centers: Array[Array[Double]], v: Column): Column =
-    element_at(cellsByDistance(centers, v), 1)
-
   /** Above this many clusters, cell assignment switches from inlined
     * centroid literals (a pure whole-stage-codegen projection — fastest
     * at small k) to a broadcast join against a centroids frame: one
@@ -445,6 +447,22 @@ object Similarity {
     * thousands of cells.
     */
   private[graft] val literalCentroidMax = 64
+
+  /** A fitted coarse quantizer and how vectors find their cells:
+    * `joinAssign` false inlines the centroids as literals, true joins
+    * the broadcast centroid frame. Both paths compute the same
+    * squared distance, so they assign the same cells.
+    */
+  private[graft] final case class Quantizer(centers: Array[Array[Double]], joinAssign: Boolean)
+
+  private[graft] object Quantizer {
+
+    /** The one path rule: literals up to [[literalCentroidMax]] fitted
+      * centers, the broadcast join above.
+      */
+    def apply(centers: Array[Array[Double]]): Quantizer =
+      Quantizer(centers, joinAssign = centers.length > literalCentroidMax)
+  }
 
   /** Centroids as a tiny broadcastable frame (cell, center, |c|²). */
   private def centersDf(spark: org.apache.spark.sql.SparkSession, centers: Array[Array[Double]]): DataFrame = {
@@ -462,95 +480,97 @@ object Similarity {
   private def sqDistExpr(v: Column): Column =
     dot(v, v) - lit(2.0) * dot(v, col("__center")) + col("__cnorm2")
 
-  /** Join-path candidate assignment: broadcast-join every vector with
-    * all k centroids, map-side partial min collapses the k rows per
-    * vector before the (single, id-keyed) shuffle. Scales to any
-    * nClusters the fit can produce.
+  /** ONE cell-assignment implementation for build, append, refit and
+    * every index kind: two code paths drifting apart would silently
+    * mix cell geometries inside one index (appended vectors assigned
+    * by a different rule become unfindable at probe time). Returns
+    * (cid, cvec, cnrm, cell). The join path broadcast-joins every
+    * vector with all k centroids; a map-side partial min collapses the
+    * k rows per vector before the (single, id-keyed) shuffle, so it
+    * scales to any nClusters the fit can produce.
     */
-  private def candidateCellsJoin(
-      candidates: DataFrame,
-      centers: Array[Array[Double]],
-      idCol: String,
-      vecCol: String
-  ): DataFrame =
-    candidates
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
-      .crossJoin(centersDf(candidates.sparkSession, centers))
-      .withColumn("__d", sqDistExpr(col("cvec")))
-      .groupBy(col("cid"))
-      .agg(
-        first(col("cvec")).as("cvec"),
-        first(col("cnrm")).as("cnrm"),
-        min(struct(col("__d"), col("__cell"))).getField("__cell").as("cell")
-      )
+  private[graft] def assignCells(df: DataFrame, q: Quantizer, idCol: String, vecCol: String): DataFrame = {
+    val side = vecSide(df, idCol, vecCol, "c")
+    if (!q.joinAssign) side.withColumn("cell", element_at(cellsByDistance(q.centers, col("cvec")), 1))
+    else
+      side
+        .crossJoin(centersDf(df.sparkSession, q.centers))
+        .withColumn("__d", sqDistExpr(col("cvec")))
+        .groupBy(col("cid"))
+        .agg(
+          first(col("cvec")).as("cvec"),
+          first(col("cnrm")).as("cnrm"),
+          min(struct(col("__d"), col("__cell"))).getField("__cell").as("cell")
+        )
+  }
 
-  /** Join-path probe cells: nProbes nearest cells per query via one
-    * window over the (tiny) query×centroid frame.
+  /** Each query's `nProbes` nearest cells: (qid, qvec, qnrm, cell), one
+    * row per probed cell. The join path ranks the (tiny)
+    * query×centroid frame with one window.
     */
-  private def probeCellsJoin(
+  private[graft] def probeCells(
       queries: DataFrame,
-      centers: Array[Array[Double]],
+      q: Quantizer,
       idCol: String,
       vecCol: String,
       nProbes: Int
   ): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("__d"), col("__cell"))
-    queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qnrm"))
-      .crossJoin(centersDf(queries.sparkSession, centers))
-      .withColumn("__d", sqDistExpr(col("qvec")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= nProbes)
-      .select(col("qid"), col("qvec"), col("qnrm"), col("__cell").as("cell"))
+    val side = vecSide(queries, idCol, vecCol, "q")
+    if (!q.joinAssign) side.withColumn("cell", explode(slice(cellsByDistance(q.centers, col("qvec")), 1, nProbes)))
+    else nearestCells(side, q.centers, "q", nProbes).select(col("qid"), col("qvec"), col("qnrm"), col("__cell").as("cell"))
   }
 
-  private def probeCellsLiteral(
-      queries: DataFrame,
-      centers: Array[Array[Double]],
-      idCol: String,
-      vecCol: String,
-      nProbes: Int
-  ): DataFrame =
-    queries.select(
-      col(idCol).as("qid"),
-      col(vecCol).as("qvec"),
-      norm(col(vecCol)).as("qnrm"),
-      explode(slice(cellsByDistance(centers, col(vecCol)), 1, nProbes)).as("cell")
-    )
-
-  /** Probe-side search shared by the in-memory and on-disk index
-    * paths: hash-join the broadcast (qid, cell) probe frame on cell id,
-    * exact-score, map-side top-k. `qs` must have columns
-    * (qid, qvec, qnrm, cell); `cands` (cid, cvec, cnrm, cell).
+  /** The `n` nearest cells of each vector of a [[vecSide]] frame with
+    * prefix `p`, through the broadcast centroid frame: one row per
+    * (vector, cell) carrying `__cell`, the squared distance `__d` and
+    * its 1-based rank `__rn` (ties by cell id).
     */
-  private def probeSearch(cands: DataFrame, qs: DataFrame, k: Int): DataFrame =
-    topKReduce(
-      cands
-        .join(broadcast(qs), Seq("cell"))
-        .filter(col("cid") =!= col("qid"))
-        .select(
-          col("qid"),
-          (dot(col("cvec"), col("qvec")) / (col("cnrm") * col("qnrm"))).as("score"),
-          col("cid").as("id")
-        ),
-      k
-    )
+  private def nearestCells(side: DataFrame, centers: Array[Array[Double]], p: String, n: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(s"${p}id"))
+      .orderBy(col("__d"), col("__cell"))
+    side
+      .crossJoin(centersDf(side.sparkSession, centers))
+      .withColumn("__d", sqDistExpr(col(s"${p}vec")))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= n)
+  }
+
+  /** The probe tail of the IVF family: join the broadcast probe frame
+    * `qs` (one row per query and probed cell) to the cell-keyed
+    * candidates, drop self-pairs and take each query's top k by
+    * `score`.
+    */
+  private def cellTopK(cells: DataFrame, qs: DataFrame, score: Column, k: Int, scoreOut: Option[String] = None): DataFrame =
+    topKReduce(cells.join(broadcast(qs), Seq("cell")).filter(col("cid") =!= col("qid")), score, k, scoreOut)
+
+  /** The scan tail: every candidate against the broadcast queries `qs`
+    * in one corpus pass, self-pairs dropped, each query's top k by
+    * `score`.
+    */
+  private[operators] def scanTopK(
+      cands: DataFrame,
+      qs: DataFrame,
+      score: Column,
+      k: Int,
+      scoreOut: Option[String] = None
+  ): DataFrame =
+    topKReduce(cands.join(broadcast(qs), col("cid") =!= col("qid")), score, k, scoreOut)
 
   /** ONE top-k assembly for every search surface (float cosine, int8
-    * dot, LSH, IVF): scored (qid, score, id) → per-query map-side
-    * TopKAggregator reduce → (qid, rank, neighbor_id[, scoreOut]).
-    * Rank order and tie-breaking (score desc, id asc) live HERE only —
-    * three drifting copies of this pipeline is how an ANN surface
-    * grows inconsistent ranking semantics.
+    * dot, LSH, IVF): (qid, cid) pairs scored by `score` → per-query
+    * map-side TopKAggregator reduce → (qid, rank, neighbor_id[,
+    * scoreOut]). Rank order and tie-breaking (score desc, id asc) live
+    * HERE only — three drifting copies of this pipeline is how an ANN
+    * surface grows inconsistent ranking semantics.
     */
-  private[operators] def topKReduce(scored: DataFrame, k: Int, scoreOut: Option[String] = None): DataFrame = {
+  private def topKReduce(pairs: DataFrame, score: Column, k: Int, scoreOut: Option[String] = None): DataFrame = {
     val topk = udaf(new TopKAggregator(k))
     val cols =
       Seq(col("qid"), (col("pos") + 1).cast("long").as("rank"), col("col.id").as("neighbor_id")) ++
         scoreOut.map(n => col("col.score").cast("long").as(n))
-    scored
+    pairs
+      .select(col("qid"), score.as("score"), col("cid").as("id"))
       .groupBy(col("qid"))
       .agg(topk(col("score"), col("id")).as("top"))
       .select(col("qid"), posexplode(col("top")))
@@ -572,21 +592,20 @@ object Similarity {
       nProbes: Int,
       joinAssign: Boolean
   ): DataFrame = {
-    val cands =
-      if (joinAssign) candidateCellsJoin(candidates, centers, idCol, vecCol)
-      else
-        candidates.select(
-          col(idCol).as("cid"),
-          col(vecCol).as("cvec"),
-          norm(col(vecCol)).as("cnrm"),
-          cellOf(centers, col(vecCol)).as("cell")
-        )
-    val qs =
-      if (joinAssign) probeCellsJoin(queries, centers, idCol, vecCol, nProbes)
-      else probeCellsLiteral(queries, centers, idCol, vecCol, nProbes)
-    probeSearch(cands, qs, k)
+    val q = Quantizer(centers, joinAssign)
+    cellTopK(assignCells(candidates, q, idCol, vecCol), probeCells(queries, q, idCol, vecCol, nProbes), exactCosine(), k)
   }
 
+  /** C7b: IVF (inverted-file) ANN — the FAISS-style scale path. A
+    * coarse k-means quantizer (trained once) partitions the corpus
+    * into `nClusters` cells; each query exhaustively scores only its
+    * `nProbes` nearest cells, i.e. ~nProbes/nClusters of the corpus.
+    * Cell assignment inlines the centroids as literals up to
+    * [[literalCentroidMax]] clusters (pure codegen projection) and
+    * switches to a broadcast centroid join above it (large-nClusters
+    * corpora). Search is a hash join on cell id + the same map-side
+    * TopKAggregator as brute force.
+    */
   def ivfTopK(
       candidates: DataFrame,
       queries: DataFrame,
@@ -596,9 +615,8 @@ object Similarity {
       nClusters: Int = 16,
       nProbes: Int = 4
   ): DataFrame = {
-    val centers = fitCentroids(candidates, vecCol, nClusters)
-    ivfSearch(candidates, queries, centers, idCol, vecCol, k, nProbes,
-      joinAssign = nClusters > literalCentroidMax)
+    val q = Quantizer(fitCentroids(candidates, vecCol, nClusters))
+    ivfSearch(candidates, queries, q.centers, idCol, vecCol, k, nProbes, q.joinAssign)
   }
 
   /** Persist the IVF index: centroids as a tiny parquet table plus the
@@ -616,40 +634,52 @@ object Similarity {
       vecCol: String,
       nClusters: Int,
       indexDir: String
+  ): Unit =
+    buildIvf(spark, candidates, Quantizer(fitCentroids(candidates, vecCol, nClusters)), idCol, vecCol, indexDir)
+
+  /** The one IVF builder: `centroids` from the quantizer, then each
+    * candidate's assigned (cid, cvec, cnrm, cell) row through `stored`
+    * — the stored-vector projection — into `cells`, partitioned by
+    * cell.
+    */
+  private[graft] def buildIvf(
+      spark: org.apache.spark.sql.SparkSession,
+      candidates: DataFrame,
+      q: Quantizer,
+      idCol: String,
+      vecCol: String,
+      indexDir: String,
+      stored: DataFrame => DataFrame = identity
+  ): Unit = {
+    writeCentroids(spark, q.centers, indexDir)
+    stored(assignCells(candidates, q, idCol, vecCol))
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
+  }
+
+  /** The coarse quantizer as `indexDir/centroids` (cell, center), one
+    * file — the layout every IVF-family index shares.
+    */
+  private def writeCentroids(
+      spark: org.apache.spark.sql.SparkSession,
+      centers: Array[Array[Double]],
+      indexDir: String
   ): Unit = {
     import spark.implicits._
-    val centers = fitCentroids(candidates, vecCol, nClusters)
     centers.zipWithIndex.toIndexedSeq
       .map { case (c, i) => (i, c) }
       .toDF("cell", "center")
       .repartition(1)
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    assignCells(candidates, centers, idCol, vecCol)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
   }
-
-  /** ONE cell-assignment implementation for build, append and any
-    * future re-cluster: two code paths drifting apart would silently
-    * mix cell geometries inside one index (appended vectors assigned
-    * by a different rule become unfindable at probe time).
-    */
-  private def assignCells(df: DataFrame, centers: Array[Array[Double]], idCol: String, vecCol: String): DataFrame =
-    if (centers.length > literalCentroidMax) candidateCellsJoin(df, centers, idCol, vecCol)
-    else
-      df.select(
-        col(idCol).as("cid"),
-        col(vecCol).as("cvec"),
-        norm(col(vecCol)).as("cnrm"),
-        cellOf(centers, col(vecCol)).as("cell")
-      )
 
   /** The stored coarse quantizer, in cell order — shared by the
     * append and probe paths.
     */
-  private def loadCentroids(spark: org.apache.spark.sql.SparkSession, indexDir: String): Array[Array[Double]] =
-    Catalog.readParquet(spark, s"$indexDir/centroids")
-      .orderBy("cell").collect()
-      .map(_.getAs[Seq[Double]]("center").toArray)
+  private def loadQuantizer(spark: org.apache.spark.sql.SparkSession, indexDir: String): Quantizer =
+    Quantizer(
+      Catalog.readParquet(spark, s"$indexDir/centroids")
+        .orderBy("cell").collect()
+        .map(_.getAs[Seq[Double]]("center").toArray))
 
   /** Append a new batch into a persisted IVF index WITHOUT refitting:
     * the stored centroids are read back and FROZEN (cell geometry
@@ -669,7 +699,7 @@ object Similarity {
       vecCol: String,
       indexDir: String
   ): Unit =
-    assignCells(batch, loadCentroids(spark, indexDir), idCol, vecCol)
+    assignCells(batch, loadQuantizer(spark, indexDir), idCol, vecCol)
       .write.mode("append").partitionBy("cell").parquet(s"$indexDir/cells")
 
   /** The scheduled maintenance job that [[appendToIvfIndex]] defers
@@ -692,21 +722,13 @@ object Similarity {
       sampleFraction: Double = 1.0,
       seed: Long = 42L
   ): Unit = {
-    import spark.implicits._
     // the indexed vectors ARE the corpus — no external source needed
     val corpus = Catalog.readParquet(spark, s"$indexDir/cells").select(col("cid"), col("cvec"))
     val train =
       if (sampleFraction >= 1.0) corpus
       else corpus.sample(withReplacement = false, sampleFraction, seed)
-    val centers = fitCentroids(train, "cvec", nClusters)
     val tmp = s"${indexDir}__tmp"
-    centers.zipWithIndex.toIndexedSeq
-      .map { case (c, i) => (i, c) }
-      .toDF("cell", "center")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/centroids")
-    assignCells(corpus, centers, "cid", "cvec")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/cells")
+    buildIvf(spark, corpus, Quantizer(fitCentroids(train, "cvec", nClusters)), "cid", "cvec", tmp)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.sinks.PartitionedUpsert.promote(fs, tmp, indexDir)
@@ -725,12 +747,9 @@ object Similarity {
       k: Int,
       nProbes: Int = 4
   ): DataFrame = {
-    val centers = loadCentroids(spark, indexDir)
-    val cands = Catalog.readParquet(spark, s"$indexDir/cells")
-    val qs =
-      if (centers.length > literalCentroidMax) probeCellsJoin(queries, centers, idCol, vecCol, nProbes)
-      else probeCellsLiteral(queries, centers, idCol, vecCol, nProbes)
-    probeSearch(cands, qs, k)
+    val q = loadQuantizer(spark, indexDir)
+    cellTopK(Catalog.readParquet(spark, s"$indexDir/cells"),
+      probeCells(queries, q, idCol, vecCol, nProbes), exactCosine(), k)
   }
 
   /** C42: IVF-SQ8 build — the FAISS IVF+scalar-quantizer shape: cell
@@ -749,18 +768,13 @@ object Similarity {
       vecCol: String,
       nClusters: Int,
       indexDir: String
-  ): Unit = {
-    import spark.implicits._
-    val centers = fitCentroids(candidates, vecCol, nClusters)
-    centers.zipWithIndex.toIndexedSeq
-      .map { case (c, i) => (i, c) }
-      .toDF("cell", "center")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    assignCells(candidates, centers, idCol, vecCol)
-      .select(col("cid"), graft.functions.VecOps.quantize_i8(col("cvec")).as("cq"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
-  }
+  ): Unit =
+    buildIvf(spark, candidates, Quantizer(fitCentroids(candidates, vecCol, nClusters)), idCol, vecCol, indexDir,
+      sq8Cells)
+
+  /** The SQ8 stored-vector projection: (cid, cq int8 vector, cell). */
+  private[graft] def sq8Cells(assigned: DataFrame): DataFrame =
+    assigned.select(col("cid"), graft.functions.VecOps.quantize_i8(col("cvec")).as("cq"), col("cell"))
 
   /** [[buildIvfIndexSq8]] behind the build-once gate
     * ([[Catalog.buildOnce]]), keyed on the candidates' files plus
@@ -793,25 +807,29 @@ object Similarity {
       vecCol: String,
       k: Int,
       nProbes: Int = 4
-  ): DataFrame = {
-    val centers = loadCentroids(spark, indexDir)
-    val cands = Catalog.readParquet(spark, s"$indexDir/cells")
-    val qs =
-      if (centers.length > literalCentroidMax) probeCellsJoin(queries, centers, idCol, vecCol, nProbes)
-      else probeCellsLiteral(queries, centers, idCol, vecCol, nProbes)
-    topKReduce(
-      cands
-        .join(broadcast(qs.withColumn("qq", graft.functions.VecOps.quantize_i8(col("qvec")))), Seq("cell"))
-        .filter(col("cid") =!= col("qid"))
-        .select(
-          col("qid"),
-          graft.functions.VecOps.vec_dot_int(col("cq"), col("qq")).cast("double").as("score"),
-          col("cid").as("id")
-        ),
+  ): DataFrame =
+    ivfTopKIndexedSq8(spark, indexDir, loadQuantizer(spark, indexDir), queries, idCol, vecCol, k, nProbes)
+
+  /** [[ivfTopKIndexedSq8]] with the index's quantizer given, so specs
+    * can force either cell-selection path.
+    */
+  private[graft] def ivfTopKIndexedSq8(
+      spark: org.apache.spark.sql.SparkSession,
+      indexDir: String,
+      q: Quantizer,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      nProbes: Int
+  ): DataFrame =
+    cellTopK(
+      Catalog.readParquet(spark, s"$indexDir/cells"),
+      probeCells(queries, q, idCol, vecCol, nProbes).withColumn("qq", graft.functions.VecOps.quantize_i8(col("qvec"))),
+      graft.functions.VecOps.vec_dot_int(col("cq"), col("qq")).cast("double"),
       k,
       scoreOut = Some("dot_q")
     )
-  }
 
   /** C42 refined probe: SQ8 shortlist + exact re-rank — the FAISS
     * discipline the PQ path already follows ([[pqTopKRefined]]):
@@ -833,11 +851,9 @@ object Similarity {
       k: Int,
       nProbes: Int = 4,
       shortlist: Int = 50
-  ): DataFrame = {
-    val short = ivfTopKIndexedSq8(spark, indexDir, queries, idCol, vecCol, shortlist, nProbes)
-      .select(col("qid"), col("neighbor_id").as("id"))
-    exactRerank(short, corpus, queries, idCol, vecCol, k)
-  }
+  ): DataFrame =
+    exactRerank(ivfTopKIndexedSq8(spark, indexDir, queries, idCol, vecCol, shortlist, nProbes),
+      corpus, queries, idCol, vecCol, k)
 
   // ---------------------------------------------------------------
   // Product quantization (C48, Jégou et al. 2011): the memory-bound
@@ -866,11 +882,7 @@ object Similarity {
       m: Int = 8,
       kCodes: Int = 256
   ): Unit = {
-    import spark.implicits._
-    require(m >= 1 && m <= 8, s"PQ m must be in [1,8] (codes pack one byte per subspace); got $m")
-    require(kCodes >= 1 && kCodes <= 256, s"PQ kCodes must be in [1,256]; got $kCodes")
-    require(dim % m == 0, s"PQ needs dim % m == 0; got dim=$dim m=$m")
-    val subDim = dim / m
+    val subDim = pqSubDim(dim, m, kCodes)
     // L2-normalize first: ADC sums partial DOT products, so encoding
     // unit vectors makes the score approximate COSINE — the metric
     // every other similarity path here ranks by. The norm is
@@ -878,15 +890,48 @@ object Similarity {
     // call inside the lambda would re-evaluate the full dot per
     // element — the defect class fixed for dup_ngram_mass).
     val unit = normalized(candidates, idCol, vecCol)
-    // codebook TRAINING runs on a deterministic hash-sample of the
-    // corpus — the FAISS discipline (~256 training vectors per
-    // centroid saturate codebook quality; training all N is
-    // O(N·k·iters·m) for no recall gain and dominated the build at
-    // 200k vectors). ENCODING still covers every vector. xxhash64 of
-    // the id makes the sample reproducible, so codes stay
-    // deterministic across rebuilds.
+    val flat = trainPq(spark, unit, unit.count(), idCol, "__unit", m, kCodes, subDim, indexDir)
+    unit
+      .select(col(idCol).as("cid"),
+        graft.functions.VecOps.pq_encode(col("__unit"), flat, m, kCodes, subDim).as("code"))
+      .write.mode("overwrite").parquet(s"$indexDir/codes")
+  }
+
+  /** The PQ shape checks of every PQ build; returns the subspace width
+    * dim / m.
+    */
+  private def pqSubDim(dim: Int, m: Int, kCodes: Int): Int = {
+    require(m >= 1 && m <= 8, s"PQ m must be in [1,8] (codes pack one byte per subspace); got $m")
+    require(kCodes >= 1 && kCodes <= 256, s"PQ kCodes must be in [1,256]; got $kCodes")
+    require(dim % m == 0, s"PQ needs dim % m == 0; got dim=$dim m=$m")
+    dim / m
+  }
+
+  /** The one PQ trainer: per-subspace k-means codebooks over
+    * `vecCol` of `vecs` (`total` rows, ids in `idCol`), written as
+    * `codebooks` (sub, code, center) and returned flattened for the
+    * encode and ADC kernels.
+    *
+    * Training runs on a deterministic hash-sample of the vectors — the
+    * FAISS discipline (~256 training vectors per centroid saturate
+    * codebook quality; training all N is O(N·k·iters·m) for no recall
+    * gain and dominated the build at 200k vectors). ENCODING still
+    * covers every vector. xxhash64 of the id makes the sample
+    * reproducible, so codes stay deterministic across rebuilds.
+    */
+  private def trainPq(
+      spark: org.apache.spark.sql.SparkSession,
+      vecs: DataFrame,
+      total: Long,
+      idCol: String,
+      vecCol: String,
+      m: Int,
+      kCodes: Int,
+      subDim: Int,
+      indexDir: String
+  ): Array[Float] = {
+    import spark.implicits._
     val trainTarget = kCodes.toLong * 256L
-    val total = unit.count()
     // ppm threshold floored to >= 1: the integer division hits 0 once
     // total > trainTarget*10000 (~655M rows at kCodes=256), which would
     // select NOTHING and fit codebooks on an empty frame — exactly the
@@ -894,14 +939,14 @@ object Similarity {
     // slightly past that point (0.01% of the corpus >= trainTarget),
     // never under-samples.
     val trainBase =
-      if (total <= trainTarget) unit
-      else unit.filter(pmod(xxhash64(col(idCol)), lit(10000L)) <
+      if (total <= trainTarget) vecs
+      else vecs.filter(pmod(xxhash64(col(idCol)), lit(10000L)) <
         lit(math.max(1L, trainTarget * 10000L / total)))
     // per-subspace k-means over the sliced vectors — m small fits,
     // each a distinct fitCentroids cache entry
     val books: Array[Array[Array[Double]]] = (0 until m).map { s =>
       fitCentroids(
-        trainBase.select(slice(col("__unit"), s * subDim + 1, subDim).as("sub")),
+        trainBase.select(slice(col(vecCol), s * subDim + 1, subDim).as("sub")),
         "sub", kCodes)
     }.toArray
     books.zipWithIndex.flatMap { case (book, s) =>
@@ -910,11 +955,7 @@ object Similarity {
       .toDF("sub", "code", "center")
       .repartition(1)
       .write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    val flat = flatBooks(books, m, kCodes, subDim)
-    unit
-      .select(col(idCol).as("cid"),
-        graft.functions.VecOps.pq_encode(col("__unit"), flat, m, kCodes, subDim).as("code"))
-      .write.mode("overwrite").parquet(s"$indexDir/codes")
+    flatBooks(books, m, kCodes, subDim)
   }
 
   /** [[buildPqIndex]] guarded by a persisted data fingerprint: a PQ
@@ -997,17 +1038,10 @@ object Similarity {
   ): DataFrame = {
     val (flat, m, kCodes, subDim) = loadPqBooks(spark, indexDir)
     val codes = Catalog.readParquet(spark, s"$indexDir/codes")
-    val qs = broadcast(normalized(queries, idCol, vecCol).select(
+    val qs = normalized(queries, idCol, vecCol).select(
       col(idCol).as("qid"),
-      graft.functions.VecOps.pq_query_table(col("__unit"), flat, m, kCodes, subDim).as("qtab")))
-    topKReduce(
-      codes
-        .join(qs, col("cid") =!= col("qid"))
-        .select(
-          col("qid"),
-          graft.functions.VecOps.pq_adc(col("code"), col("qtab"), m, kCodes).as("score"),
-          col("cid").as("id")),
-      k)
+      graft.functions.VecOps.pq_query_table(col("__unit"), flat, m, kCodes, subDim).as("qtab"))
+    scanTopK(codes, qs, graft.functions.VecOps.pq_adc(col("code"), col("qtab"), m, kCodes), k)
   }
 
   /** C48 production probe: ADC SHORTLIST + exact re-rank — the
@@ -1028,15 +1062,13 @@ object Similarity {
       vecCol: String,
       k: Int,
       shortlist: Int = 50
-  ): DataFrame = {
-    val short = pqTopKIndexed(spark, indexDir, queries, idCol, vecCol, shortlist)
-      .select(col("qid"), col("neighbor_id").as("id"))
-    exactRerank(short, corpus, queries, idCol, vecCol, k)
-  }
+  ): DataFrame =
+    exactRerank(pqTopKIndexed(spark, indexDir, queries, idCol, vecCol, shortlist), corpus, queries, idCol, vecCol, k)
 
   /** Shared exact-cosine re-rank for every shortlist-then-refine ANN
-    * path: ONLY shortlisted ids fetch their true vectors (id-keyed
-    * join, shortlist×queries rows — never a corpus scan).
+    * path: ONLY the ids of the shortlist's (qid, rank, neighbor_id)
+    * rows fetch their true vectors (id-keyed join, shortlist×queries
+    * rows — never a corpus scan).
     */
   private def exactRerank(
       short: DataFrame,
@@ -1045,18 +1077,14 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int
-  ): DataFrame = {
-    val cvecs = corpus.select(col(idCol).as("id"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
-    val qvecs = broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qnrm")))
+  ): DataFrame =
     topKReduce(
       short
-        .join(cvecs, "id")
-        .join(qvecs, "qid")
-        .select(col("qid"),
-          (dot(col("cvec"), col("qvec")) / (col("cnrm") * col("qnrm"))).as("score"),
-          col("id")),
+        .select(col("qid"), col("neighbor_id").as("cid"))
+        .join(vecSide(corpus, idCol, vecCol, "c"), "cid")
+        .join(broadcast(vecSide(queries, idCol, vecCol, "q")), "qid"),
+      exactCosine(),
       k)
-  }
 
   /** C68: IVF-PQ index build — the full IVFADC shape (Jégou et al.
     * 2011 §V, the FAISS `IVFx,PQy` workhorse): a coarse k-means
@@ -1075,7 +1103,7 @@ object Similarity {
     * `cells` match the PQ layout ([[loadPqBooks]] reads both), cells
     * partition the (cid, code) pairs by `cell` so probe IO is bounded
     * by probed cells. Codebooks train on a deterministic hash-sample
-    * of residuals (the [[buildPqIndex]] discipline, floor ≥ 1 ppm).
+    * of residuals ([[trainPq]], floor ≥ 1 ppm).
     */
   def buildIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -1088,52 +1116,35 @@ object Similarity {
       m: Int = 8,
       kCodes: Int = 256
   ): Unit = {
-    import spark.implicits._
-    require(m >= 1 && m <= 8, s"PQ m must be in [1,8]; got $m")
-    require(kCodes >= 1 && kCodes <= 256, s"PQ kCodes must be in [1,256]; got $kCodes")
-    require(dim % m == 0, s"PQ needs dim % m == 0; got dim=$dim m=$m")
-    val subDim = dim / m
-    val unit = normalized(candidates, idCol, vecCol)
-    val centers = fitCentroids(unit.select(col("__unit")), "__unit", nClusters)
-    centers.zipWithIndex.toIndexedSeq
-      .map { case (c, i) => (i, c) }
-      .toDF("cell", "center")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val assigned =
-      if (centers.length > literalCentroidMax)
-        unit.select(col(idCol).as("cid"), col("__unit"))
-          .crossJoin(centersDf(spark, centers))
-          .withColumn("__d", sqDistExpr(col("__unit")))
-          .groupBy(col("cid"))
-          .agg(
-            first(col("__unit")).as("__unit"),
-            min(struct(col("__d"), col("__cell"))).getField("__cell").as("cell"))
-      else
-        unit.select(col(idCol).as("cid"), col("__unit"), cellOf(centers, col("__unit")).as("cell"))
+    pqSubDim(dim, m, kCodes) // fail on a bad shape before the coarse fit
+    val centers = fitCentroids(normalized(candidates, idCol, vecCol).select(col("__unit")), "__unit", nClusters)
+    buildIvfPqIndex(spark, candidates, idCol, vecCol, dim, Quantizer(centers), indexDir, m, kCodes)
+  }
+
+  /** [[buildIvfPqIndex]] over a given coarse quantizer (fitted on the
+    * unit vectors), so specs can force either assignment path.
+    */
+  private[graft] def buildIvfPqIndex(
+      spark: org.apache.spark.sql.SparkSession,
+      candidates: DataFrame,
+      idCol: String,
+      vecCol: String,
+      dim: Int,
+      q: Quantizer,
+      indexDir: String,
+      m: Int,
+      kCodes: Int
+  ): Unit = {
+    val subDim = pqSubDim(dim, m, kCodes)
+    writeCentroids(spark, q.centers, indexDir)
     // residual under the vector's own centroid — keyed broadcast join,
     // never an nClusters-branch literal expression
-    val (withRes, total) = Materialize.counted(assigned
-      .join(centersDf(spark, centers).select(col("__cell").as("cell"), col("__center")), "cell")
-      .select(col("cid"), col("cell"),
-        zip_with(col("__unit"), col("__center"), (a, b) => (a - b).cast("float")).as("__res")))
-    val trainTarget = kCodes.toLong * 256L
-    val trainBase =
-      if (total <= trainTarget) withRes
-      else withRes.filter(pmod(xxhash64(col("cid")), lit(10000L)) <
-        lit(math.max(1L, trainTarget * 10000L / total)))
-    val books: Array[Array[Array[Double]]] = (0 until m).map { s =>
-      fitCentroids(
-        trainBase.select(slice(col("__res"), s * subDim + 1, subDim).as("sub")),
-        "sub", kCodes)
-    }.toArray
-    books.zipWithIndex.flatMap { case (book, s) =>
-      book.zipWithIndex.map { case (c, ci) => (s, ci, c.toSeq) }
-    }.toIndexedSeq
-      .toDF("sub", "code", "center")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    val flat = flatBooks(books, m, kCodes, subDim)
+    val (withRes, total) = Materialize.counted(
+      assignCells(normalized(candidates, idCol, vecCol), q, idCol, "__unit")
+        .join(centersDf(spark, q.centers).select(col("__cell").as("cell"), col("__center")), "cell")
+        .select(col("cid"), col("cell"),
+          zip_with(col("cvec"), col("__center"), (a, b) => (a - b).cast("float")).as("__res")))
+    val flat = trainPq(spark, withRes, total, "cid", "__res", m, kCodes, subDim, indexDir)
     withRes
       .select(col("cid"), col("cell"),
         graft.functions.VecOps.pq_encode(col("__res"), flat, m, kCodes, subDim).as("code"))
@@ -1173,39 +1184,29 @@ object Similarity {
       vecCol: String,
       k: Int,
       nProbes: Int = 4
+  ): DataFrame =
+    ivfPqTopK(spark, indexDir, loadQuantizer(spark, indexDir), queries, idCol, vecCol, k, nProbes)
+
+  /** [[ivfPqTopK]] with the index's quantizer given, so specs can force
+    * either cell-selection path.
+    */
+  private[graft] def ivfPqTopK(
+      spark: org.apache.spark.sql.SparkSession,
+      indexDir: String,
+      q: Quantizer,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      nProbes: Int
   ): DataFrame = {
-    val centers = loadCentroids(spark, indexDir)
     val (flat, m, kCodes, subDim) = loadPqBooks(spark, indexDir)
     val cells = Catalog.readParquet(spark, s"$indexDir/cells")
-    val unitQ = normalized(queries, idCol, vecCol)
-    val probed =
-      if (centers.length > literalCentroidMax) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("__d"), col("__cell"))
-        unitQ.select(col(idCol).as("qid"), col("__unit"))
-          .crossJoin(centersDf(spark, centers))
-          .withColumn("__d", sqDistExpr(col("__unit")))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= nProbes)
-          .select(col("qid"), col("__unit"), col("__cell").as("cell"),
-            dot(col("__unit"), col("__center")).as("qc"))
-      } else
-        unitQ.select(col(idCol).as("qid"), col("__unit"),
-          explode(slice(cellsByDistance(centers, col("__unit")), 1, nProbes)).as("cell"))
-          .join(centersDf(spark, centers).select(col("__cell").as("cell"), col("__center")), "cell")
-          .select(col("qid"), col("__unit"), col("cell"),
-            dot(col("__unit"), col("__center")).as("qc"))
-    val qs = broadcast(probed.select(col("qid"), col("cell"), col("qc"),
-      graft.functions.VecOps.pq_query_table(col("__unit"), flat, m, kCodes, subDim).as("qtab")))
-    topKReduce(
-      cells
-        .join(qs, Seq("cell"))
-        .filter(col("cid") =!= col("qid"))
-        .select(
-          col("qid"),
-          (col("qc") + graft.functions.VecOps.pq_adc(col("code"), col("qtab"), m, kCodes)).as("score"),
-          col("cid").as("id")),
-      k)
+    val qs = probeCells(normalized(queries, idCol, vecCol), q, idCol, "__unit", nProbes)
+      .join(centersDf(spark, q.centers).select(col("__cell").as("cell"), col("__center")), "cell")
+      .select(col("qid"), col("cell"), dot(col("qvec"), col("__center")).as("qc"),
+        graft.functions.VecOps.pq_query_table(col("qvec"), flat, m, kCodes, subDim).as("qtab"))
+    cellTopK(cells, qs, col("qc") + graft.functions.VecOps.pq_adc(col("code"), col("qtab"), m, kCodes), k)
   }
 
   /** C68 production probe: IVF-PQ ADC shortlist + exact re-rank on
@@ -1222,11 +1223,8 @@ object Similarity {
       k: Int,
       nProbes: Int = 4,
       shortlist: Int = 50
-  ): DataFrame = {
-    val short = ivfPqTopK(spark, indexDir, queries, idCol, vecCol, shortlist, nProbes)
-      .select(col("qid"), col("neighbor_id").as("id"))
-    exactRerank(short, corpus, queries, idCol, vecCol, k)
-  }
+  ): DataFrame =
+    exactRerank(ivfPqTopK(spark, indexDir, queries, idCol, vecCol, shortlist, nProbes), corpus, queries, idCol, vecCol, k)
 
   /** Bucket ids for `tables` independent hash tables (table t uses
     * planes [t*planes, (t+1)*planes) of the deterministic family),
@@ -1235,9 +1233,8 @@ object Similarity {
     * declarative form built tables*planes literal arrays as Catalyst
     * expressions, which blows past Janino limits (and interpreted
     * fallback speed) at the 20+-bit codes clustered corpora need.
-    * Public: also the blocking key for Dedup.embeddingPairsLsh.
-    * `dim` is taken from each row's array at runtime; the parameter
-    * is kept for call-site documentation.
+    * Public: also the blocking key for Dedup.embeddingPairsLsh. The
+    * vector width is read from each row's array at runtime.
     *
     * Hard limits planes ≤ 56 / tables ≤ 255 come from the packed-Long
     * code layout ((table << 56) | signBits) and are validated HERE so
@@ -1248,7 +1245,7 @@ object Similarity {
     * cannot be probed by this code; rebuild it with
     * Dedup.buildEmbeddingIndex.
     */
-  def tableBuckets(vecCol: Column, dim: Int, planes: Int, tables: Int): Column = {
+  def tableBuckets(vecCol: Column, planes: Int, tables: Int): Column = {
     require(planes >= 1 && planes <= 56,
       s"tableBuckets: planes must be in [1, 56] (codes pack sign bits into the low 56 bits of a Long); got $planes. " +
         "For more planes use the IVF index instead of wider LSH codes.")
@@ -1270,19 +1267,13 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      dim: Int,
       planes: Int = 8,
       tables: Int = 4,
       probeHamming: Int = 2
   ): DataFrame = {
     require(probeHamming >= 0 && probeHamming <= 2, s"probeHamming in [0,2], got $probeHamming")
-    val cands = candidates
-      .select(
-        col(idCol).as("cid"),
-        col(vecCol).as("cvec"),
-        norm(col(vecCol)).as("cnrm"),
-        explode(tableBuckets(col(vecCol), dim, planes, tables)).as("tb")
-      )
+    val cands = vecSide(candidates, idCol, vecCol, "c")
+      .withColumn("tb", explode(tableBuckets(col("cvec"), planes, tables)))
     // MULTI-PROBE (Lv et al., VLDB'07 shape): a true neighbor that
     // disagrees with the query on 1–2 hyperplane signs lands in a
     // bucket at Hamming distance 1–2, so each query also probes every
@@ -1299,13 +1290,8 @@ object Similarity {
       Seq(0L) ++ (if (probeHamming >= 1) h1 else Nil) ++ (if (probeHamming >= 2) h2 else Nil)
     }
     val qs = broadcast(
-      queries
-        .select(
-          col(idCol).as("qid"),
-          col(vecCol).as("qvec"),
-          norm(col(vecCol)).as("qnrm"),
-          explode(tableBuckets(col(vecCol), dim, planes, tables)).as("qtb0")
-        )
+      vecSide(queries, idCol, vecCol, "q")
+        .withColumn("qtb0", explode(tableBuckets(col("qvec"), planes, tables)))
         .select(col("qid"), col("qvec"), col("qnrm"),
           explode(array(masks.map(m => col("qtb0").bitwiseXOR(lit(m))): _*)).as("qtb"))
     )
@@ -1313,12 +1299,8 @@ object Similarity {
       cands
         .join(qs, col("tb") === col("qtb") && col("cid") =!= col("qid"))
         .select(col("qid"), col("cid"), col("cvec"), col("qvec"), col("cnrm"), col("qnrm"))
-        .distinct() // a pair may collide in several tables; score once
-        .select(
-          col("qid"),
-          (dot(col("cvec"), col("qvec")) / (col("cnrm") * col("qnrm"))).as("score"),
-          col("cid").as("id")
-        ),
+        .distinct(), // a pair may collide in several tables; score once
+      exactCosine(),
       k
     )
   }
@@ -1326,28 +1308,6 @@ object Similarity {
   // ------------------------------------------------------------------
   // C104: graph ANN — Spark-native HNSW-class beam search
   // ------------------------------------------------------------------
-
-  /** Top-`nAssign` coarse-cell assignment with per-cell distance —
-    * the multi-assignment that gives the neighbor graph its
-    * cross-cell edges. One crossJoin against the broadcast centroid
-    * frame + a per-vector window (build-time only; probes never run
-    * this over the corpus).
-    */
-  private def assignTopCells(
-      vecs: DataFrame,
-      centers: Array[Array[Double]],
-      nAssign: Int
-  ): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cid")).orderBy(col("__d"), col("__cell"))
-    vecs
-      .crossJoin(centersDf(vecs.sparkSession, centers))
-      .withColumn("__d", sqDistExpr(col("cvec")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= nAssign)
-      .select(col("cid"), col("cvec"), col("cnrm"),
-        col("__cell").as("cell"), col("__d").as("cdist"), col("__rn").as("crank"))
-  }
 
   /** Build a degree-bounded navigable neighbor graph — the HNSW-class
     * index (Malkov & Yashunin 2016), here as a single-layer NSW
@@ -1366,16 +1326,16 @@ object Similarity {
     * 100 TB knob: more cells = smaller blocks; the graph, not the
     * blocks, carries probe-time recall.
     *
-    * Persisted layout under `indexDir`: `vectors` (cid, cvec, cnrm),
-    * `edges` (src, dst), `entries` (cid — one nearest-to-centroid
-    * vector per cell, the beam's deterministic start set).
-    */
-  /** `nClusters = 0` (the default) auto-sizes the coarse blocking to
+    * `nClusters = 0` (the default) auto-sizes the coarse blocking to
     * ~512-vector blocks (n/256 cells at 2-cell assignment, floor 16):
     * build work is Σ block² ≈ n·512, LINEAR in corpus size, and the
     * entry-point count grows with the corpus so beam navigation depth
     * stays bounded — a fixed cell count would make build quadratic
     * AND strand a fixed seed set in an ever-larger graph.
+    *
+    * Persisted layout under `indexDir`: `vectors` (cid, cvec, cnrm),
+    * `edges` (src, dst), `entries` (cid — one nearest-to-centroid
+    * vector per cell, the beam's deterministic start set).
     */
   def buildGraphIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -1386,15 +1346,16 @@ object Similarity {
       m: Int = 16,
       nClusters: Int = 0
   ): Unit = {
-    candidates
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
-      .write.mode("overwrite").parquet(s"$indexDir/vectors")
+    vecSide(candidates, idCol, vecCol, "c").write.mode("overwrite").parquet(s"$indexDir/vectors")
     val vecs = Catalog.readParquet(spark, s"$indexDir/vectors")
     val c =
       if (nClusters > 0) nClusters
       else math.max(16, (vecs.count() / 256L).toInt)
     val centers = fitCentroids(candidates, vecCol, c)
-    val assigned = assignTopCells(vecs, centers, nAssign = 2).localCheckpoint()
+    val assigned = nearestCells(vecs, centers, "c", 2)
+      .select(col("cid"), col("cvec"), col("cnrm"),
+        col("__cell").as("cell"), col("__d").as("cdist"), col("__rn").as("crank"))
+      .localCheckpoint()
     // entry points: the vector nearest its PRIMARY cell's centroid
     val we = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cell")).orderBy(col("cdist"), col("cid"))
@@ -1409,8 +1370,7 @@ object Similarity {
     val b = assigned.select(col("cell"), col("cid").as("dst"), col("cvec").as("dvec"), col("cnrm").as("dnrm"))
     val scored = a.join(b, Seq("cell"))
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        (dot(col("svec"), col("dvec")) / (col("snrm") * col("dnrm"))).as("score"))
+      .select(col("src"), col("dst"), exactCosine("s", "d").as("score"))
       .groupBy(col("src"), col("dst")).agg(max(col("score")).as("score"))
     val wd = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("score").desc, col("dst"))
@@ -1504,13 +1464,11 @@ object Similarity {
       }
     val edges = Catalog.readParquet(spark, s"$indexDir/edges")
     val entries = broadcast(Catalog.readParquet(spark, s"$indexDir/entries"))
-    val qs = broadcast(queries.select(
-      col(idCol).as("qid"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qnrm")))
+    val qs = broadcast(vecSide(queries, idCol, vecCol, "q"))
     def score(cands: DataFrame): DataFrame = cands
       .join(vecs, Seq("cid"))
       .join(qs, Seq("qid"))
-      .select(col("qid"), col("cid"),
-        (dot(col("cvec"), col("qvec")) / (col("cnrm") * col("qnrm"))).as("score"))
+      .select(col("qid"), col("cid"), exactCosine().as("score"))
     val wb = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
     def prune(cands: DataFrame): DataFrame = cands
@@ -1570,8 +1528,7 @@ object Similarity {
       rounds: Int = 0
   ): Unit = {
     val existing = Catalog.readParquet(spark, s"$indexDir/vectors").select(col("cid"))
-    val fresh = batch
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"), norm(col(vecCol)).as("cnrm"))
+    val fresh = vecSide(batch, idCol, vecCol, "c")
       .join(existing, Seq("cid"), "left_anti")
       .localCheckpoint() // materialize BEFORE appending to dirs it reads
     val nbrs = graphTopK(spark, indexDir,

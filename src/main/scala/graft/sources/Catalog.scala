@@ -71,7 +71,7 @@ object Catalog {
     else readParquet(spark, s"$dir/$name.parquet")
 
   /** Parquet schemas inferred by [[readParquet]]. */
-  private val parquetSchemas = new SchemaCache
+  private val parquetSchemas = new SchemaCache[org.apache.spark.sql.types.StructType]
 
   private[graft] def schemaCacheSize: Int = parquetSchemas.size
 

@@ -38,7 +38,7 @@ object JsonIngest {
     */
   private[graft] val SchemaCacheCapacity = SchemaCache.Capacity
 
-  private val schemaCache = new SchemaCache
+  private val schemaCache = new SchemaCache[StructType]
 
   private[graft] def schemaCacheSize: Int = schemaCache.size
 

@@ -116,10 +116,25 @@ class CatalogSchemaCacheSpec extends SparkSpec {
     assert(cached.getMessage == plain.getMessage)
   }
 
+  test("the bounded cache evicts its least recently used entry past its capacity") {
+    val cap = SchemaCache.Capacity
+    assert(cap == 64)
+    val cache = new SchemaCache[Int]
+    for (i <- 1 to cap) cache.put(s"k$i", i)
+    assert(cache.get("k1").contains(1)) // a read makes k1 the most recent
+    for (i <- cap + 1 to cap + 8) {
+      cache.put(s"k$i", i)
+      assert(cache.size <= cap)
+    }
+    assert(cache.size == cap)
+    assert(cache.get("k1").contains(1), "a recently read entry survives")
+    assert(cache.get("k2").isEmpty, "the least recently used entry goes first")
+    assert(cache.get(s"k${cap + 8}").contains(cap + 8))
+  }
+
   test("the parquet schema cache never holds more than its capacity") {
     import spark.implicits._
     val cap = SchemaCache.Capacity
-    assert(cap == 64)
     val root = tmp("graft_pqcache_cap")
     for (i <- 1 to cap + 8) {
       val path = s"$root/t$i.parquet"
@@ -128,5 +143,14 @@ class CatalogSchemaCacheSpec extends SparkSpec {
       assert(Catalog.schemaCacheSize <= cap)
     }
     assert(Catalog.schemaCacheSize == cap)
+  }
+
+  test("a second fitCentroids on the same frame runs no Spark job") {
+    val embs = Catalog.load(spark, sf, "embeddings").filter(col("vec_id") < 300)
+    val (cold, coldJobs) = jobsDuring(graft.operators.Similarity.fitCentroids(embs, "embedding", 3))
+    val (warm, warmJobs) = jobsDuring(graft.operators.Similarity.fitCentroids(embs, "embedding", 3))
+    assert(coldJobs > 0, "the first call fits k-means")
+    assert(warmJobs == 0, s"a warm fit of an unchanged frame ran $warmJobs jobs")
+    assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
   }
 }

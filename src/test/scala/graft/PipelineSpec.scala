@@ -234,7 +234,7 @@ class PipelineSpec extends SparkSpec {
     val exact = Dedup.embeddingPairs(u, "vec_id", "embedding", tau = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val blocked = Dedup
-      .embeddingPairsLsh(u, "vec_id", "embedding", tau = 0.99, dim = 64, planes = 8, tables = 8)
+      .embeddingPairsLsh(u, "vec_id", "embedding", tau = 0.99, planes = 8, tables = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.size >= 400, s"staged corpus should pair every vector with its copy, got ${exact.size}")
     assert(blocked.subsetOf(exact)) // exact verification admits no false positives
@@ -269,7 +269,7 @@ class PipelineSpec extends SparkSpec {
       col("label"))
     val u = e.unionByName(pert)
     val res = Dedup.semanticDedup(u, "vec_id", "embedding", "label",
-      tau = 0.99, dim = 64, planes = 8, tables = 8)
+      tau = 0.99, planes = 8, tables = 8)
     val rows = res.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val n = u.count()
     assert(rows.length == n, "one decision per input doc")
@@ -325,7 +325,7 @@ class PipelineSpec extends SparkSpec {
     val queries = embs.filter(col("vec_id") < 10)
     val brute = Similarity.bruteForceTopK(embs, queries, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val lsh = Similarity.lshTopK(embs, queries, "vec_id", "embedding", 5, dim = 64, planes = 4, tables = 4)
+    val lsh = Similarity.lshTopK(embs, queries, "vec_id", "embedding", 5, planes = 4, tables = 4)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(lsh.nonEmpty)
     val recall = (brute intersect lsh).size.toDouble / brute.size
@@ -631,6 +631,38 @@ class PipelineSpec extends SparkSpec {
     assert(literal.nonEmpty && literal == run(joinAssign = true))
   }
 
+  test("every IVF consumer agrees on the literal and join assignment paths") {
+    // the SQ8 build and the IVF-PQ residual build and probe take the
+    // join path only above literalCentroidMax cells: force both paths
+    // through the package-private stages over one set of centers
+    import Similarity.Quantizer
+    val queries = embs.filter(col("vec_id") < 10)
+    val centers = Similarity.fitCentroids(embs, "embedding", 8)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def tmp(prefix: String): String = java.nio.file.Files.createTempDirectory(prefix).toString
+    def samePaths(what: String)(f: Quantizer => Seq[String]): Unit = {
+      val literal = f(Quantizer(centers, joinAssign = false))
+      val joined = f(Quantizer(centers, joinAssign = true))
+      assert(literal.nonEmpty, what)
+      val same = joined == literal
+      assert(same, s"$what: first literal-path row the join path lacks: ${literal.diff(joined).headOption}")
+    }
+    samePaths("cells")(q => rows(Similarity.assignCells(embs, q, "vec_id", "embedding")))
+    samePaths("probed cells")(q => rows(Similarity.probeCells(queries, q, "vec_id", "embedding", 4)))
+    samePaths("SQ8 cells and top-k") { q =>
+      val dir = tmp("graft_sq8_paths")
+      Similarity.buildIvf(spark, embs, q, "vec_id", "embedding", dir, Similarity.sq8Cells)
+      rows(spark.read.parquet(s"$dir/cells")) ++
+        rows(Similarity.ivfTopKIndexedSq8(spark, dir, q, queries, "vec_id", "embedding", 5, 4))
+    }
+    samePaths("IVF-PQ codes and top-k") { q =>
+      val dir = tmp("graft_ivfpq_paths")
+      Similarity.buildIvfPqIndex(spark, embs, "vec_id", "embedding", 64, q, dir, 8, 64)
+      rows(spark.read.parquet(s"$dir/cells")) ++
+        rows(Similarity.ivfPqTopK(spark, dir, q, queries, "vec_id", "embedding", 5, 4))
+    }
+  }
+
   test("persisted IVF index returns the same results as the in-memory path") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
     Similarity.buildIvfIndex(spark, embs, "vec_id", "embedding", nClusters = 8, dir)
@@ -905,7 +937,7 @@ class PipelineSpec extends SparkSpec {
 
   test("embedding index probe: persisted index round-trips to identical pairs") {
     val e = embs.select(col("vec_id"), col("embedding"))
-    val live = Dedup.buildEmbeddingIndex(e, "vec_id", "embedding", dim = 64)
+    val live = Dedup.buildEmbeddingIndex(e, "vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft_embidx").toString + "/idx"
     live.write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)
@@ -913,7 +945,7 @@ class PipelineSpec extends SparkSpec {
       (col("vec_id") + 100000L).as("vec_id"),
       transform(col("embedding"), (x, i) => when(i === 0, x + lit(0.05f)).otherwise(x)).as("embedding"))
     def pairs(idx: org.apache.spark.sql.DataFrame) =
-      Dedup.embeddingNearDupsAgainstIndex(batch, "vec_id", "embedding", idx, tau = 0.99, dim = 64)
+      Dedup.embeddingNearDupsAgainstIndex(batch, "vec_id", "embedding", idx, tau = 0.99)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val a = pairs(live)
     assert(a == pairs(stored), "parquet round-trip must not change the probe result")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Driver-side recall measurement for the five rows-only ANN entries
+/** Driver-side recall measurement for the six rows-only ANN entries
   * (test scope, not shipped): runs each approximate `SparkEntry` query
   * and `sim_topk_brute` on the SAME data, computes recall@k —
   * |approx ∩ brute| / |brute| over (qid, neighbor_id) sets — and
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * The ScaleSpec property tests assert these same floors; this
   * artifact makes the numbers driver-checkable like CORRECTNESS.
   *
-  * Round 10: besides the five SHIPPED-DEFAULT rows (exactly what the
+  * Round 10: besides the six SHIPPED-DEFAULT rows (exactly what the
   * SparkEntry queries run), each index gets a small recall-vs-params
   * CURVE — the probe-side dials (probed buckets / cells / shortlist)
   * at 2-3 settings around the default, so the recall/cost tradeoff is
@@ -35,7 +35,7 @@ object RecallMain {
     val ivfPqDir = s"target/ivfpq_$safe"
     val sq8Dir = s"target/ivf_sq8_$safe"
     def lsh(probe: Int) = (s: SparkSession, e: DataFrame) =>
-      operators.Similarity.lshTopK(e, qN(e), "vec_id", "embedding", k = 5, dim = 64,
+      operators.Similarity.lshTopK(e, qN(e), "vec_id", "embedding", k = 5,
         planes = 8, tables = 4, probeHamming = probe)
     def ivf(probes: Int) = (s: SparkSession, e: DataFrame) =>
       operators.Similarity.ivfTopK(e, qN(e), "vec_id", "embedding", k = 5,

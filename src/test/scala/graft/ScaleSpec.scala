@@ -34,7 +34,7 @@ class ScaleSpec extends SparkSpec {
     // 4 tables suffice here: staged twins sit at cos >= 0.999 (angle
     // ~0.045 rad), per-table collision ~0.89, miss ~ (1-0.89)^4 ≈ 1e-4
     def lshOnce() = time {
-      Dedup.embeddingPairsLsh(vecs, "vec_id", "embedding", tau = 0.99, dim = 32, planes = 8, tables = 4)
+      Dedup.embeddingPairsLsh(vecs, "vec_id", "embedding", tau = 0.99, planes = 8, tables = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     // min-of-2 on the small number only: a noisy-neighbor hiccup on a
@@ -79,17 +79,17 @@ class ScaleSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val tau = 0.99
     val (viaLsh, lshSec) = time {
-      asPairs(Dedup.embeddingPairsLsh(corpus, "vec_id", "embedding", tau, dim, planes = 8, tables = 8))
+      asPairs(Dedup.embeddingPairsLsh(corpus, "vec_id", "embedding", tau, planes = 8, tables = 8))
     }
     val (viaSketch, skSec) = time {
-      asPairs(Dedup.embeddingPairsLshSketch(corpus, "vec_id", "embedding", tau, dim, planes = 8, tables = 8))
+      asPairs(Dedup.embeddingPairsLshSketch(corpus, "vec_id", "embedding", tau, planes = 8, tables = 8))
     }
     assert(viaSketch == viaLsh,
       s"sketch path drifted: missing=${viaLsh.diff(viaSketch).take(5)} extra=${viaSketch.diff(viaLsh).take(5)}")
     // every staged twin recovered through the sketch gate
     val twinPairs = (0L until 20000L by 20L).map(i => (i, i + 100000L)).toSet
     assert(twinPairs.subsetOf(viaSketch), s"missing twins: ${twinPairs.diff(viaSketch).take(5)}")
-    val (total, kept) = Dedup.sketchPrefilterStats(corpus, "vec_id", "embedding", tau, dim, planes = 8, tables = 8)
+    val (total, kept) = Dedup.sketchPrefilterStats(corpus, "vec_id", "embedding", tau, planes = 8, tables = 8)
     info(f"lsh $lshSec%.1fs, sketch $skSec%.1fs; candidates $total -> $kept after sketch (${100.0 * kept / total}%.1f%% kept)")
     // the measurement the operator exists for: most mid-similarity
     // candidates never reach the vector fetch
@@ -108,7 +108,7 @@ class ScaleSpec extends SparkSpec {
         .reduce(_ + _))
     val (rows, sec) = time {
       Dedup.semanticDedup(labeled, "vec_id", "embedding", "label",
-        tau = 0.99, dim = 32, planes = 8, tables = 8)
+        tau = 0.99, planes = 8, tables = 8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     }
     info(f"semanticDedup over 20k vectors x 64 clusters: $sec%.1fs")
@@ -215,7 +215,7 @@ class ScaleSpec extends SparkSpec {
     // staged dup ids: their nearest neighbor is known exactly (the base)
     val queries = vecs.filter(pmod(col("vec_id"), lit(20L)) === 19L && col("vec_id") < 400L)
     val (lsh, sec) = time {
-      Similarity.lshTopK(vecs, queries, "vec_id", "embedding", k = 1, dim = 32, planes = 8, tables = 8)
+      Similarity.lshTopK(vecs, queries, "vec_id", "embedding", k = 1, planes = 8, tables = 8)
         .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     }
     info(f"LSH ANN over 100k vectors, ${lsh.size} queries: $sec%.1fs")

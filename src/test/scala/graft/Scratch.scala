@@ -103,7 +103,7 @@ object Scratch {
       val (planesEff, tablesEff) = Dedup.lshSizing(n, 0.99, 8, 8)
       println(s"[scratch] n=$n planes=$planesEff tables=$tablesEff")
       val bucketed = all.select(col("vec_id").as("id"),
-        explode(Similarity.tableBuckets(col("embedding"), 64, planesEff, tablesEff)).as("tb"))
+        explode(Similarity.tableBuckets(col("embedding"), planesEff, tablesEff)).as("tb"))
       val occ = bucketed.groupBy("tb").agg(count(lit(1)).as("c"))
       occ.agg(sum(expr("c*(c-1)/2")).as("cand_pairs"), max("c").as("max_bucket"),
         count(lit(1)).as("n_buckets")).show()
