@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -392,9 +393,10 @@ object Similarity {
         ).as("centroid")
       )
 
-  /** Trained coarse quantizers, keyed by (candidate plan, data
-    * fingerprint, k). An IVF index is built once and queried many
-    * times; re-fitting per query would dominate. Deterministic (fixed
+  /** Trained coarse quantizers, keyed by (candidate plan, the RDD ids
+    * of its checkpointed leaves, data fingerprint, k). An IVF index is
+    * built once and queried many times; re-fitting per query would
+    * dominate. Deterministic (fixed
     * seed), so caching cannot change results; LRU-bounded like the
     * schema caches, so rewritten corpora and refits do not grow it
     * forever.
@@ -407,8 +409,12 @@ object Similarity {
     // CANONICALIZED plan, not toString: raw plan strings embed fresh
     // exprIds per invocation, so a re-run of the same query never hit
     // the cache and re-fit every time (measured: the 8 PQ subspace
-    // fits dominated sim_topk_pq's bench time)
-    val cacheKey = candidates.queryExecution.logical.canonicalized.toString + "#" + vecCol +
+    // fits dominated sim_topk_pq's bench time). A checkpointed or
+    // RDD-backed leaf prints only its columns and has no files, so its
+    // RDD id stands in for its data
+    val plan = candidates.queryExecution.logical
+    val rddIds = plan.collectLeaves().collect { case r: LogicalRDD => r.rdd.id }
+    val cacheKey = plan.canonicalized.toString + "#" + vecCol + "#" + rddIds.mkString(",") +
       "#" + Catalog.dataFingerprint(candidates.sparkSession, candidates) + "#k=" + nClusters
     centroidCache.get(cacheKey).getOrElse {
       val train = candidates.select(array_to_vector(col(vecCol)).as("features"))

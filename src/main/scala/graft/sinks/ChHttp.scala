@@ -260,16 +260,19 @@ object ChSource {
       password: String = "",
       where: Option[String] = None
   ): DataFrame =
-    readWithCount(spark, endpoint, db, table, batchSize, orderBy, user, password, where)._1
+    readWithCount(spark, endpoint, db, table, new ChHttpClient(endpoint, user, password).sparkSchema(db, table),
+      batchSize, orderBy, user, password, where)._1
 
-  /** [[read]] plus the row COUNT the driver fetched to lay out the
-    * pages: a caller can tell an empty read without running a job.
+  /** [[read]] over the `schema` the caller already DESCRIBEd, plus the
+    * row COUNT the driver fetched to lay out the pages: a caller can
+    * tell an empty read without running a job.
     */
   def readWithCount(
       spark: SparkSession,
       endpoint: String,
       db: String,
       table: String,
+      schema: StructType,
       batchSize: Int,
       orderBy: Option[String] = None,
       user: String = "",
@@ -278,7 +281,6 @@ object ChSource {
   ): (DataFrame, Long) = {
     require(batchSize > 0, "batchSize must be positive")
     val driverClient = new ChHttpClient(endpoint, user, password)
-    val schema = driverClient.sparkSchema(db, table)
     val cond = where.map(w => s" WHERE $w").getOrElse("")
     val total = driverClient.query(s"SELECT COUNT(*) FROM `$db`.`$table`$cond").head(0).toLong
     val offsets = 0L.until(total, batchSize.toLong)

@@ -1,5 +1,10 @@
 package graft.sync
 
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+
+import scala.util.Try
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -29,6 +34,14 @@ import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest, MongoSource}
   * keys `_sync_state`, and its read. Their deployment loops likewise
   * share one poll loop ([[runContinuous]]).
   *
+  * The objects of one sweep share nothing, so a sweep syncs them
+  * concurrently on a pool of at most one thread per driver core (and
+  * never more threads than objects), shut down before the sweep
+  * returns: one object's round trips, cursor reads and Spark jobs
+  * overlap another's. Each object keeps its own request order and its
+  * own commit; results come back in listing order. A sweep over one
+  * object runs on the calling thread.
+  *
   * Auto mode per index (es_to_bytehouse.py:843-868 + 429-460): no
   * `_sync_state` row → full sync (match_all); watermarks present →
   * incremental with the insert-or-update OR-query (create-time range
@@ -46,8 +59,10 @@ import graft.sources.{EsRestClient, EsSourceConfig, JsonIngest, MongoSource}
   * Scale note: the ES and Mongo reads buffer every fetched document on
   * the driver before Spark sees a row, so driver memory bounds the
   * batch one index or collection brings to a pass (the ClickHouse read
-  * is paged in tasks). Everything after the read runs in tasks: the
-  * fetched documents become an RDD-backed frame
+  * is paged in tasks); with the objects of a sweep in flight together,
+  * up to one such buffer per driver core is live at once. Everything
+  * after the read runs in tasks: the fetched documents become an
+  * RDD-backed frame
   * ([[EsRestClient.docFrame]]), so JSON parsing, flattening and
   * conforming run inside the write job, and every Spark partition
   * drives its own HTTP batch executor, so target throughput scales
@@ -87,6 +102,8 @@ object WireSync {
   /** One auto-mode sweep over every index matching the configured
     * pattern — the loop body of the reference's continuous mode.
     * Call again after the source moves to get the incremental pass.
+    * Every index runs to its end, each committing on its own; then the
+    * first failure in listing order propagates.
     */
   def run(
       spark: SparkSession,
@@ -246,13 +263,18 @@ object WireSync {
       targetDb, batchSize, insertBatchSize).runContinuous(maxPasses, intervalMs, onPassEnd)
 
   /** One variant, its target bootstrapped: the objects a sweep syncs
-    * (`listing` names them in the `Left` of a failed listing) and the
-    * pass over one object.
+    * (`listing` names them in the `Left` of a failed listing), the
+    * pass over one object, and how many objects a sweep syncs at once
+    * (`width`, one per driver core; specs pin 1 to get a sequential
+    * request order).
     */
-  private case class Variant(listing: String, objects: () => Seq[String], sync: String => PassResult) {
+  private[graft] case class Variant(listing: String, objects: () => Seq[String], sync: String => PassResult,
+      width: Int = Runtime.getRuntime.availableProcessors) {
 
-    /** One sweep; the first failure propagates. */
-    def run(): Seq[PassResult] = objects().map(sync)
+    /** One sweep. Every object runs to its end; then the first failure,
+      * in listing order, propagates.
+      */
+    def run(): Seq[PassResult] = sweep(objects())(o => Try(sync(o))).map(_.get)
 
     /** The deployment loop of [[WireSync.runContinuous]]: every pass
       * lists the objects and syncs each one in isolation.
@@ -263,11 +285,31 @@ object WireSync {
         onPassEnd: (Int, Seq[Either[(String, String), PassResult]]) => Unit
     ): Seq[Seq[Either[(String, String), PassResult]]] =
       SyncRunner.poll(maxPasses, intervalMs, onPassEnd) { _ =>
-        isolated(listing)(objects()).fold(e => Seq(Left(e)), _.map(o => isolated(o)(sync(o))))
+        isolated(listing)(objects()).fold(e => Seq(Left(e)), sweep(_)(o => isolated(o)(sync(o))))
       }
 
     private def isolated[A](name: String)(f: => A): Either[(String, String), A] =
-      try Right(f) catch { case scala.util.control.NonFatal(e) => Left((name, e.toString)) }
+      try Right(f) catch { case NonFatal(e) => Left((name, e.toString)) }
+
+    /** `f` over `objs`, results in listing order: on a fixed pool of
+      * `width` threads, never more than there are objects, or on the
+      * calling thread when that is one. Every call has ended and the
+      * pool is gone when this returns.
+      */
+    private def sweep[A](objs: Seq[String])(f: String => A): Seq[A] = {
+      val n = math.min(width, objs.size)
+      if (n <= 1) objs.map(f)
+      else {
+        val pool = Executors.newFixedThreadPool(n, (r: Runnable) => {
+          val t = new Thread(r, s"graft-sweep-$listing")
+          t.setDaemon(true)
+          t
+        })
+        try objs.map(o => pool.submit(() => f(o))).map(_.get())
+        catch { case e: ExecutionException => throw e.getCause }
+        finally { pool.shutdown(); pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS) }
+      }
+    }
   }
 
   /** How a variant keys `_sync_state`: the watermark query (its row
@@ -349,7 +391,7 @@ object WireSync {
     * Spark jobs: schema inference over the batch, then the write, which
     * parses, flattens and conforms in its tasks.
     */
-  private def esVariant(
+  private[graft] def esVariant(
       spark: SparkSession,
       es: EsRestClient,
       esCfg: EsSourceConfig,
@@ -431,7 +473,7 @@ object WireSync {
     * tables once. One table is typed DDL → [[syncObject]] over the paged
     * read, whose incremental WHERE rides every COUNT and page query.
     */
-  private def chVariant(
+  private[graft] def chVariant(
       spark: SparkSession,
       srcEndpoint: String,
       srcDb: String,
@@ -459,7 +501,7 @@ object WireSync {
       syncObject(srcTable, tgt, targetDb, chExecutorFactory, insertBatchSize, timeField, None,
         tableState(targetDb, srcTable)) { (isFull, lastSync, _) =>
         val where = if (isFull) None else timeField.map(t => s"`$t` > ${ChHttp.sqlLiteral(lastSync)}")
-        val (df, total) = ChSource.readWithCount(spark, srcEndpoint, srcDb, srcTable,
+        val (df, total) = ChSource.readWithCount(spark, srcEndpoint, srcDb, srcTable, schema,
           batchSize, orderBy = Some(orderKey), where = where)
         if (total == 0L) None
         else Some((df, timeField.map(t => date_format(col(t), wmFormat.get)).toSeq))
@@ -475,7 +517,7 @@ object WireSync {
     * cursor drain; the target DDL follows the fields the batch surfaced
     * (already sanitized by [[MongoSource.flattenDoc]]).
     */
-  private def mongoVariant(
+  private[graft] def mongoVariant(
       spark: SparkSession,
       mongoHost: String,
       mongoPort: Int,

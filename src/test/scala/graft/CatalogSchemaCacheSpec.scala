@@ -153,4 +153,24 @@ class CatalogSchemaCacheSpec extends SparkSpec {
     assert(warmJobs == 0, s"a warm fit of an unchanged frame ran $warmJobs jobs")
     assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
   }
+
+  test("fitCentroids and IVF-PQ codebooks over two different checkpointed corpora fit each corpus") {
+    // a checkpoint prints only its columns and has no files, so only
+    // its RDD id tells the two corpora apart
+    val embs = Catalog.load(spark, sf, "embeddings")
+    val corpora = Seq(embs.filter(col("vec_id") < 250), embs.filter(col("vec_id") >= 250))
+    val fits = corpora.map(c => graft.operators.Similarity.fitCentroids(
+      c.select("embedding").localCheckpoint(), "embedding", 3).map(_.toSeq).toSeq)
+    val sameFit = fits(0) == fits(1)
+    assert(!sameFit, "the second corpus reused the first corpus's centroids")
+    // the IVF-PQ build trains its codebooks on a checkpoint of residuals
+    val books = corpora.map { c =>
+      val dir = tmp("graft_ivfpq_books")
+      graft.operators.Similarity.buildIvfPqIndex(spark, c, "vec_id", "embedding", dim = 64,
+        nClusters = 4, indexDir = dir, m = 8, kCodes = 16)
+      rows(spark.read.parquet(s"$dir/codebooks"))
+    }
+    val sameBooks = books(0) == books(1)
+    assert(!sameBooks, "the second build reused the first build's codebooks")
+  }
 }

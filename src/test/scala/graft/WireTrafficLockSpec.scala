@@ -24,6 +24,10 @@ import graft.sync.WireSync
   * composition follows the Spark partitioning, so the transcript holds
   * for [[SparkSpec]]'s `local[4]` session. On a mismatch the actual
   * transcript is written to `target/wire_traffic_lock.actual.txt`.
+  *
+  * Every sweep runs at width 1, one object after another, so each
+  * object's requests form one block in listing order;
+  * `WireConcurrencySpec` checks the default width against that order.
   */
 class WireTrafficLockSpec extends SparkSpec {
 
@@ -97,15 +101,14 @@ class WireTrafficLockSpec extends SparkSpec {
       val tgt = new ChHttpClient(ch.endpoint)
       val ep = ch.endpoint
       val logs = Seq(esLog(es), chLog("ch", ch, dataInsert))
-      WireSync.runContinuous(spark, client, cfg, tgt, () => new ChHttpBatchExecutor(ep),
-        targetDb = "wh", maxPasses = 4, insertBatchSize = 4, usePit = usePit,
+      def variant() = WireSync.esVariant(spark, client, cfg, tgt, () => new ChHttpBatchExecutor(ep),
+        targetDb = "wh", insertBatchSize = 4, usePit = usePit).copy(width = 1)
+      variant().runContinuous(maxPasses = 4, intervalMs = 0L,
         onPassEnd = (p, r) => {
           record(s"$label pass $p", logs, r)
           between.get(p).foreach(_(es, ch))
         })
-      val r = WireSync.run(spark, client, cfg, tgt, () => new ChHttpBatchExecutor(ep),
-        targetDb = "wh", insertBatchSize = 4, usePit = usePit)
-      record(s"$label run", logs, r.map(Right(_)))
+      record(s"$label run", logs, variant().run().map(Right(_)))
     } finally { es.stop(); ch.stop() }
   }
 
@@ -156,9 +159,9 @@ class WireTrafficLockSpec extends SparkSpec {
       val tgt = new ChHttpClient(ch.endpoint)
       val ep = ch.endpoint
       val logs = Seq(mongoLog(mongo), chLog("ch", ch, dataInsert))
-      WireSync.runContinuousMongo(spark, host, port, "shop", Seq("items", "logs"), tgt,
-        () => new ChHttpBatchExecutor(ep), targetDb = "wh", maxPasses = 3, batchSize = 4,
-        insertBatchSize = 4,
+      def variant() = WireSync.mongoVariant(spark, host, port, "shop", Seq("items", "logs"), tgt,
+        () => new ChHttpBatchExecutor(ep), targetDb = "wh", batchSize = 4, insertBatchSize = 4).copy(width = 1)
+      variant().runContinuous(maxPasses = 3, intervalMs = 0L,
         onPassEnd = (p, r) => {
           record(s"mongo pass $p", logs, r)
           if (p == 1) {
@@ -166,9 +169,7 @@ class WireTrafficLockSpec extends SparkSpec {
               Seq(mdoc(10), mdoc(11, Some("bonus")), mdoc(12)))
           }
         })
-      val r = WireSync.runMongo(spark, host, port, "shop", Seq("items", "logs"), tgt,
-        () => new ChHttpBatchExecutor(ep), targetDb = "wh", batchSize = 4, insertBatchSize = 4)
-      record("mongo run", logs, r.map(Right(_)))
+      record("mongo run", logs, variant().run().map(Right(_)))
     } finally { mongo.stop(); ch.stop() }
   }
 
@@ -185,16 +186,15 @@ class WireTrafficLockSpec extends SparkSpec {
       val tgt = new ChHttpClient(target.endpoint)
       val ep = target.endpoint
       val logs = Seq(chLog("chsrc", source, pageRead), chLog("ch", target, dataInsert))
-      WireSync.runContinuousCh(spark, source.endpoint, "shop", tgt, () => new ChHttpBatchExecutor(ep),
-        targetDb = "bh", maxPasses = 3, batchSize = 5, insertBatchSize = 4,
+      def variant() = WireSync.chVariant(spark, source.endpoint, "shop", tgt, () => new ChHttpBatchExecutor(ep),
+        targetDb = "bh", batchSize = 5, insertBatchSize = 4, orderKeys = Map.empty).copy(width = 1)
+      variant().runContinuous(maxPasses = 3, intervalMs = 0L,
         onPassEnd = (p, r) => {
           record(s"ch pass $p", logs, r)
           if (p == 1) source.tables(("shop", "orders")).rows ++=
             Seq(Seq("13", "2024-02-01 00:00:00.000000"), Seq("14", "2024-02-02 00:00:00.000000"))
         })
-      val r = WireSync.runCh(spark, source.endpoint, "shop", tgt, () => new ChHttpBatchExecutor(ep),
-        targetDb = "bh", batchSize = 5, insertBatchSize = 4)
-      record("ch run", logs, r.map(Right(_)))
+      record("ch run", logs, variant().run().map(Right(_)))
     } finally { source.stop(); target.stop() }
   }
 
