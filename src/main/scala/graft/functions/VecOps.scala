@@ -2631,8 +2631,8 @@ case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression 
   * token. `longestMatch` returns the match length in Java CHARS (the
   * cursor advance) while honoring code-point boundaries, so surrogate
   * pairs are one fallback token, matching codepoint-indexed oracles.
-  */
-/** Code-point trie over a BPE/WordPiece merge table. Built for
+  *
+  * Built for
   * production vocab scale (~50k merges): what crosses the wire is the
   * compact string vocabulary, NEVER the pointer-heavy node graph (a
   * Java-serialized 50k-entry trie would ship megabytes with every

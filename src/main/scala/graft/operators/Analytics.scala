@@ -187,17 +187,22 @@ object Analytics {
     * stage, every pass reusing the user-key partitioning; each stage's
     * events are filtered before their aggregate. Shared by
     * [[funnelCounts]] (how many reach each stage) and
-    * [[funnelLatency]] (how long each hop takes).
+    * [[funnelLatency]] (how long each hop takes). With `windowUs`, a
+    * later stage also needs t_i ≤ t0 + windowUs ([[funnelWindowLevels]]).
     */
   private def funnelReached(
       events: DataFrame,
       userCol: String,
       typeCol: String,
       tsCol: String,
-      stages: Seq[String]
+      stages: Seq[String],
+      windowUs: Option[Long] = None
   ): DataFrame = {
     require(stages.nonEmpty, "funnel needs at least one stage")
-    require(stages.forall(_.matches("[A-Za-z0-9_-]+")), "stage names must be simple identifiers")
+    // the unbounded callers' contract (funnelCounts writes the names
+    // into SQL); funnelWindowLevels builds no SQL and takes any name
+    if (windowUs.isEmpty)
+      require(stages.forall(_.matches("[A-Za-z0-9_-]+")), "stage names must be simple identifiers")
     val us = unix_micros(col(tsCol).cast("timestamp"))
     var reached = events
       .filter(col(typeCol) === stages.head)
@@ -208,10 +213,12 @@ object Analytics {
         .filter(col(typeCol) === stages(i))
         .select(col(userCol), us.as("__ts"))
       val carried = (0 until i).map(j => s"t$j")
+      val after = col("__ts") > col(s"t${i - 1}")
+      val valid = windowUs.fold(after)(w => after && col("__ts") <= col("t0") + w)
       reached = reached
         .join(nxt, Seq(userCol), "left")
         .groupBy(col(userCol) +: carried.map(col): _*)
-        .agg(min(when(col("__ts") > col(s"t${i - 1}"), col("__ts"))).as(s"t$i"))
+        .agg(min(when(valid, col("__ts"))).as(s"t$i"))
     }
     reached
   }
@@ -338,23 +345,7 @@ object Analytics {
   ): DataFrame = {
     require(stages.length >= 2, "windowed funnel needs at least two stages")
     require(windowSec > 0, s"window must be positive, got $windowSec")
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    val windowUs = windowSec * 1000000L
-    var reached = events
-      .filter(col(typeCol) === stages.head)
-      .groupBy(col(userCol))
-      .agg(min(us).as("t0"))
-    for (i <- 1 until stages.length) {
-      val nxt = events
-        .filter(col(typeCol) === stages(i))
-        .select(col(userCol), us.as("__ts"))
-      val carried = (0 until i).map(j => s"t$j")
-      reached = reached
-        .join(nxt, Seq(userCol), "left")
-        .groupBy(col(userCol) +: carried.map(col): _*)
-        .agg(min(when(col("__ts") > col(s"t${i - 1}") &&
-          col("__ts") <= col("t0") + windowUs, col("__ts"))).as(s"t$i"))
-    }
+    val reached = funnelReached(events, userCol, typeCol, tsCol, stages, Some(windowSec * 1000000L))
     val level = (1 until stages.length)
       .map(i => when(col(s"t$i").isNotNull, 1L).otherwise(0L))
       .reduce(_ + _) + 1L
@@ -420,18 +411,10 @@ object Analytics {
       windowSec: Long,
       mode: String
   ): DataFrame = {
-    require(stages.length >= 2 && stages.length < 256, "2..255 stages")
+    val packed = packedEvents(events, userCol, typeCol, tsCol, stages, reversed = false)
     require(windowSec > 0, s"window must be positive, got $windowSec")
     require(Seq("default", "strict_order", "strict_dedup").contains(mode), s"unknown mode $mode")
     val w = windowSec * 1000000L
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    val sidx = stages.zipWithIndex.tail.foldLeft(when(col(typeCol) === stages.head, lit(0L))) {
-      case (e, (s, i)) => e.when(col(typeCol) === s, lit(i.toLong))
-    }
-    val packed = events
-      .filter(col(typeCol).isin(stages: _*))
-      .groupBy(col(userCol))
-      .agg(sort_array(collect_list(shiftleft(us, 8) + sidx)).as("evs"))
     val init = struct(
       lit(0L).as("lvl"), lit(0L).as("anchor"), lit(0L).as("last"), lit(false).as("frozen"))
     def step(acc: Column, pk: Column): Column = {
@@ -457,12 +440,8 @@ object Analytics {
         .when(freezes, freeze)
         .otherwise(acc)
     }
-    packed
-      .select(aggregate(col("evs"), init, step).getField("lvl").as("level"))
-      .filter(col("level") > 0L) // users with stage events but no anchor don't enter the funnel
-      .groupBy(col("level"))
-      .agg(count(lit(1)).as("n_users"))
-      .orderBy(col("level"))
+    // users with stage events but no anchor don't enter the funnel
+    usersPer(packed, aggregate(col("evs"), init, step).getField("lvl"), "level")
   }
 
   /** B86: sequence matching with PER-HOP time bounds — the ClickHouse
@@ -501,19 +480,11 @@ object Analytics {
       stages: Seq[String],
       gapSec: Long
   ): DataFrame = {
-    require(stages.length >= 2 && stages.length < 256, "2..255 stages")
+    // pack (us << 8) | (k-1-s): equal-time events fold HIGHER stage first
+    val packed = packedEvents(events, userCol, typeCol, tsCol, stages, reversed = true)
     require(gapSec > 0, s"gap must be positive, got $gapSec")
     val k = stages.length
     val gapUs = gapSec * 1000000L
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    // pack (us << 8) | (k-1-s): equal-time events fold HIGHER stage first
-    val revIdx = stages.zipWithIndex.tail.foldLeft(when(col(typeCol) === stages.head, lit((k - 1).toLong))) {
-      case (e, (st, i)) => e.when(col(typeCol) === st, lit((k - 1 - i).toLong))
-    }
-    val packed = events
-      .filter(col(typeCol).isin(stages: _*))
-      .groupBy(col(userCol))
-      .agg(sort_array(collect_list(shiftleft(us, 8) + revIdx)).as("evs"))
     // state stores t+1 so 0 is a true "unset" sentinel even for
     // epoch-zero events; with prev = t'+1 the raw-time hop bound
     // t' < t ≤ t'+gap becomes t ≥ prev && t ≤ prev+gap−1
@@ -522,25 +493,14 @@ object Analytics {
       val t = shiftrightunsigned(pk, 8)
       val s = lit((k - 1).toLong) - pk.bitwiseAND(lit(0xffL))
       struct((0 until k).map { i =>
-        val feasible =
-          if (i == 0) lit(true)
-          else {
-            val prev = acc.getField(s"f${i - 1}")
-            prev =!= 0L && t >= prev && t <= prev + (gapUs - 1L)
-          }
-        when(s === i.toLong && feasible, t + 1L).otherwise(acc.getField(s"f$i")).as(s"f$i")
+        when(s === i.toLong && feasible(acc, t, i, gapUs), t + 1L).otherwise(acc.getField(s"f$i")).as(s"f$i")
       }: _*)
     }
     val fin = aggregate(col("evs"), init, step)
     val depth = (0 until k)
       .map(i => when(fin.getField(s"f$i") =!= 0L, 1L).otherwise(0L))
       .reduce(_ + _)
-    packed
-      .select(depth.as("depth"))
-      .filter(col("depth") > 0L) // stage events but never a head event: not in the pattern
-      .groupBy(col("depth"))
-      .agg(count(lit(1)).as("n_users"))
-      .orderBy(col("depth"))
+    usersPer(packed, depth, "depth") // stage events but never a head event: not in the pattern
   }
 
   /** B87: NON-OVERLAPPING sequence-match count — the ClickHouse
@@ -576,45 +536,72 @@ object Analytics {
       stages: Seq[String],
       gapSec: Long
   ): DataFrame = {
-    require(stages.length >= 2 && stages.length < 256, "2..255 stages")
+    val packed = packedEvents(events, userCol, typeCol, tsCol, stages, reversed = true)
     require(gapSec > 0, s"gap must be positive, got $gapSec")
     val k = stages.length
     val gapUs = gapSec * 1000000L
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    val revIdx = stages.zipWithIndex.tail.foldLeft(when(col(typeCol) === stages.head, lit((k - 1).toLong))) {
-      case (e, (st, i)) => e.when(col(typeCol) === st, lit((k - 1 - i).toLong))
-    }
-    val packed = events
-      .filter(col(typeCol).isin(stages: _*))
-      .groupBy(col(userCol))
-      .agg(sort_array(collect_list(shiftleft(us, 8) + revIdx)).as("evs"))
     // state: f0..f_{k-2} latest feasible per incomplete stage + cnt;
     // f stores t+1 (B86's zero-safe sentinel encoding)
     val init = struct((0 until k - 1).map(i => lit(0L).as(s"f$i")) :+ lit(0L).as("cnt"): _*)
     def step(acc: Column, pk: Column): Column = {
       val t = shiftrightunsigned(pk, 8)
       val s = lit((k - 1).toLong) - pk.bitwiseAND(lit(0xffL))
-      def feasible(i: Int): Column =
-        if (i == 0) lit(true)
-        else {
-          val prev = acc.getField(s"f${i - 1}")
-          prev =!= 0L && t >= prev && t <= prev + (gapUs - 1L)
-        }
-      val completes = s === (k - 1).toLong && feasible(k - 1)
+      val completes = s === (k - 1).toLong && feasible(acc, t, k - 1, gapUs)
       val consumed = struct((0 until k - 1).map(i => lit(0L).as(s"f$i")) :+
         (acc.getField("cnt") + 1L).as("cnt"): _*)
       val advanced = struct((0 until k - 1).map { i =>
-        when(s === i.toLong && feasible(i), t + 1L).otherwise(acc.getField(s"f$i")).as(s"f$i")
+        when(s === i.toLong && feasible(acc, t, i, gapUs), t + 1L).otherwise(acc.getField(s"f$i")).as(s"f$i")
       } :+ acc.getField("cnt").as("cnt"): _*)
       when(completes, consumed).otherwise(advanced)
     }
-    packed
-      .select(aggregate(col("evs"), init, step).getField("cnt").as("n_matches"))
-      .filter(col("n_matches") > 0L)
-      .groupBy(col("n_matches"))
-      .agg(count(lit(1)).as("n_users"))
-      .orderBy(col("n_matches"))
+    usersPer(packed, aggregate(col("evs"), init, step).getField("cnt"), "n_matches")
   }
+
+  /** The packed-fold family's input ([[funnelWindowLevelsMode]],
+    * [[sequenceMatchDepth]], [[sequenceCountNonOverlap]]): per user,
+    * `evs` = the sorted array of (us << 8) + stage index over the
+    * events of `stages`; `reversed` packs k−1−index instead, so
+    * equal-time events fold the higher stage first.
+    */
+  private def packedEvents(
+      events: DataFrame,
+      userCol: String,
+      typeCol: String,
+      tsCol: String,
+      stages: Seq[String],
+      reversed: Boolean
+  ): DataFrame = {
+    require(stages.length >= 2 && stages.length < 256, "2..255 stages")
+    def idx(i: Int): Column = lit((if (reversed) stages.length - 1 - i else i).toLong)
+    val sidx = stages.zipWithIndex.tail.foldLeft(when(col(typeCol) === stages.head, idx(0))) {
+      case (e, (st, i)) => e.when(col(typeCol) === st, idx(i))
+    }
+    val us = unix_micros(col(tsCol).cast("timestamp"))
+    events
+      .filter(col(typeCol).isin(stages: _*))
+      .groupBy(col(userCol))
+      .agg(sort_array(collect_list(shiftleft(us, 8) + sidx)).as("evs"))
+  }
+
+  /** B86's feasibility test inside a fold step: a stage-`i` event at
+    * `t` extends a chain when i = 0 or the latest feasible stage-(i−1)
+    * time t' (stored as `f{i−1}` = t'+1, 0 unset) has t' < t ≤ t' + gap.
+    */
+  private def feasible(acc: Column, t: Column, i: Int, gapUs: Long): Column =
+    if (i == 0) lit(true)
+    else {
+      val prev = acc.getField(s"f${i - 1}")
+      prev =!= 0L && t >= prev && t <= prev + (gapUs - 1L)
+    }
+
+  /** Users per positive `value` of a packed fold, ascending. */
+  private def usersPer(packed: DataFrame, value: Column, name: String): DataFrame =
+    packed
+      .select(value.as(name))
+      .filter(col(name) > 0L)
+      .groupBy(col(name))
+      .agg(count(lit(1)).as("n_users"))
+      .orderBy(col(name))
 
   /** B79: LINEAR multi-touch attribution — the complementary card to
     * [[funnelAttribution]]'s first-touch rule: a converted user's
@@ -728,8 +715,8 @@ object Analytics {
     * across engines); ndv dedups on a 64-bit hash of the
     * full-precision cast (see inline note on the wire-size and
     * collision trade).
-    */
-  /** `approxNdv = true` is the 100 TB default: n_distinct comes from
+    *
+    * `approxNdv = true` is the 100 TB default: n_distinct comes from
     * `approx_count_distinct` (HLL++, relative error ~2.3% at the
     * twelve-bit default) folded into the SAME single-scan aggregate as
     * count/min/max — per-value data never shuffles anywhere; the only

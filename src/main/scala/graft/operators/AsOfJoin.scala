@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** As-of join: for each left row, the most recent right row of the
   * same key with right_time <= left_time.
@@ -36,51 +37,13 @@ object AsOfJoin {
       leftTimeCol: String,
       rightTimeCol: String,
       valueCol: String
-  ): DataFrame = {
-    val leftCols = left.columns
-    val valueType = right.schema(valueCol).dataType
-    val wrapType = org.apache.spark.sql.types.StructType(
-      Seq(org.apache.spark.sql.types.StructField("v", valueType)))
-    val l = left
-      .withColumn("__t", col(leftTimeCol))
-      .withColumn("__side", lit(1))
-      .withColumn("__rv", lit(null).cast(wrapType))
-      .withColumnRenamed(keyCol, "__k")
-    val r = right.select(
-      col(keyCol).as("__k"),
-      col(rightTimeCol).as("__t"),
-      lit(0).as("__side"),
-      struct(col(valueCol).as("v")).as("__rv")
-    )
-    val unioned = l.select(
-      (Seq(col("__k"), col("__t"), col("__side"), col("__rv")) ++
-        leftCols.filterNot(_ == keyCol).map(col)): _*
-    ).unionByName(r, allowMissingColumns = true)
-    val w = Window
-      .partitionBy(col("__k"))
-      .orderBy(col("__t"), col("__side"), col("__rv"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    unioned
-      .withColumn("__asof", last(col("__rv"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(
-        (Seq(col("__k").as(keyCol)) ++ leftCols.filterNot(_ == keyCol).map(col) :+
-          col("__asof").getField("v").as(s"asof_$valueCol")): _*
-      )
-  }
+  ): DataFrame =
+    leftRows(
+      tagged(left, right, keyCol, leftTimeCol, rightTimeCol, "v" -> valueCol)
+        .withColumn("__asof", runningLast(forward = false)),
+      left, keyCol,
+      col("__asof").getField("v").as(s"asof_$valueCol"))
 
-  /** B61: BOUNDED as-of join — most recent right row of the same key
-    * with left_time − tolerance ≤ right_time ≤ left_time (the kdb
-    * `wj`/QuestDB `ASOF ... TOLERANCE` semantics: a quote matched to
-    * a trade only counts if it's fresh). Same union+running-last plan
-    * as [[lastBefore]] — one keyed shuffle, no join operator — with
-    * the right TIME carried inside the struct so staleness is decided
-    * per left row AFTER the window: the latest preceding right row
-    * either is within bound or no within-bound row exists (anything
-    * else is older still), so the post-filter is exact, not a
-    * heuristic. Time columns must be numeric (e.g. `unix_micros`);
-    * `tolerance` is in the same unit.
-    */
   /** B71: NEAREST as-of join — the closest right row of the same key
     * in EITHER direction, within `tolerance` (kdb `aj` is backward,
     * QuestDB/Polars offer `nearest`: match a reading to the closest
@@ -108,52 +71,32 @@ object AsOfJoin {
       tolerance: Long
   ): DataFrame = {
     require(tolerance >= 0, s"tolerance must be >= 0, got $tolerance")
-    val leftCols = left.columns
-    val valueType = right.schema(valueCol).dataType
-    val timeType = right.schema(rightTimeCol).dataType
-    val wrapType = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("t", timeType),
-      org.apache.spark.sql.types.StructField("v", valueType)))
-    val l = left
-      .withColumn("__t", col(leftTimeCol))
-      .withColumn("__side", lit(1))
-      .withColumn("__rv", lit(null).cast(wrapType))
-      .withColumnRenamed(keyCol, "__k")
-    val r = right.select(
-      col(keyCol).as("__k"),
-      col(rightTimeCol).as("__t"),
-      lit(0).as("__side"),
-      struct(col(rightTimeCol).as("t"), col(valueCol).as("v")).as("__rv")
-    )
-    val unioned = l.select(
-      (Seq(col("__k"), col("__t"), col("__side"), col("__rv")) ++
-        leftCols.filterNot(_ == keyCol).map(col)): _*
-    ).unionByName(r, allowMissingColumns = true)
-    // right rows sort before left rows at equal time in BOTH
-    // directions (side 0 < 1), so "<=" / ">=" semantics hold exactly
-    val wb = Window.partitionBy(col("__k"))
-      .orderBy(col("__t"), col("__side"), col("__rv"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wf = Window.partitionBy(col("__k"))
-      .orderBy(col("__t").desc, col("__side"), col("__rv"))
-      .rowsBetween(Window.unboundedPreceding, 0)
     val db = col("__t") - col("__b").getField("t")
     val df_ = col("__f").getField("t") - col("__t")
     val bOk = col("__b").isNotNull && db <= tolerance
     val fOk = col("__f").isNotNull && df_ <= tolerance
     val useB = bOk && (!fOk || db <= df_)
-    unioned
-      .withColumn("__b", last(col("__rv"), ignoreNulls = true).over(wb))
-      .withColumn("__f", last(col("__rv"), ignoreNulls = true).over(wf))
-      .filter(col("__side") === 1)
-      .select(
-        (Seq(col("__k").as(keyCol)) ++ leftCols.filterNot(_ == keyCol).map(col) ++ Seq(
-          when(useB, col("__b").getField("v")).when(fOk, col("__f").getField("v"))
-            .as(s"asof_$valueCol"),
-          when(useB, -db).when(fOk, df_).as("asof_dt"))): _*
-      )
+    leftRows(
+      tagged(left, right, keyCol, leftTimeCol, rightTimeCol, "t" -> rightTimeCol, "v" -> valueCol)
+        .withColumn("__b", runningLast(forward = false))
+        .withColumn("__f", runningLast(forward = true)),
+      left, keyCol,
+      when(useB, col("__b").getField("v")).when(fOk, col("__f").getField("v")).as(s"asof_$valueCol"),
+      when(useB, -db).when(fOk, df_).as("asof_dt"))
   }
 
+  /** B61: BOUNDED as-of join — most recent right row of the same key
+    * with left_time − tolerance ≤ right_time ≤ left_time (the kdb
+    * `wj`/QuestDB `ASOF ... TOLERANCE` semantics: a quote matched to
+    * a trade only counts if it's fresh). Same union+running-last plan
+    * as [[lastBefore]] — one keyed shuffle, no join operator — with
+    * the right TIME carried inside the struct so staleness is decided
+    * per left row AFTER the window: the latest preceding right row
+    * either is within bound or no within-bound row exists (anything
+    * else is older still), so the post-filter is exact, not a
+    * heuristic. Time columns must be numeric (e.g. `unix_micros`);
+    * `tolerance` is in the same unit.
+    */
   def lastWithin(
       left: DataFrame,
       right: DataFrame,
@@ -164,38 +107,56 @@ object AsOfJoin {
       tolerance: Long
   ): DataFrame = {
     require(tolerance >= 0, s"tolerance must be >= 0, got $tolerance")
-    val leftCols = left.columns
-    val valueType = right.schema(valueCol).dataType
-    val timeType = right.schema(rightTimeCol).dataType
-    val wrapType = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("t", timeType),
-      org.apache.spark.sql.types.StructField("v", valueType)))
+    leftRows(
+      tagged(left, right, keyCol, leftTimeCol, rightTimeCol, "t" -> rightTimeCol, "v" -> valueCol)
+        .withColumn("__asof", runningLast(forward = false)),
+      left, keyCol,
+      when(col("__t") - col("__asof").getField("t") <= tolerance,
+        col("__asof").getField("v")).as(s"asof_$valueCol"))
+  }
+
+  /** Both sides on one schema: the key as `__k`, the time as `__t`,
+    * `__side` 1 for left rows and 0 for right rows (so right rows sort
+    * first at equal time), and `__rv`, a struct of the named right
+    * columns (`field -> column`), typed NULL on left rows.
+    */
+  private def tagged(
+      left: DataFrame,
+      right: DataFrame,
+      keyCol: String,
+      leftTimeCol: String,
+      rightTimeCol: String,
+      rv: (String, String)*
+  ): DataFrame = {
+    val rvType = StructType(rv.map { case (f, c) => StructField(f, right.schema(c).dataType) })
     val l = left
       .withColumn("__t", col(leftTimeCol))
       .withColumn("__side", lit(1))
-      .withColumn("__rv", lit(null).cast(wrapType))
+      .withColumn("__rv", lit(null).cast(rvType))
       .withColumnRenamed(keyCol, "__k")
     val r = right.select(
       col(keyCol).as("__k"),
       col(rightTimeCol).as("__t"),
       lit(0).as("__side"),
-      struct(col(rightTimeCol).as("t"), col(valueCol).as("v")).as("__rv")
-    )
-    val unioned = l.select(
-      (Seq(col("__k"), col("__t"), col("__side"), col("__rv")) ++
-        leftCols.filterNot(_ == keyCol).map(col)): _*
+      struct(rv.map { case (f, c) => col(c).as(f) }: _*).as("__rv"))
+    l.select((Seq(col("__k"), col("__t"), col("__side"), col("__rv")) ++
+      left.columns.filterNot(_ == keyCol).map(col)): _*
     ).unionByName(r, allowMissingColumns = true)
-    val w = Window
-      .partitionBy(col("__k"))
-      .orderBy(col("__t"), col("__side"), col("__rv"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    unioned
-      .withColumn("__asof", last(col("__rv"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(
-        (Seq(col("__k").as(keyCol)) ++ leftCols.filterNot(_ == keyCol).map(col) :+
-          when(col("__t") - col("__asof").getField("t") <= tolerance,
-            col("__asof").getField("v")).as(s"asof_$valueCol")): _*
-      )
   }
+
+  /** The latest right row's `__rv` at or before each row of its key
+    * (`forward`: at or after, time descending); right rows sort before
+    * left rows at equal time in both directions.
+    */
+  private def runningLast(forward: Boolean): Column = {
+    val t = if (forward) col("__t").desc else col("__t")
+    last(col("__rv"), ignoreNulls = true).over(Window.partitionBy(col("__k"))
+      .orderBy(t, col("__side"), col("__rv"))
+      .rowsBetween(Window.unboundedPreceding, 0))
+  }
+
+  /** The left rows in their own column order, the key restored, plus `out`. */
+  private def leftRows(tagged: DataFrame, left: DataFrame, keyCol: String, out: Column*): DataFrame =
+    tagged.filter(col("__side") === 1).select(
+      (col("__k").as(keyCol) +: left.columns.filterNot(_ == keyCol).map(col).toSeq) ++ out: _*)
 }

@@ -91,13 +91,6 @@ object Curation {
     df.filter(bucket < rate)
   }
 
-  /** Benchmark decontamination: corpus docs sharing at least
-    * `minShared` word n-grams with any benchmark/eval document. The
-    * benchmark side is tiny by nature → broadcast its distinct shingle
-    * hashes; the corpus side is one explode + broadcast-hash-join +
-    * keyed count — never a doc×doc comparison. Returns
-    * (idCol, n_shared) for contaminated docs.
-    */
   /** C93: SEMANTIC decontamination — the embedding-space member of the
     * decontam family (exact n-gram C18, fuzzy Jaccard C72): a corpus
     * document is contaminated if its embedding sits within cosine ≥ τ
@@ -131,6 +124,13 @@ object Curation {
       .agg(count(lit(1)).as("n_eval_hits"))
       .orderBy(col(idCol))
 
+  /** Benchmark decontamination: corpus docs sharing at least
+    * `minShared` word n-grams with any benchmark/eval document. The
+    * benchmark side is tiny by nature → broadcast its distinct shingle
+    * hashes; the corpus side is one explode + broadcast-hash-join +
+    * keyed count — never a doc×doc comparison. Returns
+    * (idCol, n_shared) for contaminated docs.
+    */
   def contaminationHits(
       corpus: DataFrame,
       benchmark: DataFrame,
@@ -273,15 +273,6 @@ object Curation {
       .agg(count(lit(1)).as("n_docs"), sum(col(valueCol)).as("sum_value"))
   }
 
-  /** Sequence packing: concat-then-chunk assignment of documents to
-    * fixed token-budget packs, sharded so the window never needs a
-    * global sort — shard by pmod(id, shards), order by id within the
-    * shard, pack = floor(preceding-cumsum / budget) (a document starts
-    * in the pack where its first token lands; standard concat packing
-    * semantics). One keyed shuffle per shard window; shards scale out.
-    * Output schema is (idCol, n_tokens, shard, pack_id) — join back by
-    * id to carry document payloads into the packs.
-    */
   /** C47: per-doc duplicated-n-gram mass — the corpus-level
     * duplication signal from "Deduplicating Training Data Makes
     * Language Models Better" (Lee et al. 2022, arXiv:2107.06499):
@@ -486,6 +477,15 @@ object Curation {
     if (sorted) base.orderBy(col(idCol), col("chunk_id")) else base
   }
 
+  /** Sequence packing: concat-then-chunk assignment of documents to
+    * fixed token-budget packs, sharded so the window never needs a
+    * global sort — shard by pmod(id, shards), order by id within the
+    * shard, pack = floor(preceding-cumsum / budget) (a document starts
+    * in the pack where its first token lands; standard concat packing
+    * semantics). One keyed shuffle per shard window; shards scale out.
+    * Output schema is (idCol, n_tokens, shard, pack_id) — join back by
+    * id to carry document payloads into the packs.
+    */
   def packSequences(
       df: DataFrame,
       idCol: String,
@@ -644,28 +644,6 @@ object Curation {
       .orderBy(col("stratum"))
   }
 
-  /** C60: deterministic global shuffle into training shards — the
-    * last step of every corpus pipeline: assign each doc to one of
-    * `nShards` output files and fix a pseudo-random ORDER within the
-    * shard, with no RNG state (both keys are md5-derived, the
-    * [[stratifiedSample]]/[[weightedSample]] discipline), so a re-run
-    * or a resumed job produces byte-identical shards.
-    *
-    * Shard = h(id, "s") mod n; intra-shard position = rank of
-    * (h(id, "p"), id) — independent salts so shard membership and
-    * order don't correlate. The returned card proves BOTH decisions
-    * cross-engine: per shard the doc count, char mass, the first/last
-    * doc ids in shuffle order, and an order-sensitive checksum
-    * Σ rn·(id mod 1000003) that any off-by-one in the permutation
-    * breaks.
-    *
-    * Scale: the per-shard window IS the shard writer's sort — one
-    * hash shuffle on shard id then an in-partition sort, exactly
-    * what `repartition(shard).sortWithinPartitions(pos)` does when
-    * the real writer dumps shards to parquet; shard count is chosen
-    * so a shard fits an executor (docs/nShards rows), and the card
-    * aggregation is map-side-combined per shard.
-    */
   /** C76 (curate_corpus_v2): the END-TO-END curation pipeline as ONE
     * plan — the composition a real training-data run actually
     * executes, threading the suite's own stages in production order:
@@ -777,6 +755,28 @@ object Curation {
     shuffleShards(sel, "id", "kept_tokens", nShards)
   }
 
+  /** C60: deterministic global shuffle into training shards — the
+    * last step of every corpus pipeline: assign each doc to one of
+    * `nShards` output files and fix a pseudo-random ORDER within the
+    * shard, with no RNG state (both keys are md5-derived, the
+    * [[stratifiedSample]]/[[weightedSample]] discipline), so a re-run
+    * or a resumed job produces byte-identical shards.
+    *
+    * Shard = h(id, "s") mod n; intra-shard position = rank of
+    * (h(id, "p"), id) — independent salts so shard membership and
+    * order don't correlate. The returned card proves BOTH decisions
+    * cross-engine: per shard the doc count, char mass, the first/last
+    * doc ids in shuffle order, and an order-sensitive checksum
+    * Σ rn·(id mod 1000003) that any off-by-one in the permutation
+    * breaks.
+    *
+    * Scale: the per-shard window IS the shard writer's sort — one
+    * hash shuffle on shard id then an in-partition sort, exactly
+    * what `repartition(shard).sortWithinPartitions(pos)` does when
+    * the real writer dumps shards to parquet; shard count is chosen
+    * so a shard fits an executor (docs/nShards rows), and the card
+    * aggregation is map-side-combined per shard.
+    */
   def shuffleShards(
       df: DataFrame,
       idCol: String,

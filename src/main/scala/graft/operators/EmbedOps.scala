@@ -51,8 +51,8 @@ object EmbedOps {
 
   /** C36: per-vector symmetric int8 quantization, long format:
     * (idCol, dim, q) with q = round(x*127/max|x|) in [-127,127].
-    */
-  /** Deterministic (id, dim) output order comes from sorting the
+    *
+    * Deterministic (id, dim) output order comes from sorting the
     * VECTOR frame before the explode — posexplode emits dims in
     * order within each row and preserves row order within partitions,
     * so the exploded output is globally (id, dim)-ordered without

@@ -147,10 +147,6 @@ object Incremental {
   ): DataFrame =
     latestPerKey(base.unionByName(delta, allowMissingColumns = true), keyCols, orderCols)
 
-  /** Schema evolution: fields present in the incoming batch but not in
-    * the target — the ALTER TABLE plan (es_to_bytehouse.py:1043-1051
-    * `detect_new_fields_from_batch` + 1020-1041 `add_new_columns`).
-    */
   /** A34: SCD Type-2 interval construction — turn a change log into
     * history-keeping dimension rows: one row per (key, value-run) with
     * [valid_from, valid_to) and an is_current flag. The history-keeping
@@ -296,6 +292,10 @@ object Incremental {
     }: _*)
   }
 
+  /** Schema evolution: fields present in the incoming batch but not in
+    * the target — the ALTER TABLE plan (es_to_bytehouse.py:1043-1051
+    * `detect_new_fields_from_batch` + 1020-1041 `add_new_columns`).
+    */
   def newFields(target: StructType, incoming: StructType): Seq[(String, String)] = {
     val have = target.fieldNames.map(Flatten.sanitizeName).toSet
     incoming.fields.toIndexedSeq

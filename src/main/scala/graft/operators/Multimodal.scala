@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import java.awt.image.BufferedImage
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,11 +18,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** C12: typed metadata for a binary payload column: byte length,
-    * 8-byte header (magic-number window) and a content digest — the
-    * columns a 100 TB media pipeline partitions and dedups on without
-    * ever decoding.
-    */
   /** Per-doc outputs take `sorted = true` only for deterministic
     * correctness-gate dumps: a global sort of corpus-cardinality output
     * is the most expensive operator in the plan at scale and carries no
@@ -29,6 +26,11 @@ object Multimodal {
   private def gateSort(df: DataFrame, sorted: Boolean, by: Column*): DataFrame =
     if (sorted) df.orderBy(by: _*) else df
 
+  /** C12: typed metadata for a binary payload column: byte length,
+    * 8-byte header (magic-number window) and a content digest — the
+    * columns a 100 TB media pipeline partitions and dedups on without
+    * ever decoding.
+    */
   def binaryMeta(df: DataFrame, idCol: String, binCol: String, sorted: Boolean = true): DataFrame =
     gateSort(df.select(
       col(idCol),
@@ -386,35 +388,16 @@ object Multimodal {
     * the aHash bit pattern per id. Channel values stay < 256 for
     * w ≤ 16, h ≤ 8.
     */
-  def encodeStagedPngStripes(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    val out = df.select(col(idCol).cast("long"), col(wCol).cast("int"), col(hCol).cast("int"))
-      .as[(Long, Int, Int)].mapPartitions { it =>
-        it.map { case (id, w, h) =>
-          require(w >= 1 && w <= 16 && h >= 1 && h <= 8,
-            s"striped staged PNG dims must be in [1,16]x[1,8]; got ${w}x$h")
-          val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val phase = (x * (1 + (id % 5).toInt) + y * (1 + (id % 3).toInt)) % 4
-              val r = if (phase < 2) 200 else 20
-              val g = x * 3
-              val b = y * 5
-              img.setRGB(x, y, (r << 16) | (g << 8) | b)
-              x += 1
-            }
-            y += 1
-          }
-          imageIoInit
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", baos)
-          (id, w, h, baos.toByteArray)
-        }
+  def encodeStagedPngStripes(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame =
+    encodeStaged(spark, df, idCol, wCol, hCol, "png", "png") { (id, w, h) =>
+      require(w >= 1 && w <= 16 && h >= 1 && h <= 8,
+        s"striped staged PNG dims must be in [1,16]x[1,8]; got ${w}x$h")
+      painted(w, h) { (x, y) =>
+        val phase = (x * (1 + (id % 5).toInt) + y * (1 + (id % 3).toInt)) % 4
+        val r = if (phase < 2) 200 else 20
+        (r << 16) | ((x * 3) << 8) | (y * 5)
       }
-    out.toDF(idCol, wCol, hCol, "png")
-  }
+    }
 
   /** C83 (mm_phash_dedup): perceptual-hash image dedup over REAL
     * decoded pixels — the visual near-dup signal a multimodal corpus
@@ -718,72 +701,24 @@ object Multimodal {
     * strips) so [[parseTiffMeta]] walks the directory an actual .tif
     * carries — the same staging discipline as [[encodeStagedJpeg]].
     */
-  def encodeStagedTiff(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    val out = df.select(col(idCol).cast("long"), col(wCol).cast("int"), col(hCol).cast("int"))
-      .as[(Long, Int, Int)].mapPartitions { it =>
-        it.map { case (id, w, h) =>
-          val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = img.createGraphics()
-          g.setColor(new java.awt.Color((id % 256).toInt, ((id * 7) % 256).toInt, ((id * 13) % 256).toInt))
-          g.fillRect(0, 0, w, h)
-          g.dispose()
-          imageIoInit
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "tiff", baos)
-          (id, w, h, baos.toByteArray)
-        }
-      }
-    out.toDF(idCol, wCol, hCol, "tiff")
-  }
+  def encodeStagedTiff(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame =
+    encodeStaged(spark, df, idCol, wCol, hCol, "tiff", "tiff")(flatFill)
 
   /** Stage REAL GIF files through the JDK encoder (GIF89a + logical
     * screen descriptor + LZW image data) so [[parseGifMeta]] parses
     * the bytes an actual .gif carries — the same staging discipline
     * as [[encodeStagedJpeg]].
     */
-  def encodeStagedGif(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    val out = df.select(col(idCol).cast("long"), col(wCol).cast("int"), col(hCol).cast("int"))
-      .as[(Long, Int, Int)].mapPartitions { it =>
-        it.map { case (id, w, h) =>
-          val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = img.createGraphics()
-          g.setColor(new java.awt.Color((id % 256).toInt, ((id * 7) % 256).toInt, ((id * 13) % 256).toInt))
-          g.fillRect(0, 0, w, h)
-          g.dispose()
-          imageIoInit
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "gif", baos)
-          (id, w, h, baos.toByteArray)
-        }
-      }
-    out.toDF(idCol, wCol, hCol, "gif")
-  }
+  def encodeStagedGif(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame =
+    encodeStaged(spark, df, idCol, wCol, hCol, "gif", "gif")(flatFill)
 
   /** Stage REAL JPEG files through the JDK encoder (JFIF APP0, quant
     * tables, baseline SOF0, entropy-coded data) so [[parseJpegMeta]]
     * exercises the marker walk an actual .jpg takes. Pixel content is
     * irrelevant to the meta parse — a flat fill keeps encode cheap.
     */
-  def encodeStagedJpeg(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame = {
-    import spark.implicits._
-    val out = df.select(col(idCol).cast("long"), col(wCol).cast("int"), col(hCol).cast("int"))
-      .as[(Long, Int, Int)].mapPartitions { it =>
-        it.map { case (id, w, h) =>
-          val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = img.createGraphics()
-          g.setColor(new java.awt.Color((id % 256).toInt, ((id * 7) % 256).toInt, ((id * 13) % 256).toInt))
-          g.fillRect(0, 0, w, h)
-          g.dispose()
-          imageIoInit
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "jpg", baos)
-          (id, w, h, baos.toByteArray)
-        }
-      }
-    out.toDF(idCol, wCol, hCol, "jpeg")
-  }
+  def encodeStagedJpeg(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame =
+    encodeStaged(spark, df, idCol, wCol, hCol, "jpg", "jpeg")(flatFill)
 
   /** Feature row produced by the real decoder. */
   case class MediaFeatures(id: Long, width: Int, height: Int, featureNorm: Double)
@@ -803,7 +738,7 @@ object Multimodal {
   @transient private lazy val imageIoInit: Unit =
     javax.imageio.ImageIO.setUseCache(false)
 
-  private[graft] def readImage(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] = {
+  private[graft] def readImage(bytes: Array[Byte]): Option[BufferedImage] = {
     imageIoInit
     Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
   }
@@ -819,25 +754,39 @@ object Multimodal {
     */
   def decodeFeatures(spark: SparkSession, df: DataFrame, idCol: String, binCol: String): Dataset[MediaFeatures] = {
     import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol)).as[(Long, Array[Byte])].mapPartitions { it =>
-      it.flatMap { case (id, bytes) =>
-        readImage(bytes).map { img =>
-          val w = img.getWidth; val h = img.getHeight
-          var s = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              s += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-              x += 1
-            }
-            y += 1
-          }
-          MediaFeatures(id, w, h, s.toDouble / (3.0 * 255.0 * w * h))
-        }
-      }
+    decoded(spark, df, idCol, binCol) { (id, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      val (sr, sg, sb) = channelSums(img, 0, w, 0, h)
+      Iterator(MediaFeatures(id, w, h, (sr + sg + sb).toDouble / (3.0 * 255.0 * w * h)))
     }
+  }
+
+  /** The decoders' one skeleton: every payload ImageIO can read, as
+    * (id, image), through `f`; partition-parallel, undecodable
+    * payloads dropped.
+    */
+  private def decoded[T: Encoder](spark: SparkSession, df: DataFrame, idCol: String, binCol: String)(
+      f: (Long, BufferedImage) => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    df.select(col(idCol).cast("long"), col(binCol)).as[(Long, Array[Byte])].mapPartitions { it =>
+      it.flatMap { case (id, bytes) => readImage(bytes).iterator.flatMap(img => f(id, img)) }
+    }
+  }
+
+  /** Exact Long (Σr, Σg, Σb) over the pixels x0 ≤ x < x1, y0 ≤ y < y1. */
+  private def channelSums(img: BufferedImage, x0: Int, x1: Int, y0: Int, y1: Int): (Long, Long, Long) = {
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var y = y0
+    while (y < y1) {
+      var x = x0
+      while (x < x1) {
+        val rgb = img.getRGB(x, y)
+        sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (sr, sg, sb)
   }
 
   /** Stage REAL PNG files (signature, IHDR, zlib-compressed filtered
@@ -847,33 +796,50 @@ object Multimodal {
     * r = (id mod 200) + y, g = (id mod 100) + x, b = x + y — all < 256
     * for w, h ≤ 16. Output: (idCol, w, h, png binary).
     */
-  def encodeStagedPng(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame = {
+  def encodeStagedPng(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String): DataFrame =
+    encodeStaged(spark, df, idCol, wCol, hCol, "png", "png") { (id, w, h) =>
+      require(w >= 1 && w <= 16 && h >= 1 && h <= 16,
+        s"staged PNG dims must be in [1,16] so channel values stay < 256; got ${w}x$h")
+      painted(w, h)((x, y) => (((id % 200).toInt + y) << 16) | (((id % 100).toInt + x) << 8) | (x + y))
+    }
+
+  /** The staged encoders' one skeleton: per (id, w, h) row of `df`,
+    * `paint` draws the image and the JDK writes it as `format`; the
+    * output is (idCol, wCol, hCol, `outCol` bytes).
+    */
+  private def encodeStaged(spark: SparkSession, df: DataFrame, idCol: String, wCol: String, hCol: String,
+      format: String, outCol: String)(paint: (Long, Int, Int) => BufferedImage): DataFrame = {
     import spark.implicits._
     val out = df.select(col(idCol).cast("long"), col(wCol).cast("int"), col(hCol).cast("int"))
       .as[(Long, Int, Int)].mapPartitions { it =>
         it.map { case (id, w, h) =>
-          require(w >= 1 && w <= 16 && h >= 1 && h <= 16,
-            s"staged PNG dims must be in [1,16] so channel values stay < 256; got ${w}x$h")
-          val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val r = (id % 200).toInt + y
-              val g = (id % 100).toInt + x
-              val b = x + y
-              img.setRGB(x, y, (r << 16) | (g << 8) | b)
-              x += 1
-            }
-            y += 1
-          }
+          val img = paint(id, w, h)
           imageIoInit
           val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", baos)
+          javax.imageio.ImageIO.write(img, format, baos)
           (id, w, h, baos.toByteArray)
         }
       }
-    out.toDF(idCol, wCol, hCol, "png")
+    out.toDF(idCol, wCol, hCol, outCol)
+  }
+
+  /** A w×h RGB image whose pixel (x, y) is `rgb(x, y)`. */
+  private def painted(w: Int, h: Int)(rgb: (Int, Int) => Int): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb(x, y))
+    img
+  }
+
+  /** One flat colour per id: the TIFF, GIF and JPEG meta parsers read
+    * headers only, and a flat fill keeps the encode cheap.
+    */
+  private def flatFill(id: Long, w: Int, h: Int): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val g = img.createGraphics()
+    g.setColor(new java.awt.Color((id % 256).toInt, ((id * 7) % 256).toInt, ((id * 13) % 256).toInt))
+    g.fillRect(0, 0, w, h)
+    g.dispose()
+    img
   }
 
   /** C13, de-stubbed: frame sampling over DECODED pixels. Frame `f` is
@@ -895,27 +861,16 @@ object Multimodal {
       sorted: Boolean = true
   ): DataFrame = {
     import spark.implicits._
-    val out = df.select(col(idCol).cast("long"), col(binCol)).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          readImage(bytes).toSeq.flatMap { img =>
-            val w = img.getWidth; val h = img.getHeight
-            (0 until maxFrames).iterator
-              .map(f => (f, f * rowStride))
-              .takeWhile(_._2 < h)
-              .map { case (f, y) =>
-                var sr = 0L; var sg = 0L; var sb = 0L
-                var x = 0
-                while (x < w) {
-                  val rgb = img.getRGB(x, y)
-                  sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
-                  x += 1
-                }
-                (id, f.toLong, w.toLong, sr, sg, sb)
-              }
-          }
+    val out = decoded(spark, df, idCol, binCol) { (id, img) =>
+      val w = img.getWidth
+      (0 until maxFrames).iterator
+        .map(f => (f, f * rowStride))
+        .takeWhile(_._2 < img.getHeight)
+        .map { case (f, y) =>
+          val (sr, sg, sb) = channelSums(img, 0, w, y, y + 1)
+          (id, f.toLong, w.toLong, sr, sg, sb)
         }
-      }
+    }
     gateSort(out.toDF(idCol, "frame_idx", "width", "sum_r", "sum_g", "sum_b"),
       sorted, col(idCol), col("frame_idx"))
   }
@@ -940,31 +895,16 @@ object Multimodal {
       sorted: Boolean = true
   ): DataFrame = {
     import spark.implicits._
-    val out = df.select(col(idCol).cast("long"), col(binCol)).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          readImage(bytes).toSeq.flatMap { img =>
-            val w = img.getWidth; val h = img.getHeight
-            require(w % outW == 0 && h % outH == 0,
-              s"decodePixelResize needs exact blocks: ${w}x$h image vs ${outW}x$outH grid")
-            val bw = w / outW; val bh = h / outH
-            for (by <- 0 until outH; bx <- 0 until outW) yield {
-              var sr = 0L; var sg = 0L; var sb = 0L
-              var y = by * bh
-              while (y < (by + 1) * bh) {
-                var x = bx * bw
-                while (x < (bx + 1) * bw) {
-                  val rgb = img.getRGB(x, y)
-                  sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
-                  x += 1
-                }
-                y += 1
-              }
-              (id, bx.toLong, by.toLong, sr, sg, sb)
-            }
-          }
-        }
+    val out = decoded(spark, df, idCol, binCol) { (id, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      require(w % outW == 0 && h % outH == 0,
+        s"decodePixelResize needs exact blocks: ${w}x$h image vs ${outW}x$outH grid")
+      val bw = w / outW; val bh = h / outH
+      for (by <- (0 until outH).iterator; bx <- 0 until outW) yield {
+        val (sr, sg, sb) = channelSums(img, bx * bw, (bx + 1) * bw, by * bh, (by + 1) * bh)
+        (id, bx.toLong, by.toLong, sr, sg, sb)
       }
+    }
     gateSort(out.toDF(idCol, "bx", "by", "sum_r", "sum_g", "sum_b"),
       sorted, col(idCol), col("by"), col("bx"))
   }
@@ -994,27 +934,22 @@ object Multimodal {
     require(bits >= 1 && bits <= 8, s"bits must be 1..8, got $bits")
     val shift = 8 - bits
     val side = 1 << bits
-    val out = df.select(col(idCol).cast("long"), col(binCol)).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          readImage(bytes).toSeq.flatMap { img =>
-            val counts = new scala.collection.mutable.HashMap[Int, Long]()
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val rgb = img.getRGB(x, y)
-                val cell = ((((rgb >> 16) & 0xff) >> shift) * side +
-                  ((((rgb >> 8) & 0xff)) >> shift)) * side + ((rgb & 0xff) >> shift)
-                counts.update(cell, counts.getOrElse(cell, 0L) + 1L)
-                x += 1
-              }
-              y += 1
-            }
-            counts.toSeq.map { case (cell, n) => (id, cell.toLong, n) }
-          }
+    val out = decoded(spark, df, idCol, binCol) { (id, img) =>
+      val counts = new scala.collection.mutable.HashMap[Int, Long]()
+      var y = 0
+      while (y < img.getHeight) {
+        var x = 0
+        while (x < img.getWidth) {
+          val rgb = img.getRGB(x, y)
+          val cell = ((((rgb >> 16) & 0xff) >> shift) * side +
+            ((((rgb >> 8) & 0xff)) >> shift)) * side + ((rgb & 0xff) >> shift)
+          counts.update(cell, counts.getOrElse(cell, 0L) + 1L)
+          x += 1
         }
+        y += 1
       }
+      counts.iterator.map { case (cell, n) => (id, cell.toLong, n) }
+    }
     gateSort(out.toDF(idCol, "cell", "n_px"), sorted, col(idCol), col("cell"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -431,27 +431,6 @@ object TimeSeries {
       .orderBy(col("day"))
   }
 
-  /** B55: per-user exponentially-weighted moving average of the event
-    * value — the time-decayed metric ops dashboards keep per entity
-    * (recency-weighted spend/engagement), as a STATEFUL SEQUENTIAL
-    * FOLD: e₀ = first value, eₖ = ((100−α)·eₖ₋₁ + α·xₖ) DIV 100 over
-    * the user's events in (ts, event_id) order. A window can't
-    * express this recurrence (each step depends on the previous
-    * OUTPUT, not the previous input), so it runs as collect → sort →
-    * `aggregate` fold per user.
-    *
-    * Integer discipline: milli-unit values, integer DIV per step —
-    * bit-reproducible, and DuckDB's `list_reduce` seeds with the
-    * first element exactly like the `slice + aggregate(init=xs[0])`
-    * form here, so the oracle replays the identical fold. Sort order
-    * is total: (us, event_id) is unique, so struct comparison order
-    * can't diverge between engines.
-    *
-    * Scale: one keyed shuffle; state is per-user event lists (the
-    * same bound as sessionize — thousands of events per user, never
-    * corpus-sized). The fold is O(events/user) per row with no
-    * window machinery.
-    */
   /** B58: Holt's linear (double-exponential) smoothing per user — the
     * level+trend forecast state ops pipelines keep per entity, one
     * step up from [[ewma]]: l' = (α·x + (100−α)·(l+t)) DIV 100,
@@ -480,21 +459,11 @@ object TimeSeries {
       s"""(acc, x) -> ((((($alphaPct * x + $ka * ((acc DIV 67108864L - 34359738368L) + (acc % 67108864L - 33554432L))) DIV 100) + 34359738368L) * 67108864L)
          | + ((($betaPct * ((($alphaPct * x + $ka * ((acc DIV 67108864L - 34359738368L) + (acc % 67108864L - 33554432L))) DIV 100) - (acc DIV 67108864L - 34359738368L))
          |      + $kb * (acc % 67108864L - 33554432L)) DIV 100) + 33554432L))""".stripMargin.replace("\n", "")
-    events
-      .select(
-        col("user_id"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id"),
-        floor(col("value") * 1000).cast("long").as("vm"))
-      .groupBy("user_id")
-      .agg(
-        count(lit(1)).as("n_events"),
-        array_sort(collect_list(struct(col("us"), col("event_id"), col("vm")))).as("xs"))
+    userSeries(events)
       .select(
         col("user_id"),
         col("n_events"),
-        expr(s"aggregate(transform(slice(xs, 2, size(xs) - 1), s -> s.vm)," +
-          s" (xs[0].vm + 34359738368L) * 67108864L + 33554432L, $step)").as("acc"))
+        foldSeries("(xs[0].vm + 34359738368L) * 67108864L + 33554432L", step).as("acc"))
       .select(
         col("user_id"), col("n_events"),
         expr("acc DIV 67108864L - 34359738368L").as("level_milli"),
@@ -571,9 +540,43 @@ object TimeSeries {
       .orderBy(col("slot"))
   }
 
+  /** B55: per-user exponentially-weighted moving average of the event
+    * value — the time-decayed metric ops dashboards keep per entity
+    * (recency-weighted spend/engagement), as a STATEFUL SEQUENTIAL
+    * FOLD: e₀ = first value, eₖ = ((100−α)·eₖ₋₁ + α·xₖ) DIV 100 over
+    * the user's events in (ts, event_id) order. A window can't
+    * express this recurrence (each step depends on the previous
+    * OUTPUT, not the previous input), so it runs as collect → sort →
+    * `aggregate` fold per user.
+    *
+    * Integer discipline: milli-unit values, integer DIV per step —
+    * bit-reproducible, and DuckDB's `list_reduce` seeds with the
+    * first element exactly like the `slice + aggregate(init=xs[0])`
+    * form here, so the oracle replays the identical fold. Sort order
+    * is total: (us, event_id) is unique, so struct comparison order
+    * can't diverge between engines.
+    *
+    * Scale: one keyed shuffle; state is per-user event lists (the
+    * same bound as sessionize — thousands of events per user, never
+    * corpus-sized). The fold is O(events/user) per row with no
+    * window machinery.
+    */
   def ewma(events: DataFrame, alphaPct: Int = 20): DataFrame = {
     require(alphaPct >= 1 && alphaPct <= 99, s"alphaPct must be 1..99, got $alphaPct")
     val keep = 100 - alphaPct
+    userSeries(events)
+      .select(
+        col("user_id"),
+        col("n_events"),
+        foldSeries("xs[0].vm", s"(acc, x) -> ($keep * acc + $alphaPct * x) DIV 100").as("ewma_milli"))
+      .orderBy(col("user_id"))
+  }
+
+  /** The per-user sorted series [[ewma]] and [[holt]] fold:
+    * (user_id, n_events, xs), `xs` the user's (us, event_id, vm)
+    * structs in time order, `vm` the value in integer milli-units.
+    */
+  private def userSeries(events: DataFrame): DataFrame =
     events
       .select(
         col("user_id"),
@@ -584,13 +587,10 @@ object TimeSeries {
       .agg(
         count(lit(1)).as("n_events"),
         array_sort(collect_list(struct(col("us"), col("event_id"), col("vm")))).as("xs"))
-      .select(
-        col("user_id"),
-        col("n_events"),
-        expr(s"aggregate(transform(slice(xs, 2, size(xs) - 1), s -> s.vm), xs[0].vm," +
-          s" (acc, x) -> ($keep * acc + $alphaPct * x) DIV 100)").as("ewma_milli"))
-      .orderBy(col("user_id"))
-  }
+
+  /** `step` folded over `xs[1..].vm`, starting from `init`. */
+  private def foldSeries(init: String, step: String): Column =
+    expr(s"aggregate(transform(slice(xs, 2, size(xs) - 1), s -> s.vm), $init, $step)")
 
   /** B68: CUSUM changepoint detection over the daily event-count
     * series. The classic statistic is cusum_k = Σ_{i≤k}(x_i − mean);

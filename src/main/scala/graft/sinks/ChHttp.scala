@@ -28,8 +28,8 @@ class ChHttpClient(
     val endpoint: String,
     user: String = "",
     password: String = "",
-    connectTimeoutMs: Int = 10000,
-    readTimeoutMs: Int = 300000
+    connectTimeoutMs: Int = ChHttpClient.ConnectTimeoutMs,
+    readTimeoutMs: Int = ChHttpClient.ReadTimeoutMs
 ) extends Serializable {
 
   /** POST `sql` and return the raw response body; non-2xx → error
@@ -104,6 +104,13 @@ class ChHttpClient(
   /** DESCRIBE → Spark schema, via [[TypeMapper.chType]]. */
   def sparkSchema(db: String, table: String): StructType =
     StructType(describeTable(db, table).map { case (n, t) => StructField(n, TypeMapper.chType(t)) })
+}
+
+object ChHttpClient {
+
+  /** Connect and read timeouts of the wire clients (CH, ES, Mongo). */
+  private[graft] val ConnectTimeoutMs = 10000
+  private[graft] val ReadTimeoutMs = 300000
 }
 
 /** Wire-format helpers shared by the client, the batch executor and

@@ -2,9 +2,14 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.{HttpClient, HttpRequest, HttpResponse, HttpTimeoutException}
+import java.time.Duration
+import java.util.concurrent.{ExecutionException, TimeUnit, TimeoutException}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.Flatten
+import graft.sinks.ChHttpClient
 
 /** Minimal Elasticsearch REST client over the JDK `HttpClient` — the
   * reference's protocol surface, endpoint for endpoint: index
@@ -26,8 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Jackson (bundled with Spark) parses responses; no extra
   * dependency.
-  */
-/** `maxRetries` bounds re-sends of a request answered 429 (cluster
+  *
+  * `maxRetries` bounds re-sends of a request answered 429 (cluster
   * throttling) or 503 (node restart / shard relocation) — ES's two
   * RETRYABLE statuses; the server's `Retry-After` header (seconds) is
   * honored when present, else exponential backoff. Any other non-2xx
@@ -35,15 +40,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are not transient, and a sync pass must abort WITHOUT advancing
   * state so the next pass resumes cleanly. `retrySleep` is injectable
   * so fault-injection specs don't wait.
+  *
+  * Every connect is bounded by `ChHttpClient`'s 10 s connect timeout,
+  * and every response, headers and body, by its 300 s read timeout:
+  * a node that accepts a connection and never answers, or stalls
+  * partway through a body, fails the request with
+  * `HttpTimeoutException` instead of blocking the pass, and with it
+  * the whole sweep, forever.
   */
-class EsRestClient(
+class EsRestClient private[graft] (
     host: String,
-    user: String = "",
-    password: String = "",
-    maxRetries: Int = 3,
-    retrySleep: Long => Unit = Thread.sleep) {
+    user: String,
+    password: String,
+    maxRetries: Int,
+    retrySleep: Long => Unit,
+    readTimeout: Duration) {
 
-  private val http = HttpClient.newHttpClient()
+  def this(
+      host: String,
+      user: String = "",
+      password: String = "",
+      maxRetries: Int = 3,
+      retrySleep: Long => Unit = Thread.sleep) =
+    this(host, user, password, maxRetries, retrySleep, Duration.ofMillis(ChHttpClient.ReadTimeoutMs))
+
+  private val http =
+    HttpClient.newBuilder().connectTimeout(Duration.ofMillis(ChHttpClient.ConnectTimeoutMs)).build()
   private val om = new ObjectMapper()
 
   private def send(method: String, path: String, body: Option[String]): JsonNode = {
@@ -70,7 +92,7 @@ class EsRestClient(
     val built = req.build() // immutable: safe to re-send on retry
     var attempt = 0
     while (true) {
-      val resp = http.send(built, HttpResponse.BodyHandlers.ofString())
+      val resp = bounded(built)
       val code = resp.statusCode()
       if (code >= 200 && code < 300) return om.readTree(resp.body())
       if ((code == 429 || code == 503) && attempt < maxRetries) {
@@ -88,6 +110,21 @@ class EsRestClient(
     throw new IllegalStateException("unreachable")
   }
 
+  /** The whole response to `req` within `readTimeout`. The wait is on
+    * the async future, not `HttpRequest.timeout`: the JDK cancels that
+    * timer once the headers arrive, so a body that stalls would block
+    * `send` forever. Failures keep `send`'s exception types.
+    */
+  private def bounded(req: HttpRequest): HttpResponse[String] = {
+    val f = http.sendAsync(req, HttpResponse.BodyHandlers.ofString())
+    try f.get(readTimeout.toMillis, TimeUnit.MILLISECONDS)
+    catch {
+      case _: TimeoutException =>
+        throw new HttpTimeoutException(s"no complete response within $readTimeout: ${req.method} ${req.uri}")
+      case e: ExecutionException => throw e.getCause
+    } finally if (!f.isDone) f.cancel(true) // timed out or interrupted: drop the exchange
+  }
+
   /** User indices matching `pattern` — system ('.'-prefixed) indices
     * filtered client-side like the reference (ref:249-253), sorted
     * for determinism.
@@ -101,9 +138,13 @@ class EsRestClient(
   }
 
   /** Flattened (field → ES type) from the index mapping: nested
-    * `properties` recurse with `_`-joined names, `.`/`-` sanitized to
-    * `_` and `@` dropped — the reference's `flatten_mapping`
-    * (ref:275-294) byte-for-byte. Feed through
+    * `properties` recurse with `_`-joined names, and each joined name
+    * goes through `Flatten.sanitizeName`, the rule the target DDL, the
+    * INSERT and the flattened document columns use. That is the
+    * reference's `flatten_mapping` (ref:275-294: `.`/`-` to `_`, `@`
+    * dropped) plus `$` to `_` and an `idx_` prefix on a digit-leading
+    * name, so a mapping field and its target column always share one
+    * spelling. Feed through
     * `graft.operators.TypeMapper.esType` for Spark types or the
     * all-String mode for the reference's own DDL.
     */
@@ -134,7 +175,7 @@ class EsRestClient(
     node.fields().asScala.flatMap { e =>
       val rawPath = if (rawPrefix.isEmpty) e.getKey else s"$rawPrefix.${e.getKey}"
       val joined = if (prefix.isEmpty) e.getKey else s"${prefix}_${e.getKey}"
-      val name = joined.replace(".", "_").replace("-", "_").replace("@", "")
+      val name = Flatten.sanitizeName(joined)
       val cfg = e.getValue
       if (cfg.has("properties")) flattenProps(cfg.get("properties"), name, rawPath)
       else if (cfg.has("type")) Map(name -> ((cfg.get("type").asText(), rawPath)))

@@ -78,16 +78,16 @@ object JsonIngest {
   /** Parse + flatten the JSON column into sanitized `prefix_key`
     * String columns alongside the passthrough columns — the
     * reference's document pipeline as one codegen'd projection.
-    */
-  /** `keepSource = true` is the reference's STORE_SOURCE mode
+    *
+    * `keepSource = true` is the reference's STORE_SOURCE mode
     * (es_to_bytehouse.py:161-162, 616-618): the raw document JSON
     * rides along as a `_source` column next to the flattened fields.
-    */
-  /** `addTimestampUs` is the reference's ADD_TIMESTAMP mode
+    *
+    * `addTimestampUs` is the reference's ADD_TIMESTAMP mode
     * (mongodb_to_bytehouse.py:133, 372): stamp every ingested row with
     * the sync time as a `_timestamp` column.
-    */
-  /** `schemaOverride` bypasses the cached inference — callers feeding
+    *
+    * `schemaOverride` bypasses the cached inference — callers feeding
     * driver-built frames (wire-client pages, which have no file
     * fingerprint for the cache key) pass a per-batch schema so two
     * same-shaped batches can never share a stale inferred schema.

@@ -12,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.Flatten
+import graft.sinks.ChHttpClient
 
 /** MongoDB OP_MSG wire protocol, hand-rolled from the public spec —
   * the live-protocol pendant of [[EsRestClient]] (ES REST scroll) and
@@ -194,7 +195,11 @@ object Bson {
   * replies with `ok != 1` raise with the server's errmsg. Not
   * thread-safe — one client per reader, the socket is the session.
   */
-class MongoWireClient(host: String, port: Int, connectTimeoutMs: Int = 10000, readTimeoutMs: Int = 300000)
+class MongoWireClient(
+    host: String,
+    port: Int,
+    connectTimeoutMs: Int = ChHttpClient.ConnectTimeoutMs,
+    readTimeoutMs: Int = ChHttpClient.ReadTimeoutMs)
     extends AutoCloseable {
 
   private val socket = new Socket()

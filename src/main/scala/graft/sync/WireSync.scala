@@ -456,7 +456,9 @@ object WireSync {
             val raw = EsRestClient.docFrame(spark, buf.toSeq)
             val docSchema = spark.read.json(raw.select("doc").as[String]).schema
             val flat = JsonIngest.parseAndFlatten(spark, raw, "doc", schemaOverride = Some(docSchema))
-            val renamed = flat.select(flat.columns.toIndexedSeq.map(c => col(c).as(c.stripPrefix("doc_"))): _*)
+            // the mapping's spelling of each field: `doc_` hid a digit-leading name from the sanitizer
+            val renamed = flat.select(flat.columns.toIndexedSeq.map(c =>
+              col(c).as(Flatten.sanitizeName(c.stripPrefix("doc_")))): _*)
             val targetSchema = StructType(
               StructField("_id", StringType) +: fieldNames.map(n => StructField(n, StringType)))
             // an update field without a time field is no watermark

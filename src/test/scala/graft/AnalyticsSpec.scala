@@ -891,6 +891,21 @@ class AnalyticsSpec extends SparkSpec {
     assert(got.toSeq == Seq((1L, 2L), (2L, 1L), (3L, 1L)), got.mkString(","))
   }
 
+  test("funnelWindowLevels takes any stage name; funnelCounts, which writes the names into SQL, keeps its identifier check") {
+    import spark.implicits._
+    import graft.operators.Analytics
+    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val stages = Seq("page.view", "add to cart")
+    val events = Seq(
+      (1L, ts(0), "page.view"), (1L, ts(10), "add to cart"), // level 2
+      (2L, ts(0), "page.view")                                // level 1
+    ).toDF("user_id", "ts", "event_type")
+    val got = Analytics.funnelWindowLevels(events, "user_id", "event_type", "ts", stages, windowSec = 100L)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.toSeq == Seq((1L, 1L), (2L, 1L)), got.mkString(","))
+    intercept[IllegalArgumentException](Analytics.funnelCounts(events, "user_id", "event_type", "ts", stages))
+  }
+
   test("funnelWindowLevelsMode: strictness matrix — default ignores, strict_order freezes on any interleave, strict_dedup on repeats") {
     import spark.implicits._
     import graft.operators.Analytics

@@ -607,6 +607,29 @@ class PipelineSpec extends SparkSpec {
     assert(got == expected, s"got ${got.size} cells, expected ${expected.size}")
   }
 
+  test("staged encoders: payload bytes pinned by MD5 for fixed (id, w, h) rows") {
+    // the bytes behind the mm_* parse and decode oracles, as the JDK 17
+    // ImageIO writers produce them
+    val dims = Seq((1L, 4, 4), (7L, 8, 8), (42L, 16, 8), (1234L, 5, 3)).toDF("id", "w", "h")
+    def md5s(staged: org.apache.spark.sql.DataFrame, c: String): Seq[String] =
+      staged.orderBy("id").select(md5(col(c))).as[String].collect().toSeq
+    assert(md5s(Multimodal.encodeStagedPng(spark, dims, "id", "w", "h"), "png") == Seq(
+      "90bc89e8921bd08d64c34aa466c6e06c", "8b8b0b05ce7263764a3316c0093a78d6",
+      "b7bd56bd1d2df8ab722f5fb61af4de2c", "b3086f0a6d35b2c4bc037f6efc1d52a7"))
+    assert(md5s(Multimodal.encodeStagedPngStripes(spark, dims, "id", "w", "h"), "png") == Seq(
+      "afab90f71680807c75bb2f9874d5338b", "9bf3421401c3ae0de27e4fbca523742f",
+      "9a01185ebfb6ef8191770ec9f2f15452", "090fd4afdb9f1277d867bdedd7477130"))
+    assert(md5s(Multimodal.encodeStagedJpeg(spark, dims, "id", "w", "h"), "jpeg") == Seq(
+      "ef07bd7c54ca526614f563e262b5f4af", "e412b1d36d4dc8673333d8d32cb17343",
+      "7be480edcbc19a1c05b0c0cde5b8c19d", "e421367558d6838863c4c84a519f8d05"))
+    assert(md5s(Multimodal.encodeStagedGif(spark, dims, "id", "w", "h"), "gif") == Seq(
+      "237c3c0ac9e6d632f8e204f4878a7458", "a4bdf45cf8c485910cec6f835716b251",
+      "3a269894ebb5a4e97947942ee0062a71", "d6b9af47e05a246d5570137297dd308a"))
+    assert(md5s(Multimodal.encodeStagedTiff(spark, dims, "id", "w", "h"), "tiff") == Seq(
+      "c4044cbaa1e30887e88322462b5955c8", "6a424d5f4caa2071b6fd01151b22672e",
+      "5d1e1ed53921affc90edcc9b885ca0b9", "7555ab1f6c5dba2912a30b833b3d6c68"))
+  }
+
   test("ivf topk: probe-limited search with reasonable recall vs brute force") {
     val queries = embs.filter(col("vec_id") < 10)
     val brute = Similarity.bruteForceTopK(embs, queries, "vec_id", "embedding", 5)

@@ -1,7 +1,16 @@
 package graft
 
+import java.io.{BufferedReader, IOException, InputStreamReader}
+import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.http.HttpTimeoutException
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.util.Try
 
 import graft.sinks.{ChHttpBatchExecutor, ChHttpClient}
 import graft.sources.{EsRestClient, EsSourceConfig, MongoSource}
@@ -102,6 +111,43 @@ class WireFaultSpec extends SparkSpec {
       assert(e.getMessage.contains("pit not found"), e.getMessage)
       assert(pages == 1)
     }
+  }
+
+  /** `catIndices` against a loopback node that runs `answer` on its one
+    * connection, through a client with a 300 ms read timeout. The
+    * spec's own wait is bounded: a client that blocks fails here in
+    * seconds instead of hanging the suite.
+    */
+  private def esCallAgainst(answer: Socket => Unit): Try[Seq[String]] = {
+    val node = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
+    val conns = new ConcurrentLinkedQueue[Socket]()
+    val server = new Thread(() =>
+      try { val s = node.accept(); conns.add(s); answer(s) } catch { case _: IOException => () })
+    server.setDaemon(true)
+    server.start()
+    try {
+      val client = new EsRestClient(s"http://127.0.0.1:${node.getLocalPort}", "", "", 3, _ => (),
+        java.time.Duration.ofMillis(300))
+      Await.result(Future(Try(client.catIndices("app_*")))(ExecutionContext.global), 30.seconds)
+    } finally { node.close(); conns.forEach(_.close()) }
+  }
+
+  test("ES node that accepts a connection and never answers: the request times out instead of hanging") {
+    val got = esCallAgainst(_ => ()) // the connection stays open; no byte ever comes back
+    assert(got.failed.toOption.exists(_.isInstanceOf[HttpTimeoutException]), got.toString)
+  }
+
+  test("ES node that sends headers and then stalls mid-body: the request times out instead of hanging") {
+    val got = esCallAgainst { s =>
+      val in = new BufferedReader(new InputStreamReader(s.getInputStream, StandardCharsets.US_ASCII))
+      while (Option(in.readLine()).exists(_.nonEmpty)) {} // the request head
+      val out = s.getOutputStream
+      // 2 of the 100 promised body bytes, then silence
+      out.write("HTTP/1.1 200 OK\r\nContent-Type: application/json\r\nContent-Length: 100\r\n\r\n[{"
+        .getBytes(StandardCharsets.US_ASCII))
+      out.flush()
+    }
+    assert(got.failed.toOption.exists(_.isInstanceOf[HttpTimeoutException]), got.toString)
   }
 
   test("composed: a mid-pagination outage aborts the WireSync pass with NO state advance; next pass resumes") {

@@ -300,6 +300,38 @@ class WireSyncSpec extends SparkSpec {
     } finally { es.stop(); ch.stop() }
   }
 
+  test("ES field names the sanitizer rewrites ('$', digit-leading): one target column each, values landed") {
+    // mapping, DDL, INSERT and the flattened frame must spell each
+    // field one way: `price$usd` -> `price_usd`, `2fa` -> `idx_2fa`
+    val oddMapping =
+      """{"id":{"type":"long"},"created_at":{"type":"date"},""" +
+        """"price$usd":{"type":"keyword"},"2fa":{"type":"keyword"}}"""
+    def oddDoc(i: Int) =
+      s"""{"id":$i,"created_at":"2024-03-0$i 00:00:00","price$$usd":"$i.50","2fa":"k$i"}"""
+    val es = new EsStub(
+      indices = Map("app_prices" -> (1 to 4).map(oddDoc)),
+      mappings = Map("app_prices" -> oddMapping))
+    val ch = new ChStub
+    val port = es.start()
+    ch.start()
+    try {
+      val cfg = EsSourceConfig.fromEnv(Map(
+        "ES_HOST" -> s"http://127.0.0.1:$port", "INDEX_PATTERN" -> "app_*", "SCROLL_SIZE" -> "3"))
+      val client = new EsRestClient(cfg.host)
+      val ep = ch.endpoint
+      val r = WireSync.run(spark, client, cfg, new ChHttpClient(ep), () => new ChHttpBatchExecutor(ep),
+        targetDb = "wh", insertBatchSize = 10)
+      assert(r.map(p => (p.mode, p.rows, p.failedRows)) == Seq(("full", 4L, 0L)), r.toString)
+      val t = ch.tables(("wh", "app_prices"))
+      assert(t.schema.map(_._1) == Seq("_id", "_timestamp", "created_at", "id", "idx_2fa", "price_usd"),
+        t.schema.toString)
+      assert(!ch.requests.exists(_.startsWith("ALTER")), ch.requests.filter(_.startsWith("ALTER")).toString)
+      def cells(c: String) = t.rows.map(_(t.schema.indexWhere(_._1 == c))).sorted
+      assert(cells("price_usd") == (1 to 4).map(i => s"$i.50"), t.rows.toString)
+      assert(cells("idx_2fa") == (1 to 4).map(i => s"k$i"), t.rows.toString)
+    } finally { es.stop(); ch.stop() }
+  }
+
   test("ES mapping gains a field after table creation: the pass ALTERs it into the target instead of wedging") {
     withWire { (es, ch, client, cfg, tgt) =>
       val ep = ch.endpoint
